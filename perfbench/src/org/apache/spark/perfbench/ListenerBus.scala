@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the driver's listener bus, which Spark keeps package-private. */
+object ListenerBus {
+
+  /** Block until every event posted so far has reached every listener. */
+  def drain(sc: SparkContext, timeoutMs: Long = 30000L): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
+}
