@@ -18,8 +18,9 @@ import org.apache.spark.sql.types._
   *    (Common.scala:246)
   *
   * All formatting is column expressions (codegen'd); the only driver action is
-  * the final `take(numRows)` — same execution shape as the reference, and the
-  * row cap (`maxNumRows`) bounds driver memory regardless of input size.
+  * one `take(numRows)` per displayed cell (`table`), whose rows both the text
+  * and the HTML view render — so a cell executes its query once, and the row
+  * cap (`maxNumRows`) bounds driver memory regardless of input size.
   */
 object Render {
 
@@ -62,38 +63,41 @@ object Render {
     renamed.select(cols.toIndexedSeq: _*)
   }
 
+  /** Column names plus the display strings of the shown rows. */
+  final case class Table(header: Seq[String], rows: Seq[Seq[String]])
+
+  /** The first `numRows` rows of `df`, formatted, from one `take`. */
+  def table(df: DataFrame, numRows: Int = 20, truncate: Int = 50): Table = {
+    val rows = formatted(df, truncate).take(numRows)
+    Table(df.columns.toSeq, rows.toSeq.map(r => (0 until r.length).map(r.getString)))
+  }
+
+  /** `t` as an HTML table. */
+  def html(t: Table): String = {
+    def cells(tag: String, vals: Seq[String]): String =
+      vals.map(v => s"<$tag>${scala.xml.Utility.escape(v)}</$tag>").mkString
+    val body = t.rows.map(r => s"<tr>${cells("td", r)}</tr>").mkString
+    s"<table><thead><tr>${cells("th", t.header)}</tr></thead><tbody>$body</tbody></table>"
+  }
+
+  /** `t` as a plain-text table for REPL display. */
+  def text(t: Table): String = {
+    val widths = (t.header +: t.rows).transpose.map(_.map(_.length).max)
+    def fmtRow(vals: Seq[String]): String =
+      vals.zip(widths).map { case (v, w) => v.padTo(w, ' ') }.mkString("| ", " | ", " |")
+    val sep = widths.map("-" * _).mkString("+-", "-+-", "-+")
+    (Seq(sep, fmtRow(t.header), sep) ++ t.rows.map(fmtRow) :+ sep).mkString("\n")
+  }
+
   /** Render the first `numRows` (capped by `maxNumRows`) as an HTML table. */
   def renderHTML(
       df: DataFrame,
       numRows: Int = 20,
       maxNumRows: Int = Int.MaxValue,
       truncate: Int = 50
-  ): String = {
-    val n = math.min(numRows, maxNumRows)
-    val show = formatted(df, truncate)
-    val rows = show.take(n)
-    val header = df.columns
-      .map(c => s"<th>${scala.xml.Utility.escape(c)}</th>")
-      .mkString
-    val body = rows
-      .map { r =>
-        (0 until r.length)
-          .map(i => s"<td>${scala.xml.Utility.escape(r.getString(i))}</td>")
-          .mkString("<tr>", "", "</tr>")
-      }
-      .mkString
-    s"<table><thead><tr>$header</tr></thead><tbody>$body</tbody></table>"
-  }
+  ): String = html(table(df, math.min(numRows, maxNumRows), truncate))
 
   /** Plain-text variant for REPL display. */
-  def renderText(df: DataFrame, numRows: Int = 20, truncate: Int = 50): String = {
-    val show = formatted(df, truncate)
-    val rows = show.take(numRows).map(r => (0 until r.length).map(r.getString))
-    val header = df.columns.toSeq
-    val widths = (header +: rows.toSeq).transpose.map(_.map(_.length).max)
-    def fmtRow(vals: Seq[String]): String =
-      vals.zip(widths).map { case (v, w) => v.padTo(w, ' ') }.mkString("| ", " | ", " |")
-    val sep = widths.map("-" * _).mkString("+-", "-+-", "-+")
-    (Seq(sep, fmtRow(header), sep) ++ rows.map(fmtRow) :+ sep).mkString("\n")
-  }
+  def renderText(df: DataFrame, numRows: Int = 20, truncate: Int = 50): String =
+    text(table(df, numRows, truncate))
 }

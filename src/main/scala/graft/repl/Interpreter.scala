@@ -1,6 +1,7 @@
 package graft.repl
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import graft.core._
@@ -90,7 +91,7 @@ final class Interpreter(initialSpark: SparkSession) {
     val (result, progress) = ProgressListener.withProgress(spark) {
       try dispatch(magic, args, argLine, body)
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           // Secrets never echo, including through error text: a failing SQL
           // cell would otherwise reflect an injected ${secret} verbatim.
           CellResult(
@@ -127,13 +128,15 @@ final class Interpreter(initialSpark: SparkSession) {
 
   private def display(df: DataFrame, args: Map[String, String]): CellResult =
     if (df.isStreaming) streamingDisplay(df, args)
-    else
-      CellResult(
-        success = true,
-        text = Render.renderText(df, numRowsArg(args), truncateArg(args)),
-        html = Render.renderHTML(df, numRowsArg(args), confMaxNumRows, truncateArg(args)),
-        df = Some(df)
-      )
+    else shown(df, numRowsArg(args), args)
+
+  /** Both views of `df` from one `take`: the query executes once per cell.
+    * `numRows` already honours `maxNumRows` (see `numRowsArg`).
+    */
+  private def shown(df: DataFrame, numRows: Int, args: Map[String, String]): CellResult = {
+    val t = Render.table(df, numRows, truncateArg(args))
+    CellResult(success = true, text = Render.text(t), html = Render.html(t), df = Some(df))
+  }
 
   /** The reference's streaming consumption model (Common.scala:162-227):
     * write the stream to a memory sink, poll it every `frequency` ms for up to
@@ -153,13 +156,7 @@ final class Interpreter(initialSpark: SparkSession) {
         if (table.count() > target) done = true
       }
     } finally q.stop()
-    val result = spark.table(queryName)
-    CellResult(
-      success = true,
-      text = Render.renderText(result, target, truncateArg(args)),
-      html = Render.renderHTML(result, target, confMaxNumRows, truncateArg(args)),
-      df = Some(result)
-    )
+    shown(spark.table(queryName), target, args)
   }
 
   private def dispatch(

@@ -1,6 +1,7 @@
 package graft.repl
 
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler._
 
 /** Per-cell task progress — behavioral analog of the reference's
@@ -50,25 +51,19 @@ object ProgressListener {
     }
   }
 
-  /** Run `body` with a listener attached; always detaches. Listener events
-    * are delivered asynchronously, so after `body` returns we poll briefly
-    * until the task counts stop moving (bounded at 1 s) before snapshotting.
+  /** Run `body` with a listener attached; always detaches. The scheduler
+    * posts every stage, task-end and job-end event of an action before the
+    * action returns, so once `body` returns all events the cell caused are
+    * queued: one drain of the listener bus (bounded at 1 s; on timeout the
+    * snapshot is taken anyway) makes the snapshot final without polling.
     */
   def withProgress[T](spark: org.apache.spark.sql.SparkSession)(body: => T): (T, Snapshot) = {
     val l = new ProgressListener()
     spark.sparkContext.addSparkListener(l)
     try {
       val r = body
-      val deadline = System.currentTimeMillis() + 1000
-      var prev = l.snapshot
-      var stable = false
-      while (!stable && System.currentTimeMillis() < deadline) {
-        Thread.sleep(50)
-        val cur = l.snapshot
-        stable = cur == prev && cur.done >= cur.total
-        prev = cur
-      }
-      (r, prev)
+      GraftListenerBus.drain(spark.sparkContext, timeoutMs = 1000)
+      (r, l.snapshot)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 }

@@ -1,8 +1,29 @@
 package graft
 
-import graft.repl.Interpreter
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import graft.render.Render
+import graft.repl.{CellResult, Interpreter, ProgressListener}
+
+object InterpreterSpec {
+
+  /** Rows of a `Render.text` table: separator, header, separator, rows,
+    * separator. */
+  def textRows(text: String): Seq[Seq[String]] =
+    text.split("\n").toSeq.drop(3).dropRight(1).map { l =>
+      l.stripPrefix("| ").stripSuffix(" |").split(" \\| ", -1).map(_.trim).toSeq
+    }
+
+  /** Rows of a `Render.html` table body. */
+  def htmlRows(html: String): Seq[Seq[String]] =
+    "<tr>(.*?)</tr>".r.findAllMatchIn(html.substring(html.indexOf("<tbody>"))).map { m =>
+      "<td>(.*?)</td>".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq
+    }.toSeq
+}
 
 class InterpreterSpec extends SparkSpec {
+  import InterpreterSpec._
 
   private lazy val interp = {
     val i = new Interpreter(spark)
@@ -76,6 +97,59 @@ class InterpreterSpec extends SparkSpec {
     assert(p.bar().contains("#"))
   }
 
+  /** Spark jobs started while `f` runs, counted once the listener bus has
+    * delivered every event. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    assert(GraftListenerBus.drain(sc, 10000))
+    sc.addSparkListener(l)
+    try {
+      f
+      assert(GraftListenerBus.drain(sc, 10000))
+    } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("a displayed %sql cell executes its query once for both views") {
+    val sql = "SELECT n_regionkey, count(*) AS n FROM nation_repl " +
+      "GROUP BY n_regionkey ORDER BY n_regionkey"
+    val direct = jobsDuring(Render.formatted(spark.sql(sql)).take(20))
+    var r: CellResult = null
+    val cell = jobsDuring { r = interp.execute(s"%sql numRows=20\n$sql") }
+    assert(r.success, r.text)
+    assert(direct > 0 && cell == direct, s"cell ran $cell jobs, one take runs $direct")
+    val rows = textRows(r.text)
+    assert(rows.size == 5, r.text)
+    assert(htmlRows(r.html) == rows, r.html)
+  }
+
+  test("progress barrier: every multi-stage cell ends with all its tasks counted") {
+    val sql = "SELECT a.n_regionkey, count(*) AS n FROM nation_repl a " +
+      "JOIN nation_repl b ON a.n_regionkey = b.n_regionkey GROUP BY a.n_regionkey"
+    // A slow listener ahead of the cell's own on the shared queue delays
+    // every task-end delivery, as a busy bus does: without the end-of-cell
+    // barrier the snapshot would miss the last tasks.
+    val slow = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Thread.sleep(20)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try (1 to 20).foreach { i =>
+      val r = interp.execute(s"%sql numRows=5\n$sql")
+      assert(r.success, r.text)
+      val p = interp.lastProgress
+      assert(p.total > 0 && p.done == p.total, s"run $i: $p")
+    } finally spark.sparkContext.removeSparkListener(slow)
+  }
+
+  test("a cell that runs no job leaves empty progress") {
+    assert(interp.execute("%schema nation_repl").success)
+    assert(interp.lastProgress == ProgressListener.Snapshot(0, 0))
+  }
+
   test("unknown magic fails gracefully") {
     assert(!interp.execute("%nope").success)
   }
@@ -146,5 +220,35 @@ class SessionRestartSpec extends SparkSpec {
     val err = graft.repl.Boot.memoryGuard(runtime = 2L << 40, physical = 1L << 30)
     assert(err.isDefined && err.get.contains("exceeds"))
     assert(graft.repl.Boot.memoryGuard(runtime = 1L << 28, physical = 1L << 30).isEmpty)
+  }
+}
+
+/** The streaming branch of the display: the memory-sink table is shown
+  * through the same one-take path as a batch result. Isolated suite: it
+  * switches the session to streaming schema inference.
+  */
+class StreamingDisplaySpec extends SparkSpec {
+  import InterpreterSpec._
+  import spark.implicits._
+
+  test("a streaming %arc cell shows the same rows as text and HTML") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_display").toString
+    Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "name").write.mode("overwrite").parquet(dir)
+    val inference = "spark.sql.streaming.schemaInference"
+    val before = spark.conf.getOption(inference)
+    spark.conf.set(inference, "true")
+    try {
+      val interp = new Interpreter(spark)
+      assert(interp.execute("%conf streaming=true streamingDuration=2 streamingFrequency=200").success)
+      val r = interp.execute(
+        s"""%arc
+           |{"stages": [{"type": "ParquetExtract", "name": "s", "inputURI": "$dir",
+           |  "outputView": "stream_display"}]}""".stripMargin)
+      assert(r.success, r.text)
+      val rows = textRows(r.text)
+      assert(rows.nonEmpty, r.text)
+      assert(rows.map(_.head).sorted == Seq("1", "2", "3"), r.text)
+      assert(htmlRows(r.html) == rows, r.html)
+    } finally before.fold(spark.conf.unset(inference))(spark.conf.set(inference, _))
   }
 }
