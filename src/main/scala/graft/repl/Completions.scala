@@ -234,15 +234,21 @@ object Completions {
       }
     }
 
-  /** One `SELECT <cols> FROM table` completion per catalog temp view. */
-  def tableCompletions(spark: SparkSession): Seq[Completion] =
-    spark.catalog.listTables().collect().toSeq.map { t =>
-      val df = spark.table(t.name)
-      val cols = flattenSchema(df.schema).mkString(s",\n  ")
-      Completion(t.name, s"SELECT\n  $cols\nFROM ${t.name}")
+  /** One `SELECT <cols> FROM table` completion per table and temp view of the
+    * current database whose name starts with `prefix`. Names and schemas come
+    * from the session catalog's metadata, so no view is analysed again and
+    * the cost does not grow with the plans behind the views.
+    */
+  def tableCompletions(spark: SparkSession, prefix: String = ""): Seq[Completion] = {
+    val catalog = spark.sessionState.catalog
+    catalog.listTables(catalog.getCurrentDatabase).filter(_.table.startsWith(prefix)).map { t =>
+      val schema = catalog.getTempViewOrPermanentTableMetadata(t).schema
+      val cols = flattenSchema(schema).mkString(s",\n  ")
+      Completion(t.table, s"SELECT\n  $cols\nFROM ${t.table}")
     }
+  }
 
   /** All completions whose label starts with the given (possibly empty) prefix. */
   def complete(spark: SparkSession, prefix: String): Seq[Completion] =
-    (static ++ tableCompletions(spark)).filter(_.label.startsWith(prefix))
+    static.filter(_.label.startsWith(prefix)) ++ tableCompletions(spark, prefix)
 }

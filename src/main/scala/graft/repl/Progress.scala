@@ -1,7 +1,8 @@
 package graft.repl
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.GraftListenerBus
+import org.apache.spark.{GraftListenerBus, SparkContext}
 import org.apache.spark.scheduler._
 
 /** Per-cell task progress — behavioral analog of the reference's
@@ -16,6 +17,8 @@ final class ProgressListener(onUpdate: ProgressListener.Snapshot => Unit = _ => 
   private val total = new AtomicInteger(0)
   private val done = new AtomicInteger(0)
   @volatile private var lastPush = 0L
+  private val marker = new GraftListenerBus.Marker
+  private val delivered = new CountDownLatch(1)
 
   override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
     total.addAndGet(e.stageInfo.numTasks)
@@ -28,6 +31,16 @@ final class ProgressListener(onUpdate: ProgressListener.Snapshot => Unit = _ => 
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = push(force = true)
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit =
+    if (e eq marker) delivered.countDown()
+
+  /** Block until this listener has received every event posted before the
+    * call, for at most `timeoutMs`: posts a marker behind them and waits for
+    * it. False on timeout or when the context is stopped.
+    */
+  def awaitDelivered(sc: SparkContext, timeoutMs: Long): Boolean =
+    GraftListenerBus.post(sc, marker) && delivered.await(timeoutMs, TimeUnit.MILLISECONDS)
 
   def snapshot: ProgressListener.Snapshot =
     ProgressListener.Snapshot(done.get, total.get)
@@ -54,15 +67,17 @@ object ProgressListener {
   /** Run `body` with a listener attached; always detaches. The scheduler
     * posts every stage, task-end and job-end event of an action before the
     * action returns, so once `body` returns all events the cell caused are
-    * queued: one drain of the listener bus (bounded at 1 s; on timeout the
-    * snapshot is taken anyway) makes the snapshot final without polling.
+    * queued: waiting for a marker posted behind them to reach this cell's
+    * listener (bounded at 1 s; on timeout the snapshot is taken anyway) makes
+    * the snapshot final, without polling and without waiting on the bus's
+    * other listener queues.
     */
   def withProgress[T](spark: org.apache.spark.sql.SparkSession)(body: => T): (T, Snapshot) = {
     val l = new ProgressListener()
     spark.sparkContext.addSparkListener(l)
     try {
       val r = body
-      GraftListenerBus.drain(spark.sparkContext, timeoutMs = 1000)
+      l.awaitDelivered(spark.sparkContext, timeoutMs = 1000)
       (r, l.snapshot)
     } finally spark.sparkContext.removeSparkListener(l)
   }

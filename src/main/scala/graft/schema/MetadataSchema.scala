@@ -1,6 +1,6 @@
 package graft.schema
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -132,7 +132,6 @@ object MetadataSchema {
     * (schema metadata is driver-side by construction; no job needed).
     */
   def metadataDataFrame(spark: SparkSession, df: DataFrame): DataFrame = {
-    import spark.implicits._
     val rows = df.schema.fields.map { f =>
       val meta: Map[String, String] =
         if (f.metadata == Metadata.empty) Map.empty
@@ -141,8 +140,17 @@ object MetadataSchema {
             case JObject(kvs) => kvs.map { case (k, v) => k -> str(v) }.toMap
             case _            => Map.empty
           }
-      (f.name, f.nullable, f.dataType.simpleString, meta)
-    }.toSeq
-    rows.toDF("name", "nullable", "type", "metadata")
+      Row(f.name, f.nullable, f.dataType.simpleString, meta)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), MetadataFrameSchema)
   }
+
+  /** The schema a tuple encoder would derive for the rows above, given
+    * explicitly: deriving it by reflection costs more than the whole cell.
+    */
+  private val MetadataFrameSchema = StructType(Seq(
+    StructField("name", StringType),
+    StructField("nullable", BooleanType, nullable = false),
+    StructField("type", StringType),
+    StructField("metadata", MapType(StringType, StringType))))
 }

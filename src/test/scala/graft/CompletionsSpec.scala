@@ -25,6 +25,20 @@ class CompletionsSpec extends SparkSpec {
     assert(snippet.contains("r_regionkey") && snippet.contains("FROM comp_region"))
   }
 
+  test("table completions take names and columns from the catalog, filtered by prefix") {
+    spark.sql("SELECT 1 AS id, named_struct('a', 2, 'b c', 'x') AS s")
+      .createOrReplaceTempView("comp_nested")
+    spark.range(3).createOrReplaceTempView("comp_other")
+    val comps = Completions.complete(spark, "comp_n")
+    assert(comps.map(_.label) == Seq("comp_nested"))
+    val cols = Completions.flattenSchema(spark.table("comp_nested").schema)
+    assert(cols == Seq("id", "s.a", "s.`b c`"))
+    assert(comps.head.snippet == s"SELECT\n  ${cols.mkString(",\n  ")}\nFROM comp_nested")
+    assert(Completions.complete(spark, "%sq").forall(_.label.startsWith("%sq")))
+    val all = Completions.complete(spark, "").map(_.label)
+    assert(all.contains("comp_nested") && all.contains("comp_other") && all.contains("%sql"))
+  }
+
   test("static completions cover every dispatchable magic") {
     val labels = Completions.static.map(_.label).toSet
     for (m <- Seq("%sql", "%sqlvalidate", "%metadata", "%schema", "%list", "%env",

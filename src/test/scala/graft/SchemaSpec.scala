@@ -42,6 +42,21 @@ class SchemaSpec extends SparkSpec {
     assert(names == df.schema.fieldNames.toSeq)
   }
 
+  test("metadataDataFrame keeps its column types and field metadata") {
+    val tagged = new MetadataBuilder().putString("pii", "true").build()
+    val df = spark.sql("SELECT 1 AS a").select(org.apache.spark.sql.functions.col("a").as("a", tagged))
+    val meta = MetadataSchema.metadataDataFrame(spark, df)
+    assert(meta.schema == StructType(Seq(
+      StructField("name", StringType),
+      StructField("nullable", BooleanType, nullable = false),
+      StructField("type", StringType),
+      StructField("metadata", MapType(StringType, StringType)))))
+    val r = meta.collect().toSeq
+    assert(r.size == 1)
+    assert(r.head.getString(0) == "a" && !r.head.getBoolean(1) && r.head.getString(2) == "int")
+    assert(r.head.getMap[String, String](3) == Map("pii" -> "true"))
+  }
+
   test("MetadataTransform attaches metadata visible to MetadataFilterTransform") {
     val ctx = new graft.core.PipelineContext(spark)
     graft.core.Runner.run(
