@@ -2438,34 +2438,17 @@ object SparkEntry {
       // (centroid/codebook reads, probed-list collects, assignment
       // collects) — construct them concurrently (guide §2.6) so those
       // tiny jobs overlap; the frames and their union are unchanged
-      def legsOf(pass: Int): DataFrame = {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try Seq(
-            scala.concurrent.Future(ivfLeg(pass, "flat")),
-            scala.concurrent.Future(ivfLeg(pass, "pq")),
-            scala.concurrent.Future(semFound(pass)))
-          .map(scala.concurrent.Await.result(_,
-            scala.concurrent.duration.Duration.Inf))
-          .reduce(_ unionByName _)
-        finally pool.shutdown()
-      }
+      def legsOf(pass: Int): DataFrame = graft.core.Par.all(Seq(
+          () => ivfLeg(pass, "flat"), () => ivfLeg(pass, "pq"),
+          () => semFound(pass)))
+        .reduce(_ unionByName _)
       // pass 1 PINNED before the takedown rewrites the index files
       val pass1 = graft.core.Lineage.pin(legsOf(1))
       // the two deletes are independent single-writer stores — concurrent,
       // like Takedown.run's index fan-out
-      val delPool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val delEc: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(delPool)
-      val (removedIvf, removedSem) = try {
-        val fi = scala.concurrent.Future(
-          IvfIndex.delete(spark, ivfDir, victims.select("vec_id")))(delEc)
-        val fse = scala.concurrent.Future(
-          SemIndex.delete(spark, semDir, victims.select("vec_id")))(delEc)
-        (scala.concurrent.Await.result(fi, scala.concurrent.duration.Duration.Inf),
-          scala.concurrent.Await.result(fse, scala.concurrent.duration.Duration.Inf))
-      } finally delPool.shutdown()
+      val Seq(removedIvf, removedSem) = graft.core.Par.all(Seq(
+        () => IvfIndex.delete(spark, ivfDir, victims.select("vec_id")),
+        () => SemIndex.delete(spark, semDir, victims.select("vec_id"))))
       val deletesOk = removedIvf == nVictims && removedSem == nVictims
       val pass2 = legsOf(2)
       pass1.unionByName(pass2)
@@ -2551,33 +2534,25 @@ object SparkEntry {
       // over different tables — run them concurrently (guide §2.6) so the
       // battery's tail is bounded by the slowest check, not their sum;
       // each boolean is computed exactly as in the sequential form
-      val checkPool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      implicit val checkEc: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(checkPool)
-      val checks = try {
-        import scala.concurrent.{Await, Future}
-        val legs: Seq[(String, scala.concurrent.Future[Boolean])] = Seq(
-          "mh_bands" -> Future(clean(s"$mDir/bands", "_id")),
-          "mh_shingles" -> Future(clean(s"$mDir/shingles", "_id")),
-          "mh_exact" -> Future(clean(s"$mDir/exact", "_id")),
-          "span" -> Future(clean(s"$spDir/grams", "keeper")),
-          "sem" -> Future(clean(s"$seDir/vectors", "id")),
-          "ivf" -> Future(clean(s"$ivDir/vectors", "id")),
-          "wc" -> Future(sameTable(WordCounts.read(spark, wcDir),
-            Bpe.wordCounts(kept, "text"))),
-          "nb_tok" -> Future(sameTable(nbNow.tokenTable, nbWant.tokenTable)),
-          "nb_cls" -> Future(sameTable(nbNow.classTable, nbWant.classTable)))
-        val ok = legs.map { case (k, f) =>
-          k -> Await.result(f, scala.concurrent.duration.Duration.Inf)
-        }.toMap
-        Seq(
-          ("minhash", ok("mh_bands") && ok("mh_shingles") && ok("mh_exact")),
-          ("span", ok("span")),
-          ("sem", ok("sem")),
-          ("ivf", ok("ivf")),
-          ("wordcounts", ok("wc")),
-          ("classifier", ok("nb_tok") && ok("nb_cls")))
-      } finally checkPool.shutdown()
+      val legs: Seq[(String, () => Boolean)] = Seq(
+        "mh_bands" -> (() => clean(s"$mDir/bands", "_id")),
+        "mh_shingles" -> (() => clean(s"$mDir/shingles", "_id")),
+        "mh_exact" -> (() => clean(s"$mDir/exact", "_id")),
+        "span" -> (() => clean(s"$spDir/grams", "keeper")),
+        "sem" -> (() => clean(s"$seDir/vectors", "id")),
+        "ivf" -> (() => clean(s"$ivDir/vectors", "id")),
+        "wc" -> (() => sameTable(WordCounts.read(spark, wcDir),
+          Bpe.wordCounts(kept, "text"))),
+        "nb_tok" -> (() => sameTable(nbNow.tokenTable, nbWant.tokenTable)),
+        "nb_cls" -> (() => sameTable(nbNow.classTable, nbWant.classTable)))
+      val ok = legs.map(_._1).zip(graft.core.Par.all(legs.map(_._2))).toMap
+      val checks = Seq(
+        ("minhash", ok("mh_bands") && ok("mh_shingles") && ok("mh_exact")),
+        ("span", ok("span")),
+        ("sem", ok("sem")),
+        ("ivf", ok("ivf")),
+        ("wordcounts", ok("wc")),
+        ("classifier", ok("nb_tok") && ok("nb_cls")))
       import spark.implicits._
       val checksDf = checks.toDF("store_type", "_clean")
       val logDf = Takedown.consolidatedLog(spark, auDir)

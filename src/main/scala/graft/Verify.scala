@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.Executors
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -29,25 +26,19 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val pool = Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only).toMap
-    val futures = selected.toSeq.map { case (name, fn) =>
-      Future {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    graft.core.Par.all(selected.toSeq.map { case (name, fn) => () =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-    }
-    Await.result(Future.sequence(futures), Duration.Inf)
-    pool.shutdown()
+    }, width = 4)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -2,6 +2,7 @@ package graft.core
 
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import scala.util.control.NonFatal
 import graft.extract._
 import graft.load._
 import graft.transform._
@@ -34,6 +35,11 @@ object PipelineConfig {
       params: Map[String, String] = Map.empty
   ): Seq[Stage] = parseWithPlugins(json, environment, params)._1
 
+  /** Strict JSON first; anything it rejects is read as HOCON. */
+  private def parseDoc(json: String, params: Map[String, String]): JValue =
+    try JsonMethods.parse(json)
+    catch { case NonFatal(_) => Hocon.parse(json, params) }
+
   /** Full cell parse: stages plus any `plugins.lifecycle` registrations —
     * the reference wraps every config cell in a document with a
     * `plugins.lifecycle` list and registers the plugins of a zero-stage cell
@@ -52,9 +58,7 @@ object PipelineConfig {
       environment: String = "production",
       params: Map[String, String] = Map.empty
   ): (Seq[Stage], Seq[LifecycleHook]) = {
-    val root =
-      try JsonMethods.parse(json)
-      catch { case _: Throwable => Hocon.parse(json, params) }
+    val root = parseDoc(json, params)
     (parseValue(root, environment, params), parsePlugins(root \ "plugins" \ "lifecycle", environment))
   }
 
@@ -67,9 +71,7 @@ object PipelineConfig {
       environment: String = "production",
       params: Map[String, String] = Map.empty
   ): Seq[LifecycleHook] = {
-    val root =
-      try JsonMethods.parse(json)
-      catch { case _: Throwable => Hocon.parse(json, params) }
+    val root = parseDoc(json, params)
     root \ "plugins" \ "lifecycle" match {
       case JNothing => parsePlugins(root, environment)
       case nested   => parsePlugins(nested, environment)
@@ -86,9 +88,7 @@ object PipelineConfig {
       environment: String = "production",
       params: Map[String, String] = Map.empty
   ): Seq[ConfigPlugin] = {
-    val root =
-      try JsonMethods.parse(json)
-      catch { case _: Throwable => Hocon.parse(json, params) }
+    val root = parseDoc(json, params)
     val entries = root \ "plugins" \ "config" match {
       case JNothing => root
       case nested   => nested

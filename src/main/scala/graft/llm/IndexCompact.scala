@@ -384,38 +384,27 @@ object IndexCompact {
     // loop's filesystem round-trips; on an object store with 10–100 ms
     // per rename a wide takedown would serialize into minutes).
     fs.mkdirs(doneRoot)
-    val moveErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, touched.size)))
-    try {
-      val tasks = touched.toSeq.map { case (value, _) =>
-        pool.submit(new Runnable {
-          def run(): Unit = try {
-            val part = new Path(partitionDir(dir, partitionCol, value))
-            val files = liveFiles(fs, part)
-            val tmp = new Path(tmpRoot, part.getName)
-            // (2) park originals; (3) move the new files in (a fully-
-            // deleted partition has no tmp dir — nothing moves in);
-            // (4) commit
-            val oldPart = new Path(oldRoot, part.getName)
-            fs.mkdirs(oldPart)
-            files.foreach(f =>
-              renameOrAbort(fs, f.getPath, new Path(oldPart, f.getPath.getName)))
-            if (fs.exists(tmp)) liveFiles(fs, tmp).foreach { f =>
-              renameOrAbort(fs, f.getPath,
-                new Path(part, s"compact-$runId-${f.getPath.getName}"))
-            }
-            renameOrAbort(fs, oldPart, new Path(doneRoot, part.getName))
-            fs.delete(new Path(doneRoot, part.getName), true)
-            fs.delete(tmp, true)
-          } catch { case t: Throwable => moveErr.compareAndSet(null, t) }
-        })
-      }
-      tasks.foreach(_.get())
-    } finally pool.shutdown()
-    // an abort in ANY partition surfaces after the pool drains — the
+    // an abort in ANY partition surfaces after every move settles — the
     // other partitions are each in a recover-able state by construction
-    if (moveErr.get() != null) throw moveErr.get()
+    graft.core.Par.all(touched.keys.toSeq.map { value => () =>
+      val part = new Path(partitionDir(dir, partitionCol, value))
+      val files = liveFiles(fs, part)
+      val tmp = new Path(tmpRoot, part.getName)
+      // (2) park originals; (3) move the new files in (a fully-
+      // deleted partition has no tmp dir — nothing moves in);
+      // (4) commit
+      val oldPart = new Path(oldRoot, part.getName)
+      fs.mkdirs(oldPart)
+      files.foreach(f =>
+        renameOrAbort(fs, f.getPath, new Path(oldPart, f.getPath.getName)))
+      if (fs.exists(tmp)) liveFiles(fs, tmp).foreach { f =>
+        renameOrAbort(fs, f.getPath,
+          new Path(part, s"compact-$runId-${f.getPath.getName}"))
+      }
+      renameOrAbort(fs, oldPart, new Path(doneRoot, part.getName))
+      fs.delete(new Path(doneRoot, part.getName), true)
+      fs.delete(tmp, true)
+    })
     val removed = touched.valuesIterator.sum
     require(!hasAnyFile(fs, tmpRoot) && !hasAnyFile(fs, oldRoot),
       s"IndexCompact: staging directories not empty after delete in $dir")

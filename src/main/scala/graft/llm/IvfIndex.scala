@@ -133,11 +133,6 @@ object IvfIndex {
     base.write.mode(mode).partitionBy("_list").parquet(s"$path/vectors")
   }
 
-  private def readCentroids(spark: SparkSession, path: String): Seq[(Double, Int, Seq[Float])] =
-    spark.read.parquet(s"$path/centroids")
-      .collect().map(r => (r.getDouble(1), r.getInt(0), r.getSeq[Float](2))).toSeq
-      .sortBy(_._2)
-
   /** The persisted PQ codebooks (None for an index built without PQ),
     * plus (m, dsub, residual) derived from the stored entries. Pre-residual
     * indexes lack the `residual` column → raw-vector codes. */
@@ -187,7 +182,7 @@ object IvfIndex {
   def ingest(newVectors: DataFrame, idCol: String, vecCol: String, path: String,
       replace: Boolean = false): Unit = {
     val spark = newVectors.sparkSession
-    val cents = readCentroids(spark, path)
+    val cents = Similarity.readCentroids(spark, path)
     val cbs = readCodebooks(spark, path)
     // Layout guard: appending current-layout rows (vnorm/codes/pq columns)
     // next to files written by an older build would leave the read schema
@@ -290,7 +285,7 @@ object IvfIndex {
       k: Int, nprobe: Int = 2): DataFrame = {
     require(k > 0 && nprobe > 0, s"k/nprobe must be positive, got $k/$nprobe")
     val spark = queries.sparkSession
-    val cents = readCentroids(spark, path)
+    val cents = Similarity.readCentroids(spark, path)
     // pinned BEFORE the explode (each query vector stored once, not nprobe
     // times): TWO jobs read this frame (the probed-lists collect below and
     // the final join) — an unpinned nondeterministic query input could
@@ -353,7 +348,7 @@ object IvfIndex {
     require(k > 0 && nprobe > 0, s"k/nprobe must be positive, got $k/$nprobe")
     require(shortlistFactor > 0, s"shortlistFactor must be positive, got $shortlistFactor")
     val spark = queries.sparkSession
-    val cents = readCentroids(spark, path)
+    val cents = Similarity.readCentroids(spark, path)
     // pinned for the same two-jobs-one-frame reason as topK; queries carry
     // their own int8 codes so the integer dot is symmetric with the stored
     // corpus codes
@@ -418,7 +413,7 @@ object IvfIndex {
     require(k > 0 && nprobe > 0, s"k/nprobe must be positive, got $k/$nprobe")
     require(shortlistFactor > 0, s"shortlistFactor must be positive, got $shortlistFactor")
     val spark = queries.sparkSession
-    val cents = readCentroids(spark, path)
+    val cents = Similarity.readCentroids(spark, path)
     val (cbs, m, dsub, residual) = readCodebooks(spark, path).getOrElse(
       throw new IllegalArgumentException(
         s"$path was written without PQ codebooks — rebuild with pqSubspaces > 0"))
@@ -593,22 +588,15 @@ object IvfIndex {
     // actions (centroid read, probed-list collect, query pin) — construct
     // the settings concurrently (guide §2.6) so those tiny jobs overlap
     // instead of serializing; the frames themselves are unchanged.
-    val buildPool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, settings.size))
-    implicit val buildEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(buildPool)
-    val tagged = try {
-      settings.zipWithIndex.map { case (s, i) =>
-        scala.concurrent.Future((s.mode match {
-          case "pq" => topKPq(sampleQueries, queryId, queryVec, path, k, s.nprobe,
-            s.shortlistFactor)
-          case "sq8" => topKQuantized(sampleQueries, queryId, queryVec, path, k, s.nprobe,
-            s.shortlistFactor)
-          case _ => topK(sampleQueries, queryId, queryVec, path, k, s.nprobe)
-        }).select(col("query_id"), col("neighbor_id")).withColumn("_si", lit(i)))
-      }.map(f => scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf)).reduce(_ unionByName _)
-    } finally buildPool.shutdown()
+    val tagged = graft.core.Par.all(settings.zipWithIndex.map { case (s, i) => () =>
+      (s.mode match {
+        case "pq" => topKPq(sampleQueries, queryId, queryVec, path, k, s.nprobe,
+          s.shortlistFactor)
+        case "sq8" => topKQuantized(sampleQueries, queryId, queryVec, path, k, s.nprobe,
+          s.shortlistFactor)
+        case _ => topK(sampleQueries, queryId, queryVec, path, k, s.nprobe)
+      }).select(col("query_id"), col("neighbor_id")).withColumn("_si", lit(i))
+    }).reduce(_ unionByName _)
     val hitCounts = tagged
       .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy("_si").agg(count(lit(1)).as("_n"))

@@ -314,6 +314,14 @@ object MinhashIndex {
     * window: appends land before the watermark advances; discard the
     * returned frame and rebuild (or remove the partial appends) after a
     * crashed ingest.
+    *
+    * Layout caveat: the id-partition count is fixed when the store is
+    * written (sized from that corpus, persisted in `params/`), and ingest
+    * never re-derives it. A store bootstrapped small and grown by daily
+    * ingest keeps the floor of 4 `_p` directories, so each directory grows
+    * without bound and a later takedown rewrites whole multi-GB
+    * directories per touched partition. Rebuild with [[write]] once the
+    * corpus has outgrown its layout.
     */
   def ingest(
       newDf: DataFrame,

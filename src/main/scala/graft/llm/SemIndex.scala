@@ -98,11 +98,6 @@ object SemIndex {
     }
   }
 
-  private def readCentroids(spark: SparkSession, path: String): Seq[(Double, Int, Seq[Float])] =
-    spark.read.parquet(s"$path/centroids")
-      .collect().map(r => (r.getDouble(1), r.getInt(0), r.getSeq[Float](2))).toSeq
-      .sortBy(_._2)
-
   /** Explicit schema — the MinhashIndex.paramsSchema rationale: no
     * inference job per read. */
   private val paramsSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -133,7 +128,7 @@ object SemIndex {
   def dedupAgainst(batch: DataFrame, idCol: String, vecCol: String,
       path: String): DataFrame = {
     val spark = batch.sparkSession
-    val cents = readCentroids(spark, path)
+    val cents = Similarity.readCentroids(spark, path)
     val (tau, maxClusterSize, _) = readParams(spark, path)
     val assigned = graft.core.Lineage.pin(
       Dedup.assignToCentroids(batch, idCol, vecCol, cents))
@@ -197,7 +192,7 @@ object SemIndex {
       s"SemIndex.ingest: index at $path stores (id: ${existing("id").dataType.sql}, " +
         s"vec: ${existing("vec").dataType.sql}) but the batch carries " +
         s"(${batchIdType.sql}, ${batchVecType.sql}) — cast the batch or rebuild")
-    val cents = readCentroids(spark, path)
+    val cents = Similarity.readCentroids(spark, path)
     val (tau, maxClusterSize, indexedMax) = readParams(spark, path)
     // disjoint-id contract: a batch reusing an indexed id would append a
     // duplicate-id row to vectors/, silently breaking min-id attribution

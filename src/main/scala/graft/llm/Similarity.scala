@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -204,6 +204,14 @@ object Similarity {
       (0.5 * c.dot(c), i, c.toArray.map(_.toFloat).toSeq)
     }.toSeq
   }
+
+  /** The centroids a persistent index ([[IvfIndex]], [[SemIndex]]) keeps
+    * under `<path>/centroids`, as (halfNorm, list, vec) rows in list order. */
+  private[llm] def readCentroids(spark: SparkSession,
+      path: String): Seq[(Double, Int, Seq[Float])] =
+    spark.read.parquet(s"$path/centroids")
+      .collect().map(r => (r.getDouble(1), r.getInt(0), r.getSeq[Float](2))).toSeq
+      .sortBy(_._2)
 
   /** Centroid structs as a broadcast single-row DataFrame cross-joined onto
     * `df` (the array is DATA, not plan constants — a large nlist as

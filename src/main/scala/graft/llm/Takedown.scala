@@ -342,8 +342,9 @@ object Takedown {
     // over). Each store remains individually atomic and individually
     // audited; a failure in one store no longer stops the others from
     // committing cleanly, and either way the consolidated trail records
-    // exactly the committed set — the contract resume replays. The first
-    // failure is rethrown after every store settles.
+    // exactly the committed set — the contract resume replays. Par.all
+    // rethrows the first failure after every store settles, with the
+    // other stores' failures suppressed on it.
     val indexStores: Seq[(String, String, () => Long)] = Seq(
       (minhashURI, "minhash", () => {
         val (b, s, e) = MinhashIndex.delete(spark, minhashURI, idsNorm)
@@ -352,23 +353,9 @@ object Takedown {
       (spanURI, "span", () => SpanIndex.delete(spark, spanURI, idsNorm)),
       (semURI, "sem", () => SemIndex.delete(spark, semURI, idsNorm)),
       (ivfURI, "ivf", () => IvfIndex.delete(spark, ivfURI, idsNorm)))
-    val active = indexStores.filter(_._1.nonEmpty)
-    if (active.size <= 1)
-      active.foreach { case (uri, tpe, exec) => runStore(uri, tpe)(exec()) }
-    else {
-      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(active.size)
-      try {
-        active.map { case (uri, tpe, exec) =>
-          pool.submit(new Runnable {
-            def run(): Unit =
-              try runStore(uri, tpe)(exec())
-              catch { case t: Throwable => err.compareAndSet(null, t) }
-          })
-        }.foreach(_.get())
-      } finally pool.shutdown()
-      if (err.get() != null) throw err.get()
-    }
+    graft.core.Par.all(indexStores.filter(_._1.nonEmpty).map {
+      case (uri, tpe, exec) => () => runStore(uri, tpe)(exec())
+    })
 
     // canonical store order regardless of completion order — the view is
     // byte-identical to the sequential formulation's

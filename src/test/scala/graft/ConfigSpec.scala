@@ -833,6 +833,19 @@ class ConfigSpec extends SparkSpec {
     assert(tokMap("nbu_model3") == tokMap("nbu_model"), tokMap("nbu_model3").toString)
   }
 
+  /** Every file under `dir` with its length and mtime: equal snapshots
+    * mean no write touched the store. */
+  private def snap(dir: String): Map[String, (Long, Long)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(dir))
+      .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
+  }
+
+  private def idsIn(path: String, idCol: String): Set[Long] =
+    spark.read.parquet(path).select(idCol).distinct()
+      .collect().map(_.getLong(0)).toSet
+
   test("TakedownExecute: one cell, one id view, every store — consolidated view + request-level audit trail") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -919,9 +932,6 @@ class ConfigSpec extends SparkSpec {
     assert(tokMap(graft.llm.NaiveBayes.read(spark, nbdir)) ==
       tokMap(graft.llm.NaiveBayes.train(kept, "text", "label")))
     // every index table is structurally clean of the deleted ids
-    def idsIn(path: String, idCol: String): Set[Long] =
-      spark.read.parquet(path).select(idCol).distinct()
-        .collect().map(_.getLong(0)).toSet
     assert(!Seq(idsIn(s"$mdir/bands", "_id"), idsIn(s"$mdir/shingles", "_id"),
       idsIn(s"$mdir/exact", "_id"), idsIn(s"$sdir/grams", "keeper"),
       idsIn(s"$semdir/vectors", "id"), idsIn(s"$ivfdir/vectors", "id"))
@@ -1003,14 +1013,8 @@ class ConfigSpec extends SparkSpec {
       .filter(col("request_id") === "legal-req-7")
       .collect().map(_.getAs[String]("store_type")).toSeq.sorted
     assert(trailTypes() == Seq("minhash", "wordcounts"), trailTypes().toString)
-    // byte-level snapshot (every file's path, length, mtime) of the
-    // committed stores — nothing below may touch them again
-    def snap(dir: String): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(dir))
-        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
-    }
+    // byte-level snapshot of the committed stores — nothing below may
+    // touch them again
     val wcSnap = snap(wcdir)
     val mhSnap = snap(mdir)
     // a from-the-top re-run REFUSES: it would subtract the counts twice
@@ -1094,6 +1098,59 @@ class ConfigSpec extends SparkSpec {
     assert(snap(wcdir) == wcSnap && snap(mdir) == mhSnap &&
       snap(semdir) == semSnap, "fully-committed resume must not mutate")
     assert(trailTypes() == Seq("minhash", "sem", "wordcounts"))
+  }
+
+  test("Takedown fan-out: two failing index deletes are both reported, the trail holds exactly the committed stores, resume completes the rest") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory("tdfanout").toString
+    val (mdir, sdir, semdir, ivfdir, adir) =
+      (s"$base/mh", s"$base/span", s"$base/sem", s"$base/ivf", s"$base/audit")
+    val corpus = Seq(
+      (0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa", Seq(1.0f, 0.0f, 0.0f)),
+      (1L, "one two three four five six seven eight nine ten eleven", Seq(0.0f, 1.0f, 0.0f)),
+      (2L, "red orange yellow green blue indigo violet cyan magenta white", Seq(0.0f, 0.0f, 1.0f)),
+      (3L, "north south east west up down left right forward backward", Seq(0.7f, 0.7f, 0.0f)))
+      .toDF("doc_id", "text", "embedding")
+    graft.llm.MinhashIndex.write(corpus, "doc_id", "text", mdir)
+    graft.llm.SpanIndex.write(corpus, "doc_id", "text", sdir,
+      k = 8, hashMode = "xxhash64", nbuckets = 8, bloomBits = 1L << 16,
+      bloomHashes = 3)
+    graft.llm.SemIndex.write(corpus, "doc_id", "embedding", semdir, nclusters = 2)
+    graft.llm.IvfIndex.write(corpus, "doc_id", "embedding", ivfdir, nlist = 2)
+    // break two of the four stores below their roots, which preflight does
+    // not inspect: minhash loses its params (its delete reads the layout
+    // geometry there), ivf its vector table
+    val broken = Seq(s"$mdir/params" -> s"$base/mh_params", s"$ivfdir/vectors" -> s"$base/ivf_vectors")
+    broken.foreach { case (live, aside) => Files.move(Paths.get(live), Paths.get(aside)) }
+    val ids = Seq(1L, 3L).toDF("doc_id")
+    def run(resume: Boolean) = graft.llm.Takedown.run(spark, ids,
+      minhashURI = mdir, spanURI = sdir, semURI = semdir, ivfURI = ivfdir,
+      auditURI = adir, requestId = "legal-req-9", resume = resume)
+    val e = intercept[Exception](run(resume = false))
+    // the first failing store in fan-out order is thrown, the other rides
+    // along suppressed — neither failure is dropped
+    assert(e.getMessage.contains(s"$mdir/params"), e.getMessage)
+    assert(e.getSuppressed.map(_.getMessage).toSeq.exists(_.contains(s"$ivfdir/vectors")),
+      e.getSuppressed.map(_.getMessage).mkString(" | "))
+    def trailTypes(): Seq[String] = graft.llm.Takedown
+      .consolidatedLog(spark, adir)
+      .filter(col("request_id") === "legal-req-9")
+      .collect().map(_.getAs[String]("store_type")).toSeq.sorted
+    assert(trailTypes() == Seq("sem", "span"), trailTypes().toString)
+    // repair, then resume: the committed two are replayed untouched and
+    // only the two that failed run
+    val (spanSnap, semSnap) = (snap(sdir), snap(semdir))
+    broken.foreach { case (live, aside) => Files.move(Paths.get(aside), Paths.get(live)) }
+    val view = run(resume = true).collect().map(_.getAs[String]("store_type")).toSet
+    assert(view == Set("minhash", "span", "sem", "ivf"), view.toString)
+    assert(snap(sdir) == spanSnap && snap(semdir) == semSnap,
+      "resume re-ran a committed delete")
+    assert(trailTypes() == Seq("ivf", "minhash", "sem", "span"), trailTypes().toString)
+    assert(!Seq(idsIn(s"$mdir/bands", "_id"), idsIn(s"$mdir/shingles", "_id"),
+      idsIn(s"$mdir/exact", "_id"), idsIn(s"$ivfdir/vectors", "id"))
+      .exists(s => s.contains(1L) || s.contains(3L)))
   }
 
   test("WordCountsTransform action=deleteIds / ClassifierTransform mode=unlearnIds: id-addressed count-store takedown") {
