@@ -1,7 +1,9 @@
 package graft.core
 
+import java.io.IOException
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.file.{Files, Path}
 import java.time.Duration
 
 /** Real HTTP transport for the HTTP stages, on the JDK's built-in client —
@@ -17,11 +19,28 @@ object Http {
     .followRedirects(HttpClient.Redirect.NORMAL)
     .build()
 
+  /** Largest body [[get]] and [[readFile]] return: 256 MB. A larger
+    * response or file fails with an IOException before it is held, so one
+    * huge blob cannot ask an executor for an array its heap cannot hold. */
+  val MaxBodyBytes: Int = 1 << 28
+
   def get(uri: String, headers: Map[String, String] = Map.empty): (Int, Array[Byte]) = {
     val b = HttpRequest.newBuilder(URI.create(uri)).GET()
     headers.foreach { case (k, v) => b.header(k, v) }
-    val r = client.send(b.build(), HttpResponse.BodyHandlers.ofByteArray())
-    (r.statusCode(), r.body())
+    val r = client.send(b.build(), HttpResponse.BodyHandlers.ofInputStream())
+    val in = r.body()
+    try {
+      val body = in.readNBytes(MaxBodyBytes)
+      if (in.read() >= 0) throw new IOException(s"$uri: body over $MaxBodyBytes bytes")
+      (r.statusCode(), body)
+    } finally in.close()
+  }
+
+  /** Bytes of a local file, at most [[MaxBodyBytes]]. */
+  def readFile(path: Path): Array[Byte] = {
+    val size = Files.size(path)
+    if (size > MaxBodyBytes) throw new IOException(s"$path: $size bytes, over $MaxBodyBytes")
+    Files.readAllBytes(path)
   }
 
   def post(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, DataFrameReader}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, StringType}
 import graft.core.{PipelineContext, Stage}
+import scala.util.control.NonFatal
 
 /** Shared extract options (SURVEY.md §2.2 Extract):
   * declared schema, persist, numPartitions, partitionBy, basePath, streaming
@@ -313,8 +314,8 @@ final case class HTTPExtract(
     transport: String => Array[Byte] = u =>
       if (u.startsWith("http")) graft.core.Http.get(u)._2
       else
-        try java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(new java.net.URI(u)))
-        catch { case _: Throwable => Array.emptyByteArray }
+        try graft.core.Http.readFile(java.nio.file.Paths.get(new java.net.URI(u)))
+        catch { case NonFatal(_) => Array.emptyByteArray }
 ) extends Stage {
   val stageType = "HTTPExtract"
   def execute(ctx: PipelineContext): Option[DataFrame] = {

@@ -191,7 +191,8 @@ object IvfIndex {
     // vanish from shortlists. Fail fast with a rebuild hint instead; the
     // pre-r12 "unnormalized fallback" contract only holds when NO file has
     // the new columns.
-    val existingSchema = spark.read.parquet(s"$path/vectors").schema
+    val vectors = spark.read.parquet(s"$path/vectors")
+    val existingSchema = vectors.schema
     val existing = existingSchema.fieldNames.toSet
     val expected = cbs match {
       case Some(_) => Set("id", "vec", "codes", "pq", "vnorm", "_list")
@@ -229,7 +230,7 @@ object IvfIndex {
     require(bs.getLong(1) == bs.getLong(0),
       s"IvfIndex.ingest: batch contains NULL $idCol values")
     val dups = graft.core.Lineage.pin(
-      spark.read.parquet(s"$path/vectors").select("id")
+      vectors.select("id")
         .filter(col("id").between(lit(bs.get(2)), lit(bs.get(3))))
         .join(batchIds, Seq("id"), "left_semi"))
     val dupSample = dups.limit(6).collect().map(r => String.valueOf(r.get(0)))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Multimodal column model: image/audio/video travel as opaque `binary`
   * columns with a typed metadata struct alongside. Decode / feature-extract /
@@ -74,9 +75,10 @@ object Multimodal {
         else {
           // features from a bounded read: at most 256k frames — duration and
           // frame count come from the HEADER, so a 3-hour file never loads
-          val capFrames = math.min(frames, 262144L).toInt
+          val capFrames = math.min(frames, 262144L)
           val frameSize = f.getFrameSize
-          val buf = new Array[Byte](capFrames * frameSize)
+          // no more than the blob holds, whatever frame size the header claims
+          val buf = new Array[Byte](math.min(capFrames * frameSize, bytes.length.toLong).toInt)
           var off = 0
           var r = 0
           while (off < buf.length && { r = ais.read(buf, off, buf.length - off); r > 0 }) off += r
@@ -126,7 +128,7 @@ object Multimodal {
             Integer.valueOf(f.getChannels), bins))
         }
       } finally ais.close()
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Decode a blob: REAL for JDK-supported images (PNG/JPEG/GIF/BMP via
     * ImageIO — true dimensions + 8-bin luminance histogram), REAL for
@@ -165,6 +167,34 @@ object Multimodal {
     (width, height, features)
   }
 
+  /** Most pixels an image may declare and still be decoded: 2^25 (e.g.
+    * 8192 x 4096), a raster of at most 256 MB at 8 bytes per pixel. */
+  private val MaxImagePixels = 1L << 25
+
+  /** Deepest LIST nesting the AVI walks accept; real files nest 3 or 4. */
+  private val MaxRiffDepth = 32
+
+  /** `ImageIO.read` that checks the header's dimensions first: null when no
+    * reader takes the bytes or the image declares more than
+    * [[MaxImagePixels]] pixels, so a crafted header cannot ask for a raster
+    * the heap cannot hold. */
+  private def readImage(bytes: Array[Byte]): java.awt.image.BufferedImage = {
+    val in = javax.imageio.ImageIO.createImageInputStream(new java.io.ByteArrayInputStream(bytes))
+    if (in == null) return null
+    try {
+      val readers = javax.imageio.ImageIO.getImageReaders(in)
+      if (!readers.hasNext) null
+      else {
+        val reader = readers.next()
+        try {
+          reader.setInput(in, true, true)
+          if (reader.getWidth(0).toLong * reader.getHeight(0) > MaxImagePixels) null
+          else reader.read(0, reader.getDefaultReadParam)
+        } finally reader.dispose()
+      }
+    } finally in.close()
+  }
+
   /** Image-only decode kernel: (w, h, histogram) for a real JDK-decodable
     * image, (-1, -1, empty) otherwise — [[decodeMedia]] composes the
     * image → audio → fake cascade on top. */
@@ -173,7 +203,7 @@ object Multimodal {
       if (bytes == null || bytes.length < 8) None
       else
         try {
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+          val img = readImage(bytes)
           if (img == null) None
           else {
             val (w, h) = (img.getWidth, img.getHeight)
@@ -196,7 +226,7 @@ object Multimodal {
             if (n > 0) { var i = 0; while (i < 8) { bins(i) /= n; i += 1 } }
             Some((w, h, bins))
           }
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
     real.getOrElse((-1, -1, Array.empty[Float]))
   }
 
@@ -232,7 +262,7 @@ object Multimodal {
       if (bytes == null || bytes.length < 8) None
       else
         try {
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+          val img = readImage(bytes)
           if (img == null) None
           else {
             val out = new java.awt.image.BufferedImage(
@@ -247,7 +277,7 @@ object Multimodal {
             javax.imageio.ImageIO.write(out, "png", bos)
             Some(bos.toByteArray)
           }
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
     real.map((_, "image/png")).getOrElse {
       // STUB(no audio/video codecs): deterministic area-proportional payload
       val targetLen = math.max(1, (tw * th) / 64)
@@ -298,8 +328,9 @@ object Multimodal {
     *
     * Returns (wavBytes|null, status): `ok`, `unsupported` (not JDK PCM —
     * the no-codec fallthrough, blob passes through untouched), or
-    * `too_long` (> `maxFrames`; resampling is a whole-clip op, so the cap
-    * fails loudly instead of silently truncating a 3-hour file).
+    * `too_long` (input or output clip > `maxFrames`; resampling is a
+    * whole-clip op, so the cap fails loudly instead of silently truncating
+    * a 3-hour file).
     */
   private[llm] def resampleAudioBlob(bytes: Array[Byte], targetRate: Int,
       maxFrames: Long = 1L << 22): (Array[Byte], String) =
@@ -319,7 +350,7 @@ object Multimodal {
           val srcRate = math.round(f.getSampleRate)
           val nch = f.getChannels
           val frameSize = f.getFrameSize
-          val buf = new Array[Byte](frames.toInt * frameSize)
+          val buf = new Array[Byte](math.min(frames * frameSize, bytes.length.toLong).toInt)
           var off = 0
           var r = 0
           while (off < buf.length && { r = ais.read(buf, off, buf.length - off); r > 0 }) off += r
@@ -350,8 +381,12 @@ object Multimodal {
             mono(i) = sum / nch
             i += 1
           }
-          // exact-rational linear interpolation to the target rate
-          val outFrames = ((n.toLong * targetRate + srcRate - 1) / srcRate).toInt
+          // exact-rational linear interpolation to the target rate; the
+          // output clip is held to the same cap (a header rate of 1 Hz
+          // would otherwise ask for targetRate output frames per input frame)
+          val outFramesL = (n.toLong * targetRate + srcRate - 1) / srcRate
+          if (outFramesL > maxFrames) return (null, "too_long")
+          val outFrames = outFramesL.toInt
           val out = new Array[Byte](44 + outFrames * 2)
           var j = 0
           while (j < outFrames) {
@@ -381,7 +416,7 @@ object Multimodal {
           (out, "ok")
         }
       } finally ais.close()
-    } catch { case _: Throwable => (null, "unsupported") }
+    } catch { case NonFatal(_) => (null, "unsupported") }
 
   /** Resample + mono-mix audio blobs to `targetRate` (see
     * [[resampleAudioBlob]]). Output: input columns + `audio_resampled`
@@ -442,8 +477,9 @@ object Multimodal {
     * stream-0 video chunks. Strict: any malformed or truncated chunk ⇒
     * None (never a partial parse presented as success); chunk bounds are
     * checked in Long so a crafted size near 2^31 is rejected structurally
-    * instead of via overflow. Returns None for non-AVI bytes — callers
-    * cascade to the next decoder. */
+    * instead of via overflow, and LISTs nested deeper than
+    * [[MaxRiffDepth]] are malformed (the walk recurses once per level).
+    * Returns None for non-AVI bytes — callers cascade to the next decoder. */
   private[llm] def parseAvi(bytes: Array[Byte]): Option[AviVideo] =
     try {
       if (bytes == null || bytes.length < 12 || fourcc(bytes, 0) != "RIFF" ||
@@ -457,7 +493,7 @@ object Multimodal {
       var vidsPrefix: String = null // f"%02d" index of the FIRST vids stream
       var bad = false
       val ranges = Vector.newBuilder[(Int, Int)]
-      def walk(start: Int, end: Int): Unit = {
+      def walk(start: Int, end: Int, depth: Int): Unit = {
         var off = start
         while (!bad && off + 8 <= end) {
           val id = fourcc(bytes, off)
@@ -467,8 +503,8 @@ object Multimodal {
           if (dataEndL > end) { bad = true; return }
           val dataEnd = dataEndL.toInt
           if (id == "LIST") {
-            if (sz < 4) { bad = true; return }
-            walk(dataStart + 4, dataEnd)
+            if (sz < 4 || depth >= MaxRiffDepth) { bad = true; return }
+            walk(dataStart + 4, dataEnd, depth + 1)
           } else if (id == "avih") {
             if (sz < 40) { bad = true; return }
             uspf = u32le(bytes, dataStart)
@@ -503,11 +539,11 @@ object Multimodal {
         // chunk carries its pad byte per the RIFF rules)
         if (!bad && off != end) bad = true
       }
-      walk(12, bytes.length)
+      walk(12, bytes.length, 0)
       val uspfFinal = if (strhUspf > 0) strhUspf else uspf
       if (bad || width <= 0 || height <= 0 || total < 0 || uspfFinal <= 0) None
       else Some(AviVideo(width, height, total, uspfFinal, ranges.result()))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Parsed audio track of an AVI: WAVEFORMATEX fields from the first
     * `auds` stream's `strf` plus the byte ranges of its `NNwb` chunks
@@ -536,7 +572,7 @@ object Multimodal {
       var bits = -1
       var chunkId: String = null
       val ranges = Vector.newBuilder[(Int, Int)]
-      def walk(start: Int, end: Int): Unit = {
+      def walk(start: Int, end: Int, depth: Int): Unit = {
         var off = start
         while (!bad && off + 8 <= end) {
           val id = fourcc(bytes, off)
@@ -546,8 +582,8 @@ object Multimodal {
           if (dataEndL > end) { bad = true; return }
           val dataEnd = dataEndL.toInt
           if (id == "LIST") {
-            if (sz < 4) { bad = true; return }
-            walk(dataStart + 4, dataEnd)
+            if (sz < 4 || depth >= MaxRiffDepth) { bad = true; return }
+            walk(dataStart + 4, dataEnd, depth + 1)
           } else if (id == "strh") {
             if (sz < 28) { bad = true; return }
             lastWasAuds = audioIdx < 0 && fourcc(bytes, dataStart) == "auds"
@@ -570,10 +606,10 @@ object Multimodal {
         }
         if (!bad && off != end) bad = true
       }
-      walk(12, bytes.length)
+      walk(12, bytes.length, 0)
       if (bad || audioIdx < 0 || fmtTag < 0) None
       else Some(AviAudio(audioIdx, fmtTag, nch, rate, bits, ranges.result()))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Extract an AVI's PCM audio track as a standalone WAV blob — the
     * bridge from the video container to the ENTIRE audio pipeline
@@ -780,8 +816,7 @@ object Multimodal {
       case Some(v) =>
         try {
           val out = v.frameRanges.indices.map { i =>
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(v.frameBytes(bytes, i)))
+            val img = readImage(v.frameBytes(bytes, i))
             if (img == null) throw new IllegalArgumentException(s"frame $i undecodable")
             val scaled = new java.awt.image.BufferedImage(
               tw, th, java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -798,7 +833,7 @@ object Multimodal {
           // keep the source timing EXACTLY: the header's frame duration in
           // microseconds carries over as-is (fps-representable or not)
           (buildMjpegAviUspf(out, tw, th, v.microSecPerFrame), "transcoded")
-        } catch { case _: Throwable => (bytes, "frame_decode_failed") }
+        } catch { case NonFatal(_) => (bytes, "frame_decode_failed") }
     }
 
   /** Transcode MJPEG-in-AVI clips to target dimensions — the video dual

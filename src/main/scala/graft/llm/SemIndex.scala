@@ -128,8 +128,16 @@ object SemIndex {
   def dedupAgainst(batch: DataFrame, idCol: String, vecCol: String,
       path: String): DataFrame = {
     val spark = batch.sparkSession
-    val cents = Similarity.readCentroids(spark, path)
     val (tau, maxClusterSize, _) = readParams(spark, path)
+    dedupAgainst(batch, idCol, vecCol, Similarity.readCentroids(spark, path),
+      tau, maxClusterSize, spark.read.parquet(s"$path/vectors"))
+  }
+
+  /** [[dedupAgainst]] over a store already opened by the caller: its
+    * centroids, params and `vectors/` frame ([[ingest]] reads each once). */
+  private def dedupAgainst(batch: DataFrame, idCol: String, vecCol: String,
+      cents: Seq[(Double, Int, Seq[Float])], tau: Double, maxClusterSize: Int,
+      vectors: DataFrame): DataFrame = {
     val assigned = graft.core.Lineage.pin(
       Dedup.assignToCentroids(batch, idCol, vecCol, cents))
     // ≤ nclusters values, collected from the pinned batch assignment —
@@ -143,8 +151,7 @@ object SemIndex {
     val touched = summary.getSeq[Int](0)
     require(summary.isNullAt(1) || summary.getLong(1) >= 0L,
       s"SemIndex.dedupAgainst: batch ids must be non-negative, found ${summary.get(1)}")
-    val kept = spark.read.parquet(s"$path/vectors")
-      .filter(col("_cluster").isin(touched.map(Integer.valueOf).toSeq: _*))
+    val kept = vectors.filter(col("_cluster").isin(touched.map(Integer.valueOf).toSeq: _*))
     // deterministic per-cluster cap on the INDEX side (the MinhashIndex
     // bucket-cap discipline): one dense cluster contributes a bounded
     // candidate set, never cluster × batch rows unbounded
@@ -175,7 +182,8 @@ object SemIndex {
     */
   def ingest(batch: DataFrame, idCol: String, vecCol: String, path: String): DataFrame = {
     val spark = batch.sparkSession
-    val existing = spark.read.parquet(s"$path/vectors").schema
+    val vectors = spark.read.parquet(s"$path/vectors")
+    val existing = vectors.schema
     require(existing.fieldNames.toSet == Set("id", "vec", "_cluster"),
       s"SemIndex.ingest: layout at $path has columns " +
         s"${existing.fieldNames.sorted.mkString(",")} — rebuild with " +
@@ -205,7 +213,7 @@ object SemIndex {
         s"(max indexed = $indexedMax, batch min = ${batchRange.get(0)}) — " +
         "renumber the batch or rebuild with SemIndex.write")
     val survivors = graft.core.Lineage.pin(
-      dedupAgainst(batch, idCol, vecCol, path))
+      dedupAgainst(batch, idCol, vecCol, cents, tau, maxClusterSize, vectors))
     // batch-sized append (IndexCompact.coalesceForAppend): survivors is
     // pinned, so the count is a cached-block scan; a small batch writes
     // ONE file per touched cluster dir instead of one per (task, dir)

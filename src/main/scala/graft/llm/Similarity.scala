@@ -206,10 +206,11 @@ object Similarity {
   }
 
   /** The centroids a persistent index ([[IvfIndex]], [[SemIndex]]) keeps
-    * under `<path>/centroids`, as (halfNorm, list, vec) rows in list order. */
+    * under `<path>/centroids`, as (halfNorm, list, vec) rows in list order.
+    * Read with the schema both writers use, so no inference job runs. */
   private[llm] def readCentroids(spark: SparkSession,
       path: String): Seq[(Double, Int, Seq[Float])] =
-    spark.read.parquet(s"$path/centroids")
+    spark.read.schema("list INT, halfNorm DOUBLE, vec ARRAY<FLOAT>").parquet(s"$path/centroids")
       .collect().map(r => (r.getDouble(1), r.getInt(0), r.getSeq[Float](2))).toSeq
       .sortBy(_._2)
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Literal, Rand}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import scala.util.control.NonFatal
 
 /** The reference's session UDF surface (SURVEY.md §2.3 "UDF surface"):
   * `get_json_double_array` / `get_json_integer_array` / `get_json_long_array`
@@ -20,7 +21,7 @@ object Udfs {
     if (json == null || path == null) return None
     val parsed =
       try JsonMethods.parse(json)
-      catch { case _: Throwable => return None }
+      catch { case NonFatal(_) => return None }
     val tokens = path.stripPrefix("$").split("""[.\[\]]+""").filter(_.nonEmpty)
     tokens.foldLeft(Option(parsed)) {
       case (Some(JObject(kvs)), key) if !key.forall(_.isDigit) =>
@@ -70,14 +71,15 @@ object Udfs {
       (json: String, path: String) => numArray(json, path).map(_.map(_.toLong).toArray).orNull
     )
     // http(s) URIs fetch over real HTTP (graft.core.Http, pooled JDK client);
-    // file URIs read the local filesystem.
+    // file URIs read the local filesystem. A body over Http.MaxBodyBytes
+    // reads as null, like an unreadable one.
     spark.udf.register(
       "get_uri",
       (uri: String) =>
         try {
           if (uri.startsWith("http")) graft.core.Http.get(uri)._2
-          else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(new java.net.URI(uri)))
-        } catch { case _: Throwable => null }
+          else graft.core.Http.readFile(java.nio.file.Paths.get(new java.net.URI(uri)))
+        } catch { case NonFatal(_) => null }
     )
     // STUB(offline): like get_uri but for a glob — returns the bytes of every
     // matching local file, sorted by path for determinism (the reference
@@ -96,10 +98,10 @@ object Udfs {
             stream.asScala.toSeq
               .filter(java.nio.file.Files.isRegularFile(_))
               .sortBy(_.toString)
-              .map(java.nio.file.Files.readAllBytes)
+              .map(graft.core.Http.readFile)
               .toArray
           } finally stream.close()
-        } catch { case _: Throwable => null }
+        } catch { case NonFatal(_) => null }
     )
     spark.udf.register(
       "struct_keys",

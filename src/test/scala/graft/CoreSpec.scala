@@ -153,6 +153,26 @@ class RunnerSpec extends SparkSpec {
     assert(many == Seq("alpha", "beta")) // path-sorted
   }
 
+  test("get_uri, get_uri_array and HTTPExtract read a file over the body limit as unreadable") {
+    graft.udf.Udfs.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("uris")
+    java.nio.file.Files.write(dir.resolve("a.bin"), "alpha".getBytes)
+    // sparse: one byte over the limit without writing 256 MB
+    val big = new java.io.RandomAccessFile(dir.resolve("b.bin").toFile, "rw")
+    try big.setLength(graft.core.Http.MaxBodyBytes + 1L) finally big.close()
+    intercept[java.io.IOException](graft.core.Http.readFile(dir.resolve("b.bin")))
+    val r = spark.sql(s"SELECT get_uri('file://$dir/a.bin') AS small, " +
+      s"get_uri('file://$dir/b.bin') AS big, get_uri_array('file://$dir/*.bin') AS many").head()
+    assert(new String(r.getAs[Array[Byte]]("small")) == "alpha")
+    assert(r.isNullAt(1) && r.isNullAt(2))
+    val body = graft.extract.HTTPExtract("h", s"file://$dir/b.bin", "big_body")
+      .execute(new PipelineContext(spark)).get.select("body").as[String](org.apache.spark.sql.Encoders.STRING).head()
+    assert(body.isEmpty)
+    // JSON nested past Jackson's depth limit parses as absent, not a stack overflow
+    val deep = "[" * 100000 + "]" * 100000
+    assert(spark.sql(s"SELECT get_json_double_array('$deep', '$$') AS a").head().isNullAt(0))
+  }
+
   test("compile-only stages fail fast with a clear error when the dependency is absent") {
     val ctx = new PipelineContext(spark)
     // Each of these lacks its external dependency here (DB, fitted model);

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.llm.{Dedup, Multimodal, Similarity, TextStats}
 
 class DedupSpec extends SparkSpec {
@@ -253,6 +255,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connected components converge on a long chain (pointer jumping)") {
+    // this graph now takes the driver path; the forced-path specs below run
+    // the pointer-jumping rounds on it
     // a 60-node path has diameter 59: one-hop propagation alone would need
     // 59 rounds and silently mislabel under the iteration cap; pointer
     // jumping converges in O(log n)
@@ -263,6 +267,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connected components: reliable-checkpoint mode matches local mode") {
+    // this graph now takes the driver path; "the forced distributed path
+    // matches in reliable-checkpoint mode" below covers the checkpointed rounds
     // With a checkpoint dir configured, Lineage.pin upgrades every
     // per-iteration cut to a fault-tolerant checkpoint (survives executor
     // loss on a real cluster). Labels must be identical in both modes.
@@ -284,6 +290,100 @@ class DedupSpec extends SparkSpec {
       sc.getClass.getMethod("checkpointDir_$eq", classOf[Option[_]])
         .invoke(sc, None)
     }
+  }
+
+  /** (id, component) rows of [[Dedup.connectedComponents]] with the driver
+    * path allowed (`driverEdgeLimit` default) or forced off (0), as a
+    * sorted multiset so a duplicated or missing node shows. */
+  private def ccRows(pairs: DataFrame, driverEdgeLimit: Int = 100000,
+      maxIterations: Int = 25): Seq[(Any, Any)] =
+    Dedup.connectedComponents(pairs, "idA", "idB", maxIterations, driverEdgeLimit)
+      .collect().map(r => (r.get(0), r.get(1))).toSeq.sortBy(_.toString)
+
+  private def assertPathsAgree(pairs: DataFrame): Seq[(Any, Any)] = {
+    val driver = ccRows(pairs)
+    val distributed = ccRows(pairs, driverEdgeLimit = 0)
+    assert(driver == distributed, s"driver $driver vs distributed $distributed")
+    driver
+  }
+
+  test("connected components: driver and distributed paths agree on the chain graphs") {
+    assertPathsAgree(Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("idA", "idB"))
+    assertPathsAgree(Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (7L, 3L)).toDF("idA", "idB"))
+    val chain = (1L until 60L).map(i => (i, i + 1)).toDF("idA", "idB")
+    val forced = ccRows(chain, driverEdgeLimit = 0, maxIterations = 12)
+    assert(forced.length == 60 && forced.forall(_._2 == 1L), forced.take(5).mkString(","))
+    assert(ccRows(chain) == forced)
+  }
+
+  test("connected components: the forced distributed path matches in reliable-checkpoint mode") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (7L, 3L)).toDF("idA", "idB")
+    val local = ccRows(pairs, driverEdgeLimit = 0)
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    sc.setCheckpointDir(dir)
+    try {
+      assert(ccRows(pairs, driverEdgeLimit = 0) == local)
+      assert(ccRows(pairs) == local)
+      assert(new java.io.File(dir).listFiles.nonEmpty,
+        "reliable mode must have written checkpoint data")
+    } finally {
+      // cleared so later suites keep the local-checkpoint default
+      sc.getClass.getMethod("checkpointDir_$eq", classOf[Option[_]]).invoke(sc, None)
+    }
+  }
+
+  test("connected components: both paths agree on seeded graphs with repeated, reversed and self pairs") {
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val base = Seq.fill(30)((rnd.nextInt(40), rnd.nextInt(40)))
+      val edges = base ++ base.take(5) ++ base.slice(5, 10).map(_.swap) ++
+        Seq.fill(4) { val v = rnd.nextInt(40); (v, v) }
+      val ints = assertPathsAgree(edges.toDF("idA", "idB"))
+      val longs = assertPathsAgree(edges.map { case (a, b) => (a.toLong, b.toLong) }.toDF("idA", "idB"))
+      assert(longs == ints.map { case (a, b) => (a.asInstanceOf[Int].toLong, b.asInstanceOf[Int].toLong) })
+      assert(ints.length == edges.flatMap(e => Seq(e._1, e._2)).distinct.length)
+      // string ids take the distributed path either way
+      assertPathsAgree(edges.map { case (a, b) => (s"n$a", s"n$b") }.toDF("idA", "idB"))
+    }
+  }
+
+  test("connected components: null ids label the same on both paths") {
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), None), (None, Some(2L)), (Some(2L), Some(3L)), (None, None), (Some(5L), None)
+    ).toDF("idA", "idB")
+    val rows = assertPathsAgree(pairs)
+    assert(rows.count(_._1 == null) == 1, rows.toString)
+  }
+
+  test("connected components: a small integral graph runs the pairs pin and one collect; string ids run the rounds") {
+    val sc = spark.sparkContext
+    def stagesDuring(f: => Unit): Seq[String] = {
+      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          names.add(e.stageInfos.maxBy(_.stageId).name)
+      }
+      assert(org.apache.spark.GraftListenerBus.drain(sc, 10000))
+      sc.addSparkListener(l)
+      try {
+        f
+        assert(org.apache.spark.GraftListenerBus.drain(sc, 10000))
+      } finally sc.removeSparkListener(l)
+      names.asScala.toSeq
+    }
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("idA", "idB")
+    val driver = stagesDuring(Dedup.connectedComponents(pairs))
+    assert(driver.length == 2 && driver.head.startsWith("localCheckpoint at Lineage") &&
+      driver(1).startsWith("collect at Dedup"), driver.mkString("; "))
+    // the forced path runs its propagation rounds (pins, joins and the
+    // convergence counts), which the listener sees as many more jobs
+    val forced = stagesDuring(Dedup.connectedComponents(pairs, "idA", "idB", 25, 0))
+    assert(forced.length > 10, forced.mkString("; "))
+    // only integral ids are labelled on the driver
+    val strings = stagesDuring(Dedup.connectedComponents(
+      pairs.select($"idA".cast("string").as("idA"), $"idB".cast("string").as("idB"))))
+    assert(strings.length > 10, strings.mkString("; "))
   }
 
   test("minhashDedupClusters keeps one doc per transitive cluster") {
@@ -1111,6 +1211,73 @@ class MultimodalSpec extends SparkSpec {
       Seq((1L, long)).toDF("id", "blob"), "blob", 8000, maxFrames = 10).head()
     assert(tooLong.getAs[String]("resample_status") == "too_long")
   }
+
+  test("crafted headers and deep LIST nesting fall back without a heap-sized allocation or deep recursion") {
+    import graft.llm.LlmTestAccess
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    // bytes this thread allocates while `f` runs
+    def allocated[T](f: => T): (T, Long) = {
+      val before = threads.getCurrentThreadAllocatedBytes
+      val r = f
+      (r, threads.getCurrentThreadAllocatedBytes - before)
+    }
+    def put(b: Array[Byte], off: Int, v: Long, width: Int): Unit =
+      (0 until width).foreach(i => b(off + i) = ((v >> (8 * i)) & 0xff).toByte)
+    // a 60-byte WAV whose header claims 256 16-bit channels and 4 000 000
+    // frames: 2 GB of PCM the blob does not hold
+    val wav = monoWav(Array.fill[Short](8)(7), 8000f)
+    assert(wav.length == 60)
+    put(wav, 22, 256, 2); put(wav, 28, 8000L * 512, 4); put(wav, 32, 512, 2)
+    put(wav, 40, 4000000L * 512, 4)
+    val (info, infoBytes) = allocated(LlmTestAccess.decodeAudio(wav))
+    assert(info.map(i => (i.frames, i.channels)) == Some((4000000L, 256)), info.toString)
+    assert(infoBytes < (16L << 20), s"decodeAudio allocated $infoBytes bytes")
+    val ((out, status), resampleBytes) = allocated(LlmTestAccess.resampleAudioBlob(wav, 8000))
+    assert(status == "ok" && out.length == 44, s"$status ${Option(out).map(_.length)}")
+    assert(resampleBytes < (16L << 20), s"resampleAudioBlob allocated $resampleBytes bytes")
+    // a 1 Hz header upsampled to 48 kHz: 100 frames become 4 800 000, over
+    // the 2^22-frame clip cap
+    val slow = monoWav(Array.fill[Short](100)(7), 8000f)
+    put(slow, 24, 1, 4); put(slow, 28, 2, 4)
+    assert(LlmTestAccess.resampleAudioBlob(slow, 48000)._2 == "too_long")
+    // a PNG whose header declares 20 000 x 20 000 RGB pixels (a 1.2 GB
+    // raster) and holds 100 bytes of them
+    def pngChunk(tag: String, data: Array[Byte]): Array[Byte] = {
+      val body = tag.getBytes("US-ASCII") ++ data
+      val crc = new java.util.zip.CRC32(); crc.update(body)
+      java.nio.ByteBuffer.allocate(4).putInt(data.length).array() ++ body ++
+        java.nio.ByteBuffer.allocate(4).putInt(crc.getValue.toInt).array()
+    }
+    val ihdr = java.nio.ByteBuffer.allocate(13).putInt(20000).putInt(20000)
+      .put(Array[Byte](8, 2, 0, 0, 0)).array()
+    val idat = { // one short deflate stream: the reader allocates its raster first
+      val z = new java.io.ByteArrayOutputStream()
+      val d = new java.util.zip.DeflaterOutputStream(z); d.write(new Array[Byte](100)); d.close()
+      z.toByteArray
+    }
+    val png = Array[Byte](-119, 80, 78, 71, 13, 10, 26, 10) ++ pngChunk("IHDR", ihdr) ++
+      pngChunk("IDAT", idat) ++ pngChunk("IEND", Array.emptyByteArray)
+    val ((w, h, feats), pngBytes) = allocated(LlmTestAccess.decodeStub(png))
+    assert(w == -1 && h == -1 && feats.isEmpty)
+    assert(pngBytes < (16L << 20), s"decodeStub allocated $pngBytes bytes")
+    // an AVI of 100 000 nested LISTs (12 bytes each): malformed, not a
+    // stack overflow
+    val depth = 100000
+    val avi = new Array[Byte](12 + 12 * depth)
+    avi(0) = 'R'; avi(1) = 'I'; avi(2) = 'F'; avi(3) = 'F'
+    put(avi, 4, avi.length - 8, 4)
+    avi(8) = 'A'; avi(9) = 'V'; avi(10) = 'I'; avi(11) = ' '
+    (0 until depth).foreach { d =>
+      val off = 12 + 12 * d
+      avi(off) = 'L'; avi(off + 1) = 'I'; avi(off + 2) = 'S'; avi(off + 3) = 'T'
+      put(avi, off + 4, avi.length - off - 8, 4)
+      avi(off + 8) = 'm'; avi(off + 9) = 'o'; avi(off + 10) = 'v'; avi(off + 11) = 'i'
+    }
+    assert(LlmTestAccess.parseAvi(avi).isEmpty)
+    assert(LlmTestAccess.parseAviAudio(avi).isEmpty)
+    assert(LlmTestAccess.extractAudioBlob(avi)._2 != "extracted")
+  }
 }
 
 class MinhashIndexSpec extends SparkSpec {
@@ -1328,6 +1495,48 @@ class MinhashIndexSpec extends SparkSpec {
     assert(survivors(Seq((100L, t("one")), (101L,
       "completely different words entirely unrelated content block sits right here now")))
       == Set(100L))
+  }
+
+  test("legacy store: params without idPartitions read back the fixed 64-way geometry") {
+    val path = java.nio.file.Files.createTempDirectory("mhidx").toString + "/idx"
+    val taken = "rivers and mountains line the long winding roads of the northern valley"
+    val other = "completely different words entirely unrelated content block sits right here now"
+    // 70 sits in _p=6 under pmod 64 but would be looked for in _p=2 under
+    // the 4-way floor a fresh write of this corpus picks
+    val corpus = Seq((0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (70L, taken), (2L, other)).toDF("doc_id", "text")
+    graft.llm.MinhashIndex.write(corpus, "doc_id", "text", path)
+    // rewrite it as a pre-adaptive-layout store: shingles/exact in the
+    // fixed pmod(_id, 64) layout, params without the idPartitions field
+    def rewrite(dir: String)(write: String => Unit): Unit = {
+      val tmp = s"${dir}_legacy"
+      write(tmp)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      org.apache.commons.io.FileUtils.moveDirectory(new java.io.File(tmp), new java.io.File(dir))
+    }
+    Seq("shingles", "exact").foreach { table =>
+      rewrite(s"$path/$table")(spark.read.parquet(s"$path/$table")
+        .withColumn("_p", pmod($"_id", lit(64L))).write.partitionBy("_p").parquet(_))
+    }
+    rewrite(s"$path/params")(spark.read.json(s"$path/params")
+      .drop("idPartitions").coalesce(1).write.json(_))
+    assert(new java.io.File(s"$path/exact/_p=6").isDirectory)
+    assert(!spark.read.json(s"$path/params").columns.contains("idPartitions"))
+    // delete computes the touched directories from the persisted geometry:
+    // read as 64, it finds doc 70's rows in _p=6
+    val (_, s, e) = graft.llm.MinhashIndex.delete(spark, path, Seq(70L))
+    assert(e == 1L && s > 0L, (s, e).toString)
+    // ingest lays new rows out in the same 64-way geometry
+    graft.llm.MinhashIndex.ingest(
+      Seq((200L, "a brand new document about something else entirely")).toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    val placed = spark.read.parquet(s"$path/exact").filter($"_id" === 200L)
+      .select($"_p".cast("long")).as[Long].collect().toSeq
+    assert(placed == Seq(200L % 64), placed.toString)
+    val survivors = graft.llm.MinhashIndex.dedupAgainst(
+      Seq((300L, taken), (301L, other)).toDF("doc_id", "text"), "doc_id", "text", path)
+      .select("doc_id").as[Long].collect().toSet
+    assert(survivors == Set(300L), survivors.toString)
   }
 
   test("candidate cap: maxCandidatesPerDoc=1 still catches exact copies in a hot cluster") {
@@ -2861,6 +3070,28 @@ class IndexCompactSpec extends SparkSpec {
     val byTable = graft.llm.MinhashIndex.takedownLog(spark, idx)
       .select("table").as[String].collect().toSet
     assert(byTable == Set(s"$idx/bands", s"$idx/shingles", s"$idx/exact"), byTable.toString)
+  }
+
+  test("deleteMatching at 1000 and 1001 ids: same rows left and same audit counts on both branches") {
+    import graft.llm.IndexCompact
+    val base = java.nio.file.Files.createTempDirectory("cmpk").toString
+    val dirA = s"$base/a"; val dirB = s"$base/b"
+    val data = spark.range(3000).select($"id", pmod($"id", lit(4L)).as("p"))
+    data.write.partitionBy("p").parquet(dirA)
+    data.write.partitionBy("p").parquet(dirB)
+    // 1000 ids is the largest set the collected-ids branch takes; one id
+    // absent from the table makes 1001, the pinned-frame branch, with the
+    // same rows to remove
+    val targets = 0L until 2000L by 2L
+    assert(targets.length == 1000)
+    assert(IndexCompact.deleteMatching(spark, dirA, "id", "p", targets) == 1000L)
+    assert(IndexCompact.deleteMatching(spark, dirB, "id", "p", targets :+ 99999L) == 1000L)
+    def rowsOf(d: String) = spark.read.parquet(d).select("id", "p").as[(Long, Int)].collect().toSet
+    assert(rowsOf(dirA).size == 2000 && rowsOf(dirA) == rowsOf(dirB))
+    def audit(d: String) = IndexCompact.takedownLog(spark, d)
+      .select("nIds", "rowsRemoved", "partitionsRewritten").as[(Long, Long, Long)].collect().toSeq
+    assert(audit(dirA) == Seq((1000L, 1000L, 2L)), audit(dirA).toString)
+    assert(audit(dirB) == Seq((1001L, 1000L, 2L)), audit(dirB).toString)
   }
 
   test("deleteMatching DataFrame ids: nulls fail fast; isin and semi-join discovery agree") {

@@ -19,4 +19,8 @@ object LlmTestAccess {
     Multimodal.extractAudioBlob(bytes)
   def resampleAudioBlob(bytes: Array[Byte], targetRate: Int): (Array[Byte], String) =
     Multimodal.resampleAudioBlob(bytes, targetRate)
+  def decodeAudio(bytes: Array[Byte]): Option[Multimodal.MediaInfo] =
+    Multimodal.decodeAudio(bytes)
+  def decodeStub(bytes: Array[Byte]): (Int, Int, Array[Float]) =
+    Multimodal.decodeStub(bytes)
 }
