@@ -20,17 +20,6 @@ import org.apache.spark.sql.types.StructType
   */
 object AuditLog {
 
-  private def jstr(s: String) = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
-
   /** Write one record to `logDir/<runId>.json`. Values render as JSON
     * numbers when numeric, strings (escaped) otherwise; `runId` and
     * `completedAtMs` are appended automatically. */
@@ -39,20 +28,8 @@ object AuditLog {
     val dir = new Path(logDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
-    val body = (fields :+ ("runId" -> runId) :+
+    val body = Json.obj(fields :+ ("runId" -> runId) :+
       ("completedAtMs" -> System.currentTimeMillis()))
-      .map {
-        case (k, v: Long) => s"${jstr(k)}:$v"
-        case (k, v: Int) => s"${jstr(k)}:$v"
-        // Double/Boolean must render as JSON values too — a quoted "0.95"
-        // under a DoubleType read schema silently reads back NULL, which
-        // for an audit trail is evidence loss. Non-finite doubles have no
-        // JSON form; they quote (and a reader wanting them numeric should
-        // not be storing NaN as evidence in the first place).
-        case (k, v: Double) if !v.isNaN && !v.isInfinite => s"${jstr(k)}:$v"
-        case (k, v: Boolean) => s"${jstr(k)}:$v"
-        case (k, v) => s"${jstr(k)}:${jstr(String.valueOf(v))}"
-      }.mkString("{", ",", "}")
     val out = fs.create(new Path(dir, s"$runId.json"), true)
     out.write(body.getBytes("UTF-8")); out.close()
   }
@@ -108,13 +85,7 @@ object AuditLog {
           // committed run as uncommitted (restoring parked duplicates
           // next to the live combined file: evidence duplication)
           val in = fs.open(marker)
-          val name = try {
-            val bos = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](256)
-            var n = in.read(buf)
-            while (n > 0) { bos.write(buf, 0, n); n = in.read(buf) }
-            bos.toString("UTF-8")
-          } finally in.close()
+          val name = try new String(in.readAllBytes(), "UTF-8") finally in.close()
           Some(name).filter(_.nonEmpty)
         }
       val committed = targetName.exists(n => fs.exists(new Path(dir, n)))

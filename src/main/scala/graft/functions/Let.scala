@@ -18,14 +18,4 @@ object Let {
   /** `let v = value in body(v)` — `value` is evaluated exactly once per row. */
   def bind(value: Column, body: Column => Column): Column =
     element_at(transform(array(value), v => body(v)), 1)
-
-  /** Two-value form: both are evaluated exactly once per row. */
-  def bind2(a: Column, b: Column, body: (Column, Column) => Column): Column =
-    element_at(
-      transform(
-        array(struct(a.as("_1"), b.as("_2"))),
-        s => body(s.getField("_1"), s.getField("_2"))
-      ),
-      1
-    )
 }

@@ -66,10 +66,6 @@ object LangModel {
   def mergeBigrams(segments: DataFrame): DataFrame =
     segments.groupBy("w1", "w2").agg(sum("cnt").as("cnt"))
 
-  /** Sum of unigram-count segments; see [[mergeBigrams]]. */
-  def mergeUnigrams(segments: DataFrame): DataFrame =
-    segments.groupBy("w1").agg(sum("cnt").as("cnt"))
-
   /** Per-document LM score against trained counts. Output: the id column +
     *  - n_bigrams  — bigrams in the doc (0 for docs under 2 tokens);
     *  - n_unseen   — bigrams absent from the training counts;

@@ -35,12 +35,6 @@ object LineFilter {
     !contains(lower(t), lit("javascript"))
   }
 
-  /** Cleaned text: surviving lines re-joined with '\n'. Empty when nothing
-    * survives.
-    */
-  def cleanText(text: Column, minWords: Int = 3): Column =
-    array_join(filter(split(text, "\n"), l => keepLine(l, minWords)), "\n")
-
   /** Document-level boilerplate flag: curly braces / lorem ipsum. */
   def docFlagged(text: Column): Column =
     contains(text, lit("{")) || contains(lower(text), lit("lorem ipsum"))

@@ -110,51 +110,29 @@ object MinhashIndex {
     df.select(xxhash64(col(textCol)).as("_fp"), col(idCol).cast("long").as("_id"))
       .withColumn("_p", pmod(col("_id"), lit(idPartitions)))
       .write.mode("overwrite").partitionBy("_p").parquet(s"$path/exact")
-    writeParams(spark, path, Params(shingleLen, bands, rowsPerBand, maxBucketSize,
-      if (idRange.isNullAt(1)) -1L else idRange.getLong(1), idPartitions))
+    graft.core.AtomicDir.writeRecord(spark, s"$path/params",
+      Params(shingleLen, bands, rowsPerBand, maxBucketSize,
+        if (idRange.isNullAt(1)) -1L else idRange.getLong(1), idPartitions).fields)
   }
 
+  /** The `params/` record ([[graft.core.AtomicDir.writeRecord]]). */
   private case class Params(shingleLen: Int, bands: Int, rowsPerBand: Int,
-      maxBucketSize: Int, maxId: Long, idPartitions: Long)
-
-  /** Temp-then-rename params write (the [[SemIndex]] crash discipline): a
-    * plain overwrite deletes the old params before writing the new one — a
-    * crash in between would leave the banding parameters unreadable. */
-  private def writeParams(spark: SparkSession, path: String, p: Params): Unit = {
-    import spark.implicits._
-    graft.core.AtomicDir.swap(spark, s"$path/params") { tmp =>
-      Seq((p.shingleLen, p.bands, p.rowsPerBand, p.maxBucketSize, p.maxId,
-          p.idPartitions))
-        .toDF("shingleLen", "bands", "rowsPerBand", "maxBucketSize", "maxId",
-          "idPartitions")
-        .coalesce(1).write.mode("overwrite").json(tmp)
-    }
+      maxBucketSize: Int, maxId: Long, idPartitions: Long) {
+    def fields: Seq[(String, Any)] = Seq("shingleLen" -> shingleLen,
+      "bands" -> bands, "rowsPerBand" -> rowsPerBand,
+      "maxBucketSize" -> maxBucketSize, "maxId" -> maxId,
+      "idPartitions" -> idPartitions)
   }
-
-  /** Explicit schema: a schemaless json read runs a whole extra inference
-    * job per call, and queries/ingests/deletes read params once each —
-    * pure scheduler cost in the battery-shaped paths. */
-  private val paramsSchema = org.apache.spark.sql.types.StructType(
-    Seq("shingleLen", "bands", "rowsPerBand", "maxBucketSize", "maxId",
-      "idPartitions").map(
-      org.apache.spark.sql.types.StructField(_,
-        org.apache.spark.sql.types.LongType)))
-
-  private def readParams(spark: SparkSession, path: String): Params = {
-    graft.core.AtomicDir.recoverLive(spark, s"$path/params")
-    val r = spark.read.schema(paramsSchema).json(s"$path/params").head()
-    Params(
-      r.getAs[Long]("shingleLen").toInt,
-      r.getAs[Long]("bands").toInt,
-      r.getAs[Long]("rowsPerBand").toInt,
-      r.getAs[Long]("maxBucketSize").toInt,
+  private object Params {
+    def apply(r: graft.core.AtomicDir.Record): Params = Params(
+      r.long("shingleLen").toInt, r.long("bands").toInt,
+      r.long("rowsPerBand").toInt, r.long("maxBucketSize").toInt,
       // pre-watermark indexes read as -1: the first ingest then persists a
       // real maxId (ids are non-negative, so the check passes trivially once)
-      if (!r.isNullAt(r.fieldIndex("maxId"))) r.getAs[Long]("maxId") else -1L,
+      r.long("maxId", -1L),
       // pre-adaptive-layout stores were written with the fixed 64-way
       // pmod layout; reading them keeps that geometry
-      if (!r.isNullAt(r.fieldIndex("idPartitions")))
-        r.getAs[Long]("idPartitions") else 64L)
+      r.long("idPartitions", 64L))
   }
 
   /** Exact-copy matches via the fingerprint table: (new_id, corpus_id, 1.0).
@@ -204,7 +182,7 @@ object MinhashIndex {
       maxCandidatesPerDoc: Int
   ): DataFrame = {
     val spark = newDf.sparkSession
-    val p = readParams(spark, path)
+    val p = Params(graft.core.AtomicDir.readRecord(spark, s"$path/params"))
     val numHashes = p.bands * p.rowsPerBand
     val signed = newDf
       .select(col(idCol).cast("long").as("_nid"),
@@ -332,7 +310,7 @@ object MinhashIndex {
       maxCandidatesPerDoc: Int = 64
   ): DataFrame = {
     val spark = newDf.sparkSession
-    val p = readParams(spark, path)
+    val p = Params(graft.core.AtomicDir.readRecord(spark, s"$path/params"))
     val bandsDir = new org.apache.hadoop.fs.Path(s"$path/bands")
     val fs = bandsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // pre-partitioned-layout guard: the OLD layout stored loose part files
@@ -454,8 +432,8 @@ object MinhashIndex {
       nSig)
       .write.mode("append").partitionBy("_p").parquet(s"$path/exact")
     if (!batchRange.isNullAt(1))
-      writeParams(spark, path,
-        p.copy(maxId = math.max(p.maxId, batchRange.getLong(1))))
+      graft.core.AtomicDir.writeRecord(spark, s"$path/params",
+        p.copy(maxId = math.max(p.maxId, batchRange.getLong(1))).fields)
     survivors
   }
 
@@ -497,7 +475,7 @@ object MinhashIndex {
       removed
     }
     // the store's own layout geometry (persisted at write time)
-    val p = readParams(spark, path)
+    val p = Params(graft.core.AtomicDir.readRecord(spark, s"$path/params"))
     val byId: Column => Column = id => pmod(id, lit(p.idPartitions))
     (logged("bands", IndexCompact.deleteMatching(
         spark, s"$path/bands", "_id", "_band", idsNorm)),

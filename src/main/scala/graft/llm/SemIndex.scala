@@ -70,52 +70,37 @@ object SemIndex {
       .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
     // maxId persists the one-shot-equivalence precondition (batch ids
     // strictly above every indexed id): ingest enforces and advances it
-    writeParams(spark, path, tau, maxClusterSize, maxId)
+    graft.core.AtomicDir.writeRecord(spark, s"$path/params",
+      Params(tau, maxClusterSize, maxId).fields)
   }
 
-  /** Persist params via write-temp-then-rename: a plain mode("overwrite")
+  /** The `params/` record. It is replaced through
+    * [[graft.core.AtomicDir.writeRecord]]: a plain mode("overwrite")
     * deletes the old params/ BEFORE writing the new one, so a crash
     * mid-overwrite would leave params/ empty and the whole index
     * unreadable (tau/maxClusterSize lost). With the swap, params/ holds a
     * complete copy at every instant except the delete→rename gap, and
-    * [[readParams]] completes an interrupted swap from `params_tmp`.
+    * [[graft.core.AtomicDir.readRecord]] completes an interrupted swap
+    * from `params_tmp`.
     * Remaining documented window (ingest): a crash AFTER the vectors
-    * append but BEFORE this call leaves a stale watermark, so re-running
-    * the same batch passes the disjoint-id check against its own
-    * half-landed rows. The re-run then drops every batch row against its
-    * own appended copy: the INDEX converges to the correct kept set (the
+    * append but BEFORE the params write leaves a stale watermark, so
+    * re-running the same batch passes the disjoint-id check against its
+    * own half-landed rows. The re-run then drops every batch row against
+    * its own appended copy: the INDEX converges to the correct kept set (the
     * copies are already there, nothing new appends), but the returned
     * survivor frame is empty-ish and must be discarded — take survivors
     * from the index itself (or rebuild) after a crashed ingest.
     */
-  private def writeParams(spark: SparkSession, path: String,
-      tau: Double, maxClusterSize: Int, maxId: Long): Unit = {
-    import spark.implicits._
-    graft.core.AtomicDir.swap(spark, s"$path/params") { tmp =>
-      Seq((tau, maxClusterSize, maxId))
-        .toDF("tau", "maxClusterSize", "maxId")
-        .coalesce(1).write.mode("overwrite").json(tmp)
-    }
+  private case class Params(tau: Double, maxClusterSize: Int, maxId: Long) {
+    def fields: Seq[(String, Any)] =
+      Seq("tau" -> tau, "maxClusterSize" -> maxClusterSize, "maxId" -> maxId)
   }
-
-  /** Explicit schema — the MinhashIndex.paramsSchema rationale: no
-    * inference job per read. */
-  private val paramsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("tau",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("maxClusterSize",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("maxId",
-      org.apache.spark.sql.types.LongType)))
-
-  private def readParams(spark: SparkSession, path: String): (Double, Int, Long) = {
-    graft.core.AtomicDir.recoverLive(spark, s"$path/params")
-    val r = spark.read.schema(paramsSchema).json(s"$path/params").head()
-    // pre-maxId indexes (older builds) read as -1 → the disjointness check
-    // passes trivially once, then the first ingest persists a real maxId
-    val maxId =
-      if (!r.isNullAt(r.fieldIndex("maxId"))) r.getAs[Long]("maxId") else -1L
-    (r.getAs[Double]("tau"), r.getAs[Long]("maxClusterSize").toInt, maxId)
+  private object Params {
+    def apply(r: graft.core.AtomicDir.Record): Params = Params(
+      r.double("tau"), r.long("maxClusterSize").toInt,
+      // pre-maxId indexes (older builds) read as -1 → the disjointness check
+      // passes trivially once, then the first ingest persists a real maxId
+      r.long("maxId", -1L))
   }
 
   /** Batch rows that survive dedup against the index AND against each
@@ -128,7 +113,8 @@ object SemIndex {
   def dedupAgainst(batch: DataFrame, idCol: String, vecCol: String,
       path: String): DataFrame = {
     val spark = batch.sparkSession
-    val (tau, maxClusterSize, _) = readParams(spark, path)
+    val Params(tau, maxClusterSize, _) = Params(
+      graft.core.AtomicDir.readRecord(spark, s"$path/params"))
     dedupAgainst(batch, idCol, vecCol, Similarity.readCentroids(spark, path),
       tau, maxClusterSize, spark.read.parquet(s"$path/vectors"))
   }
@@ -201,7 +187,8 @@ object SemIndex {
         s"vec: ${existing("vec").dataType.sql}) but the batch carries " +
         s"(${batchIdType.sql}, ${batchVecType.sql}) — cast the batch or rebuild")
     val cents = Similarity.readCentroids(spark, path)
-    val (tau, maxClusterSize, indexedMax) = readParams(spark, path)
+    val Params(tau, maxClusterSize, indexedMax) = Params(
+      graft.core.AtomicDir.readRecord(spark, s"$path/params"))
     // disjoint-id contract: a batch reusing an indexed id would append a
     // duplicate-id row to vectors/, silently breaking min-id attribution
     // and the one-shot-equivalence pin. Cheap: one agg on the batch vs the
@@ -226,8 +213,8 @@ object SemIndex {
     // one's ids too (dropped batch ids are consumed — max over the whole
     // batch, not just survivors)
     if (!batchRange.isNullAt(1))
-      writeParams(spark, path, tau, maxClusterSize,
-        math.max(indexedMax, batchRange.getLong(1)))
+      graft.core.AtomicDir.writeRecord(spark, s"$path/params",
+        Params(tau, maxClusterSize, math.max(indexedMax, batchRange.getLong(1))).fields)
     survivors
   }
 

@@ -46,32 +46,18 @@ object SpanIndex {
   private def bucketCol(h: org.apache.spark.sql.Column, nbuckets: Int) =
     pmod(xxhash64(h), lit(nbuckets.toLong)).cast("int")
 
-  private def writeParams(spark: SparkSession, path: String, k: Int,
-      hashMode: String, nbuckets: Int, bits: Long, hashes: Int,
-      maxId: Long): Unit = {
-    import spark.implicits._
-    graft.core.AtomicDir.swap(spark, s"$path/params") { tmp =>
-      Seq((k, hashMode, nbuckets, bits, hashes, maxId))
-        .toDF("k", "hashMode", "nbuckets", "bits", "hashes", "maxId")
-        .coalesce(1).write.mode("overwrite").json(tmp)
-    }
+  /** The `params/` record ([[graft.core.AtomicDir.writeRecord]]). Every
+    * field has been written since the store was added, so a missing one
+    * fails naming it. */
+  private case class Params(k: Int, hashMode: String, nbuckets: Int,
+      bits: Long, hashes: Int, maxId: Long) {
+    def fields: Seq[(String, Any)] = Seq("k" -> k, "hashMode" -> hashMode,
+      "nbuckets" -> nbuckets, "bits" -> bits, "hashes" -> hashes, "maxId" -> maxId)
   }
-
-  /** Explicit schema — the MinhashIndex.paramsSchema rationale: no
-    * inference job per read. */
-  private val paramsSchema = org.apache.spark.sql.types.StructType(
-    org.apache.spark.sql.types.StructField("hashMode",
-      org.apache.spark.sql.types.StringType) +:
-    Seq("k", "nbuckets", "bits", "hashes", "maxId").map(
-      org.apache.spark.sql.types.StructField(_,
-        org.apache.spark.sql.types.LongType)))
-
-  private def readParams(spark: SparkSession, path: String): (Int, String, Int, Long, Int, Long) = {
-    graft.core.AtomicDir.recoverLive(spark, s"$path/params")
-    val r = spark.read.schema(paramsSchema).json(s"$path/params").head()
-    (r.getAs[Long]("k").toInt, r.getAs[String]("hashMode"),
-      r.getAs[Long]("nbuckets").toInt, r.getAs[Long]("bits"),
-      r.getAs[Long]("hashes").toInt, r.getAs[Long]("maxId"))
+  private object Params {
+    def apply(r: graft.core.AtomicDir.Record): Params = Params(
+      r.long("k").toInt, r.string("hashMode"), r.long("nbuckets").toInt,
+      r.long("bits"), r.long("hashes").toInt, r.long("maxId"))
   }
 
   /** Bloom bitmap swap with the params discipline: `bloom/` must never be
@@ -129,7 +115,8 @@ object SpanIndex {
       .parquet(s"$path/grams")
     swapBloom(spark, path,
       BloomSketch.build(distinctGrams, col("h"), bloomBits, bloomHashes))
-    writeParams(spark, path, k, hashMode, nbuckets, bloomBits, bloomHashes, maxId)
+    graft.core.AtomicDir.writeRecord(spark, s"$path/params",
+      Params(k, hashMode, nbuckets, bloomBits, bloomHashes, maxId).fields)
     SpanDedup.removeCovered(docs, marked, k)
   }
 
@@ -142,7 +129,8 @@ object SpanIndex {
     */
   def ingest(batch: DataFrame, idCol: String, textCol: String, path: String): DataFrame = {
     val spark = batch.sparkSession
-    val (k, hashMode, nbuckets, bits, hashes, indexedMax) = readParams(spark, path)
+    val p = Params(graft.core.AtomicDir.readRecord(spark, s"$path/params"))
+    val Params(k, hashMode, nbuckets, bits, hashes, indexedMax) = p
     val docs = graft.core.Lineage.pin(
       batch.select(col(idCol).cast("long").as("doc_id"),
         SpanDedup.tokArr(col(textCol)).as("_arr")))
@@ -222,8 +210,8 @@ object SpanIndex {
     IndexCompact.coalesceForAppend(newDistinct, newDistinct.count())
       .write.mode("append").partitionBy("bucket").parquet(s"$path/grams")
     if (!batchRange.isNullAt(1))
-      writeParams(spark, path, k, hashMode, nbuckets, bits, hashes,
-        math.max(indexedMax, batchRange.getLong(1)))
+      graft.core.AtomicDir.writeRecord(spark, s"$path/params",
+        p.copy(maxId = math.max(indexedMax, batchRange.getLong(1))).fields)
     result
   }
 

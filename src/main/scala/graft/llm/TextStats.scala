@@ -52,17 +52,6 @@ object TextStats {
         (col("_top").cast("double") / col("n_words")).as("top_word_frac"))
   }
 
-  /** BPE-ish subword count: word-piece regex (letters / digits / single
-    * punctuation), the usual pre-tokenizer shape for byte-pair encoders.
-    */
-  def subwordCount(text: Column): Column =
-    size(
-      filter(
-        split(lower(text), "(?![\\p{L}\\p{N}])(?<![\\p{L}\\p{N}])|(?<=[\\p{L}\\p{N}])(?![\\p{L}\\p{N}])"),
-        t => length(trim(t)) > 0
-      )
-    )
-
   private val stopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "it", "for", "with", "was", "are"),
     "de" -> Seq("der", "die", "das", "und", "ist", "von", "nicht", "mit", "ein", "eine", "zu", "den"),

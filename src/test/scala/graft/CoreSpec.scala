@@ -31,6 +31,20 @@ class ParamsSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 }
 
+class JsonSpec extends org.scalatest.funsuite.AnyFunSuite {
+  test("Json.quote escapes with Verify's table and decodes back to the input") {
+    val raw = "a\"b\\c\nd\re\tf\u0001g\u001fh é"
+    assert(Json.quote(raw) == "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001g\\u001fh é\"")
+    val rec = Json.obj(Seq("s" -> raw, "n" -> 3L, "i" -> 2, "d" -> 0.95,
+      "b" -> true, "nan" -> Double.NaN))
+    assert(!rec.contains("\n"), rec)
+    import org.json4s._
+    val JObject(kvs) = org.json4s.jackson.JsonMethods.parse(rec): @unchecked
+    assert(kvs.toMap == Map("s" -> JString(raw), "n" -> JInt(3), "i" -> JInt(2),
+      "d" -> JDouble(0.95), "b" -> JBool(true), "nan" -> JString("NaN")))
+  }
+}
+
 class RunnerSpec extends SparkSpec {
   test("pipeline: extract -> sql -> view registry") {
     val ctx = new PipelineContext(spark)

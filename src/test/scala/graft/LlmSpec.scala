@@ -1280,6 +1280,50 @@ class MultimodalSpec extends SparkSpec {
   }
 }
 
+/** The `params/` record checks the three dedup-store specs share: the
+  * record reads and rewrites on the driver with no Spark job, matches
+  * `expected` field by field, and the single-file dir still reads under
+  * `spark.read.schema(...).json`. */
+object ParamsRecordCheck extends org.scalatest.Assertions {
+  import org.apache.spark.sql.SparkSession
+  import graft.core.AtomicDir
+
+  def jobsDuring(spark: SparkSession)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    assert(org.apache.spark.GraftListenerBus.drain(sc, 10000))
+    sc.addSparkListener(l)
+    try {
+      f
+      assert(org.apache.spark.GraftListenerBus.drain(sc, 10000))
+    } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  /** `expected` holds Long, Double or String values; `ddl` is the read
+    * schema, in `expected`'s field order. */
+  def check(spark: SparkSession, dir: String, expected: Seq[(String, Any)], ddl: String): Unit = {
+    var rec: AtomicDir.Record = null
+    assert(jobsDuring(spark) { rec = AtomicDir.readRecord(spark, dir) } == 0)
+    expected.foreach {
+      case (k, v: Long) => assert(rec.long(k) == v, k)
+      case (k, v: Double) => assert(rec.double(k) == v, k)
+      case (k, v: String) => assert(rec.string(k) == v, k)
+      case (k, v) => fail(s"unsupported expected value $k -> $v")
+    }
+    assert(jobsDuring(spark) { AtomicDir.writeRecord(spark, dir, expected) } == 0)
+    val visible = new java.io.File(dir).list().filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(visible.toSeq == Seq("part-00000.json"), visible.mkString(","))
+    val rows = spark.read.schema(ddl).json(dir).collect()
+    assert(rows.length == 1, rows.mkString(";"))
+    assert(rows.head.toSeq == expected.map(_._2), rows.head.toString)
+  }
+}
+
 class MinhashIndexSpec extends SparkSpec {
   import spark.implicits._
   import org.apache.spark.sql.functions._
@@ -1588,6 +1632,23 @@ class MinhashIndexSpec extends SparkSpec {
     graft.transform.IndexDedupTransform("f", "mh_batch", "mh_kept", s"$path-stage",
       idField = "doc_id", textField = "text", threshold = 0.7).execute(ctx)
     assert(spark.table("mh_kept").select("doc_id").as[Long].collect().toSet == kept)
+  }
+
+  test("params: write + ingest round-trip as one JSON record, read and written with no Spark job") {
+    val path = java.nio.file.Files.createTempDirectory("mhidx").toString + "/idx"
+    val corpus = Seq((0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (70L, "rivers and mountains line the long winding roads of the northern valley"),
+      (2L, "completely different words entirely unrelated content block sits right here now"))
+      .toDF("doc_id", "text")
+    graft.llm.MinhashIndex.write(corpus, "doc_id", "text", path)
+    graft.llm.MinhashIndex.ingest(
+      Seq((200L, "a brand new document about something else entirely")).toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    ParamsRecordCheck.check(spark, s"$path/params",
+      Seq("shingleLen" -> 3L, "bands" -> 8L, "rowsPerBand" -> 4L,
+        "maxBucketSize" -> 256L, "maxId" -> 200L, "idPartitions" -> 4L),
+      "shingleLen LONG, bands LONG, rowsPerBand LONG, maxBucketSize LONG, " +
+        "maxId LONG, idPartitions LONG")
   }
 }
 
@@ -2668,6 +2729,34 @@ class SemIndexSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("rebuild"), ex.getMessage)
   }
+
+  test("params: write + ingest round-trip as one JSON record, read and written with no Spark job") {
+    val path = java.nio.file.Files.createTempDirectory("semidx").toString + "/idx"
+    SemIndex.write(rows(Seq((0L, 0), (1L, 1))), "vec_id", "embedding", path,
+      nclusters = 2, tau = 0.9, maxClusterSize = 64)
+    SemIndex.ingest(rows(Seq((5L, 2))), "vec_id", "embedding", path)
+    ParamsRecordCheck.check(spark, s"$path/params",
+      Seq("tau" -> 0.9, "maxClusterSize" -> 64L, "maxId" -> 5L),
+      "tau DOUBLE, maxClusterSize LONG, maxId LONG")
+  }
+
+  test("params write clears a stale Spark-written params_tmp left by a crash mid-tmp-write") {
+    val path = java.nio.file.Files.createTempDirectory("semidx").toString + "/idx"
+    SemIndex.write(rows(Seq((0L, 0), (1L, 1))), "vec_id", "embedding", path, nclusters = 2)
+    // a crash inside an older build's tmp write: params_tmp holds a
+    // Spark-written record (part file + _SUCCESS) next to the live params/
+    Seq((0.5, 7L, 999L)).toDF("tau", "maxClusterSize", "maxId")
+      .coalesce(1).write.json(s"$path/params_tmp")
+    assert(new java.io.File(s"$path/params_tmp/_SUCCESS").exists)
+    SemIndex.ingest(rows(Seq((5L, 2))), "vec_id", "embedding", path)
+    assert(!new java.io.File(s"$path/params_tmp").exists)
+    val visible = new java.io.File(s"$path/params").list()
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(visible.toSeq == Seq("part-00000.json"), visible.mkString(","))
+    val r = spark.read.schema("tau DOUBLE, maxClusterSize LONG, maxId LONG")
+      .json(s"$path/params").collect()
+    assert(r.map(_.toSeq).toSeq == Seq(Seq(0.95, 1024L, 5L)), r.mkString(";"))
+  }
 }
 
 class SpanIndexSpec extends SparkSpec {
@@ -2782,6 +2871,24 @@ class SpanIndexSpec extends SparkSpec {
     val out = rowsOf(SpanIndex.ingest(
       df(Seq((200L, s"g1 g2 $boiler g3"))), "doc_id", "text", path))
     assert(out.head._3 > 0L, out.toString)
+  }
+
+  test("params: write + ingest round-trip as one JSON record, read and written with no Spark job; a missing field fails naming it") {
+    val path = java.nio.file.Files.createTempDirectory("spanidx").toString + "/idx"
+    SpanIndex.write(df(base), "doc_id", "text", path, k = 4, hashMode = "md5",
+      nbuckets = 4, bloomBits = 1L << 16, bloomHashes = 3)
+    SpanIndex.ingest(df(batch1), "doc_id", "text", path).collect()
+    val expected = Seq("k" -> 4L, "hashMode" -> "md5", "nbuckets" -> 4L,
+      "bits" -> (1L << 16), "hashes" -> 3L, "maxId" -> 12L)
+    ParamsRecordCheck.check(spark, s"$path/params", expected,
+      "k LONG, hashMode STRING, nbuckets LONG, bits LONG, hashes LONG, maxId LONG")
+    // every span field is required: a missing one fails instead of reading as 0
+    graft.core.AtomicDir.writeRecord(spark, s"$path/params",
+      expected.filterNot(_._1 == "hashes"))
+    val ex = intercept[IllegalArgumentException] {
+      SpanIndex.ingest(df(batch2), "doc_id", "text", path)
+    }
+    assert(ex.getMessage.contains("'hashes'"), ex.getMessage)
   }
 }
 
