@@ -2447,8 +2447,8 @@ object SparkEntry {
       // the two deletes are independent single-writer stores — concurrent,
       // like Takedown.run's index fan-out
       val Seq(removedIvf, removedSem) = graft.core.Par.all(Seq(
-        () => IvfIndex.delete(spark, ivfDir, victims.select("vec_id")),
-        () => SemIndex.delete(spark, semDir, victims.select("vec_id"))))
+        () => IvfIndex.delete(spark, ivfDir, victims.select("vec_id")).total,
+        () => SemIndex.delete(spark, semDir, victims.select("vec_id")).total))
       val deletesOk = removedIvf == nVictims && removedSem == nVictims
       val pass2 = legsOf(2)
       pass1.unionByName(pass2)

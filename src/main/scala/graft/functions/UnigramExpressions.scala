@@ -136,8 +136,13 @@ final class UnigramEncoder(pieces: Seq[(String, Double)], byteScore: Double)
     }
     // dp[i]: best score for prefix of i code points; back[i]: length of the
     // last piece (>0 = in-vocab piece of that cp length, -1 = byte fallback
-    // of one code point)
+    // of one code point). dp starts from the document's running score, so
+    // the viterbi score is the same document-order left fold as the greedy
+    // one below: a per-word sum added afterwards re-associates the
+    // additions, and its rounding can put viterbi an ulp BELOW greedy on
+    // the same segmentation ("e ee" + a two-code-point piece).
     val dp = new Array[Double](n + 1)
+    dp(0) = acc(0)
     val back = new Array[Int](n + 1)
     var i = 1
     while (i <= n) {
@@ -191,7 +196,7 @@ final class UnigramEncoder(pieces: Seq[(String, Double)], byteScore: Double)
       }
       li -= 1
     }
-    acc(0) += dp(n)
+    acc(0) = dp(n)
     // greedy longest-match-first left fold over the same table
     var g = 0
     while (g < n) {

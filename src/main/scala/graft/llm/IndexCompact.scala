@@ -1,12 +1,18 @@
 package graft.llm
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** Small-file compaction for the ingest-append persistent indexes
-  * ([[SemIndex]], [[IvfIndex]]): every `ingest` batch appends one file set
-  * per touched cluster/list directory, so a year of daily batches leaves
-  * tens of thousands of tiny parquet files per partition and reads become
+/** Staged rewrites — small-file compaction, takedown deletes, crash
+  * recovery and their audit trail — of the Hive-partitioned tables behind
+  * the four index stores ([[MinhashIndex]], [[SpanIndex]], [[SemIndex]],
+  * [[IvfIndex]]). Each store declares its tables once ([[IndexTable]]s of
+  * an [[IndexStore]]), and the store-level operations loop over that
+  * declaration. Every `ingest` batch appends one file set per touched
+  * partition directory, so a year of daily batches leaves tens of
+  * thousands of tiny parquet files per partition and reads become
   * metadata-bound — the classic long-lived-index operational failure.
   *
   * `compactPartitioned` rewrites ONLY the partition directories whose
@@ -58,8 +64,8 @@ object IndexCompact {
     * to ceil(rows / targetRowsPerFile) tasks (no shuffle; a no-op when
     * the frame already has fewer partitions) bounds a small batch at ONE
     * file per touched dir while leaving big batches parallel. */
-  def coalesceForAppend(df: org.apache.spark.sql.DataFrame, rows: Long,
-      targetRowsPerFile: Long = 1L << 20): org.apache.spark.sql.DataFrame = {
+  def coalesceForAppend(df: DataFrame, rows: Long,
+      targetRowsPerFile: Long = 1L << 20): DataFrame = {
     val want = math.max(1L,
       math.min((rows + targetRowsPerFile - 1) / targetRowsPerFile, 1L << 16))
     df.coalesce(want.toInt)
@@ -92,19 +98,10 @@ object IndexCompact {
       maxFilesPerPartition: Int = 8,
       targetBytes: Long = 128L * 1024 * 1024): (Int, Long, Long) = {
     require(maxFilesPerPartition >= 1, s"maxFilesPerPartition must be >= 1")
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"IndexCompact: no directory at $dir")
+    val (fs, root) = openRewrite(spark, dir)
     val tmpRoot = new Path(root, "_compact_tmp")
     val oldRoot = new Path(root, "_compact_old")
     val doneRoot = new Path(root, "_compact_done")
-    require(!hasAnyFile(fs, tmpRoot) && !hasAnyFile(fs, oldRoot),
-      s"IndexCompact: $dir has leftover files from an interrupted compaction " +
-        "(_compact_tmp/_compact_old non-empty) — run IndexCompact.recover " +
-        "before compacting again")
-    // committed-but-undeleted originals from an interrupted step (4):
-    // the live partitions hold complete copies, so this is pure garbage
-    fs.delete(doneRoot, true)
     val partDirs = fs.listStatus(root).filter(s =>
       s.isDirectory && s.getPath.getName.contains("="))
     // per-run id, embedded in every moved-in file name and recorded in a
@@ -179,22 +176,127 @@ object IndexCompact {
   def hasInterruptedRun(spark: SparkSession, dir: String): Boolean = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(root) && (hasAnyFile(fs, new Path(root, "_compact_tmp")) ||
-      hasAnyFile(fs, new Path(root, "_compact_old")))
+    fs.exists(root) && staged(fs, root)
   }
 
-  /** Seq sugar over the DataFrame-native [[deleteMatching]] below — the
-    * id list is takedown-sized (a legal request, not a corpus), so a
-    * local Seq is a fine carrier; large or view-shaped id sets should use
-    * the DataFrame overload directly. */
-  def deleteMatching(spark: SparkSession, dir: String, idCol: String,
-      partitionCol: String, ids: Seq[Long]): Long = {
-    require(ids.nonEmpty, "deleteMatching needs at least one id")
-    implicit val enc: org.apache.spark.sql.Encoder[Long] =
-      org.apache.spark.sql.Encoders.scalaLong
-    deleteMatching(spark, dir, idCol, partitionCol,
-      spark.createDataset(ids).toDF(idCol))
+  private def staged(fs: FileSystem, root: Path): Boolean =
+    hasAnyFile(fs, new Path(root, "_compact_tmp")) ||
+      hasAnyFile(fs, new Path(root, "_compact_old"))
+
+  /** The table at `dir`, opened for a staged rewrite: refused when it is
+    * missing or holds an interrupted run's staging files, and cleared of
+    * `_compact_done` (committed originals of an interrupted step (4) —
+    * the live partitions hold complete copies, so it is pure garbage). */
+  private def openRewrite(spark: SparkSession, dir: String): (FileSystem, Path) = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(root), s"IndexCompact: no directory at $dir")
+    require(!staged(fs, root),
+      s"IndexCompact: $dir has leftover files from an interrupted compaction " +
+        "or delete (_compact_tmp/_compact_old non-empty) — run " +
+        "IndexCompact.recover first")
+    fs.delete(new Path(root, "_compact_done"), true)
+    (fs, root)
   }
+
+  /** Where the takedown audit records of the table at `dir` live
+    * ([[takedownLog]]); `_`-prefixed so table reads never see them. */
+  def takedownLogDir(dir: String): String =
+    new Path(new Path(dir), "_takedown_log").toString
+
+  /** A delete's id set, normalized once ([[normalizeIds]]) and handed to
+    * every table it touches: distinct non-null longs (`frame`, one
+    * column), their count and [min, max], and — for a set of ≤ 1000 ids —
+    * the values themselves. */
+  final case class DeleteIds(frame: DataFrame, n: Long, lo: Long, hi: Long,
+      local: Option[Seq[Long]]) {
+    /** The ids under a table's id column name. */
+    def as(idCol: String): DataFrame = frame.toDF(idCol)
+  }
+
+  /** What an [[IndexStore]] delete removed: the distinct id count and the
+    * rows removed from each declared table, in declaration order. */
+  final case class Deleted(nIds: Long, rowsRemoved: Seq[Long]) {
+    def total: Long = rowsRemoved.sum
+
+    /** The config surface's one-row result: `n_ids`, then each table's
+      * rows removed under `removedCols` (declaration order). */
+    def toDF(spark: SparkSession, removedCols: String*): DataFrame = {
+      require(removedCols.size == rowsRemoved.size,
+        s"Deleted.toDF: ${rowsRemoved.size} tables, ${removedCols.size} column names")
+      spark.createDataFrame(java.util.List.of(Row.fromSeq(nIds +: rowsRemoved)),
+        StructType(("n_ids" +: removedCols).map(StructField(_, LongType, nullable = false))))
+    }
+  }
+
+  /** The id frame behind every `Seq[Long]` delete — the id list is
+    * takedown-sized (a legal request, not a corpus), so a local Seq is a
+    * fine carrier; large or view-shaped id sets should pass a frame. */
+  def idFrame(spark: SparkSession, ids: Seq[Long]): DataFrame = {
+    require(ids.nonEmpty, "deleteMatching needs at least one id")
+    spark.createDataset(ids)(Encoders.scalaLong).toDF("_id")
+  }
+
+  /** Normalize a delete's ids ONCE: the frame's first column cast to
+    * long, distinct; an empty set and NULLs (null rows, or values that do
+    * not cast to long) are refused. A takedown-sized set (≤ 1000, the
+    * common legal-request shape) collects in ONE job — null checks, count
+    * and [min, max] come from the local rows, and the frame that feeds
+    * discovery and the rewrite's anti join is REBUILT from the collected
+    * values (a local relation is trivially deterministic, so no pin job
+    * is needed). Larger sets keep the pinned-frame path: one
+    * materialization, one stats pass, broadcast semi joins. An
+    * [[IndexStore]] delete runs this once for all its tables, and
+    * [[Takedown.run]] once for all its stores. */
+  def normalizeIds(idsDf: DataFrame): DeleteIds = {
+    require(idsDf.columns.nonEmpty, "deleteMatching: ids frame has no columns")
+    val nullIds = "deleteMatching: ids contain NULL (null rows, or values that " +
+      "do not cast to long) — clean the id view before the takedown"
+    val normalized = idsDf.select(col(idsDf.columns.head).cast("long").as("_id")).distinct()
+    val headRows = normalized.limit(1001).collect()
+    if (headRows.length <= 1000) {
+      require(headRows.nonEmpty, "deleteMatching needs at least one id")
+      require(!headRows.exists(_.isNullAt(0)), nullIds)
+      val vals = headRows.map(_.getLong(0)).toSeq
+      DeleteIds(idFrame(idsDf.sparkSession, vals), vals.length, vals.min, vals.max,
+        Some(vals))
+    } else {
+      val pinned = graft.core.Lineage.pin(normalized)
+      val st = pinned.agg(count(lit(1)), count(col("_id")), min(col("_id")),
+        max(col("_id"))).head()
+      require(st.getLong(1) == st.getLong(0), nullIds)
+      DeleteIds(pinned, st.getLong(0), st.getLong(2), st.getLong(3), None)
+    }
+  }
+
+  /** Rows of `df` whose `idCol` is one of `ids` — DISCOVERY only (the
+    * rewrite's anti join must keep rows outside the id range). The
+    * [min, max] bound ALWAYS pushes to the parquet scan, so row-group
+    * stats prune — ingest-appended files are id-clustered, so a
+    * recent-batch takedown skips most of the table's row groups
+    * regardless of id count. The isin literal (≤ 1000 ids) additionally
+    * pushes as per-value predicates when under the parquet In-pushdown
+    * threshold; a broadcast semi join (join predicates never reach the
+    * scan) handles the rest. */
+  private def matching(df: DataFrame, idCol: String, ids: DeleteIds): DataFrame = {
+    val bounded = df.filter(col(idCol).between(ids.lo, ids.hi))
+    ids.local match {
+      case Some(seq) =>
+        bounded.filter(col(idCol).isin(seq.map(java.lang.Long.valueOf): _*))
+      case None => bounded.join(broadcast(ids.as(idCol)), Seq(idCol), "left_semi")
+    }
+  }
+
+  /** Rows of the table at `dir` a delete of `ids` would remove — the
+    * dry-run count ([[Takedown.preview]]), through discovery's filter. */
+  def matchCount(spark: SparkSession, dir: String, idCol: String,
+      ids: DeleteIds): Long =
+    matching(spark.read.parquet(dir).select(col(idCol)), idCol, ids).count()
+
+  /** Seq sugar over the DataFrame-native [[deleteMatching]] below. */
+  def deleteMatching(spark: SparkSession, dir: String, idCol: String,
+      partitionCol: String, ids: Seq[Long]): Long =
+    deleteMatching(spark, dir, idCol, partitionCol, idFrame(spark, ids))
 
   /** Partition-directory path for a value, escaped the way Spark's own
     * writer escapes it (Hive-style percent-encoding) — so a partition
@@ -211,8 +313,9 @@ object IndexCompact {
     * takedown path (right-to-be-forgotten, licensing retractions) a
     * long-lived 100 TB index cannot live without. Ids arrive as a
     * one-column DataFrame (any column name; values cast to long, nulls
-    * fail fast), so config-surface callers never funnel an id view
-    * through the driver. Discovery of the touched partitions:
+    * fail fast — [[normalizeIds]]), so config-surface callers never
+    * funnel an id view through the driver. Discovery of the touched
+    * partitions:
     *
     *  - with `partitionOf` (tables whose partition value is COMPUTABLE
     *    from the id, e.g. the minhash tables' `_p = pmod(_id, idPartitions)`): the
@@ -255,86 +358,38 @@ object IndexCompact {
     * completes (the audit record is the completion signal).
     */
   def deleteMatching(spark: SparkSession, dir: String, idCol: String,
-      partitionCol: String, idsDf: org.apache.spark.sql.DataFrame,
-      partitionOf: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None,
+      partitionCol: String, idsDf: DataFrame,
+      partitionOf: Option[Column => Column] = None,
       targetBytes: Long = 128L * 1024 * 1024): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"IndexCompact: no directory at $dir")
+    openRewrite(spark, dir) // the table's refusals come before the ids'
+    deleteNormalized(spark, dir, idCol, partitionCol, normalizeIds(idsDf),
+      partitionOf, targetBytes)
+  }
+
+  /** [[deleteMatching]] over ids already normalized by the caller — an
+    * [[IndexStore]] delete normalizes once for all its tables. */
+  private[llm] def deleteNormalized(spark: SparkSession, dir: String, idCol: String,
+      partitionCol: String, ids: DeleteIds, partitionOf: Option[Column => Column],
+      targetBytes: Long = 128L * 1024 * 1024): Long = {
+    val (fs, root) = openRewrite(spark, dir)
     val tmpRoot = new Path(root, "_compact_tmp")
     val oldRoot = new Path(root, "_compact_old")
     val doneRoot = new Path(root, "_compact_done")
-    require(!hasAnyFile(fs, tmpRoot) && !hasAnyFile(fs, oldRoot),
-      s"IndexCompact: $dir has leftover files from an interrupted rewrite " +
-        "(_compact_tmp/_compact_old non-empty) — run IndexCompact.recover first")
-    fs.delete(doneRoot, true)
-    require(idsDf.columns.nonEmpty, "deleteMatching: ids frame has no columns")
-    // Normalize ONCE: distinct longs under the table's id column name. A
-    // takedown-sized id set (≤ 1000, the common legal-request shape)
-    // collects in ONE job — null checks, count and [min, max] come from
-    // the local rows, and the frame that feeds discovery and the
-    // rewrite's anti join is REBUILT from the collected values (a local
-    // relation is trivially deterministic, so no pin job is needed).
-    // Larger sets keep the pinned-frame path: one materialization, one
-    // stats pass, broadcast semi joins. The split saves two Spark jobs
-    // per table on the battery-shaped path — a six-table orchestrated
-    // takedown runs this method six times on the same tiny id view.
-    val normalized = idsDf.select(col(idsDf.columns.head).cast("long").as(idCol)).distinct()
-    val headRows = normalized.limit(1001).collect()
-    val small = headRows.length <= 1000
-    val (idsLong, nIds, hasNull, idLo, idHi) = if (small) {
-      require(headRows.nonEmpty, "deleteMatching needs at least one id")
-      val nulls = headRows.exists(_.isNullAt(0))
-      val vals = if (nulls) Array.empty[Long] else headRows.map(_.getLong(0))
-      implicit val enc: org.apache.spark.sql.Encoder[Long] =
-        org.apache.spark.sql.Encoders.scalaLong
-      (spark.createDataset(vals.toIndexedSeq).toDF(idCol),
-        headRows.length.toLong, nulls,
-        if (nulls) 0L else vals.min, if (nulls) 0L else vals.max)
-    } else {
-      val pinned = graft.core.Lineage.pin(normalized)
-      val stats = pinned.agg(count(lit(1)).as("n"), count(col(idCol)).as("nn"),
-        min(col(idCol)).as("lo"), max(col(idCol)).as("hi")).head()
-      (pinned, stats.getLong(0), stats.getLong(1) != stats.getLong(0),
-        stats.getLong(2), stats.getLong(3))
-    }
-    require(nIds > 0, "deleteMatching needs at least one id")
-    require(!hasNull,
-      "deleteMatching: ids contain NULL (null rows, or values that do not " +
-        "cast to long) — clean the id view before the takedown")
-    val idsLocal: Option[Seq[Long]] =
-      if (small) Some(headRows.map(_.getLong(0)).toSeq) else None
+    val idsLong = ids.as(idCol)
     val runId = java.util.UUID.randomUUID().toString
     // audit record of a COMPLETED takedown (GDPR/retraction evidence):
     // written only after every staged rename committed, so its absence
-    // after a crash is itself the re-run signal; `_`-prefixed so table
-    // reads never see it. No-op deletes (ids absent) record too — "the
-    // request was processed" is evidence even when nothing matched.
+    // after a crash is itself the re-run signal. No-op deletes (ids
+    // absent) record too — "the request was processed" is evidence even
+    // when nothing matched.
     def writeAudit(rowsRemoved: Long, partitionsRewritten: Long): Unit =
-      graft.core.AuditLog.append(spark, new Path(root, "_takedown_log").toString,
+      graft.core.AuditLog.append(spark, takedownLogDir(dir),
         Seq("table" -> dir, "idColumn" -> idCol, "partitionColumn" -> partitionCol,
-          "nIds" -> nIds, "rowsRemoved" -> rowsRemoved,
+          "nIds" -> ids.n, "rowsRemoved" -> rowsRemoved,
           "partitionsRewritten" -> partitionsRewritten),
         runId)
-    // DISCOVERY-ONLY filter (the rewrite's anti join must keep rows
-    // outside the id range): the [min, max] bound ALWAYS pushes to the
-    // parquet scan, so row-group stats prune — ingest-appended files are
-    // id-clustered, so a recent-batch takedown skips most of the table's
-    // row groups regardless of id count. The isin literal (≤ 1000 ids)
-    // additionally pushes as per-value predicates when under the parquet
-    // In-pushdown threshold; a broadcast semi join (join predicates never
-    // reach the scan) handles the rest.
-    def matching(df: org.apache.spark.sql.DataFrame) = {
-      val bounded = df.filter(col(idCol).between(idLo, idHi))
-      idsLocal match {
-        case Some(seq) =>
-          bounded.filter(col(idCol).isin(seq.map(java.lang.Long.valueOf): _*))
-        case None => bounded.join(broadcast(idsLong), Seq(idCol), "left_semi")
-      }
-    }
     // discovery: which partition dirs hold matches, and how many rows each
-    val scanBase: Option[org.apache.spark.sql.DataFrame] = partitionOf match {
+    val scanBase: Option[DataFrame] = partitionOf match {
       case Some(f) =>
         val vals = idsLong.select(f(col(idCol)).cast("string").as("_pv"))
           .distinct().collect().map(_.getString(0))
@@ -347,7 +402,7 @@ object IndexCompact {
     val touched: Map[String, Long] = scanBase match {
       case None => Map.empty
       case Some(base) =>
-        matching(base.select(col(idCol), col(partitionCol)))
+        matching(base.select(col(idCol), col(partitionCol)), idCol, ids)
           .groupBy(col(partitionCol)).count()
           .collect().map { r =>
             require(!r.isNullAt(0),
@@ -416,23 +471,10 @@ object IndexCompact {
   }
 
   /** Columns of [[takedownLog]], in record order. */
-  private val takedownLogSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("runId",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("table",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("idColumn",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("partitionColumn",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("nIds",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("rowsRemoved",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("partitionsRewritten",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("completedAtMs",
-      org.apache.spark.sql.types.LongType)))
+  private val takedownLogSchema = StructType(
+    Seq("runId", "table", "idColumn", "partitionColumn").map(StructField(_, StringType)) ++
+      Seq("nIds", "rowsRemoved", "partitionsRewritten", "completedAtMs")
+        .map(StructField(_, LongType)))
 
   /** The audit trail of COMPLETED takedowns on `dir` — one row per
     * successful [[deleteMatching]] run (no-op runs included), read from
@@ -441,10 +483,8 @@ object IndexCompact {
     * for that run: compliance evidence is the rows that exist, and a
     * missing row for an issued request means `recover` + re-run. Empty
     * frame (same schema) when the table has never seen a takedown. */
-  def takedownLog(spark: SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    graft.core.AuditLog.read(spark,
-      new Path(new Path(dir), "_takedown_log").toString, takedownLogSchema)
+  def takedownLog(spark: SparkSession, dir: String): DataFrame =
+    graft.core.AuditLog.read(spark, takedownLogDir(dir), takedownLogSchema)
 
   /** Restore `dir` after an interrupted [[compactPartitioned]]: for every
     * partition with files parked in `_compact_old`, delete the files THAT
@@ -508,4 +548,101 @@ object IndexCompact {
     fs.delete(new Path(root, "_compact_done"), true)
     restored
   }
+}
+
+/** One Hive-partitioned table of an [[IndexStore]]: its sub-directory
+  * under the store's path, the id column a takedown matches, the
+  * partition column, and — when the partition value is computable from
+  * the id — how, read from the store at a path (only a delete reads it). */
+final case class IndexTable(dir: String, idCol: String, partitionCol: String,
+    partitionOf: Option[(SparkSession, String) => Column => Column] = None)
+
+/** An index store declared once by its partitioned [[tables]]. Delete,
+  * takedown log, compaction, recovery, the interrupted-run preflight and
+  * the takedown preview are written here over that declaration, so
+  * [[Takedown]] and the maintenance stages name no table, and a table
+  * added to a store is deleted, logged, compacted and recovered with the
+  * rest. Every method takes the store's root `path`. */
+trait IndexStore {
+  /** The store's `store_type` in takedown and maintenance views. */
+  def storeType: String
+
+  /** The partitioned tables, in delete order. */
+  def tables: Seq[IndexTable]
+
+  def tableDirs(path: String): Seq[String] = tables.map(t => s"$path/${t.dir}")
+
+  def delete(spark: SparkSession, path: String, ids: Seq[Long]): IndexCompact.Deleted =
+    delete(spark, path, IndexCompact.idFrame(spark, ids))
+
+  /** DataFrame-native [[delete]]: `ids` is a one-column frame of ids (the
+    * config surface passes its input view straight through — no
+    * driver-side id collection). */
+  def delete(spark: SparkSession, path: String, ids: DataFrame): IndexCompact.Deleted =
+    delete(spark, path, IndexCompact.normalizeIds(ids))
+
+  /** Takedown: remove `ids` from every declared table, each a crash-safe
+    * staged rewrite ([[IndexCompact.deleteMatching]]) over ids normalized
+    * once. Tables delete in declaration order, each logged to
+    * [[graft.core.LogBuffer]] on completion: a failure BETWEEN tables
+    * leaves the earlier ones deleted and the later ones live, the log
+    * shows how far it got, and re-running the delete after [[recover]]
+    * finishes the job (clean tables remove 0 rows). Id-derived partition
+    * layouts are read before any table mutates. */
+  def delete(spark: SparkSession, path: String,
+      ids: IndexCompact.DeleteIds): IndexCompact.Deleted = {
+    val layouts = tables.flatMap(_.partitionOf).distinct
+      .map(f => f -> f(spark, path)).toMap
+    IndexCompact.Deleted(ids.n, tables.map { t =>
+      val removed = IndexCompact.deleteNormalized(spark, s"$path/${t.dir}",
+        t.idCol, t.partitionCol, ids, t.partitionOf.map(layouts))
+      graft.core.LogBuffer.append(
+        s"$storeType delete at $path: ${t.dir} complete, $removed rows removed")
+      removed
+    })
+  }
+
+  /** Rows a [[delete]] of `ids` would remove, summed over the tables. */
+  def previewMatches(spark: SparkSession, path: String,
+      ids: IndexCompact.DeleteIds): Long =
+    tables.map(t => IndexCompact.matchCount(spark, s"$path/${t.dir}", t.idCol, ids)).sum
+
+  /** Union of the tables' takedown audit trails — one row per completed
+    * per-table delete, so a full [[delete]] contributes one per table;
+    * fewer rows for a run means it was interrupted (recover + re-run). */
+  def takedownLog(spark: SparkSession, path: String): DataFrame =
+    tableDirs(path).map(IndexCompact.takedownLog(spark, _)).reduce(_ unionByName _)
+
+  /** Fold each table's takedown trail into one file; records folded. */
+  def compactTakedownLog(spark: SparkSession, path: String): Int =
+    tableDirs(path).map(d =>
+      graft.core.AuditLog.compact(spark, IndexCompact.takedownLogDir(d))._2).sum
+
+  /** Small-file maintenance of every table ([[IndexCompact.compactPartitioned]];
+    * offline op, crash-recoverable via [[recover]]). Returns
+    * (partitionsCompacted, filesBefore, filesAfter) summed over tables. */
+  def compact(spark: SparkSession, path: String,
+      maxFilesPerPartition: Int = 8): (Int, Long, Long) = {
+    val results = tableDirs(path).map(
+      IndexCompact.compactPartitioned(spark, _, maxFilesPerPartition))
+    (results.map(_._1).sum, results.map(_._2).sum, results.map(_._3).sum)
+  }
+
+  /** [[IndexCompact.recover]] on every table; partitions restored. */
+  def recover(spark: SparkSession, path: String): Int =
+    tableDirs(path).map(IndexCompact.recover(spark, _)).sum
+
+  /** Tables holding an interrupted rewrite's staging files — the
+    * preflight [[Takedown]] runs before mutating any store. */
+  def interruptedTables(spark: SparkSession, path: String): Seq[String] =
+    tableDirs(path).filter(IndexCompact.hasInterruptedRun(spark, _))
+}
+
+object IndexStore {
+  /** The index stores a request names (empty URI = not named), in
+    * fan-out and view order. */
+  def named(minhashURI: String, spanURI: String, semURI: String,
+      ivfURI: String): Seq[(IndexStore, String)] =
+    Seq(MinhashIndex -> minhashURI, SpanIndex -> spanURI, SemIndex -> semURI,
+      IvfIndex -> ivfURI).filter(_._2.nonEmpty)
 }

@@ -30,7 +30,14 @@ import org.apache.spark.sql.functions._
   * (score desc, id) tiebreak) — IvfIndexSpec pins that equivalence, plus
   * recall under partial probes and the partition-pruned scan.
   */
-object IvfIndex {
+object IvfIndex extends IndexStore {
+  val storeType = "ivf"
+
+  /** All three read tiers — flat, SQ8, PQ — share the vector table, so
+    * one delete covers them; `_list` is assignment-derived, so discovery
+    * takes the column-pruned scan. Centroids and codebooks are never
+    * rewritten (the frozen-quantizer contract). */
+  val tables: Seq[IndexTable] = Seq(IndexTable("vectors", "id", "_list"))
 
   /** Train a KMeans coarse quantizer on a hash-sample of the corpus
     * ([[Similarity.trainCoarseCentroids]] — a few hundred vectors per
@@ -250,34 +257,6 @@ object IvfIndex {
     // carry pq codes consistent with the build — the layouts cannot drift
     assignAndWrite(newVectors, idCol, vecCol, cents, cbs, path, "append")
   }
-
-  /** Small-file maintenance: every [[ingest]] appends one file set per
-    * touched inverted-list directory — compact the oversized ones (see
-    * [[IndexCompact]]). Centroids and codebooks are untouched; topK /
-    * topKQuantized / topKPq results are identical before/after. Returns
-    * (partitionsCompacted, filesBefore, filesAfter). */
-  def compact(spark: SparkSession, path: String,
-      maxFilesPerPartition: Int = 8): (Int, Long, Long) =
-    IndexCompact.compactPartitioned(spark, s"$path/vectors", maxFilesPerPartition)
-
-  /** Takedown: remove `ids` from the list-partitioned vector table
-    * (crash-safe staged rewrite — [[IndexCompact.deleteMatching]]; all
-    * three read tiers — flat, SQ8, PQ — share the table, so one delete
-    * covers them). Centroids and codebooks are untouched (the frozen-
-    * quantizer contract). Returns rows removed. */
-  def delete(spark: SparkSession, path: String, ids: Seq[Long]): Long =
-    IndexCompact.deleteMatching(spark, s"$path/vectors", "id", "_list", ids)
-
-  /** DataFrame-native [[delete]]: `ids` is a one-column frame of vector
-    * ids — the config surface passes its input view straight through, no
-    * driver-side id collection. (`_list` is assignment-derived, not
-    * computable from the id — discovery takes the column-pruned scan.) */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Long =
-    IndexCompact.deleteMatching(spark, s"$path/vectors", "id", "_list", ids)
-
-  /** The vector table's takedown audit trail ([[IndexCompact.takedownLog]]). */
-  def takedownLog(spark: SparkSession, path: String): DataFrame =
-    IndexCompact.takedownLog(spark, s"$path/vectors")
 
   /** Top-k cosine neighbors for a query batch against the persisted index.
     * Reads only the probed inverted-list partitions.

@@ -31,7 +31,26 @@ import org.apache.spark.sql.functions._
   * Reference arc-jupyter has no incremental dedup (SURVEY.md §2); this is a
   * scale-path extension composing the same engine as `Dedup.minhashPairs`.
   */
-object MinhashIndex {
+object MinhashIndex extends IndexStore {
+  val storeType = "minhash"
+
+  /** `_p = pmod(_id, idPartitions)`, the geometry persisted in `params/`
+    * — read by a delete only, so the shingles/exact takedown computes its
+    * touched directories from the ids with zero table IO. */
+  private val idPartition: (SparkSession, String) => Column => Column =
+    (spark, path) => {
+      val p = Params(graft.core.AtomicDir.readRecord(spark, s"$path/params"))
+      id => pmod(id, lit(p.idPartitions))
+    }
+
+  /** `bands` keys on `_band` (not id-derived), so its takedown discovery
+    * takes one column-pruned scan. Delete order bands → shingles → exact:
+    * a failure between tables leaves the doc matching through the
+    * exact/shingle tiers until the re-run. */
+  val tables: Seq[IndexTable] = Seq(
+    IndexTable("bands", "_id", "_band"),
+    IndexTable("shingles", "_id", "_p", Some(idPartition)),
+    IndexTable("exact", "_id", "_p", Some(idPartition)))
 
   /** The shingles/exact tables partition by `pmod(_id, idPartitions)` —
     * an id-DERIVED layout, so [[delete]] computes a takedown's touched
@@ -435,73 +454,5 @@ object MinhashIndex {
       graft.core.AtomicDir.writeRecord(spark, s"$path/params",
         p.copy(maxId = math.max(p.maxId, batchRange.getLong(1))).fields)
     survivors
-  }
-
-  /** Takedown: remove `ids` from all three tables (crash-safe staged
-    * rewrites — [[IndexCompact.deleteMatching]]; run `recover` on each
-    * subdirectory and re-run after a crash). Deleted docs stop matching
-    * immediately; their past dedup victims are NOT resurrected (the
-    * survivor-index trade) and their ids stay consumed by the watermark.
-    * Returns rows removed per table (bands, shingles, exact).
-    *
-    * The three deletes run in the fixed order bands → shingles → exact,
-    * each logged to [[graft.core.LogBuffer]] on completion: a failure
-    * BETWEEN tables leaves the earlier tables deleted and the later ones
-    * live (the doc still matches probes via the exact/shingle tiers) —
-    * the log shows exactly how far the takedown got; re-running the same
-    * delete after `recover` finishes the job (already-clean tables
-    * remove 0 rows). Discovery IO: the bands table partitions by `_band`
-    * (not id-derived), so it takes the one column-pruned scan; the
-    * shingles/exact tables partition by `pmod(_id, idPartitions)` (geometry from params), so their
-    * touched directories are COMPUTED from the ids with zero table IO
-    * and only those directories are read. */
-  def delete(spark: SparkSession, path: String, ids: Seq[Long]): (Long, Long, Long) = {
-    implicit val enc: org.apache.spark.sql.Encoder[Long] =
-      org.apache.spark.sql.Encoders.scalaLong
-    delete(spark, path, spark.createDataset(ids).toDF("_id"))
-  }
-
-  /** DataFrame-native [[delete]]: `ids` is a one-column frame of doc ids
-    * (the config surface's `action=delete` passes its input view straight
-    * through — no driver-side id collection). */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): (Long, Long, Long) = {
-    // normalized + pinned ONCE so the three table deletes share one id
-    // frame instead of re-normalizing (and re-validating) per table
-    val idsNorm = graft.core.Lineage.pin(
-      ids.select(col(ids.columns.head).cast("long").as("_id")).distinct())
-    def logged(table: String, removed: Long): Long = {
-      graft.core.LogBuffer.append(
-        s"MinhashIndex.delete: $table complete, $removed rows removed")
-      removed
-    }
-    // the store's own layout geometry (persisted at write time)
-    val p = Params(graft.core.AtomicDir.readRecord(spark, s"$path/params"))
-    val byId: Column => Column = id => pmod(id, lit(p.idPartitions))
-    (logged("bands", IndexCompact.deleteMatching(
-        spark, s"$path/bands", "_id", "_band", idsNorm)),
-      logged("shingles", IndexCompact.deleteMatching(
-        spark, s"$path/shingles", "_id", "_p", idsNorm, Some(byId))),
-      logged("exact", IndexCompact.deleteMatching(
-        spark, s"$path/exact", "_id", "_p", idsNorm, Some(byId))))
-  }
-
-  /** Union of the three tables' takedown audit trails
-    * ([[IndexCompact.takedownLog]]) — one row per completed per-table
-    * delete, so a full [[delete]] contributes three; fewer rows for a
-    * run's id means it was interrupted (recover + re-run). */
-  def takedownLog(spark: SparkSession, path: String): DataFrame =
-    Seq("bands", "shingles", "exact")
-      .map(t => IndexCompact.takedownLog(spark, s"$path/$t"))
-      .reduce(_ unionByName _)
-
-  /** Small-file maintenance for the three partitioned tables — every
-    * ingest appends one file set per touched partition directory (see
-    * [[IndexCompact]]; offline op, crash-recoverable via
-    * IndexCompact.recover on each subdirectory). */
-  def compact(spark: SparkSession, path: String,
-      maxFilesPerPartition: Int = 8): (Int, Long, Long) = {
-    val results = Seq("bands", "shingles", "exact").map(t =>
-      IndexCompact.compactPartitioned(spark, s"$path/$t", maxFilesPerPartition))
-    (results.map(_._1).sum, results.map(_._2).sum, results.map(_._3).sum)
   }
 }

@@ -31,7 +31,13 @@ import org.apache.spark.sql.functions._
   * survives. That is the documented approximation, inherent to keeping
   * the index duplicate-free.
   */
-object SemIndex {
+object SemIndex extends IndexStore {
+  val storeType = "sem"
+
+  /** `_cluster` is assignment-derived, not computable from the id, so a
+    * takedown's discovery takes the column-pruned scan. Centroids are
+    * never rewritten (the frozen-quantizer contract). */
+  val tables: Seq[IndexTable] = Seq(IndexTable("vectors", "id", "_cluster"))
 
   /** One-shot dedup of `corpus`, persisting quantizer + kept rows to
     * `path` (overwrites). Returns nothing — read back via
@@ -217,32 +223,4 @@ object SemIndex {
         Params(tau, maxClusterSize, math.max(indexedMax, batchRange.getLong(1))).fields)
     survivors
   }
-
-  /** Takedown: remove `ids` from the vector table (crash-safe staged
-    * rewrite — [[IndexCompact.deleteMatching]]). Deleted vectors stop
-    * matching future ingests immediately; past dedup victims are not
-    * resurrected and the id watermark does not move back. Centroids are
-    * untouched (the frozen-quantizer contract). Returns rows removed. */
-  def delete(spark: SparkSession, path: String, ids: Seq[Long]): Long =
-    IndexCompact.deleteMatching(spark, s"$path/vectors", "id", "_cluster", ids)
-
-  /** DataFrame-native [[delete]]: `ids` is a one-column frame of vector
-    * ids — the config surface passes its input view straight through, no
-    * driver-side id collection. (`_cluster` is assignment-derived, not
-    * computable from the id — discovery takes the column-pruned scan.) */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Long =
-    IndexCompact.deleteMatching(spark, s"$path/vectors", "id", "_cluster", ids)
-
-  /** The vector table's takedown audit trail ([[IndexCompact.takedownLog]]). */
-  def takedownLog(spark: SparkSession, path: String): DataFrame =
-    IndexCompact.takedownLog(spark, s"$path/vectors")
-
-  /** Small-file maintenance: every [[ingest]] appends one file set per
-    * touched cluster directory — compact the oversized ones (see
-    * [[IndexCompact]]). Centroids and params are untouched; dedup results
-    * are identical before/after. Returns (partitionsCompacted,
-    * filesBefore, filesAfter). */
-  def compact(spark: SparkSession, path: String,
-      maxFilesPerPartition: Int = 8): (Int, Long, Long) =
-    IndexCompact.compactPartitioned(spark, s"$path/vectors", maxFilesPerPartition)
 }

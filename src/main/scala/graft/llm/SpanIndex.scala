@@ -41,7 +41,16 @@ import org.apache.spark.sql.functions._
   * partitioned append of the new grams plus an OR-merge rewrite of the
   * ≤ bits/64-row bitmap. No step scans the historical corpus text.
   */
-object SpanIndex {
+object SpanIndex extends IndexStore {
+  val storeType = "span"
+
+  /** A takedown removes every gram KEPT by one of its ids, so future
+    * batches may keep fresh copies of those spans. The bloom still
+    * remembers the deleted grams, which only routes probes to a
+    * verification that finds nothing — a false positive the bloom
+    * contract already absorbs. `bucket` derives from the gram hash, not
+    * the keeper id, so discovery takes the column-pruned scan. */
+  val tables: Seq[IndexTable] = Seq(IndexTable("grams", "keeper", "bucket"))
 
   private def bucketCol(h: org.apache.spark.sql.Column, nbuckets: Int) =
     pmod(xxhash64(h), lit(nbuckets.toLong)).cast("int")
@@ -214,31 +223,4 @@ object SpanIndex {
         p.copy(maxId = math.max(indexedMax, batchRange.getLong(1))).fields)
     result
   }
-
-  /** Takedown: remove every gram KEPT by one of `ids` (crash-safe staged
-    * rewrite — [[IndexCompact.deleteMatching]]). Future batches may then
-    * keep fresh copies of those spans (the takedown intent); the Bloom
-    * sketch still remembers the deleted grams, which only routes probes
-    * to a verification that finds nothing — a false positive of the kind
-    * the bloom contract already absorbs. Returns grams removed. */
-  def delete(spark: SparkSession, path: String, ids: Seq[Long]): Long =
-    IndexCompact.deleteMatching(spark, s"$path/grams", "keeper", "bucket", ids)
-
-  /** DataFrame-native [[delete]]: `ids` is a one-column frame of doc ids
-    * — the config surface passes its input view straight through, no
-    * driver-side id collection. (`bucket` derives from the gram hash, not
-    * the keeper id — discovery takes the column-pruned scan.) */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Long =
-    IndexCompact.deleteMatching(spark, s"$path/grams", "keeper", "bucket", ids)
-
-  /** The gram table's takedown audit trail ([[IndexCompact.takedownLog]]). */
-  def takedownLog(spark: SparkSession, path: String): DataFrame =
-    IndexCompact.takedownLog(spark, s"$path/grams")
-
-  /** Small-file maintenance for the bucket-partitioned gram table — every
-    * ingest appends one file set per touched bucket (see [[IndexCompact]];
-    * offline op, crash-recoverable via IndexCompact.recover). */
-  def compact(spark: SparkSession, path: String,
-      maxFilesPerPartition: Int = 8): (Int, Long, Long) =
-    IndexCompact.compactPartitioned(spark, s"$path/grams", maxFilesPerPartition)
 }

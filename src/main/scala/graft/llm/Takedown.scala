@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** One legal request, every store — the right-to-be-forgotten
-  * ORCHESTRATOR over the six per-store takedown primitives
-  * ([[MinhashIndex.delete]], [[SpanIndex.delete]], [[SemIndex.delete]],
-  * [[IvfIndex.delete]], [[WordCounts.delete]], [[NaiveBayes.unlearn]]).
+  * ORCHESTRATOR over the six stores: the four index stores, each declared
+  * once by its partitioned tables ([[IndexStore]]; delete, preflight and
+  * preview loop over that declaration), and the two count stores
+  * ([[WordCounts.delete]], [[NaiveBayes.unlearn]]).
   *
   * A deployed curation pipeline persists state in up to six places; honoring
   * one deletion request by hand means six separately-addressed cells, and a
@@ -123,17 +124,6 @@ object Takedown {
     matched.drop("_takedown_id")
   }
 
-  /** Partitioned table directories behind each index store — the surface
-    * the staged-rewrite machinery (delete/compact/recover) operates on;
-    * [[run]]'s preflight checks each for interrupted-rewrite leftovers. */
-  private def indexTableDirs(minhashURI: String, spanURI: String,
-      semURI: String, ivfURI: String): Seq[String] =
-    Seq(minhashURI).filter(_.nonEmpty).flatMap(u =>
-      Seq(s"$u/bands", s"$u/shingles", s"$u/exact")) ++
-      Seq(spanURI).filter(_.nonEmpty).map(u => s"$u/grams") ++
-      Seq(semURI).filter(_.nonEmpty).map(u => s"$u/vectors") ++
-      Seq(ivfURI).filter(_.nonEmpty).map(u => s"$u/vectors")
-
   /** Consolidated-view / [[consolidatedLog]] schema. */
   val viewSchema: StructType = StructType(Seq(
     StructField("store", StringType),
@@ -155,8 +145,8 @@ object Takedown {
     * named and not yet committed — see [[recoverRows]]. Returns the
     * consolidated view (one row per store: store URI, store type, id
     * count, rows removed, request id, completion time); `rows_removed`
-    * for the minhash store sums its three internal tables (per-table
-    * detail lives in [[MinhashIndex.takedownLog]]). When `auditURI` is
+    * for an index store sums its declared tables (per-table detail lives
+    * in [[IndexStore.takedownLog]]). When `auditURI` is
     * set, each store's completion ALSO appends one record there under the
     * shared `requestId` — written immediately after that store commits,
     * so the records present after a crash are exactly the stores that
@@ -275,8 +265,8 @@ object Takedown {
         s"Takedown.run: no store at $u — check the URI (a typo here, " +
           "caught late, would leave the request half-applied)")
     }
-    val interrupted = indexTableDirs(minhashURI, spanURI, semURI, ivfURI)
-      .filter(IndexCompact.hasInterruptedRun(spark, _))
+    val indexStores = IndexStore.named(minhashURI, spanURI, semURI, ivfURI)
+    val interrupted = indexStores.flatMap { case (st, u) => st.interruptedTables(spark, u) }
     require(interrupted.isEmpty,
       s"Takedown.run: interrupted rewrite leftovers at " +
         s"${interrupted.mkString(", ")} — run IndexCompact.recover on " +
@@ -344,17 +334,12 @@ object Takedown {
     // committing cleanly, and either way the consolidated trail records
     // exactly the committed set — the contract resume replays. Par.all
     // rethrows the first failure after every store settles, with the
-    // other stores' failures suppressed on it.
-    val indexStores: Seq[(String, String, () => Long)] = Seq(
-      (minhashURI, "minhash", () => {
-        val (b, s, e) = MinhashIndex.delete(spark, minhashURI, idsNorm)
-        b + s + e
-      }),
-      (spanURI, "span", () => SpanIndex.delete(spark, spanURI, idsNorm)),
-      (semURI, "sem", () => SemIndex.delete(spark, semURI, idsNorm)),
-      (ivfURI, "ivf", () => IvfIndex.delete(spark, ivfURI, idsNorm)))
-    graft.core.Par.all(indexStores.filter(_._1.nonEmpty).map {
-      case (uri, tpe, exec) => () => runStore(uri, tpe)(exec())
+    // other stores' failures suppressed on it. The ids are normalized
+    // once for every store (lazily: a resume that skips them all runs
+    // no job for it).
+    lazy val deleteIds = IndexCompact.normalizeIds(idsNorm)
+    graft.core.Par.all(indexStores.map { case (st, uri) => () =>
+      runStore(uri, st.storeType)(st.delete(spark, uri, deleteIds).total)
     })
 
     // canonical store order regardless of completion order — the view is
@@ -406,8 +391,8 @@ object Takedown {
     // under _compact_old are INVISIBLE to table reads, so sizing against
     // a half-recovered store would silently UNDERCOUNT — the one error a
     // dry run must never make
-    val interrupted = indexTableDirs(minhashURI, spanURI, semURI, ivfURI)
-      .filter(IndexCompact.hasInterruptedRun(spark, _))
+    val indexStores = IndexStore.named(minhashURI, spanURI, semURI, ivfURI)
+    val interrupted = indexStores.flatMap { case (st, u) => st.interruptedTables(spark, u) }
     require(interrupted.isEmpty,
       s"Takedown.preview: interrupted rewrite leftovers at " +
         s"${interrupted.mkString(", ")} — sizing would undercount; run " +
@@ -415,17 +400,6 @@ object Takedown {
     val recovered: Option[DataFrame] =
       if (countsURI.isEmpty && modelURI.isEmpty) None
       else Some(recoverRows(idsNorm, nIds, corpus.get, corpusIdCol))
-    // discovery-shaped match count: pushed range bound + broadcast semi
-    // join, the same scan deleteMatching's discovery runs (the ids'
-    // [min, max] computed ONCE for the whole request, not per table)
-    val range = idsNorm.agg(min(col("_takedown_id")).as("lo"),
-      max(col("_takedown_id")).as("hi")).head()
-    def matches(dir: String, idCol: String): Long =
-      spark.read.parquet(dir)
-        .select(col(idCol).cast("long").as("_takedown_id"))
-        .filter(col("_takedown_id").between(range.getLong(0), range.getLong(1)))
-        .join(broadcast(idsNorm), Seq("_takedown_id"), "left_semi")
-        .count()
     val results = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
     if (countsURI.nonEmpty)
       // runs delete's exact subset check without the swap — a violation
@@ -441,16 +415,15 @@ object Takedown {
         .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
       results += ((modelURI, "classifier", docs(before) - docs(after)))
     }
-    if (minhashURI.nonEmpty)
-      results += ((minhashURI, "minhash",
-        Seq("bands", "shingles", "exact")
-          .map(t => matches(s"$minhashURI/$t", "_id")).sum))
-    if (spanURI.nonEmpty)
-      results += ((spanURI, "span", matches(s"$spanURI/grams", "keeper")))
-    if (semURI.nonEmpty)
-      results += ((semURI, "sem", matches(s"$semURI/vectors", "id")))
-    if (ivfURI.nonEmpty)
-      results += ((ivfURI, "ivf", matches(s"$ivfURI/vectors", "id")))
+    // discovery-shaped match count over ids normalized ONCE for the
+    // whole request: the same pushed range bound and id filter a delete's
+    // discovery runs
+    if (indexStores.nonEmpty) {
+      val deleteIds = IndexCompact.normalizeIds(idsNorm)
+      indexStores.foreach { case (st, uri) =>
+        results += ((uri, st.storeType, st.previewMatches(spark, uri, deleteIds)))
+      }
+    }
     val rows = results.toList.map { case (store, tpe, matched) =>
       org.apache.spark.sql.Row(store, tpe, nIds, matched)
     }

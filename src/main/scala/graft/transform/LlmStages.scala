@@ -249,12 +249,8 @@ final case class SemIndexDedupTransform(
       case "delete" =>
         // takedown: the input view's idField column lists the vector ids —
         // passed through as a frame, never collected to the driver
-        val removed = graft.llm.SemIndex.delete(ctx.spark, indexURI,
-          in.select(col(idField)))
-        val nIds = in.select(col(idField).cast("long")).na.drop().distinct().count()
-        val spark = ctx.spark
-        import spark.implicits._
-        Seq((nIds, removed)).toDF("n_ids", "vectors_removed")
+        graft.llm.SemIndex.delete(ctx.spark, indexURI, in.select(col(idField)))
+          .toDF(ctx.spark, "vectors_removed")
       case "log" => graft.llm.SemIndex.takedownLog(ctx.spark, indexURI)
       case other =>
         throw new IllegalArgumentException(s"$name: unknown action '$other' (filter|ingest|delete|log)")
@@ -297,12 +293,8 @@ final case class SpanIndexTransform(
       case "delete" =>
         // takedown: the input view's idField column lists the doc ids —
         // passed through as a frame, never collected to the driver
-        val removed = graft.llm.SpanIndex.delete(ctx.spark, indexURI,
-          in.select(col(idField)))
-        val nIds = in.select(col(idField).cast("long")).na.drop().distinct().count()
-        val spark = ctx.spark
-        import spark.implicits._
-        Seq((nIds, removed)).toDF("n_ids", "grams_removed")
+        graft.llm.SpanIndex.delete(ctx.spark, indexURI, in.select(col(idField)))
+          .toDF(ctx.spark, "grams_removed")
       case "log" => graft.llm.SpanIndex.takedownLog(ctx.spark, indexURI)
       case other =>
         throw new IllegalArgumentException(s"$name: unknown action '$other' (write|ingest|delete|log)")
@@ -348,13 +340,8 @@ final case class IndexDedupTransform(
       case "delete" =>
         // takedown: the input view's idField column lists the doc ids —
         // passed through as a frame, never collected to the driver
-        val (b, s, e) = graft.llm.MinhashIndex.delete(ctx.spark, indexURI,
-          in.select(col(idField)))
-        val nIds = in.select(col(idField).cast("long")).na.drop().distinct().count()
-        val spark = ctx.spark
-        import spark.implicits._
-        Seq((nIds, b, s, e))
-          .toDF("n_ids", "band_rows_removed", "shingle_rows_removed", "exact_rows_removed")
+        graft.llm.MinhashIndex.delete(ctx.spark, indexURI, in.select(col(idField)))
+          .toDF(ctx.spark, "band_rows_removed", "shingle_rows_removed", "exact_rows_removed")
       case "log" => graft.llm.MinhashIndex.takedownLog(ctx.spark, indexURI)
       case other =>
         throw new IllegalArgumentException(s"$name: unknown action '$other' (filter|matches|ingest|delete|log)")
@@ -1742,13 +1729,13 @@ final case class TakedownExecute(
   * [[TakedownExecute]]. Ingest-append stores accumulate one file set per
   * (batch, touched partition) and takedown trails accumulate one file per
   * completed run; both need periodic mop-up or reads go metadata-bound.
-  * `action=compact` (default) compacts every partitioned table behind the
-  * stores whose URI is set ([[graft.llm.IndexCompact.compactPartitioned]])
+  * `action=compact` (default) compacts every declared table of the index
+  * stores whose URI is set ([[graft.llm.IndexStore.compact]])
   * AND folds their takedown audit trails ([[graft.core.AuditLog.compact]]
   * — the count stores contribute only their sibling-dir trails; their
   * data tables are row-count-sized at write). `action=recover` restores
   * every store's tables after an interrupted rewrite
-  * ([[graft.llm.IndexCompact.recover]]) — the one-cell answer to the
+  * ([[graft.llm.IndexStore.recover]]) — the one-cell answer to the
   * refusal TakedownExecute's preflight raises. `action=recallProbe` is
   * the IVF freshness monitor ([[graft.llm.IvfIndex.maintenanceRecall]]):
   * ingest drifts the corpus away from the frozen quantizer and
@@ -1780,16 +1767,9 @@ final case class CompactExecute(
 ) extends Stage {
   val stageType = "CompactExecute"
 
-  private def stores: Seq[(String, String, Seq[String])] = Seq(
-    ("minhash", minhashURI, Seq("bands", "shingles", "exact")),
-    ("span", spanURI, Seq("grams")),
-    ("sem", semURI, Seq("vectors")),
-    ("ivf", ivfURI, Seq("vectors"))).filter(_._2.nonEmpty)
-      .map { case (t, u, tables) => (t, u, tables.map(x => s"$u/$x")) }
-
   def execute(ctx: PipelineContext): Option[DataFrame] = {
-    import graft.llm.IndexCompact
     val spark = ctx.spark
+    val stores = graft.llm.IndexStore.named(minhashURI, spanURI, semURI, ivfURI)
     require(Seq(minhashURI, spanURI, semURI, ivfURI, countsURI, modelURI,
         auditURI).exists(_.nonEmpty),
       s"$name: no store URI set — name at least one of minhashURI/spanURI/" +
@@ -1797,13 +1777,10 @@ final case class CompactExecute(
     import spark.implicits._
     val out = action match {
       case "compact" =>
-        val indexRows = stores.map { case (tpe, uri, tableDirs) =>
-          val res = tableDirs.map(d =>
-            IndexCompact.compactPartitioned(spark, d, maxFilesPerPartition))
-          val logs = tableDirs.map(d =>
-            graft.core.AuditLog.compact(spark, s"$d/_takedown_log"))
-          (uri, tpe, res.map(_._1).sum.toLong, res.map(_._2).sum,
-            res.map(_._3).sum, logs.map(_._2).sum.toLong)
+        val indexRows = stores.map { case (st, uri) =>
+          val (compacted, before, after) = st.compact(spark, uri, maxFilesPerPartition)
+          (uri, st.storeType, compacted.toLong, before, after,
+            st.compactTakedownLog(spark, uri).toLong)
         }
         // count stores: data tables are row-count-sized at write — only
         // their SIBLING-dir trails accumulate files
@@ -1823,9 +1800,8 @@ final case class CompactExecute(
         require(stores.nonEmpty,
           s"$name: action=recover operates on the index stores — set " +
             "minhashURI/spanURI/semURI/ivfURI")
-        stores.map { case (tpe, uri, tableDirs) =>
-          (uri, tpe,
-            tableDirs.map(d => IndexCompact.recover(spark, d)).sum.toLong)
+        stores.map { case (st, uri) =>
+          (uri, st.storeType, st.recover(spark, uri).toLong)
         }.toDF("store", "store_type", "partitions_restored")
       case "recallProbe" =>
         require(ivfURI.nonEmpty,

@@ -1487,7 +1487,7 @@ class MinhashIndexSpec extends SparkSpec {
         .select("doc_id").as[Long].collect().toSet
     assert(survivors(Seq((100L, t(base, "three")), (101L, corpus.head().getString(1)))).isEmpty)
     // take the whole clique down
-    val (b, s, e) = graft.llm.MinhashIndex.delete(spark, path, Seq(0L, 1L))
+    val Seq(b, s, e) = graft.llm.MinhashIndex.delete(spark, path, Seq(0L, 1L)).rowsRemoved
     assert(e == 2L && s == 2L && b > 0L, (b, s, e).toString)
     // the same probes now survive — LSH, exact-fingerprint and shingle
     // verification all stopped seeing the deleted docs
@@ -1503,7 +1503,25 @@ class MinhashIndexSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("strictly above"))
     // deleting ids the index never held is a no-op, not an error
-    assert(graft.llm.MinhashIndex.delete(spark, path, Seq(999L)) == ((0L, 0L, 0L)))
+    assert(graft.llm.MinhashIndex.delete(spark, path, Seq(999L)).rowsRemoved == Seq(0L, 0L, 0L))
+  }
+
+  test("delete: a one-id takedown normalizes its ids once for all three tables (at most 23 Spark jobs)") {
+    val path = java.nio.file.Files.createTempDirectory("mhidx").toString + "/idx"
+    graft.llm.MinhashIndex.write(Seq(
+      (0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (70L, "rivers and mountains line the long winding roads of the northern valley"))
+      .toDF("doc_id", "text"), "doc_id", "text", path)
+    graft.llm.MinhashIndex.ingest(
+      Seq((200L, "a brand new document about something else entirely")).toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    var removed = Seq.empty[Long]
+    val jobs = ParamsRecordCheck.jobsDuring(spark) {
+      removed = graft.llm.MinhashIndex.delete(spark, path, Seq(70L)).rowsRemoved
+    }
+    assert(removed.size == 3 && removed.forall(_ > 0L), removed.toString)
+    // 25 jobs while each table normalized the ids on its own
+    assert(jobs <= 23, s"$jobs Spark jobs for a one-id delete")
   }
 
   test("delete: shingles/exact discovery is id-derived — untouched pmod partitions are never read") {
@@ -1521,7 +1539,7 @@ class MinhashIndexSpec extends SparkSpec {
     Seq(g1, g2).foreach(f =>
       java.nio.file.Files.write(f.toPath, "this is not a parquet file".getBytes))
     graft.core.LogBuffer.drain()
-    val (b, s, e) = graft.llm.MinhashIndex.delete(spark, path, Seq(0L, 1L))
+    val Seq(b, s, e) = graft.llm.MinhashIndex.delete(spark, path, Seq(0L, 1L)).rowsRemoved
     assert(e == 2L && s == 2L && b > 0L, (b, s, e).toString)
     // per-table completion is logged, so an interrupted takedown's
     // progress (earlier tables deleted, later live) is visible
@@ -1568,7 +1586,7 @@ class MinhashIndexSpec extends SparkSpec {
     assert(!spark.read.json(s"$path/params").columns.contains("idPartitions"))
     // delete computes the touched directories from the persisted geometry:
     // read as 64, it finds doc 70's rows in _p=6
-    val (_, s, e) = graft.llm.MinhashIndex.delete(spark, path, Seq(70L))
+    val Seq(_, s, e) = graft.llm.MinhashIndex.delete(spark, path, Seq(70L)).rowsRemoved
     assert(e == 1L && s > 0L, (s, e).toString)
     // ingest lays new rows out in the same 64-way geometry
     graft.llm.MinhashIndex.ingest(
@@ -2625,7 +2643,7 @@ class SemIndexSpec extends SparkSpec {
     assert(SemIndex.dedupAgainst(rows(Seq((100L, 0))), "vec_id", "embedding", path)
       .count() == 0)
     // take down the pattern-0 keeper
-    assert(SemIndex.delete(spark, path, Seq(0L)) == 1L)
+    assert(SemIndex.delete(spark, path, Seq(0L)).total == 1L)
     // the same copy now survives; other patterns still match
     assert(SemIndex.dedupAgainst(rows(Seq((100L, 0))), "vec_id", "embedding", path)
       .count() == 1)
@@ -2841,7 +2859,7 @@ class SpanIndexSpec extends SparkSpec {
       df(Seq((10L, s"x01 x02 $boiler x03 x04"))), "doc_id", "text", path))
     assert(s1.head._3 > 0L, s1.toString)
     // take down doc 0 — every gram it kept leaves the index
-    val removed = SpanIndex.delete(spark, path, Seq(0L))
+    val removed = SpanIndex.delete(spark, path, Seq(0L)).total
     assert(removed > 0L, removed.toString)
     // a later batch doc with the same boilerplate now KEEPS it: the bloom
     // still remembers the grams (false positive), but verification finds
@@ -3074,7 +3092,7 @@ class IndexCompactSpec extends SparkSpec {
       .map(_.select("neighbor_id").as[Long].collect().toSet)
     // vector 3 is the exact one-hot match for pattern-3 queries everywhere
     assert(hits() == Set(Set(3L)), hits().toString)
-    assert(IvfIndex.delete(spark, path, Seq(3L)) == 1L)
+    assert(IvfIndex.delete(spark, path, Seq(3L)).total == 1L)
     // every tier now returns some OTHER (orthogonal) neighbor — 3 is gone
     hits().foreach(h => assert(h.nonEmpty && !h.contains(3L), h.toString))
     // the remaining corpus is intact
@@ -3119,7 +3137,7 @@ class IndexCompactSpec extends SparkSpec {
     // then removes exactly the target row
     assert(IndexCompact.recover(spark, vecDir) == 1)
     assert(ids() == beforeIds)
-    assert(SemIndex.delete(spark, path, Seq(3L)) == 1L)
+    assert(SemIndex.delete(spark, path, Seq(3L)).total == 1L)
     assert(ids() == beforeIds.filterNot(_ == 3L))
     // ...and exactly the completed re-run is on the audit trail
     val log = IndexCompact.takedownLog(spark, vecDir)
@@ -3221,6 +3239,69 @@ class IndexCompactSpec extends SparkSpec {
       (Seq(5L, 17L) ++ (10000L until 11100L)).toDF("id")) == 2L)
     def setOf(d: String) = spark.read.parquet(d).select("id").as[Long].collect().toSet
     assert(setOf(dirA) == setOf(dirB) && !setOf(dirA).contains(5L), setOf(dirA).toString)
+  }
+
+  test("store declarations: declared tables are the partitioned dirs on disk, one delete logs once per table, a staged leftover in each is refused and recovered") {
+    import graft.llm.{IndexStore, MinhashIndex, SpanIndex, Takedown}
+    import org.apache.hadoop.fs.Path
+    val base = java.nio.file.Files.createTempDirectory("decl").toString
+    val corpus = Seq(
+      (0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa", vec(0)),
+      (1L, "one two three four five six seven eight nine ten eleven", vec(1)),
+      (2L, "red orange yellow green blue indigo violet cyan magenta white", vec(2)),
+      (3L, "north south east west up down left right forward backward", vec(3)))
+      .toDF("doc_id", "text", "embedding")
+    val batch = Seq((10L, "rivers and mountains line the long winding roads of the valley",
+      vec(4))).toDF("doc_id", "text", "embedding")
+    val stores: Seq[(IndexStore, String => Unit, String => Unit)] = Seq(
+      (MinhashIndex, MinhashIndex.write(corpus, "doc_id", "text", _),
+        p => MinhashIndex.ingest(batch, "doc_id", "text", p).count()),
+      (SpanIndex, p => SpanIndex.write(corpus, "doc_id", "text", p, k = 4, nbuckets = 4).count(),
+        p => SpanIndex.ingest(batch, "doc_id", "text", p).count()),
+      (SemIndex, SemIndex.write(corpus, "doc_id", "embedding", _, nclusters = 2),
+        p => SemIndex.ingest(batch, "doc_id", "embedding", p).count()),
+      (IvfIndex, IvfIndex.write(corpus, "doc_id", "embedding", _, nlist = 2),
+        IvfIndex.ingest(batch, "doc_id", "embedding", _)))
+    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def live(dir: Path) = fs.listStatus(dir).filter(f => f.isFile &&
+      !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+    stores.foreach { case (st, write, ingest) =>
+      val path = s"$base/${st.storeType}"
+      write(path)
+      ingest(path)
+      val partitioned = fs.listStatus(new Path(path)).filter(d => d.isDirectory &&
+        fs.listStatus(d.getPath).exists(c => c.isDirectory && c.getPath.getName.contains("=")))
+        .map(_.getPath.getName).toSet
+      assert(partitioned == st.tables.map(_.dir).toSet, s"${st.storeType}: $partitioned")
+      st.delete(spark, path, Seq(10L))
+      val records = st.takedownLog(spark, path).groupBy("table").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(records == st.tableDirs(path).map(_ -> 1L).toMap, s"${st.storeType}: $records")
+      // park one live file per table the way an interrupted rewrite leaves it
+      val rowsBefore = st.tableDirs(path).map(spark.read.parquet(_).count())
+      st.tableDirs(path).foreach { d =>
+        val part = fs.listStatus(new Path(d)).filter(p => p.isDirectory &&
+          p.getPath.getName.contains("=") && live(p.getPath).nonEmpty).head.getPath
+        val old = new Path(d, s"_compact_old/${part.getName}")
+        fs.mkdirs(old)
+        val victim = live(part).head.getPath
+        assert(fs.rename(victim, new Path(old, victim.getName)))
+      }
+      def uri(t: String) = if (st.storeType == t) path else ""
+      val refused = intercept[IllegalArgumentException](Takedown.run(spark,
+        Seq(0L).toDF("doc_id"), minhashURI = uri("minhash"), spanURI = uri("span"),
+        semURI = uri("sem"), ivfURI = uri("ivf")))
+      st.tableDirs(path).foreach(d =>
+        assert(refused.getMessage.contains(d), s"${st.storeType}: ${refused.getMessage}"))
+      val restored = graft.transform.CompactExecute("restore", "decl_restored",
+        minhashURI = uri("minhash"), spanURI = uri("span"), semURI = uri("sem"),
+        ivfURI = uri("ivf"), action = "recover")
+        .execute(new graft.core.PipelineContext(spark)).get
+        .select("partitions_restored").as[Long].collect().toSeq
+      assert(restored == Seq(st.tables.size.toLong), s"${st.storeType}: $restored")
+      assert(st.interruptedTables(spark, path).isEmpty)
+      assert(st.tableDirs(path).map(spark.read.parquet(_).count()) == rowsBefore)
+    }
   }
 }
 
@@ -3787,6 +3868,18 @@ class UnigramSpec extends SparkSpec {
     val row = Seq(("abcd")).toDF("text")
       .select(Unigram.encodeStruct(col("text"), m)).head().getStruct(0)
     assert(row.getAs[Long]("n_fallback") == 0L)
+  }
+
+  test("viterbi score is a document-order left fold: never below greedy on the same segmentation") {
+    // "e" then "ee" + the two-code-point emoji piece segment identically
+    // under both rules; summing each word on its own and adding the sum
+    // re-associated the additions and read 1 ulp below greedy's fold
+    val pieces = Seq(("e", -2.8), ("\ud83d\ude00\ud83c\udf0d", -2.2))
+    val enc = new graft.functions.UnigramEncoder(pieces, byteScore = -12.0)
+    val row = enc.encode(org.apache.spark.unsafe.types.UTF8String.fromString(
+      "e ee\ud83d\ude00\ud83c\udf0d"))
+    assert(row.getLong(4) == 0L)
+    assert(row.getDouble(2) == row.getDouble(3), (row.getDouble(2), row.getDouble(3)))
   }
 
   test("viterbi beats greedy longest-match and the in-band witness sees it") {
