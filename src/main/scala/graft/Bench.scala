@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Per-round benchmark: run every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, print ONE JSON line {"metric","value","unit","queries","sf"}.
@@ -19,15 +20,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus("4"), "ERROR", "spark.sql.adaptive.enabled" -> "true")
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     // warmup: JIT + codegen + filesystem metadata

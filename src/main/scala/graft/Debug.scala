@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Ad-hoc debug runner: `runMain graft.Debug <sfDir> <query...>` — runs the
   * named queries, prints schema + first rows or the failure.
@@ -8,19 +8,13 @@ import org.apache.spark.sql.SparkSession
 object Debug {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("4", "ERROR")
     args.tail.foreach { name =>
       val t0 = System.nanoTime()
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val rows = df.limit(5).collect()
-        println(s"== $name OK ${(System.nanoTime() - t0) / 1e9}%s sec")
+        println(f"== $name OK ${(System.nanoTime() - t0) / 1e9}%.3f sec")
         println(df.schema.simpleString)
         rows.foreach(println)
       } catch {

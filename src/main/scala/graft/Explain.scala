@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Print the formatted physical plan of named queries:
@@ -11,13 +11,7 @@ import org.apache.spark.sql.execution.ExplainMode
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("4", "ERROR")
     args.tail.foreach { name =>
       println(s"\n==================== $name ====================")
       val df = SparkEntry.queries(name)(spark, sfDir)

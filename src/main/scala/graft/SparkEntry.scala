@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.core.{PipelineContext, Runner, Stage}
-import graft.extract.ParquetExtract
-import graft.transform.SQLTransform
+import graft.queries.{Check, QueryDef, Registry}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + BASELINE.md.
+/** Driver contract — see SURVEY.md §7 + BASELINE.md. The queries
+  * themselves are declared in [[graft.queries]], one [[graft.queries.QueryDef]]
+  * each; this object derives `queries`, `oracleSql` and `entry` from [[Registry.all]].
   *
   * Every query routes through the pipeline engine (ParquetExtract stages
   * register temp views; SQLTransform or a dedicated stage computes the
@@ -22,6773 +21,17 @@ import graft.transform.SQLTransform
   */
 object SparkEntry {
 
-  /** Session read settings for oracle parity:
-    *  - no TimestampNTZ inference (plain TimestampType + UTC session ⇒ same
-    *    instants as DuckDB);
-    *  - `events.ts` has been generated both as nanosecond int64 (which
-    *    Spark's parquet reader rejects unless read as long) and as a native
-    *    µs timestamp — read the footer schema and adapt below (DuckDB
-    *    truncates ns→µs the same way).
-    */
-  private def configureReads(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-  }
-
-  /** Scale-adaptive scan parallelism (guide §2.5 "input skew: one huge
-    * unsplittable file", §6 input-split sizing). Parquet cannot split
-    * below row-group granularity, and the bench tables arrive as ONE file
-    * with ONE row group — so every scan-stage computation (regex chains,
-    * window-hash shingling, aggregation buffers) runs in a single task no
-    * matter how many cores the session has. When the file layout cannot
-    * reach the session's parallelism (file-size/maxPartitionBytes split
-    * bound below defaultParallelism), the extract repartitions to the
-    * session's core count; when the layout already parallelizes (any real
-    * multi-file / multi-row-group table — always at production scale),
-    * this is None and NO exchange is added. Derived from input layout +
-    * session parallelism, never a constant.
-    *
-    * Round-robin repartition is deterministic under retries (Spark sorts
-    * before round-robin repartition, SPARK-23207) and Catalyst pushes
-    * filters/pruning through Repartition, so scan pushdown is unchanged
-    * (PlanSpec's q209 triple-pushdown pin holds).
-    *
-    * OPT-IN per query ([[withViewsPar]]/[[withViewsDirPar]]), because a
-    * layout change is only safe when the query's declared output provably
-    * cannot move with it. The audit that admits a query:
-    *  1. its final ORDER BY keys are UNIQUE per output row (doc_id /
-    *     vec_id / sent_id are unique in the corpus tables at every SF —
-    *     verified), so row order is total and layout-free. The synthetic
-    *     lineitem has DUPLICATE (l_orderkey, l_linenumber) pairs, so
-    *     row-level lineitem queries (e.g. q110) are tie-order-sensitive
-    *     and stay opted out — as does every `pipe` SQL query wholesale;
-    *  2. no partition-layout-dependent values: KMeans (Spark ML k-means||
-    *     init samples per partition — q156/q62/q147/q148/q155/q158/q193/
-    *     q205/q210 stay fixed-layout), percentile_approx (q64),
-    *     Misra–Gries (q157), materialization-scoped synthetic ids (q46);
-    *  3. float aggregation only where the argmax/rank margins are
-    *     documented macroscopic (the NB-predict contract — already
-    *     exercised today by bench-vs-verify partition-count differences).
-    */
-  private def scanPartitions(spark: SparkSession, dir: String, table: String): Option[Int] = {
-    val cores = spark.sparkContext.defaultParallelism
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val bytes = fs.getContentSummary(p).getLength
-    val split = spark.sessionState.conf.filesMaxPartitionBytes
-    val splits = math.max(1L, (bytes + split - 1) / split)
-    if (splits < cores) Some(cores) else None
-  }
-
-  private def extractStages(spark: SparkSession, dir: String, tables: Seq[String],
-      adaptivePar: Boolean = false): Seq[Stage] = {
-    def par(table: String): Option[Int] =
-      if (adaptivePar) scanPartitions(spark, dir, table) else None
-    tables.flatMap {
-      case "events" =>
-        // Schema probe: ts arrives as LongType when the file stores an
-        // unannotated int64 (legacy ns generator + nanosAsLong), or as a
-        // real timestamp when the file stores µs. Normalize to
-        // TimestampType either way so every downstream query sees one
-        // schema. LongType alone can't name the unit — a generator writing
-        // raw micros (or seconds) would be silently shifted 1000× by a ns
-        // DIV — so the unit is inferred from value magnitude with a
-        // one-row read (epoch values: ns ~1.7e18, µs ~1.7e15, ms ~1.7e12,
-        // s ~1.7e9); the footer-only fast path still covers today's native
-        // µs files with zero data reads.
-        val raw = spark.read.parquet(s"$dir/events.parquet")
-        val tsExpr = raw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            // max over a 10k-row sample of POSITIVE values: zero/sentinel
-            // timestamps are excluded up front, so a table whose first
-            // rows are all placeholders can't reclassify the unit (ns data
-            // read as seconds would shift every downstream events query)
-            val mag = raw.select(abs(col("ts")).as("a")).filter("a IS NOT NULL AND a > 0")
-              .limit(10000).agg(max("a")).collect().headOption
-              .filterNot(_.isNullAt(0)).map(_.getLong(0).toDouble)
-              .getOrElse(2e18) // empty table: any unit works; keep ns
-            // ns→µs with integer DIV (a double division would lose
-            // precision on 1.7e18-scale nanos)
-            if (mag > 3e16) "TIMESTAMP_MICROS(ts DIV 1000)"
-            else if (mag > 3e13) "TIMESTAMP_MICROS(ts)"
-            else if (mag > 3e10) "TIMESTAMP_MILLIS(ts)"
-            else "CAST(ts AS TIMESTAMP)"
-          case _ => "ts"
-        }
-        Seq(
-          ParquetExtract("extract_events_raw", s"$dir/events.parquet", "events_raw",
-            numPartitions = par("events")),
-          SQLTransform(
-            "events_ns_to_ts",
-            s"""SELECT event_id, $tsExpr AS ts, user_id,
-                      event_type, value, props
-               FROM events_raw""",
-            "events"
-          )
-        )
-      case t => Seq(ParquetExtract(s"extract_$t", s"$dir/$t.parquet", t,
-        numPartitions = par(t)))
-    }
-  }
-
-  /** Register the given tables as temp views via ParquetExtract stages, then
-    * run `sql` through SQLTransform.
-    */
-  private def pipe(tables: String*)(sql: String): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, tables) :+ SQLTransform("q", sql, "result"), ctx).get
-    }
-
-  /** q147's persistent IVF index: built once per (JVM, sfDir) into a
-    * per-process unique temp dir. Re-evaluating the query closure (Bench
-    * runs every query twice, min-of-2) must not retrain KMeans, and a fixed
-    * /tmp path would race concurrent drivers on one machine — so the bench
-    * row reports retrieval cost with the build as one-off prep, and
-    * parallel batteries never collide.
-    */
-  /** q165/q174's BPE merges: trained once per (JVM, sfDir) — the q147Index
-    * discipline. Re-evaluating the query closures (Bench min-of-2) must not
-    * redo the word-count + merge loop; training is deterministic, so the
-    * memo changes nothing about results.
-    */
-  private val bpeMergesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
-  private def bpeMerges(docs: DataFrame, sfDir: String): Seq[(String, String)] =
-    bpeMergesCache.computeIfAbsent(sfDir,
-      _ => graft.llm.Bpe.trainMerges(docs, "text", numMerges = 30))
-
-  /** q192's unigram model: trained once per (JVM, sfDir) — the bpeMerges
-    * discipline (hard-EM training is deterministic; the memo changes
-    * nothing about results, it only spares Bench re-evaluations the
-    * word-count + EM loop). */
-  private val unigramModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.llm.Unigram.Model]()
-  private def unigramModel(docs: DataFrame, sfDir: String): graft.llm.Unigram.Model =
-    unigramModelCache.computeIfAbsent(sfDir,
-      _ => graft.llm.Unigram.train(docs, "text", vocabSize = 2000))
-
-  /** q196's WordPiece model: trained once per (JVM, sfDir) — the bpeMerges
-    * discipline (the likelihood merge loop is deterministic; the memo only
-    * spares Bench re-evaluations the word-count + merge loop). */
-  private val wordPieceModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.llm.WordPiece.Model]()
-  private def wordPieceModel(docs: DataFrame, sfDir: String): graft.llm.WordPiece.Model =
-    wordPieceModelCache.computeIfAbsent(sfDir,
-      _ => graft.llm.WordPiece.train(docs, "text", vocabSize = 300))
-
-  private val q147Index = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val q155Codebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[graft.llm.Pq.CodebookEntry]]()
-  private def q147IndexDir(em: DataFrame, sfDir: String): String =
-    q147Index.computeIfAbsent(sfDir, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_q147_ivfindex_").toString
-      // pqSubspaces=8: the one shared index serves q147 (flat), q148 (SQ8
-      // codes), and q158 (PQ codes) — the layout carries all three tiers.
-      // pqResidual: codes quantize (vec − assigned centroid), the faiss
-      // IVFPQ default — q158's covering-shortlist brute-force parity then
-      // exercises the residual decode path in the oracle battery
-      graft.llm.IvfIndex.write(em, "vec_id", "embedding", d, nlist = 8, pqSubspaces = 8,
-        pqResidual = true)
-      d
-    })
-
-  /** Same tables registered, custom DataFrame logic. */
-  private def withViews(tables: String*)(
-      f: (SparkSession, PipelineContext) => DataFrame
-  ): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, tables), ctx)
-      f(spark, ctx)
-    }
-
-  /** [[withViews]] with the extract's adaptive scan parallelization ON —
-    * only for queries that pass the [[scanPartitions]] layout-safety
-    * audit (unique order keys, no layout-dependent values). */
-  private def withViewsPar(tables: String*)(
-      f: (SparkSession, PipelineContext) => DataFrame
-  ): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, tables, adaptivePar = true), ctx)
-      f(spark, ctx)
-    }
-
-  /** [[withViews]] plus the sfDir passed through — for queries keying a
-    * per-(JVM, sfDir) fixture cache ([[q147IndexDir]]'s discipline). */
-  private def withViewsDir(tables: String*)(
-      f: (SparkSession, PipelineContext, String) => DataFrame
-  ): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, tables), ctx)
-      f(spark, ctx, dir)
-    }
-
-  /** [[withViewsDir]] with adaptive scan parallelization ON — same audit
-    * gate as [[withViewsPar]]. */
-  private def withViewsDirPar(tables: String*)(
-      f: (SparkSession, PipelineContext, String) => DataFrame
-  ): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, tables, adaptivePar = true), ctx)
-      f(spark, ctx, dir)
-    }
-
-  /** Takedown-battery store fixtures (q191/q202/q205/q210). Unlike
-    * [[q147IndexDir]]'s shared read-only index, the lifecycle batteries
-    * MUTATE their stores (ingest/staged-rewrite takedown), so each
-    * invocation needs a PRISTINE store set: stores build ONCE per
-    * (JVM, sfDir, query) into a cache dir, and every call returns a fresh
-    * filesystem copy (milliseconds for battery-sized stores) the takedown
-    * may rewrite freely. Bench's min-of-two then measures the
-    * takedown/probe steady state instead of paying fixture construction
-    * twice per query — the store builds are fixed-job scheduler cost,
-    * data-independent at battery scale (BASELINE.md notes 5–6). */
-  private val storeFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def freshStores(key: String, sfDir: String)(build: String => Unit): String = {
-    val built = storeFixtureCache.computeIfAbsent(s"$key@$sfDir", _ => {
-      val d = java.nio.file.Files.createTempDirectory(s"graft_fix_${key}_").toString
-      build(d); d
-    })
-    val work = java.nio.file.Files
-      .createTempDirectory(s"graft_${key}_work_").toString
-    copyTree(java.nio.file.Paths.get(built), java.nio.file.Paths.get(work))
-    work
-  }
-  private def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    val s = java.nio.file.Files.walk(src)
-    try s.forEach { p =>
-      val t = dst.resolve(src.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally s.close()
-  }
-
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. TPC-H-Q1 shape:
     * scan → filter → hash agg (partial+final) → sort, all Catalyst-planned.
     */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_agg_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------------------
-  // SQL text shared between Spark and DuckDB where the dialects agree.
-  // Where they diverge the oracle gets its own text below.
-  // ---------------------------------------------------------------------------
+  /** name → (spark, sfDir) => result, for every registered query. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.all.map(q => q.name -> (q.apply _)).toMap
 
-  private val q01 = """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)      AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-           CAST(COUNT(*) AS BIGINT) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2001-09-01 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus"""
-
-  private val q02 = """
-    SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-      AND l_discount >= 0.05 AND l_quantity < 10
-    ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice"""
-
-  private val q03 = """
-    SELECT c.c_mktsegment,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-           CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM lineitem l
-    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_mktsegment
-    ORDER BY c.c_mktsegment"""
-
-  private val q04 = """
-    SELECT c.c_custkey, c.c_name,
-           CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders,
-           CAST(COALESCE(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))), 0) AS DOUBLE) AS total_spent
-    FROM customer c
-    LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-    GROUP BY c.c_custkey, c.c_name
-    ORDER BY c.c_custkey"""
-
-  private val q05 = """
-    SELECT o_orderkey, o_totalprice
-    FROM orders
-    WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem WHERE l_quantity >= 49)
-    ORDER BY o_orderkey"""
-
-  private val q06 = """
-    SELECT c_custkey, c_name
-    FROM customer c
-    WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    ORDER BY c_custkey"""
-
-  private val q07 = """
-    SELECT l.l_orderkey, l.l_linenumber, p.p_partkey, p.p_retailprice, l.l_extendedprice
-    FROM lineitem l
-    JOIN part p ON l.l_partkey = p.p_partkey
-               AND l.l_extendedprice > p.p_retailprice * 45
-    ORDER BY l.l_orderkey, l.l_linenumber, p.p_partkey, l.l_extendedprice, l.l_quantity"""
-
-  private val q08 = """
-    SELECT n.n_name,
-           CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT) AS n_customers,
-           CAST(COUNT(DISTINCT s.s_suppkey) AS BIGINT) AS n_suppliers
-    FROM nation n
-    FULL OUTER JOIN customer c ON c.c_nationkey = n.n_nationkey
-    FULL OUTER JOIN supplier s ON s.s_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    ORDER BY n.n_name NULLS FIRST"""
-
-  private val q09 = """
-    SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
-      SELECT o_custkey, o_orderkey, o_totalprice,
-             ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk
-      FROM orders) t
-    WHERE rk <= 3
-    ORDER BY o_custkey, rk"""
-
-  private val q10 = """
-    SELECT l_suppkey, l_orderkey, l_linenumber,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER (
-             PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty
-    FROM lineitem
-    WHERE l_suppkey <= 3
-    ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber, l_quantity"""
-
-  private val q11 = """
-    SELECT user_id, event_id, value,
-           LAG(event_id)  OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_event,
-           LEAD(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_event
-    FROM events
-    WHERE user_id <= 5
-    ORDER BY user_id, ts, event_id"""
-
-  private val q12 = """
-    SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-           COALESCE(l_linestatus, 'ALL') AS linestatus,
-           CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
-           CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-    FROM lineitem
-    GROUP BY CUBE(l_returnflag, l_linestatus)
-    ORDER BY g_flag, g_status, returnflag, linestatus"""
-
-  private val q13 = """
-    SELECT COALESCE(o_orderpriority, 'ALL') AS priority,
-           COALESCE(o_orderstatus, 'ALL')  AS status,
-           CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_p,
-           CAST(GROUPING(o_orderstatus) AS BIGINT)  AS g_s,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM orders
-    GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
-    ORDER BY g_p, g_s, priority, status"""
-
-  private val q14 = """
-    SELECT COALESCE(c_mktsegment, 'ALL') AS segment,
-           COALESCE(CAST(c_nationkey AS BIGINT), -1) AS nationkey,
-           CAST(GROUPING(c_mktsegment) AS BIGINT) AS g_seg,
-           CAST(GROUPING(c_nationkey) AS BIGINT) AS g_nat,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM customer
-    GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
-    ORDER BY g_seg, g_nat, segment, nationkey"""
-
-  private val q15 = """
-    SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 5000
-    INTERSECT
-    SELECT o_custkey FROM orders
-    ORDER BY custkey"""
-
-  private val q16 = """
-    SELECT c_custkey AS custkey FROM customer
-    EXCEPT
-    SELECT o_custkey FROM orders
-    ORDER BY custkey"""
-
-  private val q17 = """
-    SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT)  AS n_parts,
-           CAST(COUNT(DISTINCT l_suppkey) AS BIGINT)  AS n_supps,
-           CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_orders
-    FROM lineitem"""
-
-  private val q18 = """
-    SELECT o_orderkey, o_totalprice
-    FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey
-    LIMIT 10"""
-
-  private val q19 = """
-    SELECT c_custkey,
-           UPPER(c_name) AS uname,
-           LOWER(c_mktsegment) AS lseg,
-           SUBSTRING(c_name, 1, 8) AS prefix,
-           CAST(LENGTH(c_name) AS BIGINT) AS name_len,
-           CONCAT(c_name, '#', c_mktsegment) AS tagged,
-           REPLACE(c_name, 'Customer', 'Cust') AS brief,
-           TRIM(c_name) AS trimmed,
-           LPAD(CAST(c_custkey AS STRING), 8, '0') AS padded
-    FROM customer
-    ORDER BY c_custkey"""
-
-  private val q21 = """
-    SELECT o_orderkey,
-           ABS(o_totalprice - 100000)   AS dist,
-           ROUND(o_totalprice, 0)       AS rounded,
-           CAST(FLOOR(o_totalprice) AS BIGINT) AS floored,
-           CAST(CEIL(o_totalprice) AS BIGINT)  AS ceiled,
-           CAST(MOD(o_orderkey, 7) AS BIGINT) AS m7,
-           SQRT(o_totalprice)           AS root
-    FROM orders
-    WHERE o_orderkey <= 500
-    ORDER BY o_orderkey"""
-
-  private val q22 = """
-    SELECT o_orderkey,
-           CASE WHEN o_totalprice > 200000 THEN 'high'
-                WHEN o_totalprice > 100000 THEN 'mid'
-                ELSE 'low' END AS bucket,
-           COALESCE(NULLIF(o_orderstatus, 'O'), 'open') AS status2,
-           GREATEST(o_totalprice, 150000.0) AS hi,
-           LEAST(o_totalprice, 150000.0)    AS lo
-    FROM orders
-    WHERE o_orderkey <= 500
-    ORDER BY o_orderkey"""
-
-  private val q26 = """
-    SELECT o_orderkey, o_custkey, o_totalprice
-    FROM orders o
-    WHERE o_totalprice > (SELECT AVG(o2.o_totalprice) * 1.8 FROM orders o2)
-    ORDER BY o_orderkey"""
-
-  private val q27 = """
-    SELECT l_suppkey, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-    FROM lineitem
-    GROUP BY l_suppkey
-    HAVING COUNT(*) > 100 AND SUM(CAST(l_quantity AS DECIMAL(18,2))) > 1000
-    ORDER BY l_suppkey"""
-
-  private val q28 = """
-    SELECT o_orderkey, o_orderpriority
-    FROM orders
-    WHERE o_orderpriority IN ('1-URGENT', '2-HIGH') AND o_orderkey BETWEEN 100 AND 600
-    ORDER BY o_orderkey"""
-
-  private val q29 = """
-    SELECT p_partkey, p_name, p_type
-    FROM part
-    WHERE p_name LIKE '%ol%' AND p_size BETWEEN 10 AND 30
-    ORDER BY p_partkey"""
-
-  // ---------------------------------------------------------------------------
-  // queries: name → (spark, sfDir) => DataFrame
-  // ---------------------------------------------------------------------------
-
-  private val q70 = """
-    SELECT n.n_name AS nation,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-           CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-    JOIN nation n   ON s.s_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    WHERE r.r_name = 'ASIA'
-      AND o.o_orderdate >= TIMESTAMP '1994-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY n.n_name
-    ORDER BY revenue DESC, nation"""
-
-  // TPC-H Q15 shape: grouped revenue view + global-MAX scalar subquery.
-  // Money travels as exact integer units (cents × (100 − discount_cents)):
-  // FLOOR of a double multiply is the same IEEE op on both engines, and the
-  // BIGINT sum is order-independent — no double-summation parity risk.
-  private val q126 = """
-    WITH revenue AS (
-      SELECT l_suppkey AS supplier_no,
-             CAST(SUM(CAST(FLOOR(l_extendedprice * 100) AS BIGINT)
-                      * (100 - CAST(FLOOR(l_discount * 100) AS BIGINT))) AS BIGINT) AS total_rev_u
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-      GROUP BY l_suppkey)
-    SELECT s_suppkey, s_name, total_rev_u
-    FROM supplier JOIN revenue ON s_suppkey = supplier_no
-    WHERE total_rev_u = (SELECT MAX(total_rev_u) FROM revenue)
-    ORDER BY s_suppkey"""
-
-  // TPC-H Q16 shape: NOT IN excluded-supplier subquery + per-group COUNT
-  // DISTINCT over a filtered dimension join.
-  private val q127 = """
-    SELECT p_brand, p_size, CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-    FROM part JOIN lineitem ON p_partkey = l_partkey
-    WHERE p_brand <> 'Brand#1'
-      AND p_size IN (1, 4, 7, 10, 13, 16, 19, 23)
-      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 5000)
-    GROUP BY p_brand, p_size
-    ORDER BY supplier_cnt DESC, p_brand, p_size"""
-
-  // TPC-H Q20 shape adapted to the available tables: suppliers shipping an
-  // OUTSIZED share (>15% where uniform would be 10% over 10 suppliers) of a
-  // part's total quantity — the threshold is in exact integer cross-ratio
-  // form (qty·20 > total·3), non-empty at every fixture scale. Quantities
-  // are integral doubles — FLOOR casts them to exact BIGINTs.
-  private val q128 = """
-    WITH part_vol AS (
-      SELECT l_partkey, l_suppkey,
-             CAST(SUM(CAST(FLOOR(l_quantity) AS BIGINT)) AS BIGINT) AS qty
-      FROM lineitem GROUP BY l_partkey, l_suppkey),
-    tot AS (
-      SELECT l_partkey, CAST(SUM(qty) AS BIGINT) AS total_qty
-      FROM part_vol GROUP BY l_partkey)
-    SELECT s_suppkey, s_name, CAST(COUNT(*) AS BIGINT) AS n_dominated_parts
-    FROM part_vol JOIN tot USING (l_partkey) JOIN supplier ON s_suppkey = l_suppkey
-    WHERE qty * 20 > total_qty * 3
-    GROUP BY s_suppkey, s_name
-    ORDER BY n_dominated_parts DESC, s_suppkey"""
-
-  // Window distribution functions: percent_rank/cume_dist are exact double
-  // ratios of integer rank/count (single IEEE division — engine-parity
-  // safe); nth_value gets an explicit ROWS frame so both engines agree on
-  // when the 3rd row enters the frame. Ties broken by key → total order.
-  private val q129 = """
-    SELECT o_orderkey, o_orderpriority,
-           percent_rank() OVER w AS pr,
-           cume_dist() OVER w AS cd,
-           nth_value(o_orderkey, 3) OVER (
-             PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS third_key
-    FROM orders
-    WHERE o_orderkey <= 2000
-    WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey)
-    ORDER BY o_orderpriority, pr, o_orderkey"""
-
-  // Edit-distance near-dup: levenshtein within length-bucket blocks (the
-  // classic blocked-pairs shape — the equi-join on the bucket key keeps the
-  // candidate set linear-ish; never an unblocked cross join). The length
-  // difference lower-bounds edit distance, so |lenA−lenB| ≤ maxDist is a
-  // free pre-filter that spares the O(len²) levenshtein on hopeless pairs —
-  // provably result-preserving.
-  // The inner select computes levenshtein ONCE (the filter above references
-  // the alias, so the expensive O(len²) kernel runs a single time per
-  // surviving candidate — spelling it in both SELECT and WHERE would
-  // evaluate it twice per pair).
-  private val q130 = """
-    SELECT idA, idB, dist FROM (
-      SELECT a.doc_id AS idA, b.doc_id AS idB,
-             CAST(levenshtein(a.text, b.text) AS BIGINT) AS dist
-      FROM documents a JOIN documents b
-        ON CAST(FLOOR(a.n_chars / 20) AS BIGINT) = CAST(FLOOR(b.n_chars / 20) AS BIGINT)
-       AND a.doc_id < b.doc_id
-      WHERE a.doc_id < 200 AND b.doc_id < 200
-        AND abs(a.n_chars - b.n_chars) <= 25) c
-    WHERE dist <= 25
-    ORDER BY idA, idB"""
-
-  // TPC-H Q7 shape (volume shipping): revenue flowing between two nation
-  // groups in either direction, by supplier nation / customer nation /
-  // ship year. Two aliases of the same `nation` dimension (supplier side and
-  // customer side) — both broadcast; the fact table never shuffles before
-  // the final group-by. Money travels as exact integer cent-units (see q126).
-
-  // TPC-H Q3 (shipping priority): segment-filtered 3-way join, revenue in
-  // exact integer units (the q133 discipline), top-10 by revenue with full
-  // tiebreaks for a total order.
-  private val q169 = """
-    SELECT l.l_orderkey,
-           CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT))) AS BIGINT) AS revenue_u,
-           o.o_orderdate, o.o_orderpriority
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-      AND l.l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
-    GROUP BY 1, 3, 4
-    ORDER BY revenue_u DESC, o_orderdate, l_orderkey
-    LIMIT 10"""
-
-  // TPC-H Q6 (forecasting revenue change): the tightest scan shape in the
-  // suite — one pass, three pushable predicates (date range, discount
-  // band, quantity cap), one global agg. Revenue in the battery's
-  // integer-exact cents form (the q169 discipline) so the single output
-  // row hashes identically cross-engine; the date window is shifted to
-  // the generated data's 1995–2001 shipdate range.
-  private val q209 = """
-    SELECT CAST(SUM(CAST(FLOOR(l_extendedprice * 100) AS BIGINT)
-                 * CAST(FLOOR(l_discount * 100) AS BIGINT)) AS BIGINT) AS revenue_u,
-           CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24"""
-
-  // TPC-H Q5 (local supplier volume): revenue where the supplier and the
-  // customer share a nation, per nation of one region over one year.
-  private val q170 = """
-    SELECT n.n_name,
-           CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT))) AS BIGINT) AS revenue_u,
-           CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                   AND c.c_nationkey = s.s_nationkey
-    JOIN nation n   ON s.s_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    WHERE r.r_name = 'ASIA'
-      AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY 1
-    ORDER BY revenue_u DESC, n_name"""
-
-  // TPC-H Q10 (returned-item reporting): per-customer lost revenue from
-  // returned lines over a quarter; top 20 by revenue.
-  private val q171 = """
-    SELECT c.c_custkey, c.c_name,
-           CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT))) AS BIGINT) AS revenue_u,
-           n.n_name
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n   ON c.c_nationkey = n.n_nationkey
-    WHERE o.o_orderdate >= TIMESTAMP '1996-10-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-      AND l.l_returnflag = 'R'
-    GROUP BY 1, 2, 4
-    ORDER BY revenue_u DESC, c_custkey
-    LIMIT 20"""
-
-  // TPC-H Q18 (large-volume customers): orders whose total quantity clears
-  // a threshold (scaled to the synthetic row counts), with customer data.
-  private val q172 = """
-    WITH big AS (
-      SELECT l_orderkey
-      FROM lineitem
-      GROUP BY l_orderkey
-      HAVING SUM(l_quantity) > 150)
-    SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-           CAST(SUM(l.l_quantity) AS BIGINT) AS total_qty
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE o.o_orderkey IN (SELECT l_orderkey FROM big)
-    GROUP BY 1, 2, 3, 4
-    ORDER BY total_qty DESC, o_orderkey"""
-
-  // TPC-H Q22 shape (global sales opportunity), adapted to the reduced
-  // schema (no c_phone -> country bucket = the customer nation) and to the
-  // synthetic data (every customer has SOME order, so the dormancy test is
-  // "no order since 1999"): above-average-balance customers gone quiet,
-  // counted per nation.
-  private val q173 = """
-    WITH avg_bal AS (
-      SELECT AVG(c_acctbal) AS a FROM customer WHERE c_acctbal > 0.0),
-    eligible AS (
-      SELECT c.c_custkey, c.c_nationkey, c.c_acctbal
-      FROM customer c, avg_bal
-      WHERE c.c_acctbal > avg_bal.a
-        AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-                        AND o.o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'))
-    SELECT n.n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_custs,
-           CAST(SUM(CAST(FLOOR(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS total_bal_u
-    FROM eligible e
-    JOIN nation n ON e.c_nationkey = n.n_nationkey
-    GROUP BY 1
-    ORDER BY 1"""
-
-  private val q133 = """
-    SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-           CAST(EXTRACT(YEAR FROM l.l_shipdate) AS BIGINT) AS l_year,
-           CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT))) AS BIGINT) AS revenue_u,
-           CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM lineitem l
-    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN nation sn  ON s.s_nationkey = sn.n_nationkey
-    JOIN nation cn  ON c.c_nationkey = cn.n_nationkey
-    WHERE ((sn.n_name IN ('NATION_1', 'NATION_2') AND cn.n_name IN ('NATION_3', 'NATION_4'))
-        OR (sn.n_name IN ('NATION_3', 'NATION_4') AND cn.n_name IN ('NATION_1', 'NATION_2')))
-      AND l.l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
-      AND l.l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY 1, 2, 3
-    ORDER BY 1, 2, 3"""
-
-  // TPC-H Q8 shape (market share): one nation's share of a region's PROMO
-  // revenue per order year. The share is a SINGLE IEEE division of two
-  // exactly-summed BIGINTs (both emitted for auditability) — engine-parity
-  // safe; a double SUM ratio would be order-dependent on both sides.
-  private val q134 = """
-    WITH base AS (
-      SELECT CAST(EXTRACT(YEAR FROM o.o_orderdate) AS BIGINT) AS o_year,
-             CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-               * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT)) AS vol_u,
-             sn.n_name AS supp_nation
-      FROM lineitem l
-      JOIN orders o   ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation cn  ON c.c_nationkey = cn.n_nationkey
-      JOIN region r   ON cn.n_regionkey = r.r_regionkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      JOIN nation sn  ON s.s_nationkey = sn.n_nationkey
-      JOIN part p     ON l.l_partkey = p.p_partkey
-      WHERE r.r_name = 'ASIA' AND p.p_type = 'PROMO')
-    SELECT o_year,
-           CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN vol_u ELSE 0 END) AS BIGINT) AS nation_u,
-           CAST(SUM(vol_u) AS BIGINT) AS total_u,
-           CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN vol_u ELSE 0 END) AS DOUBLE)
-             / CAST(SUM(vol_u) AS DOUBLE) AS mkt_share
-    FROM base GROUP BY o_year ORDER BY o_year"""
-
-  // TPC-H Q11 shape (important stock) adapted to this schema (no partsupp):
-  // parts whose lineitem value exceeds 1.2× the uniform share, against a
-  // scalar-subquery total. The threshold is an exact integer cross-ratio
-  // (v·n·5 > t·6) — scale-invariant (uniform share shrinks as parts grow)
-  // and free of double rounding on either engine.
-  private val q135 = """
-    WITH val AS (
-      SELECT l.l_partkey,
-             CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-                      * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT))) AS BIGINT) AS value_u
-      FROM lineitem l GROUP BY l.l_partkey),
-    tot AS (
-      SELECT CAST(SUM(value_u) AS BIGINT) AS total_u, CAST(COUNT(*) AS BIGINT) AS n_parts
-      FROM val)
-    SELECT l_partkey, value_u
-    FROM val, tot
-    WHERE value_u * n_parts * 5 > total_u * 6
-    ORDER BY value_u DESC, l_partkey"""
-
-  // TPC-H Q12 shape (shipping-delay priority split) adapted: lines shipped
-  // >30 days after the order date, split per return-flag class into
-  // high/low-priority conditional counts. The theta predicate
-  // (shipdate > orderdate + interval) rides the equi-join on l_orderkey —
-  // a hash join with a residual filter, never a nested loop.
-  private val q136 = """
-    SELECT l.l_returnflag AS ship_class,
-           CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    WHERE l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY
-      AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l.l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY 1 ORDER BY 1"""
-
-  // TPC-H Q14 shape (promo revenue share) by ship month: conditional-sum
-  // ratio. Numerator/denominator are exact BIGINT cent-unit sums (emitted
-  // too); the share is 100·num/den — two IEEE ops on exact inputs, so both
-  // engines produce the identical double.
-  private val q137 = """
-    SELECT CAST(EXTRACT(YEAR FROM l.l_shipdate) AS BIGINT) AS y,
-           CAST(EXTRACT(MONTH FROM l.l_shipdate) AS BIGINT) AS m,
-           CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                         THEN CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-                              * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT))
-                         ELSE 0 END) AS BIGINT) AS promo_u,
-           CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT))) AS BIGINT) AS total_u,
-           100.0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                                 THEN CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-                                      * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT))
-                                 ELSE 0 END) AS DOUBLE)
-             / CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-                        * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT))) AS DOUBLE) AS promo_share
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l.l_shipdate <  TIMESTAMP '1996-07-01 00:00:00'
-    GROUP BY 1, 2 ORDER BY 1, 2"""
-
-  // TPC-H Q19 shape (disjunctive brand/size/quantity predicates): the OR of
-  // three conjunct groups spans both join sides. Catalyst keeps the
-  // l_partkey equi-join and extracts the brand/size disjunction as a
-  // pushable part-scan filter (PlanSpec pins PushedFilters on the part
-  // scan) — the naive reading would be a nested-loop over the OR.
-  private val q138 = """
-    SELECT CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(FLOOR(l.l_discount * 100) AS BIGINT))) AS BIGINT) AS revenue_u,
-           CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15 AND l.l_quantity BETWEEN 1 AND 20)
-       OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 25 AND l.l_quantity BETWEEN 10 AND 30)
-       OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 35 AND l.l_quantity BETWEEN 20 AND 40)"""
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q70_join_5way_reorder" ->
-      pipe("customer", "orders", "lineitem", "supplier", "nation", "region")(q70),
-    "q169_tpch_q3_shipping_priority" -> pipe("customer", "orders", "lineitem")(q169),
-    "q170_tpch_q5_local_supplier" ->
-      pipe("customer", "orders", "lineitem", "supplier", "nation", "region")(q170),
-    "q171_tpch_q10_returned_items" ->
-      pipe("customer", "orders", "lineitem", "nation")(q171),
-    "q172_tpch_q18_large_volume" -> pipe("customer", "orders", "lineitem")(q172),
-    "q173_tpch_q22_idle_balances" -> pipe("customer", "orders", "nation")(q173),
-    "q133_tpch_q7_volume_shipping" ->
-      pipe("lineitem", "orders", "customer", "supplier", "nation")(q133),
-    "q134_tpch_q8_market_share" ->
-      pipe("lineitem", "orders", "customer", "supplier", "nation", "region", "part")(q134),
-    "q135_tpch_q11_value_concentration" -> pipe("lineitem")(q135),
-    "q136_tpch_q12_priority_split" -> pipe("lineitem", "orders")(q136),
-    "q137_tpch_q14_promo_share" -> pipe("lineitem", "part")(q137),
-    "q138_tpch_q19_disjunctive" -> pipe("lineitem", "part")(q138),
-    "q209_tpch_q6_forecast_revenue" -> pipe("lineitem")(q209),
-    "q126_tpch_q15_top_supplier" -> pipe("lineitem", "supplier")(q126),
-    "q127_tpch_q16_supplier_cnt" -> pipe("part", "lineitem", "supplier")(q127),
-    "q128_dominant_share" -> pipe("lineitem", "supplier")(q128),
-    "q129_window_distribution" -> pipe("orders")(q129),
-    "q130_editdist_neardup" -> pipe("documents")(q130),
-    "q01_agg_pricing_summary" -> pipe("lineitem")(q01),
-    "q02_filter_project" -> pipe("lineitem")(q02),
-    "q03_join_inner_3way" -> pipe("lineitem", "orders", "customer")(q03),
-    "q04_join_left_outer" -> pipe("customer", "orders")(q04),
-    "q05_join_semi_in" -> pipe("orders", "lineitem")(q05),
-    "q06_join_anti_notexists" -> pipe("customer", "orders")(q06),
-    "q07_join_theta" -> pipe("lineitem", "part")(q07),
-    "q08_join_full_outer" -> pipe("nation", "customer", "supplier")(q08),
-    "q09_window_topk_per_group" -> pipe("orders")(q09),
-    "q10_window_running_sum" -> pipe("lineitem")(q10),
-    "q11_window_lag_lead" -> pipe("events")(q11),
-    "q12_cube" -> pipe("lineitem")(q12),
-    "q13_rollup" -> pipe("orders")(q13),
-    "q14_grouping_sets" -> pipe("customer")(q14),
-    "q15_intersect" -> pipe("customer", "orders")(q15),
-    "q16_except" -> pipe("customer", "orders")(q16),
-    "q17_count_distinct" -> pipe("lineitem")(q17),
-    "q18_topk_limit" -> pipe("orders")(q18),
-    "q19_scalar_strings" -> pipe("customer")(q19),
-    "q20_scalar_dates" -> pipe("lineitem")(
-      """SELECT l_orderkey, l_linenumber,
-               CAST(YEAR(l_shipdate) AS BIGINT)  AS y,
-               CAST(MONTH(l_shipdate) AS BIGINT) AS m,
-               CAST(DAY(l_shipdate) AS BIGINT)   AS d,
-               DATE_TRUNC('MONTH', l_shipdate)   AS month_start,
-               CAST(l_shipdate AS DATE)          AS ship_day
-        FROM lineitem WHERE l_orderkey <= 200
-        ORDER BY l_orderkey, l_linenumber, ship_day"""
-    ),
-    "q21_scalar_math" -> pipe("orders")(q21),
-    "q22_case_coalesce" -> pipe("orders")(q22),
-    "q23_json_extract" -> pipe("events")(
-      """SELECT event_id, CAST(GET_JSON_OBJECT(props, '$.k') AS BIGINT) AS k
-        FROM events WHERE event_id <= 500
-        ORDER BY event_id"""
-    ),
-    "q24_array_ops" -> pipe("documents")(
-      """SELECT doc_id,
-               CAST(SIZE(SPLIT(text, ' ')) AS BIGINT) AS n_tokens,
-               ARRAY_JOIN(SLICE(SORT_ARRAY(ARRAY_DISTINCT(SPLIT(text, ' '))), 1, 3), ',') AS first3
-        FROM documents
-        ORDER BY doc_id"""
-    ),
-    "q25_union_all" -> pipe("customer", "supplier")(
-      """SELECT * FROM (
-          SELECT CAST(c_custkey AS BIGINT) AS id, c_name AS name, 'customer' AS kind FROM customer
-          UNION ALL
-          SELECT CAST(s_suppkey AS BIGINT), s_name, 'supplier' FROM supplier) t
-        ORDER BY kind, id"""
-    ),
-    "q26_scalar_subquery" -> pipe("orders")(q26),
-    "q27_having" -> pipe("lineitem")(q27),
-    "q28_in_between" -> pipe("orders")(q28),
-    "q29_like" -> pipe("part")(q29),
-    "q30_join_broadcast_star" -> withViews("lineitem", "supplier", "nation") {
-      (spark, ctx) =>
-        // Explicit broadcast of the small dimensions — at 100 TB the fact
-        // table never shuffles for this star join.
-        val l = ctx.view("lineitem")
-        val s = ctx.view("supplier")
-        val n = ctx.view("nation")
-        l.join(broadcast(s), l("l_suppkey") === s("s_suppkey"))
-          .join(broadcast(n), s("s_nationkey") === n("n_nationkey"))
-          .groupBy(n("n_name").as("nation"))
-          .agg(
-            sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("revenue"),
-            count(lit(1)).as("n_lines")
-          )
-          .orderBy(col("nation"))
-    },
-    "q31_dedup_exact" -> withViewsPar("documents") { (spark, ctx) =>
-      graft.llm.Dedup
-        .exact(ctx.view("documents"), Seq("lang", "source"), "doc_id")
-        .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy("doc_id")
-    },
-    "q32_dedup_fingerprint" -> withViewsPar("documents") { (spark, ctx) =>
-      // md5 of normalized text is the cross-engine-checkable stand-in for the
-      // xxhash64 fast path used at scale (TextStats.fingerprint).
-      ctx.view("documents")
-        .withColumn("fp", md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")))
-        .groupBy("fp").agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
-        .orderBy("keep_id")
-    },
-    "q33_text_token_stats" -> pipe("documents")(
-      """SELECT doc_id,
-               CAST(LENGTH(text) AS BIGINT) AS n_chars,
-               CAST(SIZE(SPLIT(TRIM(text), '\\s+')) AS BIGINT) AS n_tokens,
-               CAST(SIZE(ARRAY_DISTINCT(SPLIT(TRIM(text), '\\s+'))) AS BIGINT) AS n_unique
-        FROM documents
-        ORDER BY doc_id"""
-    ),
-    "q34_text_quality" -> withViewsPar("documents") { (spark, ctx) =>
-      ctx.view("documents")
-        .select(
-          col("doc_id"),
-          graft.llm.TextStats.tokenCount(col("text")).cast("long").as("n_tokens"),
-          graft.llm.TextStats.qualityScore(col("text")).as("quality")
-        )
-        .orderBy("doc_id")
-    },
-    "q35_similarity_bruteforce" -> withViews("embeddings") { (spark, ctx) =>
-      val em = ctx.view("embeddings")
-      graft.llm.Similarity
-        .bruteForceTopK(em, "vec_id", "embedding", em.filter(col("vec_id") < 5), "vec_id", "embedding", 5)
-        .select(
-          col("query_id"),
-          col("rank").cast("long").as("rank"),
-          col("neighbor_id"),
-          round(col("score"), 6).as("score")
-        )
-        .orderBy("query_id", "rank")
-    },
-    "q36_dedup_minhash" -> withViewsPar("documents") { (spark, ctx) =>
-      // Self-verifying (no SQL oracle for LSH): every doc is emitted with a
-      // kept flag; a REMOVED doc carries its removal evidence — the partner
-      // id and the EXACT Jaccard the engine verified internally — and `ok`
-      // asserts the evidence meets the threshold. A pair surviving on a hash
-      // collision alone would surface as ok=false in the driver's capture.
-      val docs = ctx.view("documents")
-      val pairs = graft.llm.Dedup
-        .minhashPairs(docs, "doc_id", "text", shingleLen = 3, threshold = 0.8)
-      val removed = pairs.groupBy(col("idB").as("doc_id"))
-        .agg(min(col("idA")).as("partner"), max(col("jaccard")).as("jaccard"))
-      docs.select(col("doc_id"))
-        .join(removed, Seq("doc_id"), "left")
-        .select(
-          col("doc_id"), col("partner"),
-          round(col("jaccard"), 4).as("jaccard"),
-          col("partner").isNull.as("kept"),
-          (col("partner").isNull ||
-            (col("jaccard") >= 0.8 && col("partner") < col("doc_id"))).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q37_dedup_simhash" -> withViewsPar("documents") { (spark, ctx) =>
-      // Self-verifying: the reported Hamming distance is recomputed
-      // INDEPENDENTLY from per-doc fingerprints joined back by id — this
-      // cross-checks the banded/star-link candidate path (a bug attaching
-      // the wrong fingerprint to an id would make ok=false) — and `ok` also
-      // asserts the distance contract and pair normalization.
-      val docs = ctx.view("documents")
-      val pairs = graft.llm.Dedup
-        .simhashPairs(docs, "doc_id", "text", maxDistance = 8)
-      val fps = graft.llm.Dedup.simhash(docs, "doc_id", "text")
-        .select(col("doc_id"), col("simhash"))
-      pairs
-        .join(fps.select(col("doc_id").as("idA"), col("simhash").as("_fa")), Seq("idA"))
-        .join(fps.select(col("doc_id").as("idB"), col("simhash").as("_fb")), Seq("idB"))
-        .select(
-          col("idA"), col("idB"), col("hamming"),
-          (col("hamming") === bit_count(col("_fa").bitwiseXOR(col("_fb"))) &&
-            col("hamming") <= 8 && col("idA") < col("idB")).as("ok"))
-        .orderBy("idA", "idB")
-    },
-    "q38_text_langid" -> withViews("documents") { (spark, ctx) =>
-      ctx.view("documents")
-        .select(col("doc_id"), graft.llm.TextStats.languageId(col("text")).as("lang_guess"))
-        .groupBy("lang_guess")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("lang_guess")
-    },
-    "q39_stats_extract" -> withViews("lineitem") { (spark, ctx) =>
-      val ctx2 = ctx
-      graft.extract
-        .StatisticsExtract("stats", "lineitem", "lineitem_stats",
-          columns = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag", "l_linestatus"))
-        .execute(ctx2)
-      ctx2.view("lineitem_stats")
-        .filter(col("column").isin("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag", "l_linestatus"))
-        .select(col("column"), col("count"), col("nulls"), col("distinct"), col("min"), col("max"))
-        .orderBy("column")
-    },
-    "q40_typing_transform" -> withViews("lineitem") { (spark, ctx) =>
-      // String-ify a slice, then run the real TypingTransform back to types;
-      // inject two malformed rows to exercise _errors accumulation.
-      SQLTransform(
-        "stringify",
-        """SELECT CAST(l_orderkey AS STRING) AS orderkey, CAST(l_quantity AS STRING) AS qty,
-                  CAST(l_shipdate AS STRING) AS shipdate
-           FROM lineitem WHERE l_orderkey <= 100
-           UNION ALL SELECT 'xx', '12.5', '1996-01-01 00:00:00'
-           UNION ALL SELECT '999999', 'notanumber', 'baddate'""",
-        "raw_lines"
-      ).execute(ctx)
-      graft.transform.TypingTransform(
-        "typing",
-        schema = Seq(
-          graft.schema.FieldSpec("orderkey", "long", nullable = false),
-          graft.schema.FieldSpec("qty", "double"),
-          graft.schema.FieldSpec("shipdate", "timestamp")
-        ),
-        inputView = "raw_lines",
-        outputView = "typed_lines"
-      ).execute(ctx)
-      ctx.view("typed_lines")
-        .select(
-          col("orderkey"), col("qty"), col("shipdate"),
-          size(col("_errors")).cast("long").as("n_errors"),
-          coalesce(get(col("_errors"), lit(0)).getField("field"), lit("")).as("first_error_field")
-        )
-        // shipdate in the sort keys makes the order total: (orderkey, qty)
-        // ties exist in lineitem, and a non-total ORDER BY can legally
-        // reorder between Spark and DuckDB → flaky hash compare.
-        .orderBy(col("orderkey").asc_nulls_first, col("qty").asc_nulls_first,
-          col("shipdate").asc_nulls_first, col("n_errors"))
-    },
-    "q41_diff_transform" -> withViews("customer") { (spark, ctx) =>
-      SQLTransform("a", "SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 1000", "set_a").execute(ctx)
-      SQLTransform("b", "SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal < 6000", "set_b").execute(ctx)
-      graft.transform.DiffTransform(
-        "diff", "set_a", "set_b",
-        outputIntersectionView = Some("diff_inter"),
-        outputLeftView = Some("diff_left"),
-        outputRightView = Some("diff_right")
-      ).execute(ctx)
-      ctx.view("diff_inter").withColumn("side", lit("both"))
-        .unionAll(ctx.view("diff_left").withColumn("side", lit("left")))
-        .unionAll(ctx.view("diff_right").withColumn("side", lit("right")))
-        .orderBy("side", "c_custkey")
-    },
-    "q42_metadata_extract" -> withViews("lineitem") { (spark, ctx) =>
-      graft.extract.MetadataExtract("meta", "lineitem", "lineitem_meta").execute(ctx)
-      ctx.view("lineitem_meta").select("name", "nullable", "type").orderBy("name")
-    },
-    "q43_pivot" -> withViews("orders") { (spark, ctx) =>
-      ctx.view("orders")
-        .groupBy("o_orderpriority")
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .orderBy("o_orderpriority")
-    },
-    "q44_explode_lateral" -> pipe("documents")(
-      """SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS n
-        FROM documents LATERAL VIEW EXPLODE(SPLIT(TRIM(text), '\\s+')) t AS tok
-        WHERE doc_id < 20
-        GROUP BY doc_id, tok
-        ORDER BY doc_id, tok"""
-    ),
-    "q45_asof_join" -> withViews("events", "orders") { (spark, ctx) =>
-      graft.operators.AsOfJoin.latestBefore(
-        ctx.view("events").filter(col("event_id") < 100),
-        "ts", "event_id",
-        ctx.view("orders"), "o_orderdate"
-      ).orderBy("event_id")
-    },
-    "q46_similarity_join_lsh" -> withViews("documents") { (spark, ctx) =>
-      // MinHashLSH fuzzy self-join (SimilarityJoinTransform) — approximate,
-      // so covered rows-only + ScalaTest, no SQL oracle.
-      SQLTransform("head", "SELECT doc_id, text FROM documents WHERE doc_id < 100", "docs_a").execute(ctx)
-      SQLTransform("head2", "SELECT doc_id, text FROM documents WHERE doc_id < 100", "docs_b").execute(ctx)
-      graft.transform.SimilarityJoinTransform(
-        "sim", "docs_a", "docs_b", Seq("text"), Seq("text"), "sim_out",
-        threshold = 0.5, shingleLength = 3, numHashTables = 5
-      ).execute(ctx)
-      // Self-verifying two ways: the similarity is recomputed INDEPENDENTLY
-      // from the source texts (same 3-char-shingle Jaccard recipe) and must
-      // equal the transform's reported value — this cross-checks the
-      // synthetic-id alignment inside the transform (scores attached to the
-      // wrong rows would mismatch) — and the threshold contract is pinned.
-      val shing = (c: org.apache.spark.sql.Column) => graft.functions.Let.bind(lower(c), s =>
-        array_distinct(transform(
-          graft.llm.TextStats.safeSeq(length(s) - 2),
-          i => xxhash64(s.substr(i, lit(3))))))
-      val docsAB = ctx.view("documents").filter(col("doc_id") < 100)
-      ctx.view("sim_out")
-        .filter(col("doc_id") =!= col("doc_id_right"))
-        .join(docsAB.select(col("doc_id"), shing(col("text")).as("_sa")), Seq("doc_id"))
-        .join(docsAB.select(col("doc_id").as("doc_id_right"), shing(col("text")).as("_sb")),
-          Seq("doc_id_right"))
-        .select(col("doc_id"), col("doc_id_right"), round(col("similarity"), 4).as("similarity"),
-          (col("similarity") >= 0.5 &&
-            abs(col("similarity") - graft.llm.Dedup.jaccard(col("_sa"), col("_sb"))) < 1e-9)
-            .as("ok"))
-        .orderBy("doc_id", "doc_id_right")
-    },
-    "q47_percentile_exact" -> pipe("orders")(
-      """SELECT o_orderpriority,
-               PERCENTILE(o_totalprice, 0.5)  AS p50,
-               PERCENTILE(o_totalprice, 0.9)  AS p90,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM orders
-        GROUP BY o_orderpriority
-        ORDER BY o_orderpriority"""
-    ),
-    "q48_window_range_frame" -> pipe("orders")(
-      """SELECT o_orderkey, o_orderpriority, o_totalprice,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-                 PARTITION BY o_orderpriority ORDER BY o_totalprice
-                 RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW) AS DOUBLE) AS nearby_sum
-        FROM orders
-        WHERE o_orderkey < 300
-        ORDER BY o_orderpriority, o_totalprice, o_orderkey"""
-    ),
-    "q49_window_ntile_firstlast" -> pipe("orders")(
-      """SELECT o_orderkey,
-               NTILE(4) OVER w AS quartile,
-               FIRST_VALUE(o_orderkey) OVER w AS cheapest,
-               LAST_VALUE(o_orderkey) OVER (
-                 PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS priciest
-        FROM orders
-        WHERE o_orderkey < 300
-        WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-        ORDER BY o_orderkey"""
-    ),
-    "q50_regexp" -> pipe("customer")(
-      """SELECT c_custkey,
-               REGEXP_EXTRACT(c_name, '([0-9]+)', 1) AS digits,
-               REGEXP_REPLACE(c_name, '[aeiou]', '_') AS devoweled
-        FROM customer
-        ORDER BY c_custkey"""
-    ),
-    "q51_filtered_agg" -> pipe("lineitem")(
-      """SELECT l_returnflag,
-               CAST(COUNT(*) FILTER (WHERE l_quantity > 25) AS BIGINT) AS n_big,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) FILTER (WHERE l_discount > 0.05) AS DOUBLE) AS disc_qty,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM lineitem
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag"""
-    ),
-    "q53_string_agg" -> withViews("nation") { (spark, ctx) =>
-      ctx.view("nation")
-        .groupBy(col("n_regionkey").cast("long").as("regionkey"))
-        .agg(array_join(sort_array(collect_list(col("n_name"))), "|").as("nations"))
-        .orderBy("regionkey")
-    },
-    "q55_interval_arith" -> pipe("orders")(
-      """SELECT o_orderkey,
-               o_orderdate + INTERVAL 30 DAY  AS due_date,
-               o_orderdate - INTERVAL 1 DAY   AS day_before
-        FROM orders
-        WHERE o_orderkey < 200
-        ORDER BY o_orderkey"""
-    ),
-    "q57_null_semantics" -> pipe("orders")(
-      """SELECT o_orderkey,
-               NULLIF(o_orderstatus, 'O') IS NULL AS is_open,
-               COALESCE(NULLIF(o_orderstatus, 'O'), 'none') AS closed_status,
-               o_orderstatus IS DISTINCT FROM 'F' AS not_f
-        FROM orders
-        WHERE o_orderkey < 200
-        ORDER BY o_orderkey"""
-    ),
-    "q52_cte_chain" -> pipe("orders", "lineitem")(
-      """WITH big AS (
-          SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_totalprice > 150000
-        ), items AS (
-          SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS n_items,
-                 CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-          FROM lineitem GROUP BY l_orderkey
-        )
-        SELECT b.o_orderkey, b.o_custkey, i.n_items, i.qty
-        FROM big b JOIN items i ON b.o_orderkey = i.l_orderkey
-        ORDER BY b.o_orderkey"""
-    ),
-    "q54_union_distinct" -> pipe("customer", "orders")(
-      """SELECT custkey FROM (
-          SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 9000
-          UNION
-          SELECT o_custkey FROM orders WHERE o_totalprice > 300000) t
-        ORDER BY custkey"""
-    ),
-    "q56_conditional_window" -> pipe("orders")(
-      """SELECT o_orderkey, o_orderpriority,
-               CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) OVER w AS BIGINT) AS f_so_far,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-                 PARTITION BY o_orderpriority ORDER BY o_orderkey
-                 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE)
-               / COUNT(*) OVER (
-                 PARTITION BY o_orderpriority ORDER BY o_orderkey
-                 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS mov_avg
-        FROM orders
-        WHERE o_orderkey < 400
-        WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_orderkey
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        ORDER BY o_orderkey"""
-    ),
-    "q58_correlated_agg" -> pipe("orders")(
-      """SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-        FROM orders o
-        WHERE o.o_totalprice > (
-          SELECT AVG(o2.o_totalprice) * 1.5 FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        ORDER BY o.o_orderkey"""
-    ),
-    "q66_date_arithmetic" -> pipe("orders", "lineitem")(
-      """SELECT o.o_orderkey, l.l_linenumber,
-               CAST(DATEDIFF(l.l_shipdate, o.o_orderdate) AS BIGINT) AS days_to_ship,
-               CAST(MONTH(o.o_orderdate) AS BIGINT) AS order_month,
-               CAST(QUARTER(o.o_orderdate) AS BIGINT) AS order_quarter,
-               CAST(DAYOFWEEK(o.o_orderdate) AS BIGINT) AS order_dow
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        WHERE o.o_orderkey < 120
-        ORDER BY o.o_orderkey, l.l_linenumber, l.l_shipdate, l.l_quantity"""
-    ),
-    "q67_string_parts" -> pipe("part")(
-      """SELECT p_partkey,
-               SPLIT_PART(p_type, ' ', 1) AS type_head,
-               SPLIT_PART(p_type, ' ', 3) AS type_tail,
-               CAST(SIZE(SPLIT(p_type, ' ')) AS BIGINT) AS n_words,
-               TRANSLATE(p_name, ' ', '_') AS name_tag
-        FROM part
-        WHERE p_partkey < 300
-        ORDER BY p_partkey"""
-    ),
-    "q68_rank_fractions" -> pipe("orders")(
-      """SELECT o_orderkey,
-               CAST(DENSE_RANK() OVER w AS BIGINT) AS drk,
-               PERCENT_RANK() OVER w AS prk,
-               CUME_DIST() OVER w AS cd
-        FROM orders
-        WHERE o_orderkey < 300
-        WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice)
-        ORDER BY o_orderkey"""
-    ),
-    "q69_limit_offset" -> pipe("customer")(
-      """SELECT c_custkey, c_name
-        FROM customer
-        ORDER BY c_acctbal DESC, c_custkey
-        LIMIT 20 OFFSET 40"""
-    ),
-    "q62_similarity_ivf" -> withViews("embeddings") { (spark, ctx) =>
-      // IVF ANN (KMeans coarse quantizer) — engine-specific clustering, so
-      // rows-only + ScalaTest recall evidence (LlmSpec "ivfTopK").
-      // Self-verifying: every ANN hit carries its BRUTE-FORCE rank (exact
-      // cosine over the full corpus) — approximation quality is visible per
-      // row — and `ok` asserts the reported score IS the true cosine of
-      // that (query, neighbor) pair (bit-level scoring correctness; only
-      // the candidate set is approximate in IVF).
-      val em = ctx.view("embeddings")
-      val queries = em.filter(col("vec_id") < 5)
-      val ann = graft.llm.Similarity
-        .ivfTopK(em, "vec_id", "embedding", queries, "vec_id", "embedding",
-          k = 5, nlist = 16, nprobe = 2)
-      val exact = graft.llm.Similarity
-        .bruteForceTopK(em, "vec_id", "embedding", queries, "vec_id", "embedding",
-          k = Int.MaxValue)
-        .select(col("query_id"), col("neighbor_id"),
-          col("score").as("_bf_score"), col("rank").cast("long").as("bf_rank"))
-      ann
-        .join(exact, Seq("query_id", "neighbor_id"))
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-          round(col("score"), 6).as("score"), col("bf_rank"),
-          (abs(col("score") - col("_bf_score")) < 1e-12).as("ok"))
-        .orderBy("query_id", "rank")
-    },
-    "q147_ivf_index" -> { (spark: SparkSession, dir: String) =>
-      // Persistent IVF index (llm/IvfIndex): training + corpus assignment
-      // paid once at write, retrieval reads ONLY the probed inverted-list
-      // parquet partitions (partition pruning as the inverted-file
-      // structure). KMeans is engine-specific → rows-only. Self-verifying
-      // like q62: with nprobe = nlist the probe is exhaustive, so `ok`
-      // asserts the indexed result IS the brute-force result — same
-      // neighbor at the same rank with the same score.
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("embeddings")), ctx)
-      val em = ctx.view("embeddings")
-      val queries = em.filter(col("vec_id") < 5)
-      val idxDir = q147IndexDir(em, dir)
-      val ann = graft.llm.IvfIndex.topK(queries, "vec_id", "embedding", idxDir, k = 5, nprobe = 8)
-      val exact = graft.llm.Similarity
-        .bruteForceTopK(em, "vec_id", "embedding", queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"),
-          col("score").as("_bf_score"), col("rank").cast("long").as("bf_rank"))
-      ann
-        .join(exact, Seq("query_id", "neighbor_id"), "left")
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-          round(col("score"), 6).as("score"),
-          // coalesce: a neighbor ABSENT from the brute-force top-k (left
-          // join miss) is a parity violation and must read false, not NULL
-          coalesce(
-            col("bf_rank") === col("rank") && abs(col("score") - col("_bf_score")) < 1e-12,
-            lit(false)).as("ok"))
-        .orderBy("query_id", "rank")
-    },
-    "q148_ivf_quantized" -> { (spark: SparkSession, dir: String) =>
-      // IVF-SQ8 retrieval (IvfIndex.topKQuantized): int8-integer-dot
-      // shortlist over the stored codes column, exact float rescore of the
-      // shortlist only — the standard IVF-flat→IVF-quantized step. KMeans
-      // is engine-specific → rows-only. Self-verifying like q147: with
-      // nprobe = nlist AND a shortlist covering every candidate, the
-      // rescored result must equal brute force bit-for-bit — `ok` asserts
-      // same neighbor, same rank, same score.
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("embeddings")), ctx)
-      val em = ctx.view("embeddings")
-      val queries = em.filter(col("vec_id") < 5)
-      val idxDir = q147IndexDir(em, dir)
-      val ann = graft.llm.IvfIndex.topKQuantized(queries, "vec_id", "embedding", idxDir,
-        k = 5, nprobe = 8, shortlistFactor = 400)
-      val exact = graft.llm.Similarity
-        .bruteForceTopK(em, "vec_id", "embedding", queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"),
-          col("score").as("_bf_score"), col("rank").cast("long").as("bf_rank"))
-      ann
-        .join(exact, Seq("query_id", "neighbor_id"), "left")
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-          round(col("score"), 6).as("score"),
-          coalesce(
-            col("bf_rank") === col("rank") && abs(col("score") - col("_bf_score")) < 1e-12,
-            lit(false)).as("ok"))
-        .orderBy("query_id", "rank")
-    },
-    "q158_ivf_pq" -> { (spark: SparkSession, dir: String) =>
-      // IVF-PQ retrieval (IvfIndex.topKPq): ADC-lookup shortlist over the
-      // stored m-entry pq codes (the narrowest column in the layout), exact
-      // float rescore of the shortlist only — the faiss `IVFx,PQm` tier
-      // past q148's SQ8. KMeans is engine-specific → rows-only.
-      // Self-verifying like q148: with nprobe = nlist AND a covering
-      // shortlist the rescored result must equal brute force bit-for-bit.
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("embeddings")), ctx)
-      val em = ctx.view("embeddings")
-      val queries = em.filter(col("vec_id") < 5)
-      val idxDir = q147IndexDir(em, dir)
-      val ann = graft.llm.IvfIndex.topKPq(queries, "vec_id", "embedding", idxDir,
-        k = 5, nprobe = 8, shortlistFactor = 400)
-      val exact = graft.llm.Similarity
-        .bruteForceTopK(em, "vec_id", "embedding", queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"),
-          col("score").as("_bf_score"), col("rank").cast("long").as("bf_rank"))
-      ann
-        .join(exact, Seq("query_id", "neighbor_id"), "left")
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-          round(col("score"), 6).as("score"),
-          coalesce(
-            col("bf_rank") === col("rank") && abs(col("score") - col("_bf_score")) < 1e-12,
-            lit(false)).as("ok"))
-        .orderBy("query_id", "rank")
-    },
-    "q159_url_dedup" -> withViewsPar("documents") { (spark, ctx) =>
-      // URL-keyed crawl dedup (llm/UrlNorm): canonicalize messy URL
-      // spellings (scheme/www/host-case/tracking-params/param-order/
-      // index.html/fragment/trailing-slash variants) and keep the
-      // first-crawled row per canonical URL. The URL column is derived
-      // deterministically from (source, doc_id) with every variant class
-      // injected, so canonical groups genuinely collide across spelling
-      // variants; the DuckDB oracle reproduces the canonicalization
-      // byte-for-byte (Java-regex ∩ RE2 patterns only).
-      import graft.llm.UrlNorm
-      val docs = ctx.view("documents")
-      val messy = docs.select(
-        col("doc_id"),
-        concat(
-          when(col("doc_id") % 2 === 0, lit("https://")).otherwise(lit("http://")),
-          when(col("doc_id") % 3 === 0, lit("WWW.")).otherwise(lit("")),
-          when(col("doc_id") % 5 === 0, upper(col("source"))).otherwise(col("source")),
-          lit(".Example.COM/articles/"), (col("doc_id") % 100).cast("string"),
-          when(col("doc_id") % 4 === 0, lit("/index.html"))
-            .when(col("doc_id") % 4 === 1, lit("/")).otherwise(lit("")),
-          when(col("doc_id") % 7 === 0, lit("?utm_source=feed&utm_campaign=x"))
-            .when(col("doc_id") % 7 === 1, lit("?ref=rss&page=2"))
-            .when(col("doc_id") % 7 === 2, lit("?page=2&gclid=abc123"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 11 === 0, lit("#section-2")).otherwise(lit(""))
-        ).as("url"))
-      UrlNorm.dedupByUrl(messy, "url", "doc_id")
-        .select(col("doc_id"), col("canonical_url"), col("n_dups"))
-        .orderBy("doc_id")
-    },
-    "q160_mad_outliers" -> withViewsPar("documents") { (spark, ctx) =>
-      // Robust per-source outlier screen (llm/RobustStats): exact grouped
-      // median + MAD from the slicedPrefix slice-rank engine — never
-      // Spark's buffering percentile aggregate, never a per-group data
-      // window — then robust_z = (v − median)/(1.4826·MAD). The oracle
-      // reproduces median/MAD via quantile_cont (same PERCENTILE_CONT
-      // interpolation, the convex (1−f)·vl + f·vu form) and the z/flag
-      // arithmetic operation-for-operation, so doubles match bit-for-bit.
-      import graft.llm.RobustStats
-      RobustStats.madOutliers(
-        ctx.view("documents").select(col("doc_id"), col("source"), col("n_chars")),
-        Seq("source"), col("n_chars"), k = 3.0)
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          col("median"), col("mad"), col("robust_z"), col("is_outlier"))
-        .orderBy("doc_id")
-    },
-    "q161_cdc_chunks" -> withViewsPar("documents") { (spark, ctx) =>
-      // Content-defined chunking (functions/CdcChunksExpr via
-      // Chunking.chunkByContent): gear-hash boundaries, so edits shift only
-      // the chunk they land in. Boundary placement is engine-specific (the
-      // gear table) → rows-only; self-verifying like q59: `ok` carries the
-      // whole CDC contract in-band per chunk — exact reassembly (chunks
-      // concatenate back to the document, checked at doc granularity and
-      // folded into each chunk row), the maxLen cap, and the minLen floor
-      // for every non-final chunk.
-      import graft.llm.Chunking
-      val docs = ctx.view("documents").select(col("doc_id"), col("text"))
-      val chunks = Chunking.chunkByContent(docs, "text",
-        minLen = 8, maskBits = 4, maxLen = 64)
-      val rebuilt = chunks
-        .groupBy("doc_id")
-        .agg(concat_ws("",
-          transform(array_sort(collect_list(struct(col("chunk_id"), col("chunk_text")))),
-            c => c.getField("chunk_text"))).as("_rebuilt"))
-      chunks
-        .join(docs, Seq("doc_id"))
-        .join(rebuilt, Seq("doc_id"))
-        .select(col("doc_id"), col("chunk_id"), col("n_chunks"),
-          col("chunk_chars"), col("chunk_hash"),
-          (col("_rebuilt") === col("text") &&
-            col("chunk_chars") <= 64 &&
-            (col("chunk_chars") >= 8 || col("chunk_id") === col("n_chunks") - 1)).as("ok"))
-        .orderBy("doc_id", "chunk_id")
-    },
-    "q162_grouped_quantiles" -> withViews("documents") { (spark, ctx) =>
-      // The general interpolation path of RobustStats.groupedQuantiles
-      // (q160 exercises only p=0.5): four quantiles per source, including
-      // non-trivial fractional positions, against DuckDB's quantile_cont —
-      // the convex-form interpolation must match bit-for-bit.
-      import graft.llm.RobustStats
-      RobustStats.groupedQuantiles(
-        ctx.view("documents").select(col("source"), col("n_chars")),
-        Seq("source"), col("n_chars"), Seq(0.25, 0.5, 0.75, 0.9))
-        .orderBy("source", "p")
-    },
-    "q163_cdc_dedup" -> withViewsPar("documents") { (spark, ctx) =>
-      // Edit-robust chunk dedup (Dedup.cdcDupStats): corpus = documents +
-      // a lightly-edited copy of every 5th long document (10 chars inserted
-      // at position 25). Gear table is engine-specific → rows-only, but the
-      // edit-robustness CLAIM is verified in-band per copy: `ok` asserts
-      // the copy still shares at least 40% of its CDC chunks with the
-      // corpus, while the fixed-width 8-word segments of the SAME copy
-      // (whose windows all shifted past the inserted word) share strictly
-      // less — the measurable reason CDC exists.
-      import graft.llm.Dedup
-      val docs = ctx.view("documents").select(col("doc_id"), col("text"))
-      val copies = docs
-        .filter(col("doc_id") % 5 === 0 && length(col("text")) >= 120)
-        .select((col("doc_id") + 20000).as("doc_id"),
-          concat(substring(col("text"), 1, 25), lit(" EDIT-MARK"),
-            expr("substring(text, 26)")).as("text"))
-      val corpus = docs.unionByName(copies)
-      val cdc = Dedup.cdcDupStats(corpus, "doc_id", "text",
-        minLen = 8, maskBits = 4, maxLen = 64)
-      val seg = Dedup.segmentDupStats(corpus, "doc_id", "text", segWords = 8)
-        .select(col("doc_id"),
-          (col("n_shared_segments").cast("double") /
-            col("n_segments").cast("double")).as("_seg_frac"))
-      copies.select(col("doc_id"))
-        .join(cdc, Seq("doc_id"), "left")
-        .join(seg, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_chunks"), col("n_shared_chunks"),
-          round(coalesce(col("_seg_frac"), lit(0.0)), 6).as("seg_frac"),
-          coalesce(
-            col("n_shared_chunks").cast("double") >=
-              lit(0.4) * col("n_chunks").cast("double") &&
-            coalesce(col("_seg_frac"), lit(0.0)) <
-              col("n_shared_chunks").cast("double") / col("n_chunks").cast("double"),
-            lit(false)).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q164_canary_hits" -> withViews("documents") { (spark, ctx) =>
-      // Exact multi-canary search (Decontaminate.canaryHits over the native
-      // Aho–Corasick expression): one pass per document regardless of
-      // canary count. The oracle replicates each (doc, canary) hit with
-      // per-canary contains() — exact substring semantics, so the match
-      // sets must agree row-for-row.
-      import graft.llm.Decontaminate
-      val canaries = Seq("key agg row", "table value", "fast merge",
-        "row scan", "hash value", "zebra quantum flux")
-      Decontaminate.canaryHits(
-        ctx.view("documents").select(col("doc_id"), col("text")),
-        "doc_id", "text", canaries)
-        .select(col("doc_id"), col("canary_id").cast("long").as("canary_id"),
-          col("canary"))
-        .orderBy("doc_id", "canary_id")
-    },
-    "q165_bpe_tokenize" -> { (spark: SparkSession, dir: String) =>
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("documents")), ctx)
-      // Corpus-trained BPE (llm/Bpe): merges learned from the documents'
-      // own word-frequency table (one bounded shuffle + driver merge loop),
-      // then the native greedy-by-rank tokenizer. The merge sequence is
-      // engine-specific → rows-only; self-verifying per row: `ok` = exact
-      // reassembly (tokens concatenate to the whitespace-stripped text) ∧
-      // token count ≤ character count ∧ (folded global invariant, q157
-      // style) the trained merges strictly compress the corpus overall.
-      import graft.llm.Bpe
-      val docs = ctx.view("documents").select(col("doc_id"), col("text"))
-      val merges = bpeMerges(docs, dir)
-      val tok = Bpe.tokenized(docs, "text", merges)
-        .withColumn("_nospace", regexp_replace(col("text"), "\\s+", ""))
-      val compresses = broadcast(
-        tok.agg((sum(col("n_bpe_tokens")) <
-          sum(length(col("_nospace")).cast("long"))).as("_compresses")))
-      tok.crossJoin(compresses)
-        .select(col("doc_id"), col("n_bpe_tokens"),
-          length(col("_nospace")).cast("long").as("n_chars_nospace"),
-          (concat_ws("", col("tokens")) === col("_nospace") &&
-            col("n_bpe_tokens") <= length(col("_nospace")).cast("long") &&
-            col("_compresses")).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q166_line_dedup" -> withViewsPar("documents") { (spark, ctx) =>
-      // Within-document repeated-line removal (LineFilter.dedupLines):
-      // every doc is turned multiline (every 4th space → newline) with its
-      // own first line re-appended — a guaranteed within-doc duplicate —
-      // then lines dedupe to first occurrences. The oracle reproduces the
-      // exact first-occurrence semantics via a min-ordinality formulation,
-      // pinning clean_text byte-for-byte.
-      import graft.llm.LineFilter
-      val ml = ctx.view("documents").select(col("doc_id"),
-        regexp_replace(col("text"), "(\\S+ \\S+ \\S+ \\S+) ", "$1\n").as("_ml"))
-      val withDup = ml.select(col("doc_id"),
-        concat(col("_ml"), lit("\n"), regexp_extract(col("_ml"), "^[^\n]*", 0)).as("text"))
-      LineFilter.lineDedupStats(withDup, "doc_id", "text")
-        .orderBy("doc_id")
-    },
-    "q167_negative_sampling" -> { (spark: SparkSession, dir: String) =>
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("documents")), ctx)
-      // Deterministic contrastive negatives (Sampling.negativeSample):
-      // per-query k-lowest salted md5 over a hash-sampled candidate pool,
-      // excluding the positive (same doc) and same-source candidates. The
-      // whole construction is md5-exact, so the oracle reproduces pool
-      // membership, exclusion, ranking, and ties byte-for-byte. The pool
-      // rate comes from the parquet FOOTER count (ParquetMeta.rowCount) —
-      // zero extra Spark jobs, same exact n as the oracle's hard-coded
-      // threshold derivation.
-      import graft.llm.Sampling
-      val docs = ctx.view("documents")
-      val n = graft.extract.ParquetMeta.rowCount(spark, s"$dir/documents.parquet")
-      Sampling.negativeSample(
-        docs.filter(col("doc_id") < 25), col("doc_id"), Seq("doc_id", "source"),
-        docs, col("doc_id"), Seq("doc_id", "source"),
-        k = 4, poolSize = 60, salt = "ns",
-        exclude = col("q_doc_id") === col("neg_doc_id") ||
-          col("q_source") === col("neg_source"),
-        corpusCount = Some(n))
-        .orderBy("q_doc_id", "neg_rank")
-    },
-    "q168_hard_negatives" -> { (spark: SparkSession, dir: String) =>
-      // ANN hard-negative mining (Similarity.hardNegatives): per query the
-      // top-cosine corpus vectors with a DIFFERENT label (the positive
-      // class excluded). Exact brute-force scoring -> fully
-      // oracle-expressible via LIST_COSINE_SIMILARITY, scores rounded to 6
-      // like q35.
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("embeddings")), ctx)
-      val em = ctx.view("embeddings")
-      graft.llm.Similarity.hardNegatives(
-        em.filter(col("vec_id") < 8), "vec_id", "embedding", Seq("vec_id", "label"),
-        em, "vec_id", "embedding", Seq("vec_id", "label"),
-        k = 5, exclude = col("q_label") === col("neg_label"))
-        .select(col("q_vec_id"), col("q_label"), col("neg_vec_id"), col("neg_label"),
-          round(col("score"), 6).as("score"), col("neg_rank"))
-        .orderBy("q_vec_id", "neg_rank")
-    },
-    "q174_bpe_ids" -> { (spark: SparkSession, dir: String) =>
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("documents")), ctx)
-      // Full text->ids tokenizer path (Bpe.vocab + encodeIds): ids decode
-      // back through the reverse vocab map to EXACTLY the whitespace-
-      // stripped document, with zero OOV against the corpus-trained vocab.
-      // Merge training and id assignment are engine-specific -> rows-only;
-      // `ok` carries the whole round trip in-band per document.
-      import graft.llm.Bpe
-      import spark.implicits._
-      val docs = ctx.view("documents").select(col("doc_id"), col("text"))
-      val merges = bpeMerges(docs, dir)
-      // vocab collected once and re-used as a LOCAL frame: encodeIds'
-      // collect and the reverse map below would otherwise each re-run the
-      // corpus-wide vocab aggregation
-      val vRows = Bpe.vocab(docs, "text", merges)
-        .select("token", "id", "freq").as[(String, Long, Long)].collect().toSeq
-      val v = vRows.toDF("token", "id", "freq")
-      // reverse lookup as an ARRAY indexed by the contiguous ids — O(1)
-      // per id (element_at on a MAP column linear-scans its keys per
-      // lookup, measured dominant at vocab size)
-      val revArr = vRows.sortBy(_._2).map(_._1)
-      val revDf = Seq(Tuple1(revArr)).toDF("_rarr")
-      Bpe.encodeIds(docs, "text", merges, v)
-        .crossJoin(broadcast(revDf))
-        .select(col("doc_id"), col("n_tokens"), col("n_oov"),
-          (col("n_oov") === 0 &&
-            concat_ws("", transform(col("ids"),
-              // guard: an unexpected -1 (OOV) id must yield ok=false, not
-              // a runtime "array indices start at 1" error — element_at
-              // evaluates regardless of the n_oov conjunct
-              i => when(i >= 0, element_at(col("_rarr"), (i + 1L).cast("int"))))) ===
-              regexp_replace(col("text"), "\\s+", "")).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q175_media_resize" -> withViews("documents") { (spark, ctx) =>
-      // REAL image resize pipeline: per-row PNGs are GENERATED from doc
-      // metadata (deterministic dims/content), resized through the JDK
-      // bilinear + PNG re-encode path, then re-decoded. `ok` asserts the
-      // re-decoded output has exactly the target dimensions and the real
-      // image/png path was taken — pinning decode-scale-reencode through
-      // the mapPartitions plumbing end to end.
-      import spark.implicits._
-      val pngs = ctx.view("documents").filter(col("doc_id") < 40)
-        .select(col("doc_id"), (col("doc_id") % 16 + 8).cast("int").as("_w"),
-          (col("doc_id") % 9 + 8).cast("int").as("_h"))
-        .as[(Long, Int, Int)]
-        .map { case (id, w, h) =>
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var x = 0
-          while (x < w) {
-            var y = 0
-            while (y < h) { img.setRGB(x, y, (id * 97 + x * 13 + y).toInt); y += 1 }
-            x += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          (id, bos.toByteArray)
-        }.toDF("doc_id", "blob")
-      val resized = graft.llm.Multimodal.resize(pngs, "blob", 12, 10)
-      resized.select(col("doc_id"), col("resized"), col("resized_meta.mime").as("mime"))
-        .as[(Long, Array[Byte], String)]
-        .map { case (id, bytes, mime) =>
-          val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-          (id, mime, back != null && back.getWidth == 12 && back.getHeight == 10)
-        }.toDF("doc_id", "mime", "_dims_ok")
-        .select(col("doc_id"), col("mime"),
-          (col("_dims_ok") && col("mime") === "image/png").as("ok"))
-        .orderBy("doc_id")
-    },
-    "q181_audio_decode" -> withViews("documents") { (spark, ctx) =>
-      // REAL audio decode pipeline: per-row WAVs (16-bit mono PCM, 8 kHz)
-      // are GENERATED from doc metadata — frames = 800 + 16·(doc_id % 50),
-      // silence in the first half, a square wave in the second — then
-      // decoded through the JDK javax.sound.sampled path. `ok` pins the
-      // decoded frame count ≡ the header's frame count, the exact
-      // duration arithmetic (frames/8 ms at 8 kHz), rate/channels, the
-      // audio/wav mime (the REAL branch, not the fake), and the RMS
-      // features actually reading samples (quiet first half, ~0.5 second
-      // half).
-      import spark.implicits._
-      val wavs = ctx.view("documents").filter(col("doc_id") < 40)
-        .select(col("doc_id"), (lit(800) + (col("doc_id") % 50) * 16).cast("int").as("_frames"))
-        .as[(Long, Int)]
-        .map { case (id, frames) =>
-          import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-          val pcm = new Array[Byte](frames * 2)
-          var i = frames / 2
-          while (i < frames) {
-            val v: Short = if (i % 2 == 0) 16384 else -16384
-            pcm(2 * i) = (v & 0xff).toByte
-            pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-            i += 1
-          }
-          val fmt = new AudioFormat(8000f, 16, 1, true, false)
-          val bos = new java.io.ByteArrayOutputStream()
-          AudioSystem.write(
-            new AudioInputStream(
-              new java.io.ByteArrayInputStream(pcm), fmt, frames.toLong),
-            AudioFileFormat.Type.WAVE, bos)
-          (id, frames.toLong, bos.toByteArray)
-        }.toDF("doc_id", "frames_expected", "blob")
-      graft.llm.Multimodal.decodeAndFeaturize(wavs, "blob")
-        .select(col("doc_id"), col("frames_expected"),
-          col("media_meta.frames").as("frames_decoded"),
-          col("media_meta.duration_ms").as("duration_ms"),
-          (col("media_meta.mime") === "audio/wav" &&
-            col("media_meta.frames") === col("frames_expected") &&
-            col("media_meta.duration_ms") === (col("frames_expected") * 1000 / 8000) &&
-            col("media_meta.sample_rate") === 8000 &&
-            col("media_meta.channels") === 1 &&
-            size(col("features")) === 8 &&
-            element_at(col("features"), 1) < 0.01f &&
-            abs(element_at(col("features"), 8) - 0.5f) < 0.01f).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q176_curation_pipeline" -> withViewsPar("documents") { (spark, ctx) =>
-      // END-TO-END curation pipeline as ONE oracle-checked query: messy
-      // URL construction -> canonicalization + keep-first URL dedup
-      // (UrlNorm) -> per-source MAD outlier screen on n_chars
-      // (RobustStats, k=3, computed on the POST-dedup survivors) ->
-      // deterministic 80/10/10 hash split (Sampling.hashSplit). Every
-      // stage is md5/regex/quantile-exact, so the DuckDB oracle reproduces
-      // the SURVIVING rows and their split labels bit-for-bit — the whole
-      // curation path, not just its pieces, is pinned.
-      import graft.llm.{RobustStats, Sampling, UrlNorm}
-      val docs = ctx.view("documents")
-      val messy = docs.select(
-        col("doc_id"), col("source"), col("n_chars"),
-        concat(
-          when(col("doc_id") % 2 === 0, lit("https://")).otherwise(lit("http://")),
-          when(col("doc_id") % 3 === 0, lit("WWW.")).otherwise(lit("")),
-          col("source"), lit(".Example.COM/a/"), (col("doc_id") % 100).cast("string"),
-          when(col("doc_id") % 4 === 0, lit("/index.html")).otherwise(lit("/")),
-          when(col("doc_id") % 7 === 0, lit("?utm_source=f&page=1")).otherwise(lit(""))
-        ).as("url"))
-      val deduped = UrlNorm.dedupByUrl(messy, "url", "doc_id")
-        .select("doc_id", "source", "n_chars", "canonical_url")
-      val screened = RobustStats.madOutliers(deduped, Seq("source"), col("n_chars"), k = 3.0)
-        .filter(!col("is_outlier"))
-        .select("doc_id", "source", "n_chars", "canonical_url")
-      Sampling.hashSplit(screened, col("doc_id"),
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "cp")
-        .select(col("doc_id"), col("source"), col("canonical_url"), col("split"))
-        .orderBy("doc_id")
-    },
-    "q177_domain_stats" -> withViews("documents") { (spark, ctx) =>
-      // Domain-level crawl analytics (UrlNorm.host/apexDomain): messy URLs
-      // with subdomain variants collapse onto hosts and apex domains; per
-      // apex: page count, distinct hosts, and exact total n_chars. The
-      // regex chain is Java ∩ RE2 → the oracle replicates byte-for-byte.
-      import graft.llm.UrlNorm
-      val docs = ctx.view("documents")
-      val urls = docs.select(
-        col("doc_id"), col("n_chars"),
-        concat(
-          when(col("doc_id") % 2 === 0, lit("https://")).otherwise(lit("http://")),
-          when(col("doc_id") % 5 === 0, lit("cdn."))
-            .when(col("doc_id") % 5 === 1, lit("WWW."))
-            .when(col("doc_id") % 5 === 2, lit("news.")).otherwise(lit("")),
-          col("source"), lit(".Example.COM/p/"), col("doc_id").cast("string")
-        ).as("url"))
-      urls
-        .withColumn("host", UrlNorm.host(col("url")))
-        .withColumn("apex", UrlNorm.apexDomain(col("url")))
-        .groupBy("apex")
-        .agg(count(lit(1)).as("n_pages"),
-          count_distinct(col("host")).as("n_hosts"),
-          sum(col("n_chars")).cast("long").as("total_chars"))
-        .orderBy("apex")
-    },
-    "q178_bpe_byte_fallback" -> { (spark: SparkSession, dir: String) =>
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("documents")), ctx)
-      // TOTAL text->ids (Bpe.vocabTotal + encodeIdsTotal): every doc is
-      // salted with characters ABSENT from the training corpus (emoji,
-      // CJK, Greek), so the learned vocab cannot cover it — the byte
-      // fallback must (ids 0..255 are raw UTF-8 bytes, learned tokens
-      // 256+). Training/id assignment are engine-specific -> rows-only;
-      // `ok` carries the whole contract in-band per document: the ids
-      // decode back to EXACTLY the whitespace-stripped salted text, the
-      // fallback route was actually taken, and n_oov == 0 (structural —
-      // encodeIdsTotal cannot produce a -1).
-      import graft.llm.Bpe
-      import spark.implicits._
-      val docs = ctx.view("documents").select(col("doc_id"), col("text"))
-      val merges = bpeMerges(docs, dir)
-      // vocab is collected by BOTH encodeIdsTotal and decodeIds — pin it as
-      // a LOCAL frame (vocab-bounded) so the corpus-wide vocab aggregation
-      // runs once, not once per consumer
-      val v = Bpe.vocabTotal(docs, "text", merges)
-        .select("token", "id", "freq").as[(String, Long, Long)].collect().toSeq
-        .toDF("token", "id", "freq")
-      val salt = " 😀🌍 漢字テスト κόσμε"
-      val salted = docs.withColumn("text2", concat(col("text"), lit(salt)))
-      Bpe.encodeIdsTotal(salted, "text2", merges, v)
-        .select(col("doc_id"), col("n_tokens"), col("n_oov"),
-          col("n_fallback_tokens"),
-          (col("n_oov") === 0L &&
-            col("n_fallback_tokens") > 0L &&
-            Bpe.decodeIds(col("ids"), v) ===
-              regexp_replace(col("text2"), "\\s+", "")).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q179_langid_ngram" -> withViewsPar("documents") { (spark, ctx) =>
-      // Real n-gram language ID (llm/LangId — character-n-gram rank
-      // profiles, the public TextCat method) over the 10-language held-out
-      // fixture set: sentences the profiles never saw, including the close
-      // pairs es/pt/it and de/nl/sv the stopword heuristic cannot
-      // separate. Profiles are engine-specific -> rows-only; `ok` per row
-      // = the sentence classifies to its true language AND (folded global
-      // invariant, q165 style) the REAL documents corpus — English word
-      // salad — majority-classifies en, tying the expression to corpus
-      // data, not just fixtures.
-      import graft.llm.LangId
-      import spark.implicits._
-      val enFrac = broadcast(ctx.view("documents").agg(
-        avg(when(LangId.languageIdNgram(col("text")) === "en", 1.0)
-          .otherwise(0.0)).as("_en_frac")))
-      val sents = (LangId.heldOutSentences.toSeq.sortBy(_._1)
-        .flatMap { case (l, ss) => ss.map(s => (l, s)) } ++
-        LangId.scriptExamples.toSeq.sortBy(_._1)) // script-gated languages
-        .zipWithIndex.map { case ((l, s), i) => (i.toLong, l, s) }
-        .toDF("sent_id", "lang_true", "text")
-      sents
-        .withColumn("lang_pred", LangId.languageIdNgram(col("text")))
-        .crossJoin(enFrac)
-        .select(col("sent_id"), col("lang_true"), col("lang_pred"),
-          (col("lang_pred") === col("lang_true") &&
-            col("_en_frac") >= 0.6).as("ok"))
-        .orderBy("sent_id")
-    },
-    "q180_span_dedup" -> withViewsPar("documents") { (spark, ctx) =>
-      // Exact cross-document repeated-substring removal (llm/SpanDedup —
-      // the public suffix-array dedup method in window-hash form): every
-      // third document is salted with one shared boilerplate paragraph;
-      // every >= 8-token run shared across >= 2 docs is excised from all
-      // but the min-id doc (plus any ORGANIC shared runs the synthetic
-      // corpus happens to contain — the oracle computes the identical
-      // set). All md5/integer arithmetic -> clean_text, token and span
-      // counts reproduce byte-for-byte in DuckDB.
-      import graft.llm.SpanDedup
-      val para = "subscribe to our newsletter for updates terms of service apply"
-      val docs = ctx.view("documents").select(col("doc_id"),
-        when(col("doc_id") % 3 === 0, concat(lit(para), lit(" "), col("text")))
-          .otherwise(col("text")).as("text"))
-      SpanDedup.dedupSpans(docs, "doc_id", "text", k = 8)
-        .orderBy("doc_id")
-    },
-    "q182_span_dedup_withindoc" -> withViewsPar("documents") { (spark, ctx) =>
-      // Within-document repeated-run removal (SpanDedup.dedupSpansWithinDoc
-      // — the same-doc half of the suffix-array method): every fourth
-      // document gets its own first 10 tokens re-appended — a guaranteed
-      // within-doc duplicate run — which must be excised again (first
-      // occurrence kept), along with any ORGANIC within-doc repeats of the
-      // word-salad corpus. md5/integer-exact -> byte-for-byte oracle.
-      import graft.llm.SpanDedup
-      val toks = filter(split(trim(col("text")), "\\s+"), t => length(t) > 0)
-      val docs = ctx.view("documents").select(col("doc_id"),
-        when(col("doc_id") % 4 === 0,
-          concat(col("text"), lit(" "), concat_ws(" ", slice(toks, 1, 10))))
-          .otherwise(col("text")).as("text"))
-      SpanDedup.dedupSpansWithinDoc(docs, "doc_id", "text", k = 8)
-        .orderBy("doc_id")
-    },
-    "q183_html_extract" -> withViewsPar("documents") { (spark, ctx) =>
-      // HTML -> visible text (llm/HtmlText): per-doc synthetic pages wrap
-      // the document text with scripts/styles/comments/entities; the
-      // documented regex chain (Java ∩ RE2) must strip code blocks, keep
-      // title/heading/list text, decode entities one level, and normalize
-      // whitespace — byte-for-byte reproducible in DuckDB (the q159 URL
-      // discipline: cross-engine regex parity IS the check).
-      import graft.llm.HtmlText
-      val html = concat(
-        lit("<html><head><title>Title</title><style type=\"text/css\">p { color: red; }</style>"),
-        lit("<script>if (a < b && c > d) { run(\"x\"); }</script></head><body><h1>Doc "),
-        col("doc_id").cast("string"),
-        lit("</h1><p>"), col("text"),
-        lit("</p><ul><li>A&amp;B</li><li>x &lt; y</li></ul><!-- hidden --></body></html>"))
-      ctx.view("documents")
-        .select(col("doc_id"), html.as("_html"))
-        .select(col("doc_id"),
-          HtmlText.extractText(col("_html")).as("text_extracted"))
-        .withColumn("n_chars_extracted", length(col("text_extracted")).cast("long"))
-        .orderBy("doc_id")
-    },
-    "q184_crawl_curation" -> withViewsPar("documents") { (spark, ctx) =>
-      // END-TO-END web-crawl curation as ONE oracle-checked query,
-      // composing the r13 operators: synthetic HTML pages with SHARED nav/
-      // footer chrome (real boilerplate) -> HtmlText extraction -> cross-
-      // doc span dedup (k=8 strips the chrome from all but the min doc,
-      // plus any organic shared runs) -> per-source MAD screen on the
-      // POST-dedup kept-token count -> deterministic 80/10/10 hash split.
-      // regex/md5/quantile-exact end to end: DuckDB reproduces the
-      // surviving rows, their token accounting and split labels
-      // byte-for-byte — the composed path is pinned, not just its pieces.
-      import graft.llm.{HtmlText, RobustStats, Sampling, SpanDedup}
-      val docs = ctx.view("documents")
-      val pages = docs.select(col("doc_id"), col("source"),
-        concat(
-          lit("<html><head><title>Page</title><style>nav{color:red}</style>" +
-            "<script>track(1 < 2);</script></head><body>"),
-          lit("<nav>home products pricing docs blog careers about contact login signup</nav><p>"),
-          col("text"),
-          lit("</p><footer>copyright acme corp all rights reserved privacy terms cookies</footer></body></html>")
-        ).as("html"))
-      // both pins are load-bearing: texts feeds THREE scans (grams,
-      // reconstruction, source re-attach) that would each re-run the
-      // 7-regex extraction chain, and the dedup stats feed FOUR downstream
-      // jobs (madStats' two quantile passes, the outlier join, the final
-      // projection) that would each re-run the whole span dedup
-      // (measured 15.4 s unpinned → 7.2 s at sf0.1)
-      val texts = graft.core.Lineage.pin(
-        pages.select(col("doc_id"), col("source"),
-          HtmlText.extractText(col("html")).as("text2")))
-      val deduped = graft.core.Lineage.pin(
-        SpanDedup.dedupSpans(texts, "doc_id", "text2", k = 8)
-          .join(texts.select("doc_id", "source"), Seq("doc_id"))
-          .withColumn("n_kept_tokens", col("n_tokens") - col("n_tokens_removed"))
-          .drop("clean_text"))
-      val screened = RobustStats.madOutliers(
-        deduped, Seq("source"), col("n_kept_tokens"), k = 3.0)
-        .filter(!col("is_outlier"))
-        .select("doc_id", "source", "n_tokens", "n_tokens_removed", "n_kept_tokens")
-      Sampling.hashSplit(screened, col("doc_id"),
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "wc")
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          col("n_tokens_removed"), col("n_kept_tokens"), col("split"))
-        .orderBy("doc_id")
-    },
-    "q185_tokenizer_fertility" -> { (spark: SparkSession, dir: String) =>
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("documents")), ctx)
-      // Tokenizer fertility/coverage report (Bpe.fertilityReport): per
-      // source, tokens-per-word, bytes-per-token and byte-fallback rate
-      // from the TOTAL encoder. A synthetic "_salted" group (emoji/CJK
-      // appended) exercises the fallback path next to the clean sources.
-      // Vocab/merges are engine-specific -> rows-only; `ok` carries the
-      // exact byte-accounting identity in-band per group: the bytes the
-      // ids DECODE to equal the stripped text's UTF-8 bytes, fertility
-      // >= 1, and the fallback rate is zero exactly on the corpus the
-      // vocab was trained on (and strictly positive on the salted group).
-      import graft.llm.Bpe
-      import spark.implicits._
-      val docs = ctx.view("documents").select(col("doc_id"), col("source"), col("text"))
-      val merges = bpeMerges(docs.select(col("doc_id"), col("text")), dir)
-      val v = Bpe.vocabTotal(docs, "text", merges)
-        .select("token", "id", "freq").as[(String, Long, Long)].collect().toSeq
-        .toDF("token", "id", "freq")
-      val all = docs.select(col("source"), col("text")).unionByName(
-        docs.select(lit("_salted").as("source"),
-          concat(col("text"), lit(" 😀🌍 漢字")).as("text")))
-      val rep = Bpe.fertilityReport(all, "text", "source", merges, v)
-      val ident = Bpe.encodeIdsTotal(all, "text", merges, v)
-        .select(col("source"),
-          octet_length(Bpe.decodeIds(col("ids"), v)).cast("long").as("_db"))
-        .groupBy("source").agg(sum(col("_db")).as("_decoded_bytes"))
-      rep.join(ident, "source")
-        .select(col("source"), col("n_docs"), col("n_words"), col("n_tokens"),
-          col("n_fallback_tokens"), col("n_text_bytes"),
-          round(col("fertility"), 6).as("fertility"),
-          (col("_decoded_bytes") === col("n_text_bytes") &&
-            col("n_tokens") >= col("n_words") &&
-            col("fertility") >= 1.0 &&
-            when(col("source") === "_salted", col("fallback_rate") > 0.0)
-              .otherwise(col("fallback_rate") === 0.0)).as("ok"))
-        .orderBy("source")
-    },
-    "q186_langid_floor" -> withViewsPar("documents") { (spark, ctx) =>
-      // The calibrated `und` confidence floor, exercised THROUGH the
-      // config surface: LangIdTransform(method = "ngramFloored") — the
-      // same TextCat profiles as q179, plus the out-of-place cutoff pair
-      // (LangId.undAbsCutoff/undRatioCutoff, tools/LangIdCalib). A langid
-      // filter's one forbidden failure mode is a confident wrong label on
-      // out-of-set text, so `ok` pins BOTH directions per row: every
-      // negative (fi/hu/cs sentences with no trained profile, code,
-      // letter soup) classifies `und`, and every held-out positive —
-      // incl. the close pairs es/pt/it and de/nl/sv and the script-gated
-      // languages — still classifies its true language (the floor must
-      // not cost recall). Profiles/cutoffs are engine-specific ->
-      // rows-only; QueriesSpec enforces the invariant.
-      import graft.llm.LangId
-      import spark.implicits._
-      val negs = LangId.negativeExamples.toSeq.sortBy(_._1)
-        .flatMap { case (grp, ss) => ss.map(s => (grp, "und", s)) }
-      val poss = (LangId.heldOutSentences.toSeq.sortBy(_._1)
-        .flatMap { case (l, ss) => ss.map(s => (l, l, s)) } ++
-        LangId.scriptExamples.toSeq.sortBy(_._1).map { case (l, s) => (l, l, s) })
-      val fixtures = (negs ++ poss).zipWithIndex
-        .map { case ((grp, expect, text), i) => (i.toLong, grp, expect, text) }
-        .toDF("sent_id", "grp", "lang_expected", "text")
-      fixtures.createOrReplaceTempView("langid_floor_fixtures")
-      val out = Runner.run(Seq(graft.transform.LangIdTransform(
-        "floor", "langid_floor_fixtures", "langid_floor_labelled",
-        textField = "text", method = "ngramFloored")), ctx).get
-      out.select(col("sent_id"), col("grp"), col("lang_expected"),
-          col("lang_pred"),
-          (col("lang_pred") === col("lang_expected")).as("ok"))
-        .orderBy("sent_id")
-    },
-    "q187_token_packing" -> withViewsPar("documents") { (spark, ctx) =>
-      // Token-ID sequence packing with document boundaries
-      // (Packing.packTokenIds): every doc's [BOS] ++ ids ++ [EOS] stream
-      // concatenated in (shard, doc_id) order and cut into consecutive
-      // 64-token context windows — long docs split across windows, short
-      // docs share one, and doc_spans maps every window slice back to its
-      // document. Ids here are SYNTHETIC integers (doc_id*10000 + position,
-      // one per whitespace token) so the full output — window cuts, span
-      // map, fragment id arrays — is integer arithmetic DuckDB reproduces
-      // byte-for-byte; the same operator over REAL BPE ids is pinned by
-      // PackingSpec's reconstruction property. One row per doc span:
-      // frag_ids = ids[span_start, span_end) of the assembled window, so
-      // the oracle pins the assembled windows too (spans tile each window).
-      // frag_ids is comma-serialized (the q24 precedent): the driver's
-      // pandas comparator cannot hash raw array columns.
-      val docs = ctx.view("documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), (col("doc_id") % 4).as("shard"),
-          size(split(trim(col("text")), "\\s+")).cast("long").as("n"))
-        .withColumn("ids", transform(sequence(lit(0L), col("n") - 1),
-          i => col("doc_id") * 10000 + i))
-      graft.llm.Packing
-        .packTokenIds(docs, "doc_id", "shard", "doc_id", "ids",
-          contextLen = 64, bosId = 1L, eosId = 2L)
-        .select(col("shard"), col("seq_id"), col("n_tokens"), col("ids"),
-          explode(col("doc_spans")).as("sp"))
-        .select(col("shard"), col("seq_id"), col("n_tokens"),
-          col("sp.doc_id").as("doc_id"),
-          col("sp.start").cast("long").as("span_start"),
-          col("sp.end").cast("long").as("span_end"),
-          col("sp.doc_start").as("doc_start"),
-          array_join(slice(col("ids"), col("sp.start") + 1,
-            col("sp.end") - col("sp.start")), ",").as("frag_ids"))
-        .orderBy("shard", "seq_id", "span_start")
-    },
-    "q188_curation_chain" -> withViewsPar("documents") { (spark, ctx) =>
-      // The FULL crawl-curation chain as one oracle-checked query — q184
-      // grown by the three stages a production pipeline runs between
-      // extraction and the outlier screen: language gate, exact
-      // within-doc line dedup, and bloom decontamination. Chain:
-      // HTML+chrome -> HtmlText extraction -> stopword langid gate
-      // (lang='en'; the deterministic heuristic — the ngram profiles are
-      // engine-specific and this synthetic corpus is word salad the
-      // calibrated floor rightly refuses, so the floored path is composed
-      // through the stage surface in q186 while the chain's gate stays
-      // DuckDB-reproducible) -> deterministic 4-token linify + first-
-      // occurrence line dedup -> bloom-prefiltered EXACT fingerprint
-      // anti-join against the doc_id%13 "eval membership" (the q150
-      // contract: result ≡ plain anti-join) -> cross-doc span dedup
-      // (k=8, strips the shared chrome) -> per-source MAD screen ->
-      // 80/10/10 hash split. regex/md5/quantile-exact end to end; every
-      // multi-consumer intermediate Lineage-pinned.
-      import graft.llm.{BloomSketch, HtmlText, LineFilter, RobustStats, Sampling, SpanDedup, TextStats}
-      val docs = ctx.view("documents")
-      val pages = docs.select(col("doc_id"), col("source"),
-        concat(
-          lit("<html><head><title>Page</title><style>nav{color:red}</style>" +
-            "<script>track(1 < 2);</script></head><body>"),
-          lit("<nav>home products pricing docs blog careers about contact login signup</nav><p>"),
-          col("text"),
-          lit("</p><footer>copyright acme corp all rights reserved privacy terms cookies</footer></body></html>")
-        ).as("html"))
-      val english = pages
-        .select(col("doc_id"), col("source"),
-          HtmlText.extractText(col("html")).as("text2"))
-        .withColumn("lang", TextStats.languageId(col("text2")))
-        .filter(col("lang") === "en")
-      // cleaned feeds the eval-fingerprint build AND the anti-join big side
-      val cleaned = graft.core.Lineage.pin(
-        english.select(col("doc_id"), col("source"), col("lang"),
-          LineFilter.dedupLines(
-            regexp_replace(col("text2"), "(\\S+ \\S+ \\S+ \\S+) ", "$1\n"))
-            .as("clean")))
-      val evalFps = cleaned.filter(col("doc_id") % 13 === 0)
-        .select(md5(col("clean")).as("fp"))
-      // decon feeds the span-dedup gram explode, its reconstruction pass,
-      // and the source/lang re-attach — three scans
-      val decon = graft.core.Lineage.pin(
-        BloomSketch.antiJoin(
-          cleaned.withColumn("fp", md5(col("clean"))), col("fp"),
-          evalFps, col("fp"), bits = 1L << 20, hashes = 3)
-          .drop("fp"))
-      val deduped = graft.core.Lineage.pin(
-        SpanDedup.dedupSpans(decon, "doc_id", "clean", k = 8)
-          .join(decon.select("doc_id", "source", "lang"), Seq("doc_id"))
-          .withColumn("n_kept_tokens", col("n_tokens") - col("n_tokens_removed"))
-          .drop("clean_text"))
-      val screened = RobustStats.madOutliers(
-        deduped, Seq("source"), col("n_kept_tokens"), k = 3.0)
-        .filter(!col("is_outlier"))
-        .select("doc_id", "source", "lang", "n_tokens", "n_tokens_removed",
-          "n_kept_tokens")
-      Sampling.hashSplit(screened, col("doc_id"),
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "cc")
-        .select(col("doc_id"), col("source"), col("lang"), col("n_tokens"),
-          col("n_tokens_removed"), col("n_kept_tokens"), col("split"))
-        .orderBy("doc_id")
-    },
-    "q195_classifier_gated_curation" -> withViewsPar("documents") { (spark, ctx) =>
-      // The q188 curation chain grown by MODEL-BASED QUALITY FILTERING —
-      // the classifier gate a CCNet-style pipeline runs between cleaning
-      // and dedup: promo pages (doc_id%3=0) carry promo phrases in their
-      // body; an exact-count NB classifier (llm/NaiveBayes, q194) trains
-      // on the line-deduped text of the doc_id%5!=0 labeled seed split,
-      // predicts EVERY doc, and only predicted-clean docs continue into
-      // decontamination -> span dedup -> MAD screen -> hash split. The
-      // whole composition stays under the DuckDB oracle: regex/md5/
-      // integer-count/quantile-exact end to end, argmax protected by the
-      // macroscopic salt margins (q194). Multi-consumer intermediates
-      // Lineage-pinned.
-      import graft.llm.{BloomSketch, HtmlText, LineFilter, NaiveBayes, RobustStats, Sampling, SpanDedup, TextStats}
-      val docs = ctx.view("documents")
-      val pages = docs.select(col("doc_id"), col("source"),
-        concat(
-          lit("<html><head><title>Page</title><style>nav{color:red}</style>" +
-            "<script>track(1 < 2);</script></head><body>"),
-          lit("<nav>home products pricing docs blog careers about contact login signup</nav><p>"),
-          col("text"),
-          when(col("doc_id") % 3 === 0,
-            lit(" subscribe now limited offer click here"))
-            .otherwise(lit(" method results analysis discussion further")),
-          lit("</p><footer>copyright acme corp all rights reserved privacy terms cookies</footer></body></html>")
-        ).as("html"))
-      val english = pages
-        .select(col("doc_id"), col("source"),
-          HtmlText.extractText(col("html")).as("text2"))
-        .withColumn("lang", TextStats.languageId(col("text2")))
-        .filter(col("lang") === "en")
-      // cleaned feeds classifier training, prediction AND the gated join
-      val cleaned = graft.core.Lineage.pin(
-        english.select(col("doc_id"), col("source"), col("lang"),
-          LineFilter.dedupLines(
-            regexp_replace(col("text2"), "(\\S+ \\S+ \\S+ \\S+) ", "$1\n"))
-            .as("clean")))
-      val labeled = cleaned.withColumn("label_true",
-        when(col("doc_id") % 3 === 0, lit("promo")).otherwise(lit("clean")))
-      val model = NaiveBayes.train(
-        labeled.filter(col("doc_id") % 5 =!= 0), "clean", "label_true")
-      val gated = graft.core.Lineage.pin(
-        cleaned.join(
-          NaiveBayes.predict(cleaned, "doc_id", "clean", model)
-            .filter(col("label_pred") === "clean")
-            .select("doc_id"),
-          Seq("doc_id")))
-      val evalFps = gated.filter(col("doc_id") % 13 === 0)
-        .select(md5(col("clean")).as("fp"))
-      val decon = graft.core.Lineage.pin(
-        BloomSketch.antiJoin(
-          gated.withColumn("fp", md5(col("clean"))), col("fp"),
-          evalFps, col("fp"), bits = 1L << 20, hashes = 3)
-          .drop("fp"))
-      val deduped = graft.core.Lineage.pin(
-        SpanDedup.dedupSpans(decon, "doc_id", "clean", k = 8)
-          .join(decon.select("doc_id", "source", "lang"), Seq("doc_id"))
-          .withColumn("n_kept_tokens", col("n_tokens") - col("n_tokens_removed"))
-          .drop("clean_text"))
-      val screened = RobustStats.madOutliers(
-        deduped, Seq("source"), col("n_kept_tokens"), k = 3.0)
-        .filter(!col("is_outlier"))
-        .select("doc_id", "source", "lang", "n_tokens", "n_tokens_removed",
-          "n_kept_tokens")
-      Sampling.hashSplit(screened, col("doc_id"),
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "cc")
-        .select(col("doc_id"), col("source"), col("lang"), col("n_tokens"),
-          col("n_tokens_removed"), col("n_kept_tokens"), col("split"))
-        .orderBy("doc_id")
-    },
-    "q189_audio_resample" -> withViews("documents") { (spark, ctx) =>
-      // REAL audio resample + mono mixdown (Multimodal.resampleAudio):
-      // STEREO 16-bit 8 kHz WAVs generated from doc metadata — channel 0
-      // silent first half / constant 16384 second half, channel 1 all
-      // silent — are mixed to mono and resampled to 12 kHz on PCM
-      // integers with exact rational interpolation. `ok` pins the full
-      // contract per row: resampled frame count ≡ ceil(frames·12000/8000)
-      // (= 3/2·frames exactly — frames are even), 12 kHz mono audio/wav
-      // re-decode, the mixdown arithmetic (constant (16384+0)/2 = 8192 →
-      // second-half RMS exactly 0.25 — constants survive linear
-      // interpolation bit-exactly), silence staying silent, and the
-      // unsupported fallthrough (a text blob) reporting status without a
-      // fabricated payload.
-      import spark.implicits._
-      val wavs = ctx.view("documents").filter(col("doc_id") < 40)
-        .select(col("doc_id"), (lit(800) + (col("doc_id") % 50) * 16).cast("int").as("_frames"))
-        .as[(Long, Int)]
-        .map { case (id, frames) =>
-          import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-          val pcm = new Array[Byte](frames * 4) // stereo 16-bit
-          var i = frames / 2
-          while (i < frames) {
-            val v: Short = 16384 // channel 0 constant; channel 1 stays 0
-            pcm(4 * i) = (v & 0xff).toByte
-            pcm(4 * i + 1) = ((v >> 8) & 0xff).toByte
-            i += 1
-          }
-          val fmt = new AudioFormat(8000f, 16, 2, true, false)
-          val bos = new java.io.ByteArrayOutputStream()
-          AudioSystem.write(
-            new AudioInputStream(
-              new java.io.ByteArrayInputStream(pcm), fmt, frames.toLong),
-            AudioFileFormat.Type.WAVE, bos)
-          (id, frames.toLong, bos.toByteArray)
-        }.toDF("doc_id", "frames_in", "blob")
-        .unionByName(Seq((1000L, 0L, "not audio at all".getBytes("UTF-8")))
-          .toDF("doc_id", "frames_in", "blob"))
-      val resampled = graft.llm.Multimodal.resampleAudio(wavs, "blob", targetRate = 12000)
-        .withColumn("_dec", coalesce(col("audio_resampled"), col("blob")))
-      graft.llm.Multimodal.decodeAndFeaturize(resampled, "_dec")
-        .select(col("doc_id"), col("frames_in"), col("resample_status"),
-          col("media_meta.frames").as("frames_out"),
-          when(col("doc_id") === 1000L,
-            col("resample_status") === "unsupported" && col("audio_resampled").isNull)
-            .otherwise(col("resample_status") === "ok" &&
-              col("media_meta.mime") === "audio/wav" &&
-              col("media_meta.frames") === col("frames_in") * 3 / 2 &&
-              col("media_meta.sample_rate") === 12000 &&
-              col("media_meta.channels") === 1 &&
-              element_at(col("features"), 1) < 0.001f &&
-              abs(element_at(col("features"), 8) - 0.25f) < 0.001f).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q190_span_index_ingest" -> withViews("documents") { (spark, ctx) =>
-      // INCREMENTAL span dedup under the ORACLE: the q180 corpus (every
-      // third doc salted with the shared boilerplate paragraph) split into
-      // a base (doc_id < 30, indexed by SpanIndex.write) and a batch
-      // (ingested against the persisted gram index), md5 gram keys. The
-      // one-shot-equivalence contract means DuckDB's plain one-shot span
-      // dedup over the UNION corpus must reproduce the write+ingest rows
-      // byte-for-byte — clean_text, token and span counts — putting the
-      // incremental path itself (bloom membership, bucket-pruned
-      // verification, append) under the cross-engine gate, not just its
-      // spec. Fresh temp dir per evaluation: re-evaluation (Bench
-      // min-of-2) rebuilds rather than tripping the watermark.
-      import graft.llm.SpanIndex
-      val para = "subscribe to our newsletter for updates terms of service apply"
-      val docs = ctx.view("documents").select(col("doc_id"),
-        when(col("doc_id") % 3 === 0, concat(lit(para), lit(" "), col("text")))
-          .otherwise(col("text")).as("text"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_q190_spanidx_").toString + "/idx"
-      val baseOut = SpanIndex.write(docs.filter(col("doc_id") < 30),
-        "doc_id", "text", dir, k = 8, hashMode = "md5", nbuckets = 8)
-      val batchOut = SpanIndex.ingest(docs.filter(col("doc_id") >= 30),
-        "doc_id", "text", dir)
-      baseOut.unionByName(batchOut).orderBy("doc_id")
-    },
-    "q191_minhash_index_ingest" -> withViewsDirPar("documents") { (spark, ctx, sfDir) =>
-      // MinHash index APPEND-ingest, self-verifying end to end: index the
-      // base corpus, then ingest (1) a batch mixing verbatim copies of
-      // base docs (must die through the exact tier — probability 1, no
-      // LSH luck involved) with fully-synthetic unique-token docs (must
-      // survive AND join the index), then (2) a second batch of verbatim
-      // copies of the FIRST batch's survivors — which die only if the
-      // ingest actually appended them (the gap this operator closes:
-      // batches deduping against each other, not a stale corpus). All
-      // exact-fingerprint decisions -> deterministic; `ok` pins
-      // kept == expected per row.
-      import graft.llm.MinhashIndex
-      val base = ctx.view("documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text"))
-      // base-index fixture cached per (JVM, sfDir); each run ingests into
-      // its own pristine copy (ingest mutates — see freshStores)
-      val dir = freshStores("q191", sfDir) { d =>
-        MinhashIndex.write(base, "doc_id", "text", s"$d/idx")
-      } + "/idx"
-      val copies1 = base.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 1000L).as("doc_id"), col("text"),
-          lit(false).as("expect_kept"))
-      val uniq1 = base.filter(col("doc_id") % 7 === 3)
-        .select((col("doc_id") + 2000L).as("doc_id"),
-          concat_ws(" ", transform(sequence(lit(0), lit(11)),
-            i => concat(lit("uq"), col("doc_id"), lit("x"), i))).as("text"),
-          lit(true).as("expect_kept"))
-      val batch1 = copies1.unionByName(uniq1)
-      val s1 = MinhashIndex.ingest(batch1.drop("expect_kept"),
-        "doc_id", "text", dir).select(col("doc_id").as("_kid"))
-      val batch2 = uniq1.select((col("doc_id") + 10000L).as("doc_id"),
-        col("text"), lit(false).as("expect_kept"))
-      val s2 = MinhashIndex.ingest(batch2.drop("expect_kept"),
-        "doc_id", "text", dir).select(col("doc_id").as("_kid"))
-      batch1.unionByName(batch2)
-        .join(s1.unionByName(s2), col("doc_id") === col("_kid"), "left")
-        .select(col("doc_id"), col("expect_kept"),
-          col("_kid").isNotNull.as("kept"),
-          (col("_kid").isNotNull === col("expect_kept")).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q202_index_takedown" -> withViewsDirPar("documents") { (spark, ctx, sfDir) =>
-      // Index takedown DELETE, self-verifying — the lifecycle step after
-      // q191's ingest: write the base corpus, verify copies of two
-      // disjoint id groups die against the live index, take group A down
-      // (MinhashIndex.delete — crash-safe staged partition rewrite), then
-      // probe BOTH groups again: copies of deleted docs must now SURVIVE
-      // (LSH + exact + shingle tiers all stopped seeing them) while
-      // copies of retained docs still die. Exact-fingerprint decisions →
-      // deterministic; `ok` pins kept == expected per probe, before and
-      // after, and the watermark stays consumed (deleted ids are not
-      // reusable — checked via the in-band tripwire flag).
-      import graft.llm.MinhashIndex
-      // unique-token texts (the q191 discipline): every doc is orthogonal
-      // to every other, so a probe copy can match ONLY its source — the
-      // survive/die expectations depend on the takedown alone, never on
-      // incidental near-dups inside the natural corpus
-      // 120 docs: enough for ~18 victims and ~34 probes per pass while
-      // keeping the staged-rewrite job count (the real battery cost —
-      // fixed, data-independent) as low as the coverage allows
-      val base = ctx.view("documents").filter(col("doc_id") < 120)
-        .select(col("doc_id"),
-          concat_ws(" ", transform(sequence(lit(0), lit(11)),
-            i => concat(lit("tk"), col("doc_id"), lit("x"), i))).as("text"))
-      // index fixture cached per (JVM, sfDir); the takedown below rewrites
-      // this run's pristine copy only
-      val dir = freshStores("q202", sfDir) { d =>
-        MinhashIndex.write(base, "doc_id", "text", s"$d/idx")
-      } + "/idx"
-      def probes(tag: Long) = base
-        .filter((col("doc_id") % 7).isin(0, 3))
-        .select((col("doc_id") + tag).as("doc_id"), col("text"),
-          (col("doc_id") % 7).as("_grp"))
-      // pass 1: every copy dies against the live index. PINNED before the
-      // takedown — the probe plan reads the index files, and the delete
-      // below rewrites them; an unpinned pass-1 would lazily execute
-      // after the files are gone
-      val kept1 = MinhashIndex.dedupAgainst(probes(1000L).drop("_grp"),
-        "doc_id", "text", dir).select(col("doc_id").as("_kid"))
-      val pass1 = graft.core.Lineage.pin(probes(1000L)
-        .join(kept1, col("doc_id") === col("_kid"), "left")
-        .select(col("doc_id"), lit(1).as("pass"),
-          lit(false).as("expect_kept"), col("_kid").isNotNull.as("kept")))
-      // takedown: group 0 (doc_id % 7 == 0) leaves the index
-      val victims = base.filter(col("doc_id") % 7 === 0)
-        .select("doc_id").collect().map(_.getLong(0)).toSeq
-      MinhashIndex.delete(spark, dir, victims)
-      // the watermark did not move back: a deleted id is still consumed
-      val reuseRefused =
-        try { MinhashIndex.ingest(base.filter(col("doc_id") === victims.head)
-            .select(col("doc_id"), col("text")), "doc_id", "text", dir)
-          false
-        } catch { case e: IllegalArgumentException =>
-          e.getMessage.contains("strictly above") }
-      // the completed takedown left its evidence: one audit record per
-      // table (bands/shingles/exact), each naming this run's id count
-      val logOk = MinhashIndex.takedownLog(spark, dir)
-        .filter(col("nIds") === victims.length).count() == 3L
-      // pass 2: group-0 copies survive, group-3 copies still die
-      val kept2 = MinhashIndex.dedupAgainst(probes(5000L).drop("_grp"),
-        "doc_id", "text", dir).select(col("doc_id").as("_kid"))
-      val pass2 = probes(5000L)
-        .join(kept2, col("doc_id") === col("_kid"), "left")
-        .select(col("doc_id"), lit(2).as("pass"),
-          (col("_grp") === 0).as("expect_kept"), col("_kid").isNotNull.as("kept"))
-      pass1.unionByName(pass2)
-        .select(col("doc_id"), col("pass"), col("expect_kept"), col("kept"),
-          (col("kept") === col("expect_kept") && lit(reuseRefused && logOk)).as("ok"))
-        .orderBy("pass", "doc_id")
-    },
-    "q205_vector_takedown" -> withViewsDir("embeddings") { (spark, ctx, sfDir) =>
-      // Vector-index takedown on the RETRIEVAL path, self-verifying —
-      // q202's die-before/survive-after discipline for the embedding
-      // tiers: after IvfIndex.delete a victim vector must VANISH from
-      // top-k RESULTS (flat + PQ probed exhaustively, so absence is
-      // structural, not recall luck — the two tiers cover both the
-      // raw-vector and coded read paths; SQ8 shares the PQ shortlist
-      // machinery and the same vector table, so probing it adds battery
-      // cost without adding a codepath)
-      // and after SemIndex.delete a verbatim COPY of it must survive
-      // dedup, while retained vectors keep self-hitting / killing copies.
-      // Deletes go through the DataFrame-native overloads — the id view
-      // never collects to the driver. `ok` also folds in the removed-row
-      // counts matching the victim count exactly.
-      import graft.llm.{IvfIndex, SemIndex}
-      val em = ctx.view("embeddings").filter(col("vec_id") < 200)
-        .select(col("vec_id"), col("embedding"))
-      // both vector stores cached per (JVM, sfDir); the deletes below
-      // rewrite this run's pristine copies only
-      val base = freshStores("q205", sfDir) { d =>
-        IvfIndex.write(em, "vec_id", "embedding", s"$d/ivf", nlist = 4,
-          pqSubspaces = 4)
-        SemIndex.write(em, "vec_id", "embedding", s"$d/sem", nclusters = 4,
-          tau = 0.999)
-      }
-      val ivfDir = s"$base/ivf"; val semDir = s"$base/sem"
-      val victims = em.filter(col("vec_id") % 7 === 0)
-      val nVictims = victims.count()
-      val queries = em.filter((col("vec_id") % 7).isin(0, 3))
-      // IVF legs: a query vector IS a corpus vector, so its own id must
-      // appear among its exhaustive-probe neighbors (cosine 1.0) exactly
-      // while it is indexed
-      def ivfLeg(pass: Int, tier: String) = {
-        val hits = tier match {
-          case "flat" => IvfIndex.topK(queries, "vec_id", "embedding", ivfDir,
-            k = 3, nprobe = 4)
-          case _ => IvfIndex.topKPq(queries, "vec_id", "embedding", ivfDir,
-            k = 3, nprobe = 4, shortlistFactor = 400)
-        }
-        queries.select(col("vec_id"))
-          .join(hits.filter(col("query_id") === col("neighbor_id"))
-            .select(col("query_id").as("vec_id"), lit(1).as("_hit")),
-            Seq("vec_id"), "left")
-          .select(col("vec_id"), lit(pass).as("pass"), lit(s"ivf_$tier").as("tier"),
-            col("_hit").isNotNull.as("found"))
-      }
-      // Sem leg: a verbatim copy (fresh id) of an INDEXED vector dies in
-      // dedup (cosine 1.0 ≥ tau); "found" = the index still knows it
-      def semFound(pass: Int) = {
-        val probes = queries.select((col("vec_id") + 10000L).as("vec_id"),
-          col("embedding"))
-        val kept = SemIndex.dedupAgainst(probes, "vec_id", "embedding", semDir)
-          .select(col("vec_id").as("_kid"))
-        probes.join(kept, col("vec_id") === col("_kid"), "left")
-          .select((col("vec_id") - 10000L).as("vec_id"), lit(pass).as("pass"),
-            lit("sem").as("tier"), col("_kid").isNull.as("found"))
-      }
-      // Building the three legs runs eager driver actions per leg
-      // (centroid/codebook reads, probed-list collects, assignment
-      // collects) — construct them concurrently (guide §2.6) so those
-      // tiny jobs overlap; the frames and their union are unchanged
-      def legsOf(pass: Int): DataFrame = graft.core.Par.all(Seq(
-          () => ivfLeg(pass, "flat"), () => ivfLeg(pass, "pq"),
-          () => semFound(pass)))
-        .reduce(_ unionByName _)
-      // pass 1 PINNED before the takedown rewrites the index files
-      val pass1 = graft.core.Lineage.pin(legsOf(1))
-      // the two deletes are independent single-writer stores — concurrent,
-      // like Takedown.run's index fan-out
-      val Seq(removedIvf, removedSem) = graft.core.Par.all(Seq(
-        () => IvfIndex.delete(spark, ivfDir, victims.select("vec_id")).total,
-        () => SemIndex.delete(spark, semDir, victims.select("vec_id")).total))
-      val deletesOk = removedIvf == nVictims && removedSem == nVictims
-      val pass2 = legsOf(2)
-      pass1.unionByName(pass2)
-        .withColumn("expect_found",
-          col("pass") === 1 || col("vec_id") % 7 === 3)
-        .select(col("vec_id"), col("pass"), col("tier"), col("expect_found"),
-          col("found"),
-          (col("found") === col("expect_found") && lit(deletesOk)).as("ok"))
-        .orderBy("pass", "tier", "vec_id")
-    },
-    "q210_takedown_orchestrated" -> withViewsDir("documents", "embeddings") { (spark, ctx, sfDir) =>
-      // ONE legal request, EVERY store, self-verifying — llm/Takedown.run
-      // composing the six individually-proven primitives (q202/q203/q204/
-      // q205 cover them store-by-store; this pins the ORCHESTRATION): all
-      // six stores are built from one corpus, one id view takes the
-      // victims down through a single call, and `ok` pins per store that
-      // (1) the consolidated view reports the removal, (2) the
-      // request-level audit trail holds a matching record under the
-      // shared request id, (3) the store is structurally clean of every
-      // victim id while retaining the kept ids, and (4) the count stores
-      // are BYTE-FOR-BYTE the never-saw-the-victims state (the exact
-      // subtraction contract, via the in-engine ids→text corpus join a
-      // real legal queue needs). A forgotten store — the silent
-      // non-compliance mode a hand-assembled takedown risks — would
-      // surface as a missing row here.
-      import graft.llm.{Bpe, IvfIndex, MinhashIndex, NaiveBayes, SemIndex,
-        SpanIndex, Takedown, WordCounts}
-      val corpus = graft.core.Lineage.pin(
-        ctx.view("documents").filter(col("doc_id") < 120)
-          .select(col("doc_id"), col("text"),
-            concat(lit("c"), pmod(col("doc_id"), lit(3))).as("label"))
-          .join(ctx.view("embeddings").select(col("vec_id").as("doc_id"),
-            col("embedding")), Seq("doc_id")))
-      // all six stores cached per (JVM, sfDir) and handed out as a
-      // PRISTINE copy per run — the orchestrated takedown needs stores
-      // that never saw a prior request, and gets them without rebuilding
-      // six stores from scratch on every invocation. Small partition
-      // counts keep the staged-rewrite job count (the battery cost —
-      // fixed, data-independent) proportional to the coverage, not the
-      // defaults.
-      val base = freshStores("q210", sfDir) { d =>
-        MinhashIndex.write(corpus, "doc_id", "text", s"$d/mh", bands = 4)
-        SpanIndex.write(corpus, "doc_id", "text", s"$d/span", k = 8,
-          hashMode = "xxhash64", nbuckets = 8, bloomBits = 1L << 18,
-          bloomHashes = 3)
-        SemIndex.write(corpus, "doc_id", "embedding", s"$d/sem", nclusters = 4)
-        IvfIndex.write(corpus, "doc_id", "embedding", s"$d/ivf", nlist = 4)
-        WordCounts.write(corpus, "text", s"$d/wc")
-        NaiveBayes.write(NaiveBayes.train(corpus, "text", "label"), s"$d/nb")
-      }
-      val (mDir, spDir, seDir, ivDir, wcDir, nbDir, auDir) =
-        (s"$base/mh", s"$base/span", s"$base/sem", s"$base/ivf",
-          s"$base/wc", s"$base/nb", s"$base/audit")
-      val idView = corpus.filter(col("doc_id") % 5 === 2).select("doc_id")
-      // ONE collect carries both the victim list and its count (the list
-      // is takedown-sized — the r18-audited bounded collect)
-      val victimIds = idView.collect().map(_.getLong(0)).toSeq
-      val nVictims = victimIds.length.toLong
-      val report = Takedown.run(spark, idView,
-        minhashURI = mDir, spanURI = spDir, semURI = seDir, ivfURI = ivDir,
-        countsURI = wcDir, modelURI = nbDir,
-        corpus = Some(corpus), corpusIdCol = "doc_id",
-        textCol = "text", labelCol = "label", auditURI = auDir)
-      // structural per-store checks: every victim gone, at least one kept
-      // id still present (takedown must not have emptied the store) —
-      // ONE aggregate per table, not two counts
-      def clean(path: String, idCol: String): Boolean = {
-        val r = spark.read.parquet(path).agg(
-          sum(when(col(idCol).isin(victimIds.map(java.lang.Long.valueOf): _*),
-            1L).otherwise(0L)).as("v"),
-          sum(when(col(idCol) % 5 =!= 2, 1L).otherwise(0L)).as("k")).head()
-        r.getLong(0) == 0L && r.getLong(1) > 0L
-      }
-      // count stores: byte-for-byte the never-saw state. exceptAll BOTH
-      // ways unioned = ONE job per table pair instead of two (identical
-      // boolean — the union is empty iff both sides are)
-      val kept = corpus.filter(col("doc_id") % 5 =!= 2)
-      def sameTable(a: DataFrame, b: DataFrame): Boolean =
-        a.exceptAll(b).unionAll(b.exceptAll(a)).isEmpty
-      val nbNow = NaiveBayes.read(spark, nbDir)
-      val nbWant = NaiveBayes.train(kept, "text", "label")
-      // the ten verification aggregates are independent read-only jobs
-      // over different tables — run them concurrently (guide §2.6) so the
-      // battery's tail is bounded by the slowest check, not their sum;
-      // each boolean is computed exactly as in the sequential form
-      val legs: Seq[(String, () => Boolean)] = Seq(
-        "mh_bands" -> (() => clean(s"$mDir/bands", "_id")),
-        "mh_shingles" -> (() => clean(s"$mDir/shingles", "_id")),
-        "mh_exact" -> (() => clean(s"$mDir/exact", "_id")),
-        "span" -> (() => clean(s"$spDir/grams", "keeper")),
-        "sem" -> (() => clean(s"$seDir/vectors", "id")),
-        "ivf" -> (() => clean(s"$ivDir/vectors", "id")),
-        "wc" -> (() => sameTable(WordCounts.read(spark, wcDir),
-          Bpe.wordCounts(kept, "text"))),
-        "nb_tok" -> (() => sameTable(nbNow.tokenTable, nbWant.tokenTable)),
-        "nb_cls" -> (() => sameTable(nbNow.classTable, nbWant.classTable)))
-      val ok = legs.map(_._1).zip(graft.core.Par.all(legs.map(_._2))).toMap
-      val checks = Seq(
-        ("minhash", ok("mh_bands") && ok("mh_shingles") && ok("mh_exact")),
-        ("span", ok("span")),
-        ("sem", ok("sem")),
-        ("ivf", ok("ivf")),
-        ("wordcounts", ok("wc")),
-        ("classifier", ok("nb_tok") && ok("nb_cls")))
-      import spark.implicits._
-      val checksDf = checks.toDF("store_type", "_clean")
-      val logDf = Takedown.consolidatedLog(spark, auDir)
-        .select(col("store_type"), col("rows_removed").as("_log_removed"),
-          col("request_id").as("_log_req"))
-      report.join(broadcast(checksDf), Seq("store_type"))
-        .join(logDf, Seq("store_type"), "left")
-        .select(col("store_type"), col("n_ids"), col("rows_removed"),
-          (col("_clean") && col("_log_removed") === col("rows_removed") &&
-            col("_log_req") === col("request_id") &&
-            col("n_ids") === lit(nVictims) && col("rows_removed") > 0).as("ok"))
-        .orderBy("store_type")
-    },
-    "q211_quality_signal_gate" -> withViews("documents") { (spark, ctx) =>
-      // The q207/q208 quality signals COMPOSED into a curation-chain leg,
-      // self-verifying — each gate provably LOAD-BEARING, not shadowed:
-      // (a) padding docs (doc_id%9==3 → 240×'a') die on the ENTROPY floor
-      // alone; (b) repetition docs (doc_id%9==0 → the doc's own first 480
-      // chars repeated 16×) keep a NATURAL character distribution — entropy
-      // cannot see the corruption — and die ONLY on the DEFLATE floor
-      // (long-range repetition is exactly what the compression signal
-      // exists to catch); (c) clean docs pass both gates and continue into
-      // the downstream hash split (the chain composes; survivors carry a
-      // split label). `ok` pins the per-doc fate against its construction:
-      // padded ⇒ ent < 2.2; repeated ⇒ ent ≥ 2.2 AND ratio < 0.2 (the
-      // deflate gate fires where entropy is blind); clean ⇒ both gates
-      // pass and a split label exists. Thresholds sit mid-gap: natural
-      // text entropy ≈ 2.8 nats vs 0 for padding; natural deflate ratio ≈
-      // 0.4+ vs < 0.1 for 16× repetition (16 copies amortize deflate's
-      // fixed overhead even for sub-100-char docs, where 4 copies did
-      // not; 480×16 = 7680 chars ≤ 30720 BYTES even at 4-byte UTF-8 —
-      // inside deflate's 32 KB BYTE window regardless of script, the
-      // q208 gate discipline).
-      import graft.functions.CharEntropyExpr.char_entropy
-      import graft.functions.DeflateRatioExpr.deflate_ratio
-      import graft.llm.Sampling
-      val docs = ctx.view("documents").select(col("doc_id"), col("source"), col("text"))
-      val staged = docs.withColumn("text2",
-        when(col("doc_id") % 9 === 3, repeat(lit("a"), 240))
-          .when(col("doc_id") % 9 === 0,
-            repeat(substring(col("text"), 1, 480), 16))
-          .otherwise(col("text")))
-      // both signals are narrow codegen'd projections — ONE corpus scan
-      // computes them; the pin stops the gate and the report re-running it
-      val sig = graft.core.Lineage.pin(staged
-        .select(col("doc_id"), col("source"),
-          char_entropy(col("text2")).as("ent"),
-          deflate_ratio(col("text2")).as("ratio")))
-      val gated = sig.filter(col("ent") >= 2.2 && col("ratio") >= 0.2)
-      val split = Sampling.hashSplit(gated, col("doc_id"),
-        Seq("train" -> 0.9, "val" -> 0.1), salt = "qsg")
-      sig.join(split.select(col("doc_id"), col("split")), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("source"),
-          round(col("ent"), 6).as("ent"), round(col("ratio"), 6).as("ratio"),
-          col("split"),
-          when(col("doc_id") % 9 === 3, col("ent") < 2.2)
-            .when(col("doc_id") % 9 === 0,
-              col("ent") >= 2.2 && col("ratio") < 0.2)
-            .otherwise(col("ent") >= 2.2 && col("ratio") >= 0.2 &&
-              col("split").isNotNull).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q212_entropy_gated_split" -> withViews("documents") { (spark, ctx) =>
-      // The entropy gate COMPOSED and FULL-ORACLE-checked — q211's chain
-      // with the DuckDB-expressible half held to byte-for-byte parity
-      // (q207 proves the expression standalone; this proves it feeding a
-      // downstream operator): padding injection (doc_id%9==3 → 240×'a')
-      // -> char_entropy floor (2.2 nats sits mid-gap: padding ≈ 0,
-      // natural text ≈ 2.8 — no boundary value exists, so the float
-      // comparison cannot flip cross-engine) -> `\s+` token count ->
-      // deterministic 80/10/10 hash split. DuckDB reproduces the staged
-      // text, the unnest-aggregate entropy, the gate, the token
-      // accounting and the md5 split labels exactly.
-      import graft.functions.CharEntropyExpr.char_entropy
-      import graft.llm.Sampling
-      val docs = ctx.view("documents").select(col("doc_id"), col("source"), col("text"))
-      val staged = docs.withColumn("text2",
-        when(col("doc_id") % 9 === 3, repeat(lit("a"), 240))
-          .otherwise(col("text")))
-      val sig = staged.select(col("doc_id"), col("source"),
-        char_entropy(col("text2")).as("ent"),
-        size(filter(split(trim(col("text2")), "\\s+"),
-          t => length(t) > 0)).cast("long").as("n_tokens"))
-      val gated = sig.filter(col("ent") >= 2.2)
-      Sampling.hashSplit(gated, col("doc_id"),
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "qe")
-        .select(col("doc_id"), col("source"),
-          round(col("ent"), 6).as("char_entropy"), col("n_tokens"), col("split"))
-        .orderBy("doc_id")
-    },
-    "q192_unigram_encode" -> { (spark: SparkSession, dir: String) =>
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("documents")), ctx)
-      // Unigram-LM tokenizer (llm/Unigram — the SentencePiece unigram
-      // model, Kudo 2018): hard-EM trained piece vocabulary + VITERBI
-      // encoding, the other half of the subword family next to q165/q174's
-      // BPE. Training/id assignment are engine-specific -> rows-only; `ok`
-      // carries the contract in-band per document: (1) the ids decode back
-      // to EXACTLY the whitespace-stripped salted text — the salt
-      // (emoji/CJK/Greek, absent from the Latin-1-ish corpus) forces the
-      // byte-fallback route, proving totality; (2) the Viterbi log-prob
-      // dominates the greedy longest-match log-prob EXACTLY (both are
-      // document-order left folds over one table; IEEE addition is
-      // monotone — the per-row optimality witness); (3) folded global
-      // invariant, q179 style: on the UNSALTED corpus the trained model
-      // compresses — corpus-wide tokens strictly below non-ws code points
-      // (per-row would be unfair to the shortest docs, whose fixed salt
-      // adds more fallback byte ids than their text can save).
-      import graft.llm.Unigram
-      val docs = ctx.view("documents").select(col("doc_id"), col("text"))
-      val model = unigramModel(docs, dir)
-      val comp = broadcast(Unigram.encodeIds(docs, "text", model)
-        .agg((sum(col("n_tokens")) <
-          sum(length(regexp_replace(col("text"), "\\s+", "")).cast("long")))
-          .as("_compresses")))
-      val salt = " 😀🌍 漢字テスト κόσμε"
-      val salted = docs.withColumn("text2", concat(col("text"), lit(salt)))
-      Unigram.encodeDetail(salted, "text2", model)
-        .crossJoin(comp)
-        .select(col("doc_id"), col("n_tokens"), col("n_fallback_tokens"),
-          col("score"), col("greedy_score"),
-          (col("n_fallback_tokens") > 0L &&
-            col("score") >= col("greedy_score") &&
-            col("_compresses") &&
-            Unigram.decodeIds(col("ids"), model) ===
-              regexp_replace(col("text2"), "\\s+", "")).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q196_wordpiece_encode" -> { (spark: SparkSession, dir: String) =>
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("documents")), ctx)
-      // WordPiece tokenizer (llm/WordPiece — Schuster & Nakajima 2012; the
-      // BERT tokenizer): likelihood-merge training + greedy
-      // longest-match-first encoding with [UNK] collapse, the third
-      // production subword family next to q165/q174 (BPE merge ranks) and
-      // q192 (unigram Viterbi). Training/id assignment are
-      // engine-specific -> rows-only; `ok` carries the word-level contract
-      // in-band: (1) decode splits back into EXACTLY the
-      // whitespace-normalized input's words, each decoded word
-      // byte-identical to its input word OR the [UNK] marker — greedy
-      // concatenation must reconstruct whatever it segmented, and word
-      // boundaries must survive [UNK]s; (2) the encoder's own n_words
-      // equals the normalized split's length (segmentation parity with the
-      // engine-independent \s+ definition); (3) n_unk_words == count of
-      // id-0 entries (UNK is an ID, not a string); (4) the emoji salt on
-      // doc_id%5==0 rows MUST go [UNK] (out-of-alphabet — totality is
-      // deliberately NOT provided, the published WordPiece contract); (5)
-      // folded global invariant: on the UNSALTED corpus, [UNK] words stay
-      // under 5% (the trained alphabet covers its own corpus).
-      import graft.llm.WordPiece
-      val docs = ctx.view("documents").select(col("doc_id"), col("text"))
-      val model = wordPieceModel(docs, dir)
-      val cov = broadcast(WordPiece.encodeIds(docs, "text", model)
-        .agg((sum(col("n_unk_words")) * 20L < sum(col("n_words"))).as("_covered")))
-      val salted = docs.withColumn("text2",
-        when(col("doc_id") % 5 === 0, concat(col("text"), lit(" 😀")))
-          .otherwise(col("text")))
-      WordPiece.encodeDetail(salted, "text2", model)
-        .withColumn("decoded", WordPiece.decodeIds(col("ids"), model))
-        .withColumn("_norm", regexp_replace(trim(col("text2")), "\\s+", " "))
-        .withColumn("_dw", split(col("decoded"), " "))
-        .withColumn("_ww", split(col("_norm"), " "))
-        .crossJoin(cov)
-        .select(col("doc_id"), col("n_tokens"), col("n_unk_words"), col("n_words"),
-          (col("_covered") &&
-            size(col("_dw")) === size(col("_ww")) &&
-            (col("n_words") === size(col("_ww")).cast("long") ||
-              (length(col("_norm")) === 0 && col("n_words") === 0L)) &&
-            col("n_unk_words") ===
-              size(filter(col("ids"), i => i === 0L)).cast("long") &&
-            (col("doc_id") % 5 =!= 0 || col("n_unk_words") >= 1L) &&
-            forall(arrays_zip(col("_dw"), col("_ww")),
-              x => x.getField("_dw") === x.getField("_ww") ||
-                x.getField("_dw") === lit("[UNK]"))).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q197_mojibake_repair" -> withViewsPar("documents") { (spark, ctx) =>
-      // Mojibake repair under the FULL ORACLE (functions/FixMojibakeExpr —
-      // the UTF-8-misread-as-windows-1252/latin-1 inversion of the public
-      // ftfy tool, the standard crawl-cleaning step before token counts /
-      // dedup keys / langid can be trusted). The corpus is pure ASCII, so
-      // a non-ASCII salt is appended to EVERY row, then rows are mangled
-      // 2× / 1× / 0× by doc_id — Spark mangles with its own
-      // encode/decode(ISO-8859-1) and repairs with the native expression;
-      // DuckDB never sees the mangling AT ALL: it asserts the round trip
-      // by computing the pristine salted text and the expected pass count
-      // arithmetically. Byte-exact across engines because the repair is an
-      // exact inversion, not a heuristic. The salt exercises 2-byte
-      // sequences (é à ï), 3-byte sequences whose continuation bytes land
-      // in the C1 range (— “ ”), and double mangling.
-      import graft.functions.FixMojibakeExpr.fix_mojibake
-      val salt = " café déjà vu — naïve “quotes”"
-      def mangle(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        decode(encode(c, "UTF-8"), "ISO-8859-1")
-      val docs = ctx.view("documents")
-        .select(col("doc_id"), concat(col("text"), lit(salt)).as("text_s"))
-      docs.withColumn("text_in",
-          when(col("doc_id") % 3 === 0, mangle(mangle(col("text_s"))))
-            .when(col("doc_id") % 3 === 1, mangle(col("text_s")))
-            .otherwise(col("text_s")))
-        .withColumn("_fx", fix_mojibake(col("text_in")))
-        .select(col("doc_id"), col("_fx.fixed").as("fixed"),
-          col("_fx.n_passes").cast("long").as("n_passes"))
-        .orderBy("doc_id")
-    },
-    "q198_nb_incremental" -> withViews("documents") { (spark, ctx) =>
-      // Incremental classifier retrain under the FULL ORACLE
-      // (llm/NaiveBayes.merge): train on batch A, fold batch B in by exact
-      // count addition — no pass over A — and predict the corpus with the
-      // merged model. The oracle trains ONCE over A ∪ B (q194's SQL, same
-      // train set), so passing byte-for-byte pins the incremental
-      // contract itself cross-engine: merge(train(A), train(B)) IS
-      // train(A ∪ B) — the daily-batch story the span/minhash/sem indexes
-      // have, here for the model tier.
-      import graft.llm.NaiveBayes
-      val base = ctx.view("documents").select(col("doc_id"),
-        when(col("doc_id") % 3 === 0, lit("promo"))
-          .otherwise(lit("clean")).as("label_true"),
-        concat(col("text"),
-          when(col("doc_id") % 3 === 0,
-            lit(" subscribe now limited offer click here"))
-            .otherwise(lit(" method results analysis discussion further")))
-          .as("text2"))
-      val batchA = base.filter((col("doc_id") % 5).isin(1, 2))
-      val batchB = base.filter((col("doc_id") % 5).isin(3, 4))
-      val merged = NaiveBayes.merge(
-        NaiveBayes.train(batchA, "text2", "label_true"),
-        NaiveBayes.train(batchB, "text2", "label_true"))
-      val pred = NaiveBayes.predict(base, "doc_id", "text2", merged)
-      base.select(col("doc_id"), col("label_true"))
-        .join(pred, Seq("doc_id"))
-        .select(col("doc_id"), col("label_true"), col("label_pred"),
-          col("n_tokens"))
-        .orderBy("doc_id")
-    },
-    "q199_video_frames" -> withViews("documents") { (spark, ctx) =>
-      // REAL video pipeline, self-verifying end to end: per-row
-      // MJPEG-in-AVI clips (llm/Multimodal.buildMjpegAvi — pure-JDK RIFF
-      // writer) are GENERATED from doc metadata — 5 solid JPEG frames at
-      // shades 0/60/120/180/240, 25 fps — then (1) container-decoded
-      // (parseAvi: header-exact dims/frames/duration + mean-of-frames
-      // luminance features), (2) frame-sampled (3 evenly spaced frames =
-      // source indices 0/2/4, raw JPEG payloads), (3) each sampled frame
-      // decoded AS AN IMAGE through the same decodeAndFeaturize the image
-      // modality uses. `ok` pins: the video mime (the REAL branch), the
-      // header arithmetic (5 frames, 200 ms, 40 ms spacing), the sampled
-      // indices/timestamps, the frame dims, and — the real-decode proof —
-      // each frame's luminance histogram concentrated in the bin of the
-      // shade it was ENCODED from (frame 0→bin 1, 2→bin 4, 4→bin 8;
-      // JPEG noise on a solid frame stays inside a 32-wide bin). A byte
-      // fake can satisfy none of these.
-      import spark.implicits._
-      import graft.llm.Multimodal
-      val avis = ctx.view("documents").filter(col("doc_id") < 30)
-        .select(col("doc_id")).as[Long]
-        .map { id =>
-          val frames = (0 until 5).map { f =>
-            val shade = f * 60
-            val img = new java.awt.image.BufferedImage(
-              24, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val rgb = (shade << 16) | (shade << 8) | shade
-            (0 until 24).foreach(x => (0 until 16).foreach(y => img.setRGB(x, y, rgb)))
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "jpeg", bos)
-            bos.toByteArray
-          }
-          (id, Multimodal.buildMjpegAvi(frames, 24, 16, fps = 25))
-        }.toDF("doc_id", "blob")
-      val meta = Multimodal.decodeAndFeaturize(avis, "blob")
-        .select(col("doc_id"), col("blob"),
-          col("media_meta.mime").as("video_mime"),
-          col("media_meta.width").as("vw"), col("media_meta.height").as("vh"),
-          col("media_meta.frames").as("n_frames"),
-          col("media_meta.duration_ms").as("duration_ms"))
-      val frames = Multimodal.sampleFrames(meta, "blob", 3)
-      val decoded = Multimodal.decodeAndFeaturize(
-        frames.drop("blob"), "frame_bytes")
-      decoded
-        .select(col("doc_id"), col("frame_id"), col("frame_index"),
-          col("frame_ms"), col("n_frames"), col("duration_ms"),
-          (col("video_mime") === "video/x-msvideo" &&
-            col("vw") === 24 && col("vh") === 16 &&
-            col("n_frames") === 5L && col("duration_ms") === 200L &&
-            col("frame_status") === "avi" &&
-            col("frame_index") === (col("frame_id") - 1) * 2 &&
-            col("frame_ms") === col("frame_index") * 40 &&
-            col("media_meta.mime") === "image/jpeg" &&
-            col("media_meta.width") === 24 && col("media_meta.height") === 16 &&
-            element_at(col("features"),
-              (col("frame_index") * lit(60) / lit(32) + 1).cast("int")) > 0.99f)
-            .as("ok"))
-        .orderBy("doc_id", "frame_id")
-    },
-    "q201_wordcounts_ingest" -> withViews("documents") { (spark, ctx) =>
-      // Persistent word-count table under the FULL ORACLE
-      // (llm/WordCounts): the trainable state all three tokenizers consume,
-      // kept warm by exact count addition. The engine writes batch A
-      // (even doc_ids), ingests batch B (odd doc_ids) — never re-reading
-      // A's text — and outputs the resulting table (cnt ≥ 5 to bound
-      // rows); DuckDB counts ONCE over the whole corpus: byte-for-byte
-      // equality pins write+ingest ≡ one-shot cross-engine, the same
-      // incremental contract as q190/q198 for the tokenizer tier.
-      import graft.llm.WordCounts
-      val docs = ctx.view("documents")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_q201_wc_").toString + "/wc"
-      WordCounts.write(docs.filter(col("doc_id") % 2 === 0), "text", path)
-      WordCounts.ingest(docs.filter(col("doc_id") % 2 === 1), "text", path)
-      WordCounts.read(spark, path)
-        .filter(col("cnt") >= 5)
-        .select(col("word"), col("cnt"))
-        .orderBy("word")
-    },
-    "q207_char_entropy" -> withViews("documents") { (spark, ctx) =>
-      // Character-entropy quality signal under the FULL ORACLE
-      // (functions/CharEntropyExpr): gibberish/binary spill runs HIGH,
-      // single-char padding runs LOW, natural language sits in a stable
-      // band — a standard prune signal next to q34's length/punct
-      // features. The native codegen'd expression sums per code point in
-      // FIXED ascending order, so matching DuckDB's unnest-and-aggregate
-      // entropy to 6 decimals is safe (the cross-engine spread is
-      // ulp-level sum-order noise).
-      import graft.functions.CharEntropyExpr.char_entropy
-      ctx.view("documents")
-        .select(col("doc_id"),
-          round(char_entropy(col("text")), 6).as("char_entropy"))
-        .orderBy("doc_id")
-    },
-    "q208_deflate_quality" -> withViews("documents") { (spark, ctx) =>
-      // Compression-ratio quality signal, self-verifying (zlib has no
-      // DuckDB counterpart — functions/DeflateRatioExpr, the Gopher-style
-      // boilerplate heuristic): `ok` carries the contract in-band per
-      // document — (1) for non-tiny docs (≥ 64 chars — below that zlib's
-      // ~8-byte wrapper dominates and the ratio exceeds 1 freely) the
-      // ratio lands in (0, 1.5]; (2) the SAME text repeated 4× compresses
-      // STRICTLY better — asserted only for docs ≤ 32 KB of UTF-8 BYTES
-      // (octet_length, not character count — deflate's window is a byte
-      // window and multi-byte text is up to 4× its char count), where the
-      // window provably sees a whole earlier copy (beyond that the
-      // repeats fall outside it and only header/Huffman amortization
-      // remains, which is not strict); (3) an independent re-evaluation
-      // yields the identical double (zlib determinism at a fixed level).
-      import graft.functions.DeflateRatioExpr.deflate_ratio
-      ctx.view("documents")
-        .select(col("doc_id"), col("text"),
-          deflate_ratio(col("text")).as("ratio"),
-          deflate_ratio(concat(col("text"), col("text"), col("text"),
-            col("text"))).as("ratio4"),
-          deflate_ratio(col("text")).as("_ratio_again"))
-        .select(col("doc_id"), round(col("ratio"), 6).as("ratio"),
-          round(col("ratio4"), 6).as("ratio4"),
-          (col("ratio") > 0.0 &&
-            (length(col("text")) < 64 || col("ratio") <= 1.5) &&
-            col("_ratio_again") === col("ratio") &&
-            (length(col("text")) < 8 || octet_length(col("text")) > 32768 ||
-              col("ratio4") < col("ratio"))).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q206_video_audio_track" -> withViews("documents") { (spark, ctx) =>
-      // AVI AUDIO-track extraction, self-verifying — the bridge from the
-      // video container to the whole audio pipeline: per-row MJPEG+PCM
-      // clips are GENERATED (3 solid frames @25 fps + 100 ms of 16-bit
-      // mono 8 kHz PCM as stream 1), the audio track is extracted to a
-      // standalone WAV (header assembly + chunk copies, no transcode),
-      // REAL-decoded through the same javax.sound path as any WAV (rate/
-      // channels/frames/duration header-exact), then RESAMPLED to 16 kHz
-      // through the existing audio operator. `ok` pins: extraction
-      // status, the WAV decoding with exactly the embedded format
-      // (8000 Hz / 1 ch / 800 frames / 100 ms), the resample landing at
-      // exactly 1600 frames @16 kHz, and the VIDEO branch still parsing
-      // the clip (the added auds stream must not perturb the video walk).
-      import spark.implicits._
-      import graft.llm.Multimodal
-      val avis = ctx.view("documents").filter(col("doc_id") < 30)
-        .select(col("doc_id")).as[Long]
-        .map { id =>
-          val frames = (0 until 3).map { f =>
-            val shade = f * 80
-            val img = new java.awt.image.BufferedImage(
-              16, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val rgb = (shade << 16) | (shade << 8) | shade
-            (0 until 16).foreach(x => (0 until 16).foreach(y => img.setRGB(x, y, rgb)))
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "jpeg", bos)
-            bos.toByteArray
-          }
-          val pcm = new Array[Byte](1600) // 800 16-bit mono samples
-          var i = 0
-          while (i < 800) {
-            val v = ((id * 131 + i * 7) % 20000 - 10000).toInt
-            pcm(2 * i) = (v & 0xff).toByte
-            pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-            i += 1
-          }
-          (id, Multimodal.buildMjpegAviWithAudio(frames, 16, 16, 25, pcm, 8000, 1, 16))
-        }.toDF("doc_id", "blob")
-      val vmeta = Multimodal.decodeAndFeaturize(avis, "blob")
-        .select(col("doc_id"), col("blob"),
-          col("media_meta.mime").as("video_mime"),
-          col("media_meta.frames").as("video_frames"))
-      val ex = Multimodal.extractAudio(vmeta, "blob").drop("blob")
-      val wmeta = Multimodal.decodeAndFeaturize(ex, "audio_track")
-        .select(col("doc_id"), col("video_mime"), col("video_frames"),
-          col("audio_track"), col("audio_status"),
-          col("media_meta.mime").as("wav_mime"),
-          col("media_meta.sample_rate").as("wav_rate"),
-          col("media_meta.channels").as("wav_channels"),
-          col("media_meta.frames").as("wav_frames"),
-          col("media_meta.duration_ms").as("wav_ms"))
-      val rs = Multimodal.resampleAudio(wmeta, "audio_track", 16000)
-        .drop("audio_track")
-      Multimodal.decodeAndFeaturize(rs, "audio_resampled")
-        .select(col("doc_id"), col("audio_status"), col("wav_rate"),
-          col("wav_frames"), col("wav_ms"), col("resample_status"),
-          col("media_meta.frames").as("rs_frames"),
-          (col("audio_status") === "extracted" &&
-            col("video_mime") === "video/x-msvideo" &&
-            col("video_frames") === 3L &&
-            col("wav_mime") === "audio/wav" &&
-            col("wav_rate") === 8000 && col("wav_channels") === 1 &&
-            col("wav_frames") === 800L && col("wav_ms") === 100L &&
-            col("resample_status") === "ok" &&
-            col("media_meta.sample_rate") === 16000 &&
-            col("media_meta.frames") === 1600L).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q203_wordcounts_delete" -> withViews("documents") { (spark, ctx) =>
-      // Count-store takedown under the FULL ORACLE (llm/WordCounts.delete)
-      // — the inverse of q201's ingest, completing right-to-be-forgotten
-      // for the trainable state: the engine writes batch A (even doc_ids),
-      // ingests batch B (odd doc_ids), then DELETES batch B by exact
-      // integer count subtraction — never re-reading A's text — and
-      // outputs the resulting table. DuckDB counts ONCE over batch A
-      // alone: byte-for-byte equality pins delete(B) ∘ ingest(B) ≡
-      // identity cross-engine, including zero-count rows being DROPPED
-      // (a B-only word surviving as cnt=0 would break the row match).
-      import graft.llm.WordCounts
-      val docs = ctx.view("documents")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_q203_wcd_").toString + "/wc"
-      WordCounts.write(docs.filter(col("doc_id") % 2 === 0), "text", path)
-      WordCounts.ingest(docs.filter(col("doc_id") % 2 === 1), "text", path)
-      WordCounts.delete(docs.filter(col("doc_id") % 2 === 1), "text", path)
-      WordCounts.read(spark, path)
-        .filter(col("cnt") >= 3)
-        .select(col("word"), col("cnt"))
-        .orderBy("word")
-    },
-    "q204_nb_unlearn" -> withViewsDirPar("documents") { (spark, ctx, sfDir) =>
-      // Classifier takedown under the FULL ORACLE (llm/NaiveBayes.unlearn)
-      // — the inverse of q198's ingest: the engine persists
-      // train(A ∪ B), unlearns batch B through the on-disk model by exact
-      // count subtraction, and predicts the corpus with what remains. The
-      // oracle trains ONCE over batch A alone (q198's SQL, train set
-      // restricted) — passing byte-for-byte pins
-      // unlearn(train(A ∪ B), B) ≡ train(A) cross-engine, predictions
-      // included: the model provably no longer remembers B.
-      import graft.llm.NaiveBayes
-      val base = ctx.view("documents").select(col("doc_id"),
-        when(col("doc_id") % 3 === 0, lit("promo"))
-          .otherwise(lit("clean")).as("label_true"),
-        concat(col("text"),
-          when(col("doc_id") % 3 === 0,
-            lit(" subscribe now limited offer click here"))
-            .otherwise(lit(" method results analysis discussion further")))
-          .as("text2"))
-      val batchA = base.filter((col("doc_id") % 5).isin(1, 2))
-      val batchB = base.filter((col("doc_id") % 5).isin(3, 4))
-      // train(A ∪ B) + write is the FIXTURE; unlearn (the on-disk count
-      // subtraction) is the operation under test and MUTATES the store —
-      // the q191/q202/q205/q210 freshStores discipline (build once per
-      // (JVM, sfDir), hand each run a pristine copy; training is
-      // deterministic so results are unchanged)
-      val path = freshStores("q204", sfDir) { d =>
-        NaiveBayes.write(
-          NaiveBayes.train(batchA.unionByName(batchB), "text2", "label_true"),
-          s"$d/model")
-      } + "/model"
-      val unlearned = NaiveBayes.unlearn(batchB, "text2", "label_true", path)
-      val pred = NaiveBayes.predict(base, "doc_id", "text2", unlearned)
-      base.select(col("doc_id"), col("label_true"))
-        .join(pred, Seq("doc_id"))
-        .select(col("doc_id"), col("label_true"), col("label_pred"),
-          col("n_tokens"))
-        .orderBy("doc_id")
-    },
-    "q200_video_transcode" -> withViews("documents") { (spark, ctx) =>
-      // REAL video transcode, self-verifying: the q199 clips (5 solid
-      // frames, shades 0/60/120/180/240, 24×16 @ 25 fps) run through
-      // Multimodal.transcodeVideo to 12×8 — every frame REALLY decodes,
-      // rescales and re-encodes, and the clip re-containers at the source
-      // rate — then the OUTPUT is decoded and frame-sampled like any other
-      // clip. `ok` pins: transcode status, the output parsing as video
-      // with the NEW dims but the SOURCE frame count and duration
-      // (5 frames / 200 ms — timing must survive the rewrite), and each
-      // sampled output frame's luminance still concentrated in the bin of
-      // the shade its SOURCE frame was encoded from (content survives the
-      // decode→rescale→re-encode round trip; a container-only rewrite or a
-      // fabricated payload fails the bin pin).
-      import spark.implicits._
-      import graft.llm.Multimodal
-      val avis = ctx.view("documents").filter(col("doc_id") < 30)
-        .select(col("doc_id")).as[Long]
-        .map { id =>
-          val frames = (0 until 5).map { f =>
-            val shade = f * 60
-            val img = new java.awt.image.BufferedImage(
-              24, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val rgb = (shade << 16) | (shade << 8) | shade
-            (0 until 24).foreach(x => (0 until 16).foreach(y => img.setRGB(x, y, rgb)))
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "jpeg", bos)
-            bos.toByteArray
-          }
-          (id, Multimodal.buildMjpegAvi(frames, 24, 16, fps = 25))
-        }.toDF("doc_id", "blob")
-      val tr = Multimodal.transcodeVideo(avis, "blob", 12, 8)
-        .select(col("doc_id"), col("transcoded"), col("transcode_status"))
-      val meta = Multimodal.decodeAndFeaturize(tr, "transcoded")
-        .select(col("doc_id"), col("transcoded"), col("transcode_status"),
-          col("media_meta.mime").as("video_mime"),
-          col("media_meta.width").as("vw"), col("media_meta.height").as("vh"),
-          col("media_meta.frames").as("n_frames"),
-          col("media_meta.duration_ms").as("duration_ms"))
-      val frames = Multimodal.sampleFrames(meta, "transcoded", 3)
-      Multimodal.decodeAndFeaturize(frames.drop("transcoded"), "frame_bytes")
-        .select(col("doc_id"), col("frame_id"), col("frame_index"),
-          col("n_frames"), col("duration_ms"),
-          (col("transcode_status") === "transcoded" &&
-            col("video_mime") === "video/x-msvideo" &&
-            col("vw") === 12 && col("vh") === 8 &&
-            col("n_frames") === 5L && col("duration_ms") === 200L &&
-            col("frame_status") === "avi" &&
-            col("frame_index") === (col("frame_id") - 1) * 2 &&
-            col("media_meta.width") === 12 && col("media_meta.height") === 8 &&
-            element_at(col("features"),
-              (col("frame_index") * lit(60) / lit(32) + 1).cast("int")) > 0.9f)
-            .as("ok"))
-        .orderBy("doc_id", "frame_id")
-    },
-    "q193_ann_recall_report" -> { (spark: SparkSession, dir: String) =>
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("embeddings")), ctx)
-      // ANN quality evaluation (llm/IvfIndex.recallProbe): the faiss-style
-      // recall@k report every deployment runs before trusting an
-      // approximate retrieval tier — sampled queries, probed search vs
-      // exact brute force, swept over probe breadth and the three storage
-      // tiers (flat / SQ8 codes / PQ codes) of the shared q147 index.
-      // KMeans is engine-specific -> rows-only, but the report carries
-      // EXACT in-band oracles: (1) recall bounds; (2) flat recall is
-      // MONOTONE in nprobe — topk(C) ∩ topk(U) = C ∩ topk(U) for any
-      // candidate set C under exact scoring with a total-order tie-break,
-      // and the probed candidate set only grows with nprobe; (3)
-      // approximation must VANISH when its knobs are opened: exhaustive
-      // probe (flat) and exhaustive probe + covering shortlist (sq8/pq)
-      // give recall EXACTLY 1.0, else the index layout or rerank is broken.
-      import graft.llm.IvfIndex
-      import graft.llm.IvfIndex.RecallSetting
-      val em = ctx.view("embeddings")
-      val queries = em.filter(col("vec_id") % 29 === 0)
-      val idxDir = q147IndexDir(em, dir)
-      // ONE sweep call: the exact ground truth is computed once and shared
-      // (recallReport pins it), all hit counts land in one aggregate job
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("mode").orderBy("nprobe")
-      IvfIndex.recallReport(queries, "vec_id", "embedding", idxDir, k = 5,
-        Seq(RecallSetting("flat", 1), RecallSetting("flat", 8),
-          RecallSetting("sq8", 8, shortlistFactor = 1000),
-          RecallSetting("pq", 8, shortlistFactor = 1000)))
-        .withColumn("_prev", lag(col("recall"), 1).over(w))
-        .select(col("mode"), col("nprobe"), col("shortlist_factor"),
-          col("n_exact"), col("n_hit"), col("recall"),
-          (col("recall") >= 0.0 && col("recall") <= 1.0 &&
-            (col("nprobe") =!= 8 || col("recall") === 1.0) &&
-            coalesce(col("recall") >= col("_prev"), lit(true))).as("ok"))
-        .orderBy("mode", "nprobe")
-    },
-    "q194_nb_classifier" -> withViews("documents") { (spark, ctx) =>
-      // Model-based quality filtering under the FULL ORACLE
-      // (llm/NaiveBayes): the classifier step of a CCNet-style curation
-      // pipeline — train a text classifier on labeled docs, bucket the
-      // corpus by prediction — in its exact-count multinomial-NB form, the
-      // one classifier family whose training is reproducible cross-engine
-      // (every parameter is an integer count; gradient models depend on
-      // float iteration order). Labels and class-salt phrases derive
-      // deterministically from doc_id; the salts give macroscopic class
-      // margins, so the argmax is stable even though raw log-prob sums
-      // differ across engines in the last ulp — floats never leave the
-      // engine (output = predictions + integer counts only).
-      import graft.llm.NaiveBayes
-      val base = ctx.view("documents").select(col("doc_id"),
-        when(col("doc_id") % 3 === 0, lit("promo"))
-          .otherwise(lit("clean")).as("label_true"),
-        concat(col("text"),
-          when(col("doc_id") % 3 === 0,
-            lit(" subscribe now limited offer click here"))
-            .otherwise(lit(" method results analysis discussion further")))
-          .as("text2"))
-      val train = base.filter(col("doc_id") % 5 =!= 0)
-      val model = NaiveBayes.train(train, "text2", "label_true")
-      val pred = NaiveBayes.predict(base, "doc_id", "text2", model)
-      base.select(col("doc_id"), col("label_true"))
-        .join(pred, Seq("doc_id"))
-        .select(col("doc_id"), col("label_true"), col("label_pred"),
-          col("n_tokens"))
-        .orderBy("doc_id")
-    },
-    "q149_bloom_membership" -> withViews("documents") { (spark, ctx) =>
-      // Bloom-filter membership (llm/BloomSketch): the mergeable bitmap
-      // sketch next to HLL/CMS/histogram. Deterministic md5-prefix bit
-      // positions → the oracle reproduces membership bit-for-bit (the
-      // bitmap doesn't remember WHICH hash set a bit, so membership ≡ "all
-      // k positions are in the set of positions any build key touched").
-      // `ok` carries the no-false-negatives contract in-band.
-      import graft.llm.BloomSketch
-      val docs = ctx.view("documents")
-      val members = docs.filter(col("doc_id") % 3 === 0)
-      val sk = BloomSketch.build(members, col("doc_id"), bits = 65536L, hashes = 3)
-      BloomSketch.mightContain(sk, docs.select(col("doc_id")), col("doc_id"),
-          bits = 65536L, hashes = 3)
-        .withColumn("is_member", col("doc_id") % 3 === 0)
-        .withColumn("ok", col("might_contain") || !col("is_member"))
-        .select("doc_id", "is_member", "might_contain", "ok")
-        .orderBy("doc_id")
-    },
-    "q150_bloom_antijoin" -> withViews("lineitem", "orders") { (spark, ctx) =>
-      // Decontamination shape at scale: drop every lineitem whose order is
-      // in the urgent blocklist WITHOUT joining the full fact table — the
-      // Bloom bitmap (broadcast, ≤ bits/64 words) discards definite-nots
-      // locally; only maybes reach the exact anti-join, which scrubs the
-      // false positives. Result is EXACTLY the anti-join — the oracle is
-      // the plain NOT IN aggregate.
-      import graft.llm.BloomSketch
-      val li = ctx.view("lineitem")
-      val urgent = ctx.view("orders")
-        .filter(col("o_orderpriority") === "1-URGENT").select(col("o_orderkey"))
-      // 2^20 bits ≈ 17/key for sf0.1's ~60k urgent orders (fp ≈ 0.4%);
-      // bits size only the pre-filter's selectivity — the result is exact
-      // at any sizing, so the oracle (plain NOT IN) is unaffected
-      BloomSketch.antiJoin(li, col("l_orderkey"), urgent, col("o_orderkey"),
-          bits = 1L << 20, hashes = 3)
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))
-        .orderBy("l_returnflag")
-    },
-    "q151_lm_novelty" -> withViewsPar("documents") { (spark, ctx) =>
-      // Bigram LM novelty scoring (llm/LangModel): train counts on the
-      // English slice, score every document by exact unseen/rare-bigram
-      // statistics — the oracle-safe surface of the CCNet-style perplexity
-      // filter (ppl itself involves ln + a cross-partition double sum, so
-      // it is spec-tested, not oracle-hashed — the Relevance idf
-      // discipline).
-      import graft.llm.LangModel
-      val docs = ctx.view("documents")
-      val train = docs.filter(col("lang") === "en")
-      val bg = LangModel.bigramCounts(train, "text")
-      val ug = LangModel.unigramCounts(train, "text")
-      val v = ug.count()
-      LangModel.score(docs, "doc_id", "text", bg, ug, v)
-        .select("doc_id", "n_bigrams", "n_unseen", "n_rare", "novelty")
-        .orderBy("doc_id")
-    },
-    "q152_hist_drift" -> withViews("documents") { (spark, ctx) =>
-      // Distribution-drift monitor (HistSketch.drift): TV + L∞ distance
-      // between the English and non-English n_chars histograms, computed
-      // from ≤bins-row segments in exact common-denominator DECIMAL
-      // arithmetic (KL needs ln — not engine-safe; TV/L∞ are). COALESCE on
-      // lang so NULL-lang rows land deterministically in the non-English
-      // side in both engines.
-      import graft.llm.HistSketch
-      val docs = ctx.view("documents").filter(col("n_chars").isNotNull)
-      val en = docs.filter(coalesce(col("lang"), lit("")) === "en")
-      val rest = docs.filter(coalesce(col("lang"), lit("")) =!= "en")
-      HistSketch.drift(
-        HistSketch.segment(en, col("n_chars"), 0.0, 600.0, 32),
-        HistSketch.segment(rest, col("n_chars"), 0.0, 600.0, 32))
-    },
-    "q153_token_budget" -> withViews("documents") { (spark, ctx) =>
-      // Token-budget mixture (Sampling.tokenBudgetSample): each language
-      // contributes at most its token budget, rows chosen in salted-hash
-      // order — the unit real training mixes are specified in. Integer
-      // prefix sums are engine-exact, so the oracle reproduces the kept
-      // set bit-for-bit via the window formulation the slicedPrefix shape
-      // replaces at scale.
-      graft.llm.Sampling.tokenBudgetSample(
-          ctx.view("documents"), "lang", col("n_chars"),
-          Map("en" -> 60000L, "fr" -> 25000L), default = 15000L,
-          key = col("doc_id"), salt = "b1")
-        .select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("n_chars"))
-        .orderBy("doc_id")
-    },
-    "q154_dedup_best_copy" -> withViewsPar("documents") { (spark, ctx) =>
-      // Quality-aware duplicate retention (Dedup.exactBest): the q92
-      // duplicate class (formatting-perturbed copies, same normalized
-      // form), but the SURVIVOR is the longest raw copy — the perturbed
-      // one, 2 chars longer — not the smallest id. One shuffle on the
-      // normalized key, WindowGroupLimit-bounded.
-      val docs = ctx.view("documents").select(col("doc_id"), col("text"))
-      val noisy = docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 10000L).as("doc_id"),
-          concat(upper(col("text")), lit("!!")).as("text"))
-      graft.llm.Dedup.exactBest(
-          docs.unionByName(noisy)
-            .withColumn("_norm", graft.llm.TextStats.normalize(col("text"))),
-          Seq("_norm"), quality = length(col("text")), tiebreaker = "doc_id")
-        .select(col("doc_id"), length(col("text")).cast("long").as("quality"))
-        .orderBy("doc_id")
-    },
-    "q155_pq_topk" -> { (spark: SparkSession, dir: String) =>
-      configureReads(spark)
-      val ctx = new PipelineContext(spark)
-      Runner.run(extractStages(spark, dir, Seq("embeddings")), ctx)
-      // Product-quantization retrieval (llm/Pq): per-subspace KMeans
-      // codebooks, ADC (lookup-table) shortlist over the m-byte codes,
-      // exact float rescore of the shortlist only. KMeans is
-      // engine-specific → rows-only. Self-verifying like q148: with a
-      // shortlist covering every candidate the rescored result must equal
-      // brute force bit-for-bit — `ok` asserts same neighbor, same rank,
-      // same score (only the candidate ORDER entering the shortlist is
-      // approximate, never a returned score).
-      val em = ctx.view("embeddings")
-      val queries = em.filter(col("vec_id") < 5)
-      // codebooks memoized per (JVM, sfDir) like q147's index build: the
-      // bench min-of-2 measures encode+shortlist+rescore, not repeated
-      // KMeans fits (the q147 honest-timing discipline)
-      val cbs = q155Codebooks.computeIfAbsent(dir, _ =>
-        graft.llm.Pq.trainCodebooks(em, "vec_id", "embedding", dim = 64, m = 8, ksub = 16))
-      val ann = graft.llm.Pq.pqTopK(em, "vec_id", "embedding",
-        queries, "vec_id", "embedding", dim = 64, k = 5, m = 8, ksub = 16,
-        shortlistFactor = 400, codebooks = Some(cbs))
-      val exact = graft.llm.Similarity
-        .bruteForceTopK(em, "vec_id", "embedding", queries, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"),
-          col("score").as("_bf_score"), col("rank").cast("long").as("bf_rank"))
-      ann
-        .join(exact, Seq("query_id", "neighbor_id"), "left")
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"),
-          round(col("score"), 6).as("score"),
-          coalesce(
-            col("bf_rank") === col("rank") && abs(col("score") - col("_bf_score")) < 1e-12,
-            lit(false)).as("ok"))
-        .orderBy("query_id", "rank")
-    },
-    "q156_semdedup" -> withViews("embeddings") { (spark, ctx) =>
-      // SemDeDup (Dedup.semDedup): learned-cluster-bounded embedding dedup —
-      // only same-KMeans-cluster pairs are scored, transitive closure keeps
-      // each component's minimum id. The synthetic embeddings are i.i.d.
-      // (no natural near-dups, the q60 note), so exact copies of every 5th
-      // vector are unioned in as known duplicates. KMeans is
-      // engine-specific → rows-only. Self-verifying per row: a DROPPED
-      // vector must have a same-cluster partner with cosine ≥ tau (no
-      // false drops), and a KEPT vector must have no KEPT same-cluster
-      // partner ≥ tau (the dedup is maximal at pair level; the in-band
-      // check recomputes EXACT cosine over all same-cluster pairs).
-      val tau = 0.999
-      val em = ctx.view("embeddings").select(col("vec_id"), col("embedding"))
-      val dups = em.filter(col("vec_id") % 5 === 0)
-        .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
-      val all = em.unionAll(dups)
-      // ONE training: the report's cluster column is the assignment the
-      // dedup actually paired within, so the in-band check can't diverge
-      val report = graft.llm.Dedup
-        .semDedupReport(all, "vec_id", "embedding", nclusters = 8, tau = tau)
-      val rows = all.join(report, Seq("vec_id"))
-        .select(col("vec_id"), col("cluster"), col("embedding").as("_v"), col("kept"))
-      // exact within-cluster pair scores, both directions (a, partner)
-      val partners = rows.select(col("cluster"), col("vec_id"), col("_v"))
-        .join(rows.select(col("cluster"), col("vec_id").as("_pid"),
-          col("_v").as("_pv"), col("kept").as("_pkept")), Seq("cluster"))
-        .filter(col("vec_id") =!= col("_pid"))
-        .select(col("vec_id"),
-          graft.llm.Similarity.cosine(col("_v"), col("_pv")).as("_cos"),
-          col("_pkept"))
-      val verdict = partners.groupBy("vec_id").agg(
-        max(col("_cos")).as("_max_cos"),
-        max(when(col("_pkept"), col("_cos")).otherwise(lit(-2.0))).as("_max_kept_cos"))
-      rows.join(verdict, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cluster").cast("long").as("cluster"), col("kept"),
-          when(col("kept"), coalesce(col("_max_kept_cos") < tau, lit(true)))
-            .otherwise(coalesce(col("_max_cos") >= tau, lit(false))).as("ok"))
-        .orderBy("vec_id")
-    },
-    "q157_heavy_hitters" -> withViews("lineitem") { (spark, ctx) =>
-      // Misra–Gries heavy hitters (llm/HeavyHitters): per-partition MG
-      // summaries merged by key-sum — deterministic error bounds with
-      // memory independent of key cardinality. Estimates are partition-
-      // layout-dependent within the proven bounds → rows-only. The key is
-      // deliberately skewed (70% of rows on 3 hot keys, the rest spread
-      // across order keys) so true heavy hitters exist at every sf. Output:
-      // one row per TRUE heavy hitter (count > n/(cap+1) — a deterministic
-      // set). Self-verifying: `ok` asserts the hitter IS present in the
-      // sketch, est ≤ true, the deficit bound (true−est)·(cap+1) ≤ n —
-      // integer-exact — and (global soundness, folded into every row) est ≤
-      // true for EVERY key the sketch reports.
-      val cap = 16
-      val li = ctx.view("lineitem")
-      val keyed = li.select(
-        when(col("l_orderkey") % 10 < 7,
-          concat(lit("hot-"), (col("l_orderkey") % 3).cast("string")))
-          .otherwise(concat(lit("cold-"), col("l_orderkey").cast("string"))).as("key"))
-      val est = graft.llm.HeavyHitters.heavyHitters(keyed, col("key"), cap)
-      val truth = keyed.groupBy("key").agg(count(lit(1)).as("cnt"))
-      val n = keyed.count()
-      val sound = est.join(truth, Seq("key"))
-        .agg(min(col("est") <= col("cnt")).as("_sound"))
-      truth.filter(col("cnt") * (cap + 1) > n)
-        .join(est, Seq("key"), "left")
-        .crossJoin(broadcast(sound))
-        .select(col("key"), col("cnt"), col("est"),
-          (col("est").isNotNull && col("est") <= col("cnt") &&
-            (col("cnt") - col("est")) * (cap + 1) <= n && col("_sound")).as("ok"))
-        .orderBy("key")
-    },
-    "q63_sessionization" -> pipe("events")(
-      """WITH marked AS (
-          SELECT user_id, ts, event_id,
-                 CASE WHEN LAG(ts) OVER w IS NULL
-                        OR ts > LAG(ts) OVER w + INTERVAL 30 MINUTE
-                      THEN 1 ELSE 0 END AS new_session
-          FROM events
-          WHERE user_id <= 20
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), numbered AS (
-          SELECT user_id, ts,
-                 SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-          FROM marked
-        )
-        SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               MIN(ts) AS session_start, MAX(ts) AS session_end
-        FROM numbered
-        GROUP BY user_id, session_id
-        ORDER BY user_id, session_id"""
-    ),
-    "q59_fingerprints" -> withViews("documents") { (spark, ctx) =>
-      // xxhash64-based fingerprints have no DuckDB equivalent — rows-only,
-      // but self-verifying: `ok` asserts the fingerprint is collision-free
-      // on this corpus (all docs sharing an fp have the SAME normalized
-      // text — a degenerate fingerprint would collide distinct texts) and
-      // that winnowing yields fingerprints for any non-trivial text.
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-      ctx.view("documents")
-        .select(
-          col("doc_id"),
-          graft.llm.TextStats.fingerprint(col("text")).as("fp"),
-          size(graft.llm.TextStats.winnowingFingerprints(col("text"))).cast("long").as("n_winnow"),
-          graft.llm.TextStats.normalize(col("text")).as("_norm"))
-        .withColumn("ok",
-          (size(collect_set(col("_norm")).over(w)) === 1) &&
-            (col("n_winnow") >= 1 || length(col("_norm")) < 32))
-        .select(col("doc_id"), col("fp"), col("n_winnow"), col("ok"))
-        .orderBy("doc_id")
-    },
-    "q60_embedding_neardup" -> withViewsPar("embeddings") { (spark, ctx) =>
-      // Union with a shifted copy so true duplicate pairs exist (the synthetic
-      // embeddings are i.i.d.; no natural near-dups). Rows-only.
-      val em = ctx.view("embeddings").select(col("vec_id"), col("embedding"))
-      val shifted = em.select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
-      graft.llm.Dedup
-        .embeddingNearDupPairs(em.unionAll(shifted), "vec_id", "embedding",
-          dim = 64, planes = 6, threshold = 0.99)
-        .select(col("idA"), col("idB"), round(col("cosine"), 4).as("cosine"),
-          // self-verifying: cosine is the EXACT similarity computed after
-          // candidate generation — ok pins the threshold + normalization
-          (col("cosine") >= 0.99 && col("idA") < col("idB")).as("ok"))
-        .orderBy("idA", "idB")
-    },
-    "q61_multimodal_decode" -> withViews("documents") { (spark, ctx) =>
-      // Binary-column pipeline: text bytes stand in for media blobs; decode
-      // metadata + fixed-width features via mapPartitions (stubbed codec).
-      val blobs = ctx.view("documents")
-        .filter(col("doc_id") < 50)
-        .select(col("doc_id"), col("text").cast("binary").as("blob"))
-      graft.llm.Multimodal
-        .decodeAndFeaturize(blobs, "blob")
-        .select(col("doc_id"), col("media_meta.width").as("width"),
-          col("media_meta.height").as("height"), size(col("features")).cast("long").as("n_features"),
-          // self-verifying: the stub codec's contract — plausible dims, an
-          // 8-dim feature vector, every feature in [0,1] — checks the
-          // mapPartitions plumbing (schema, batch shape, row alignment)
-          (col("media_meta.width").between(1, 1920) &&
-            col("media_meta.height").between(1, 1080) &&
-            size(col("features")) === 8 &&
-            forall(col("features"), f => f >= 0f && f <= 1f)).as("ok"))
-        .orderBy("doc_id")
-    },
-    "q65_dedup_cc" -> withViews("documents") { (spark, ctx) =>
-      // Connected components oracle-checked end-to-end: build pairs from
-      // exact-fingerprint star links, run the iterative CC, emit each doc's
-      // component. Equivalent (and DuckDB-checkable) as MIN(doc_id) OVER
-      // (PARTITION BY fingerprint).
-      val fp = ctx.view("documents")
-        .withColumn("_fp", md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("_fp"))
-      val pairs = fp
-        .withColumn("_m", min(col("doc_id")).over(w))
-        .filter(col("doc_id") =!= col("_m"))
-        .select(col("_m").as("idA"), col("doc_id").as("idB"))
-      val labels = graft.llm.Dedup.connectedComponents(pairs)
-      fp.select(col("doc_id"))
-        .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"))
-        .orderBy("doc_id")
-    },
-    "q64_approx_sketches" -> withViews("lineitem") { (spark, ctx) =>
-      // HLL + approximate percentile: nondeterministic across engines by
-      // design — rows-only, but self-verifying: the EXACT distinct count
-      // rides next to the HLL estimate (bound: default rsd 0.05 → 3σ =
-      // 15%), and the approximate median is verified by its exact RANK —
-      // the fraction of rows at or below p50_approx must sit in
-      // [0.45, 0.55]. The rank check is a hash aggregation over a second
-      // scan (broadcast of 3 group rows), NOT an exact-percentile sort —
-      // a per-group sort of the fact table is exactly the operation the
-      // sketch exists to avoid, and was a 6× bench regression when tried.
-      val li = ctx.view("lineitem")
-      val sketched = li
-        .groupBy("l_returnflag")
-        .agg(
-          approx_count_distinct(col("l_partkey")).as("approx_parts"),
-          count_distinct(col("l_partkey")).as("exact_parts"),
-          percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000)).as("p50_approx"))
-      val rankCheck = li
-        .join(broadcast(sketched.select(col("l_returnflag"), col("p50_approx"))), Seq("l_returnflag"))
-        .groupBy("l_returnflag")
-        .agg((sum(when(col("l_extendedprice") <= col("p50_approx"), 1L).otherwise(0L))
-          .cast("double") / count(lit(1)).cast("double")).as("_frac_below"))
-      sketched
-        .join(rankCheck, Seq("l_returnflag"))
-        .select(
-          col("l_returnflag"), col("approx_parts"), col("exact_parts"), col("p50_approx"),
-          (abs(col("approx_parts") - col("exact_parts")).cast("double") /
-            col("exact_parts").cast("double") <= 0.15 &&
-            col("_frac_below").between(0.45, 0.55)).as("ok"))
-        .orderBy("l_returnflag")
-    },
-    "q72_exists_correlated" -> pipe("customer", "orders")(
-      """SELECT c_custkey, c_name
-        FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)
-        ORDER BY c_custkey"""
-    ),
-    "q73_map_struct_ops" -> pipe("orders")(
-      // Map/struct construction + field access (oracle computes the flattened
-      // values directly — the check is that Spark's collection ops are
-      // value-preserving round trips).
-      """SELECT o_orderkey,
-               element_at(map_from_arrays(array('status','priority'),
-                                          array(o_orderstatus, o_orderpriority)), 'status') AS status_v,
-               (named_struct('k', o_orderkey, 'p', o_totalprice)).p AS price_v,
-               map_keys(map_from_arrays(array('a','b'), array(1, 2)))[0] AS first_key
-        FROM orders
-        WHERE o_orderkey <= 300
-        ORDER BY o_orderkey"""
-    ),
-    "q74_decimal_exact" -> pipe("lineitem")(
-      // Decimal arithmetic under test, INTEGER transport across the oracle
-      // boundary. Three rounds of hash-mismatch taught the lesson: the
-      // driver's DuckDB is a different build than the local 1.0.0 (the r05
-      // formulation was verified bit-identical locally yet still failed the
-      // driver), and decimal division/representation semantics vary by
-      // engine VERSION, not just by engine. So the Spark side exercises the
-      // full decimal path — FLOOR-derived exact decimals, exact multiply,
-      // dyadic-terminating divide, widening casts — and then converts each
-      // result to scale-0 integer units (×10^scale → BIGINT, exact because
-      // every value terminates within its scale). The oracle computes the
-      // SAME integers with pure BIGINT arithmetic: no decimal type ever
-      // crosses the comparison, so there is nothing version-dependent left
-      // to disagree on. unit_price stays DOUBLE: IEEE-754 division is
-      // bit-identical across engines (same approach as q35/q79).
-      // Spark's own decimal semantics (scales, HALF_UP, overflow) are
-      // pinned separately in DecimalSpec.
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
-               CAST(CAST(FLOOR(l_extendedprice * 100) AS BIGINT) * CAST(0.01 AS DECIMAL(3,2)) * 100 AS BIGINT) AS price_cents,
-               CAST(CAST(FLOOR(l_extendedprice * 100) AS BIGINT) * CAST(FLOOR(l_discount * 100) AS BIGINT) * CAST(0.0001 AS DECIMAL(5,4)) * 10000 AS BIGINT) AS disc_amt_du,
-               CAST(CAST(CAST(CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS DECIMAL(30,8)) / 4 AS DECIMAL(38,4)) * 100 AS BIGINT) AS quarter_centi,
-               CAST(l_extendedprice AS DOUBLE) / CAST(NULLIF(l_quantity, 0) AS DOUBLE) AS unit_price
-        FROM lineitem
-        WHERE l_orderkey <= 100
-        ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice"""
-    ),
-    "q75_unpivot" -> pipe("orders")(
-      """WITH base AS (
-          SELECT o_orderpriority,
-                 CAST(COUNT(*) AS BIGINT) AS n_orders,
-                 CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-                 CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o
-          FROM orders GROUP BY o_orderpriority)
-        SELECT o_orderpriority, metric, val
-        FROM base UNPIVOT (val FOR metric IN (n_orders, n_f, n_o))
-        ORDER BY o_orderpriority, metric"""
-    ),
-    "q76_nullsafe_join" -> pipe("orders")(
-      """SELECT a.o_orderkey AS k1, b.o_orderkey AS k2
-        FROM (SELECT o_orderkey, NULLIF(o_orderstatus, 'P') AS s
-              FROM orders WHERE o_orderkey <= 100) a
-        JOIN (SELECT o_orderkey, NULLIF(o_orderstatus, 'P') AS s
-              FROM orders WHERE o_orderkey BETWEEN 101 AND 200) b
-          ON a.s <=> b.s
-        ORDER BY k1, k2"""
-    ),
-    "q77_gap_fill" -> pipe("orders")(
-      """WITH days AS (
-          SELECT explode(sequence(DATE'1995-01-01', DATE'1995-03-01', interval 1 day)) AS d
-        ), daily AS (
-          SELECT CAST(o_orderdate AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS n
-          FROM orders GROUP BY CAST(o_orderdate AS DATE))
-        SELECT days.d, COALESCE(daily.n, 0) AS n_orders
-        FROM days LEFT JOIN daily ON days.d = daily.d
-        ORDER BY days.d"""
-    ),
-    "q78_regexp_extract_all" -> pipe("documents")(
-      """SELECT doc_id,
-               CAST(size(regexp_extract_all(text, '[A-Za-z]+', 0)) AS BIGINT) AS n_words,
-               array_join(slice(regexp_extract_all(text, '[0-9]+', 0), 1, 3), ',') AS first_nums
-        FROM documents
-        WHERE doc_id < 200
-        ORDER BY doc_id"""
-    ),
-    "q79_median" -> pipe("orders")(
-      """SELECT o_orderpriority,
-               CAST(MEDIAN(o_totalprice) AS DOUBLE) AS med_price,
-               CAST(MEDIAN(o_orderkey) AS DOUBLE) AS med_key
-        FROM orders
-        GROUP BY o_orderpriority
-        ORDER BY o_orderpriority"""
-    ),
-    "q80_bitwise" -> pipe("orders")(
-      """SELECT o_orderkey,
-               CAST(o_orderkey & 255 AS BIGINT) AS band,
-               CAST(o_orderkey | 4096 AS BIGINT) AS bor,
-               CAST(o_orderkey ^ 21 AS BIGINT) AS bxor,
-               CAST(SHIFTLEFT(o_orderkey, 3) AS BIGINT) AS shl
-        FROM orders
-        WHERE o_orderkey <= 300
-        ORDER BY o_orderkey"""
-    ),
-    "q81_hash_sample" -> withViews("documents") { (spark, ctx) =>
-      // Deterministic md5-prefix sampling (retry-stable, cross-table aligned);
-      // oracle replays the identical hash threshold in DuckDB.
-      graft.llm.Sampling
-        .hashSample(ctx.view("documents"), col("doc_id"), 0.1, "s1")
-        .select(col("doc_id"))
-        .orderBy("doc_id")
-    },
-    "q82_sequence_packing" -> withViews("documents") { (spark, ctx) =>
-      // Greedy whole-doc packing into 512-token windows, 8 shards; the oracle
-      // replays the same sequential recurrence as a recursive CTE.
-      val base = ctx.view("documents")
-        .filter(col("doc_id") < 1000)
-        .select(col("doc_id"), (col("doc_id") % 8).as("shard"),
-          size(split(trim(col("text")), "\\s+")).cast("long").as("toks"))
-      graft.llm.Packing
-        .packGreedy(base, "shard", "doc_id", "toks", 512)
-        .select(col("shard"), col("doc_id"), col("toks"), col("pack_id"))
-        .orderBy("shard", "doc_id")
-    },
-    "q83_group_cap" -> withViews("orders") { (spark, ctx) =>
-      graft.llm.Sampling
-        .groupCap(ctx.view("orders"), Seq("o_orderpriority"), Seq(col("o_orderkey")), 50)
-        .select(col("o_orderkey"), col("o_orderpriority"))
-        .orderBy("o_orderkey")
-    },
-    "q84_stratified_sample" -> withViews("customer") { (spark, ctx) =>
-      graft.llm.Sampling
-        .stratifiedExact(ctx.view("customer"), Seq("c_mktsegment"), col("c_custkey"), 0.1, "z")
-        .select(col("c_custkey"), col("c_mktsegment"))
-        .orderBy("c_custkey")
-    },
-    "q85_ngram_jaccard" -> withViews("documents") { (spark, ctx) =>
-      // Exact token-bigram Jaccard via the scalable inverted-index shape:
-      // explode grams → equi-join on the gram (one shuffle, no all-pairs
-      // cross product) → per-pair intersection counts → union by inclusion-
-      // exclusion. This is the ORACLE-CHECKED companion of q36: at corpus
-      // scale the same pair generation runs through MinHash banding with
-      // capped buckets (Dedup.minhashPairs); hot grams here are the same
-      // skew hazard stop-gram filtering / capping addresses there. The
-      // doc_id bound keeps the oracle comparison tractable; jaccard divides
-      // BIGINT counts in DOUBLE (IEEE-identical across engines).
-      //
-      // DataFrame (not pipe/SQL) deliberately: the SQL form benched 13 s at
-      // sf0.1 on 128 docs — InferFiltersFromGenerate + CollapseProject
-      // inline the whole gram expression into lambdas, and interpreted HOFs
-      // re-evaluate captured subtrees per ELEMENT (the round-3 cliff).
-      // Let.bind makes the token array a lambda VARIABLE (once per row) and
-      // the repartition is a collapse barrier before explode: ~0.5 s.
-      val bigrams = graft.functions.Let.bind(
-        filter(split(lower(col("text")), "[^a-z0-9]+"), x => x =!= lit("")),
-        t =>
-          array_distinct(transform(
-            sequence(lit(1), size(t) - 1),
-            i => concat(element_at(t, i), lit(" "), element_at(t, i + lit(1))))))
-      val grams = ctx.view("documents").filter(col("doc_id") < 128)
-        .select(col("doc_id"), bigrams.as("g"))
-        .filter(size(col("g")) > 0)
-        .repartition(col("doc_id"))
-      val ex = grams.select(col("doc_id"), explode(col("g")).as("gram"))
-      val sizes = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = ex.as("a")
-        .join(ex.as("b"), col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(count(lit(1)).as("inter_cnt"))
-      inter.join(sizes.as("sa"), col("sa.doc_id") === col("id_a"))
-        .join(sizes.as("sb"), col("sb.doc_id") === col("id_b"))
-        .select(col("id_a"), col("id_b"), col("inter_cnt"),
-          (col("sa.n") + col("sb.n") - col("inter_cnt")).as("union_cnt"))
-        .withColumn("jaccard", col("inter_cnt").cast("double") / col("union_cnt").cast("double"))
-        .filter(col("jaccard") >= 0.08)
-        .orderBy("id_a", "id_b")
-    },
-    "q86_repetition_stats" -> withViews("documents") { (spark, ctx) =>
-      // Gopher-style repetition signals (TextStats.repetitionStats): explode →
-      // two map-side-combinable aggregations; fractions derived in DOUBLE from
-      // BIGINT counts (IEEE-identical across engines).
-      graft.llm.TextStats
-        .repetitionStats(ctx.view("documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    },
-    "q87_pii_scrub" -> pipe("customer")(
-      // PII scrubbing: mask multi-digit runs (ids, phone digits, account
-      // numbers) and count masked tokens — the redaction pass a training
-      // pipeline runs before ingestion. Pure codegen'd regexp functions
-      // (narrow map, scan speed); group 0 passed explicitly (Spark's
-      // regexp_extract_all defaults to group 1).
-      """SELECT c_custkey,
-               regexp_replace(c_name || ' ref=' || CAST(c_custkey * 7919 AS STRING), '[0-9]{2,}', '[NUM]') AS scrubbed,
-               CAST(size(regexp_extract_all(c_name || ' ref=' || CAST(c_custkey * 7919 AS STRING), '[0-9]{2,}', 0)) AS BIGINT) AS n_masked
-        FROM customer
-        ORDER BY c_custkey"""),
-    "q88_last_nonnull_window" -> pipe("events")(
-      // Forward-fill of a sparse signal: last click value carried forward per
-      // user. IGNORE NULLS window semantics (Spark: clause after the call;
-      // DuckDB oracle spells it inside the parens).
-      """SELECT event_id, user_id,
-               last_value(CASE WHEN event_type = 'click' THEN value END) IGNORE NULLS
-                 OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_click_value
-        FROM events
-        ORDER BY event_id"""),
-    "q89_corpus_report" -> pipe("documents")(
-      // The standard pre-training corpus audit: per (source, language) doc
-      // counts, size totals and exact length percentiles — one partial-agg
-      // shuffle on the group keys; the percentile is the only per-group
-      // sort-bound term (same cross-engine parity as q47).
-      """SELECT source, lang,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-               PERCENTILE(n_chars, 0.5) AS p50_chars,
-               PERCENTILE(n_chars, 0.9) AS p90_chars,
-               CAST(SUM(SIZE(SPLIT(TRIM(text), '\\s+'))) AS BIGINT) AS total_tokens
-        FROM documents
-        GROUP BY source, lang
-        ORDER BY source, lang"""),
-    "q71_range_join" -> withViews("orders", "lineitem") { (spark, ctx) =>
-      // Unkeyed range join: per early order, how many lineitems (any order)
-      // shipped within [o_orderdate, o_orderdate + 7 days). Spark's native
-      // plan for a pure BETWEEN predicate is a BroadcastNestedLoopJoin —
-      // O(n·m) at scale; RangeJoin tiles the time axis and runs a shuffled
-      // equi-join on the bucket id instead (plan pinned in RangeJoinSpec).
-      val week = 7L * 86400L * 1000000L // micros
-      val ordersF = ctx.view("orders").filter(col("o_orderkey") <= 2000)
-      val intervals = ordersF.select(
-        col("o_orderkey"),
-        unix_micros(col("o_orderdate")).as("_lo"),
-        (unix_micros(col("o_orderdate")) + week).as("_hi")
-      )
-      val points = ctx.view("lineitem").select(unix_micros(col("l_shipdate")).as("_t"))
-      val counts = graft.operators.RangeJoin
-        .pointInInterval(points, "_t", intervals, "_lo", "_hi", bucketWidth = week)
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_in_window"))
-      ordersF
-        .select("o_orderkey")
-        .join(counts, Seq("o_orderkey"), "left")
-        .select(col("o_orderkey"), coalesce(col("n_in_window"), lit(0L)).as("n_in_window"))
-        .orderBy("o_orderkey")
-    },
-    "q90_decontaminate" -> withViewsPar("documents") { (spark, ctx) =>
-      // Benchmark decontamination (Decontaminate.overlap): eval set = every
-      // 17th doc, train = the rest; a train doc is contaminated when it
-      // shares a word 4-gram with any eval doc. hashed=false here so the
-      // gram strings themselves are the join keys — bit-exact vs the SQL
-      // oracle; the at-scale path hashes grams to 8-byte keys
-      // (DecontaminateSpec pins hashed ≡ string results).
-      val docs = ctx.view("documents")
-      val evalSet = docs.filter(col("doc_id") % 17 === 0)
-      val train = docs.filter(col("doc_id") % 17 =!= 0)
-      graft.llm.Decontaminate
-        .overlap(train, "doc_id", "text", evalSet, "text", n = 4, hashed = false)
-        .orderBy("doc_id")
-    },
-    "q91_tfidf_topk" -> withViewsPar("documents") { (spark, ctx) =>
-      // Top-5 TF-IDF terms per document (Relevance.tfIdfTopK, rational idf:
-      // (tf·N)/df — every step an exact-rounded IEEE double op, so the score
-      // is bit-identical across engines; the log-idf variant is spec-tested
-      // instead). nDocs is a corpus constant, counted once up front.
-      val docs = ctx.view("documents")
-      val n = docs.count()
-      graft.llm.Relevance
-        .tfIdfTopK(docs, "doc_id", "text", n, k = 5)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy("doc_id", "rank")
-    },
-    "q92_normalized_dedup" -> withViewsPar("documents") { (spark, ctx) =>
-      // Near-exact dedup via canonical normalization (TextStats.normalize):
-      // the corpus is augmented with a deterministically perturbed copy of
-      // every 7th doc (upper-cased + punctuation noise — the "same document,
-      // different formatting" duplicate class); normalization collapses each
-      // copy back onto its original. One hash-agg shuffle on the normalized
-      // key, exactly the exact-dedup cost.
-      val docs = ctx.view("documents").select("doc_id", "text")
-      val noisy = docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 10000L).as("doc_id"),
-          concat(upper(col("text")), lit("!!")).as("text"))
-      docs.unionByName(noisy)
-        .groupBy(graft.llm.TextStats.normalize(col("text")).as("_norm"))
-        .agg(min("doc_id").as("keeper_id"), count(lit(1)).cast("long").as("n_copies"))
-        .select(col("keeper_id"), col("n_copies"),
-          length(col("_norm")).cast("long").as("norm_len"))
-        .orderBy("keeper_id")
-    },
-    "q93_salted_join" -> withViews("lineitem", "part") { (spark, ctx) =>
-      // Skew-safe shuffle join parity: Skew.saltedJoin spreads each key over
-      // `factor` reducers (deterministic payload-hash salt, right side
-      // exploded factor×) and must be a pure plan transformation — the
-      // oracle is the plain unsalted join. Decimal-summed quantities (exact,
-      // order-independent) per the q01 cross-engine pattern.
-      val li = ctx.view("lineitem")
-        .select(col("l_partkey").as("partkey"), col("l_quantity"))
-      val pt = ctx.view("part")
-        .select(col("p_partkey").as("partkey"), col("p_brand"))
-      graft.core.Skew.saltedJoin(li, pt, Seq("partkey"), factor = 8)
-        .groupBy("p_brand")
-        .agg(count(lit(1)).cast("long").as("n_rows"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))
-        .orderBy("p_brand")
-    },
-    "q94_weighted_sample" -> withViews("documents") { (spark, ctx) =>
-      // Quality-weighted downsampling (Sampling.weightedHashSample): keep
-      // probability ∝ document length here (stand-in for a quality score).
-      // Narrow map, no shuffle; threshold arithmetic is exact in doubles so
-      // the oracle reproduces the sample bit-for-bit.
-      graft.llm.Sampling
-        .weightedHashSample(ctx.view("documents"), col("doc_id"),
-          col("n_chars").cast("double") / 1000.0, salt = "w1")
-        .select(col("doc_id"), col("n_chars"))
-        .orderBy("doc_id")
-    },
-    "q95_mixture_sample" -> withViews("documents") { (spark, ctx) =>
-      // Target-mixture resampling (Sampling.mixtureExact): upweight two
-      // curated sources, downsample the rest to 5% — the "data mix" step
-      // before training. Exact per-group counts, hash-ordered choice.
-      graft.llm.Sampling
-        .mixtureExact(ctx.view("documents"), "source",
-          Map("src0" -> 0.5, "src1" -> 0.25), default = 0.05,
-          key = col("doc_id"), salt = "m1")
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id")
-    },
-    "q142_hist_quantiles" -> withViews("documents") { (spark, ctx) =>
-      // Mergeable histogram quantiles (llm/HistSketch): doc-length
-      // distribution binned 0..640 into 64 cells, p50/p90/p99 read off the
-      // cumulative histogram. Deterministic binning (3 IEEE ops) → the
-      // oracle rebuilds histogram and quantiles exactly.
-      import graft.llm.HistSketch
-      val hist = HistSketch.segment(ctx.view("documents"), col("n_chars"),
-        lo = 0.0, hi = 640.0, bins = 64)
-      HistSketch.quantiles(hist, Seq(0.5, 0.9, 0.99), lo = 0.0, hi = 640.0, bins = 64)
-        .orderBy("p")
-    },
-    "q146_hash_split" -> withViews("documents") { (spark, ctx) =>
-      // Deterministic train/val/test split (Sampling.hashSplit): banded
-      // salted-md5 labels, 80/10/10. Narrow map, no shuffle; the band
-      // thresholds are the same literals on both engines, so the oracle
-      // reproduces every label bit-for-bit.
-      graft.llm.Sampling
-        .hashSplit(ctx.view("documents"), col("doc_id"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "sp")
-        .select(col("doc_id"), col("split"))
-        .orderBy("doc_id")
-    },
-    "q145_weighted_interleave" -> withViews("documents") { (spark, ctx) =>
-      // Deterministic training-mix interleave (llm/Interleave): one total
-      // order where src0 appears at 4x and src1 at 2x the base rate —
-      // weighted round-robin via virtual time rank/weight, uniformly mixed
-      // from the first row. Exact-integer / literal-double division → both
-      // engines compute identical virtual times, hence the identical
-      // permutation.
-      graft.llm.Interleave
-        .weightedInterleave(ctx.view("documents"), "source",
-          Map("src0" -> 4.0, "src1" -> 2.0), default = 1.0,
-          key = col("doc_id"), salt = "i1")
-        .select(col("doc_id"), col("source"), col("pos"))
-        .orderBy("doc_id")
-    },
-    "q144_grouped_hist" -> withViews("documents") { (spark, ctx) =>
-      // Per-source histogram quantiles (HistSketch.segmentBy/quantilesBy):
-      // the length-distribution drift monitor — p50/p90 per corpus source,
-      // read off per-group cumulative histograms. Binning arithmetic is
-      // identical to q142 (3 correctly-rounded IEEE ops), so the oracle
-      // rebuilds every group's histogram and quantiles exactly; all windows
-      // are bounded by groups × bins, never by data.
-      import graft.llm.HistSketch
-      val hist = HistSketch.segmentBy(ctx.view("documents"), Seq("source"),
-        col("n_chars"), lo = 0.0, hi = 640.0, bins = 64)
-      HistSketch.quantilesBy(hist, Seq("source"), Seq(0.5, 0.9),
-        lo = 0.0, hi = 640.0, bins = 64)
-        .orderBy("source", "p")
-    },
-    "q143_json_roundtrip" -> pipe("documents")(
-      // Schema'd JSON round-trip — the TO_JSON(NAMED_STRUCT(...)) display
-      // idiom (reference Common.scala:373-377) plus the typed FROM_JSON
-      // read-back: serialize a nested struct + array per row, parse it back
-      // with an explicit schema, and surface BOTH the wire string and the
-      // re-extracted fields. The oracle pins the JSON byte-for-byte (both
-      // engines emit compact struct-ordered JSON) and the extraction
-      // value-for-value — a daily-hit surface previously covered only by
-      // get_json_object (q23). Nullable inputs are COALESCEd on BOTH sides:
-      // Spark's TO_JSON drops null fields while DuckDB emits "f":null, so
-      // byte parity must not depend on the testdata containing no NULLs.
-      """WITH enc AS (
-          SELECT doc_id,
-                 TO_JSON(NAMED_STRUCT(
-                   'id', doc_id, 'lang', COALESCE(lang, ''),
-                   'xs', ARRAY(COALESCE(CAST(n_chars AS BIGINT), 0),
-                               COALESCE(CAST(n_chars AS BIGINT), 0) + 1),
-                   'meta', NAMED_STRUCT('src', COALESCE(source, ''), 'bucket', doc_id % 7))) AS js
-          FROM documents),
-        dec AS (
-          SELECT doc_id, js,
-                 FROM_JSON(js,
-                   'id BIGINT, lang STRING, xs ARRAY<BIGINT>, meta STRUCT<src: STRING, bucket: BIGINT>') AS p
-          FROM enc)
-        SELECT doc_id, js, p.id AS rt_id, ELEMENT_AT(p.xs, 2) AS rt_x2,
-               p.meta.src AS rt_src, p.meta.bucket AS rt_bucket
-        FROM dec ORDER BY doc_id"""
-    ),
-    "q141_cms_frequency" -> withViews("lineitem") { (spark, ctx) =>
-      // Count-min sketch (llm/CmsSketch): per-supplier frequency estimates
-      // from a 4×256 matrix (width deliberately small so collisions occur
-      // and the one-sided error is exercised). Deterministic md5 hashing →
-      // the oracle rebuilds the identical matrix; `ok` carries the CMS
-      // guarantee est ≥ exact in-band.
-      import graft.llm.CmsSketch
-      val li = ctx.view("lineitem")
-      val sk = CmsSketch.build(li, col("l_suppkey"), depth = 4, width = 256)
-      val exact = li.groupBy(col("l_suppkey")).agg(count(lit(1)).as("exact_cnt"))
-      CmsSketch.estimate(sk, exact, col("l_suppkey"), depth = 4, width = 256)
-        .withColumn("ok", col("est") >= col("exact_cnt"))
-        .orderBy("l_suppkey")
-    },
-    "q140_pii_redaction" -> withViewsPar("documents") { (spark, ctx) =>
-      // PII scrub (llm/Redact): deterministic synthetic PII is appended from
-      // doc_id (the corpus itself is clean), then redacted and counted.
-      // Pure narrow projection — the oracle reproduces the redaction
-      // byte-for-byte because the patterns stay in the Java∩RE2 subset.
-      import graft.llm.Redact
-      val s = concat(
-        col("text"),
-        lit(" contact u"), col("doc_id").cast("string"),
-        lit("@example.com or +1 (415) 555-0199 at 10.0."),
-        (col("doc_id") % 256).cast("string"),
-        lit(".5 via https://ex.com/p/"), col("doc_id").cast("string"))
-      ctx.view("documents")
-        .withColumn("_s", s)
-        .withColumn("_red", Redact.redact(col("_s")))
-        .withColumn("_c", Redact.piiCounts(col("_s")))
-        .selectExpr("doc_id", "right(_red, 70) AS tail",
-          "_c.n_urls AS n_urls", "_c.n_emails AS n_emails",
-          "_c.n_phones AS n_phones", "_c.n_ips AS n_ips")
-        .orderBy("doc_id")
-    },
-    "q139_temperature_sample" -> withViews("documents") { (spark, ctx) =>
-      // Temperature-scaled mixture (Sampling.temperatureSample, α=0.5):
-      // kept counts ∝ √|group| over the skewed `lang` column — the dominant
-      // language is downweighted hardest, small ones kept nearly whole.
-      graft.llm.Sampling
-        .temperatureSample(ctx.view("documents"), "lang", scale = 3,
-          key = col("doc_id"), salt = "t1")
-        .select(col("doc_id"), col("lang"))
-        .orderBy("doc_id")
-    },
-    "q96_filtered_ann" -> withViews("embeddings") { (spark, ctx) =>
-      // Filtered retrieval: top-k cosine neighbors among corpus vectors
-      // passing a metadata predicate — the filter composes BEFORE scoring
-      // (Catalyst pushes it into the corpus scan), so the brute-force pass
-      // reads and scores only the eligible partition of the corpus. Same
-      // float-parity discipline as q35 (round 6dp, IEEE ops).
-      val em = ctx.view("embeddings")
-      graft.llm.Similarity
-        .bruteForceTopK(
-          em.filter(col("label").isin(0, 1, 2)), "vec_id", "embedding",
-          em.filter(col("vec_id") < 5), "vec_id", "embedding", 3)
-        .select(
-          col("query_id"),
-          col("rank").cast("long").as("rank"),
-          col("neighbor_id"),
-          round(col("score"), 6).as("score"))
-        .orderBy("query_id", "rank")
-    },
-    "q97_chunking" -> withViewsPar("documents") { (spark, ctx) =>
-      // Context-window chunking (Chunking.chunkByTokens): 32-token windows,
-      // 8-token overlap — documents become training-window pieces in one
-      // narrow map + explode, no shuffle. Window COUNT arithmetic runs in
-      // IEEE doubles on both engines (same ceil((n-32)/24) tree).
-      graft.llm.Chunking
-        .chunkByTokens(ctx.view("documents").select(col("doc_id"), col("text")),
-          "text", chunkSize = 32, overlap = 8)
-        .select(col("doc_id"), col("chunk_id"), col("n_chunks"),
-          col("chunk_tokens"), col("chunk_text"))
-        .orderBy("doc_id", "chunk_id")
-    },
-    "q98_deterministic_shuffle" -> withViews("documents") { (spark, ctx) =>
-      // Deterministic training-order shuffle with explicit positions
-      // (GlobalOrder.withGlobalPosition): salted-md5 rank, reproducible
-      // across reruns/retries, computed WITHOUT a SinglePartition window
-      // (range repartition + per-partition offsets; plan pinned in
-      // PlanSpec). The oracle is the naive global ROW_NUMBER.
-      graft.core.GlobalOrder
-        .withGlobalPosition(
-          ctx.view("documents").select(col("doc_id")),
-          Seq(md5(concat(col("doc_id").cast("string"), lit("sh1"))), col("doc_id")))
-        .select(col("pos"), col("doc_id"))
-        .orderBy("pos")
-    },
-    "q99_segment_dedup" -> withViewsPar("documents") { (spark, ctx) =>
-      // Paragraph/segment-level dedup stats (Dedup.segmentDupStats,
-      // CCNet/C4-style): docs scored by how many of their 8-word segments
-      // occur in other docs. Text never shuffles — only (doc_id, md5) pairs.
-      graft.llm.Dedup
-        .segmentDupStats(ctx.view("documents"), "doc_id", "text", segWords = 8)
-        .orderBy("doc_id")
-    },
-    "q100_vocab_topk" -> withViews("documents") { (spark, ctx) =>
-      // Corpus vocabulary build (Relevance.vocabulary): global top-50 tokens.
-      // One map-side-combined shuffle on token; the sort-limit runs over the
-      // distinct-token table only (TakeOrderedAndProject).
-      graft.llm.Relevance
-        .vocabulary(ctx.view("documents"), "text", 50)
-        .select(col("token"), col("n"), col("rank"))
-        .orderBy("rank")
-    },
-    "q101_resample_interpolate" -> withViews("events") { (spark, ctx) =>
-      // Time-series resample to a 6-hour grid with linear interpolation
-      // (Resample.resampleLinear): grid via per-key bounds agg + sequence()
-      // explode, surrounding observations via IGNORE NULLS windows,
-      // interpolation in exact epoch-micros + one IEEE divide (oracle-exact).
-      graft.operators.Resample
-        .resampleLinear(
-          ctx.view("events").filter(col("event_type") === "click"),
-          "user_id", "ts", "value", step = "6 hours")
-        .orderBy("user_id", "ts")
-    },
-    "q102_stats_profile" -> pipe("lineitem")(
-      // Correlation / covariance / regression-slope profile per group, all
-      // derived from EXACT integer power sums over cent units (a straight
-      // corr() over doubles is partition-order-dependent and would not
-      // oracle-match); the final combining arithmetic is the same IEEE
-      // expression tree on both engines. Cent units (scale-0 decimals)
-      // rather than DECIMAL(18,2) sums because a scaled decimal whose
-      // unscaled value exceeds 2^53 is cast to DOUBLE by dividing — TWO
-      // roundings in DuckDB vs one in Spark/BigDecimal; a scale-0 decimal is
-      // one correctly-rounded conversion in both. This is also how corr
-      // aggregates distribute: five power sums, one partial+final agg.
-      """WITH c AS (
-           SELECT l_returnflag,
-                  CAST(FLOOR(l_quantity * 100) AS BIGINT) AS qc,
-                  CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS pc
-           FROM lineitem),
-         s AS (
-           SELECT l_returnflag,
-                  CAST(COUNT(*) AS DOUBLE) AS n,
-                  CAST(SUM(qc) AS DOUBLE) AS sx,
-                  CAST(SUM(pc) AS DOUBLE) AS sy,
-                  CAST(SUM(CAST(qc AS DECIMAL(19,0)) * CAST(qc AS DECIMAL(19,0))) AS DOUBLE) AS sxx,
-                  CAST(SUM(CAST(pc AS DECIMAL(19,0)) * CAST(pc AS DECIMAL(19,0))) AS DOUBLE) AS syy,
-                  CAST(SUM(CAST(qc AS DECIMAL(19,0)) * CAST(pc AS DECIMAL(19,0))) AS DOUBLE) AS sxy
-           FROM c GROUP BY l_returnflag)
-         SELECT l_returnflag,
-                (n * sxy - sx * sy) / SQRT((n * sxx - sx * sx) * (n * syy - sy * sy)) AS corr_qty_price,
-                ((n * sxy - sx * sy) / (n * n)) / 10000.0 AS covar_pop,
-                (n * sxy - sx * sy) / (n * sxx - sx * sx) AS regr_slope
-         FROM s ORDER BY l_returnflag"""
-    ),
-    "q103_late_supplier_chain" -> pipe("supplier", "lineitem", "orders")(
-      // TPC-H Q21 shape (adapted to this schema: lateness = shipped >60 days
-      // after order date): join + EXISTS + NOT-EXISTS-with-join, the classic
-      // multi-semijoin optimizer stress. Catalyst plans both subqueries as
-      // hash semi/anti joins on l_orderkey — no per-row re-execution.
-      """SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-         FROM supplier s
-         JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-         JOIN orders o ON o.o_orderkey = l1.l_orderkey
-         WHERE o.o_orderstatus = 'F'
-           AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-           AND EXISTS (SELECT 1 FROM lineitem l2
-                       WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-           AND NOT EXISTS (SELECT 1 FROM lineitem l3 JOIN orders o3 ON o3.o_orderkey = l3.l_orderkey
-                           WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-                             AND l3.l_shipdate > o3.o_orderdate + INTERVAL 60 DAY)
-         GROUP BY s.s_name
-         ORDER BY numwait DESC, s_name
-         LIMIT 20"""
-    ),
-    "q104_min_cost_supplier" -> pipe("part", "lineitem", "supplier")(
-      // TPC-H Q2 shape: correlated scalar MIN subquery selecting, per part,
-      // the supplier(s) quoting the minimum unit price. Catalyst decorrelates
-      // to an aggregate + join; unit-price division is per-row IEEE double
-      // (bit-identical across engines).
-      """SELECT p.p_partkey, p.p_name, s.s_name, l.l_extendedprice / l.l_quantity AS unit_price
-         FROM part p
-         JOIN lineitem l ON l.l_partkey = p.p_partkey
-         JOIN supplier s ON s.s_suppkey = l.l_suppkey
-         WHERE p.p_size <= 5
-           AND l.l_quantity > 0
-           AND l.l_extendedprice / l.l_quantity = (
-             SELECT MIN(l2.l_extendedprice / l2.l_quantity) FROM lineitem l2
-             WHERE l2.l_partkey = p.p_partkey AND l2.l_quantity > 0)
-         ORDER BY p_partkey, s_name, unit_price"""
-    ),
-    "q105_profit_by_nation" -> pipe("lineitem", "part", "supplier", "nation", "orders")(
-      // TPC-H Q9 shape: 5-way join with a LIKE filter on the dimension and a
-      // per-nation-per-year profit rollup. Every term is cast to
-      // DECIMAL(30,6) (scales ≤ 5, so the casts never round) before the
-      // subtraction/sum so the aggregate is exact on both engines.
-      """SELECT n.n_name AS nation, CAST(YEAR(o.o_orderdate) AS BIGINT) AS o_year,
-                CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS DECIMAL(30,6))
-                         - CAST(CAST(CAST(l.l_quantity AS DECIMAL(18,2)) * CAST(p.p_retailprice AS DECIMAL(18,2)) AS DECIMAL(30,4)) * CAST(0.1 AS DECIMAL(2,1)) AS DECIMAL(30,6))) AS DOUBLE) AS profit
-         FROM lineitem l
-         JOIN part p ON p.p_partkey = l.l_partkey
-         JOIN supplier s ON s.s_suppkey = l.l_suppkey
-         JOIN nation n ON n.n_nationkey = s.s_nationkey
-         JOIN orders o ON o.o_orderkey = l.l_orderkey
-         WHERE p.p_name LIKE '%a%'
-         GROUP BY n.n_name, YEAR(o.o_orderdate)
-         ORDER BY nation, o_year"""
-    ),
-    "q106_argmax_by" -> pipe("customer", "nation")(
-      // argmax/argmin per group via max_by/min_by over a composite ordering
-      // struct (deterministic tie-break on the key). The oracle expresses the
-      // same thing as MAX/MIN of a struct — both are one partial+final agg.
-      """SELECT n.n_name,
-                max_by(c.c_name, named_struct('bal', c.c_acctbal, 'key', c.c_custkey)) AS top_customer,
-                MAX(c.c_acctbal) AS top_balance,
-                min_by(c.c_name, named_struct('bal', c.c_acctbal, 'key', c.c_custkey)) AS bottom_customer
-         FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey
-         GROUP BY n.n_name
-         ORDER BY n_name"""
-    ),
-    "q107_recursive_calendar" -> pipe("orders")(
-      // Recursive CTE (Spark 4 WITH RECURSIVE): build a month spine from the
-      // data's own bounds, LEFT JOIN back for a gap-free monthly rollup —
-      // empty months surface as zero rows. Recursion depth = #months
-      // (bounded, driver-side plan growth only); the heavy side stays one
-      // hash aggregate + join. Money sums travel as exact cent BIGINTs.
-      """WITH RECURSIVE bounds AS (
-           SELECT CAST(date_trunc('month', MIN(o_orderdate)) AS DATE) AS m0,
-                  CAST(date_trunc('month', MAX(o_orderdate)) AS DATE) AS m1
-           FROM orders),
-         months(m, mend) AS (
-           SELECT m0, m1 FROM bounds
-           UNION ALL
-           SELECT CAST(m + INTERVAL 1 MONTH AS DATE), mend FROM months WHERE m < mend
-         )
-         SELECT months.m, CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders,
-                CAST(COALESCE(SUM(CAST(FLOOR(o.o_totalprice * 100) AS BIGINT)), 0) AS BIGINT) AS cents
-         FROM months
-         LEFT JOIN orders o ON CAST(date_trunc('month', o.o_orderdate) AS DATE) = months.m
-         GROUP BY months.m
-         ORDER BY months.m"""
-    ),
-    "q108_time_range_window" -> pipe("orders")(
-      // Time-interval RANGE frame: trailing 28-day count/sum per customer —
-      // the moving-window-over-real-time shape (sessionized spend, rate
-      // limiting). RANGE frames include timestamp peers, so results are
-      // deterministic without a unique order key in the frame spec.
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-                CAST(COUNT(*) OVER (
-                  PARTITION BY o_custkey ORDER BY o_orderdate
-                  RANGE BETWEEN INTERVAL 28 DAY PRECEDING AND CURRENT ROW) AS BIGINT) AS n_28d,
-                CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) OVER (
-                  PARTITION BY o_custkey ORDER BY o_orderdate
-                  RANGE BETWEEN INTERVAL 28 DAY PRECEDING AND CURRENT ROW) AS BIGINT) AS cents_28d
-         FROM orders
-         WHERE o_custkey < 200
-         ORDER BY o_custkey, o_orderdate, o_orderkey"""
-    ),
-    "q109_histogram_bins" -> pipe("orders")(
-      // Equal-width histogram per group with a generated bin spine so empty
-      // bins surface as zero rows (the width_bucket recipe, written as
-      // explicit FLOOR arithmetic — the same IEEE expression both engines).
-      // bounds is a 1-row broadcast; the spine CROSS JOIN is |groups|×bins.
-      """WITH bounds AS (
-           SELECT MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi FROM orders),
-         binned AS (
-           SELECT o_orderpriority AS pri,
-                  CAST(LEAST(FLOOR((o_totalprice - lo) / ((hi - lo) / 10.0)), 9) AS BIGINT) AS b
-           FROM orders CROSS JOIN bounds),
-         spine AS (
-           SELECT pri, sb
-           FROM (SELECT DISTINCT o_orderpriority AS pri FROM orders) p
-           CROSS JOIN (SELECT explode(sequence(0, 9)) AS sb) bs)
-         SELECT spine.pri AS o_orderpriority, CAST(spine.sb AS BIGINT) AS bin,
-                CAST(COUNT(binned.b) AS BIGINT) AS n
-         FROM spine LEFT JOIN binned
-           ON binned.pri = spine.pri AND binned.b = spine.sb
-         GROUP BY spine.pri, spine.sb
-         ORDER BY 1, 2"""
-    ),
-    "q110_try_arithmetic" -> pipe("lineitem")(
-      // Error-safe arithmetic (ANSI try_* family): divide-by-zero, bad
-      // string→int casts, and BIGINT overflow all degrade to NULL instead of
-      // failing the job — the semantics a 100 TB batch needs (one poison row
-      // must not kill a stage). The oracle spells the same semantics with
-      // NULLIF/CASE/TRY_CAST.
-      """SELECT l_orderkey, l_linenumber,
-                try_divide(CAST(l_extendedprice AS DOUBLE), CAST(FLOOR(l_quantity) AS BIGINT) - 25) AS safe_div,
-                TRY_CAST(l_returnflag AS INTEGER) AS flag_num,
-                TRY_CAST(CONCAT(CAST(l_orderkey AS STRING), CAST(l_linenumber AS STRING)) AS INTEGER) AS digits,
-                try_add(9223372036854775707L, l_orderkey) AS near_max
-         FROM lineitem
-         WHERE l_orderkey <= 200
-         ORDER BY l_orderkey, l_linenumber"""
-    ),
-    "q111_count_distribution" -> pipe("customer", "orders")(
-      // TPC-H Q13 shape: distribution of per-customer order counts — a LEFT
-      // JOIN with a join-time filter (not a WHERE, which would drop the
-      // zero-order customers), then an aggregate OF an aggregate. Two
-      // shuffles: custkey, then c_count.
-      """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist FROM (
-           SELECT c.c_custkey, CAST(COUNT(o.o_orderkey) AS BIGINT) AS c_count
-           FROM customer c LEFT JOIN orders o
-             ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-           GROUP BY c.c_custkey) t
-         GROUP BY c_count
-         ORDER BY custdist DESC, c_count DESC"""
-    ),
-    "q112_distinct_listagg" -> pipe("orders")(
-      // Distinct ordered list aggregation: Spark spells it
-      // collect_set → sort_array → array_join (deterministic output without
-      // a listagg DISTINCT form); the oracle uses DuckDB's native
-      // string_agg(DISTINCT ... ORDER BY ...).
-      """SELECT o_orderpriority,
-                array_join(sort_array(collect_set(o_orderstatus)), ',') AS statuses,
-                CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS n_statuses
-         FROM orders
-         GROUP BY o_orderpriority
-         ORDER BY o_orderpriority"""
-    ),
-    "q113_token_gini" -> pipe("documents")(
-      // Per-source token-distribution diversity via Gini impurity
-      // (1 − Σ pᵢ² = 1 − Σcᵢ²/n²) — entropy's rational-arithmetic cousin.
-      // Σcᵢ² is summed as an EXACT integer (a float Σpᵢ² would be
-      // partition-order-dependent), leaving one IEEE divide at the end —
-      // bit-identical across engines and shuffles. The data-mixing signal:
-      // low diversity = templated/boilerplate source.
-      """WITH tc AS (
-           SELECT source, token, CAST(COUNT(*) AS BIGINT) AS c
-           FROM (SELECT source, explode(split(text, ' ')) AS token FROM documents)
-           WHERE token <> '' GROUP BY source, token),
-         tot AS (
-           SELECT source, SUM(c) AS n, SUM(c * c) AS sum_c2,
-                  CAST(COUNT(*) AS BIGINT) AS n_distinct
-           FROM tc GROUP BY source)
-         SELECT source,
-                CAST(n AS BIGINT) AS n_tokens,
-                n_distinct,
-                1.0 - CAST(sum_c2 AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS gini_diversity
-         FROM tot
-         ORDER BY source"""
-    ),
-    "q114_source_overlap" -> withViews("documents") { (spark, ctx) =>
-      // Cross-source contamination matrix (Dedup.crossGroupOverlap): distinct
-      // shared 8-word segments per source pair; fan-out bounded by the group
-      // count per segment, never by document counts.
-      graft.llm.Dedup
-        .crossGroupOverlap(ctx.view("documents"), "source", "text", segWords = 8)
-        .orderBy("source_a", "source_b")
-    },
-    "q115_lateral_topk" -> pipe("customer", "orders")(
-      // Correlated LATERAL subquery with ORDER BY + LIMIT: per-customer
-      // top-2 orders. Catalyst decorrelates to a ranked window join —
-      // no per-row subquery execution (same class as q104's scalar MIN).
-      """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-         FROM customer c,
-         LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-         ORDER BY c_custkey, o_totalprice DESC, o_orderkey"""
-    ),
-    "q116_line_filter" -> withViewsPar("documents") { (spark, ctx) =>
-      // C4-style line filtering (LineFilter.clean): keep lines with ≥3 words
-      // ending in terminal punctuation, flag code/lorem docs. Pure narrow
-      // projection — zero shuffles, scan-speed at 100 TB.
-      graft.llm.LineFilter
-        .clean(ctx.view("documents"), "doc_id", "text", minWords = 3, minLines = 1)
-        .orderBy("doc_id")
-    },
-    "q117_quantize_int8" -> withViewsPar("embeddings") { (spark, ctx) =>
-      // Symmetric absmax int8 quantization (Quantize.quantStats): integer
-      // code checksums + order-independent max reconstruction error. Narrow
-      // projection, zero shuffles; every arithmetic step a single IEEE op →
-      // bit-identical to the oracle.
-      graft.llm.Quantize
-        .quantStats(ctx.view("embeddings"), "vec_id", "embedding")
-        .orderBy("vec_id")
-    },
-    "q118_token_rarity" -> withViews("documents") { (spark, ctx) =>
-      // Corpus-frequency rarity profile (Relevance.tokenRarity): the
-      // LM-free stand-in for a perplexity filter. Integer sums all the way;
-      // one (doc,term) shuffle + one term-keyed frequency join.
-      graft.llm.Relevance
-        .tokenRarity(ctx.view("documents"), "doc_id", "text", rareThreshold = 2L)
-        .orderBy("doc_id")
-    },
-    "q119_segment_clean" -> withViewsPar("documents") { (spark, ctx) =>
-      // CCNet-style boilerplate-segment REMOVAL (Dedup.segmentClean): drop
-      // 8-word segments shared by >1 documents, re-join survivors in order.
-      // Text enters exactly one shuffle; frequency table is (hash, count).
-      graft.llm.Dedup
-        .segmentClean(ctx.view("documents"), "doc_id", "text", segWords = 8, maxDocFreq = 1L)
-        .orderBy("doc_id")
-    },
-    "q120_correlated_avg_filter" -> pipe("lineitem", "part")(
-      // TPC-H Q17 shape: correlated per-part average threshold. Catalyst
-      // decorrelates the scalar subquery into an aggregate + join on
-      // l_partkey — one pass over lineitem for the averages, no per-row
-      // subquery. Revenue carried as exact integer cents.
-      """SELECT CAST(SUM(CAST(FLOOR(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-               CAST(COUNT(*) AS BIGINT) AS n_small
-        FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-        WHERE p.p_brand = 'Brand#1'
-          AND l.l_quantity < (SELECT 0.2 * AVG(l2.l_quantity)
-                              FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)"""
-    ),
-    "q121_grouped_having_in" -> pipe("customer", "orders", "lineitem")(
-      // TPC-H Q18 shape: IN over a grouped-HAVING subquery (large-quantity
-      // orders), then a 3-way join + re-aggregation. The IN materializes as
-      // a semi-join on o_orderkey; quantities are integer-valued doubles →
-      // BIGINT sums are exact.
-      """SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_totalprice,
-               CAST(SUM(l.l_quantity) AS BIGINT) AS sum_qty
-        FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-                        JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
-                               GROUP BY l_orderkey
-                               HAVING SUM(l_quantity) > 150)
-        GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_totalprice
-        ORDER BY sum_qty DESC, o_orderkey"""
-    ),
-    "q122_exists_notexists_chain" -> pipe("supplier", "lineitem", "orders", "nation")(
-      // TPC-H Q21 shape: EXISTS (another supplier contributed to the order)
-      // AND NOT EXISTS (another supplier's line was returned) — two
-      // correlated set-predicates on the same join key, planned as one
-      // semi- and one anti-join on l_orderkey.
-      """SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-        FROM supplier s
-        JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-        JOIN orders o ON o.o_orderkey = l1.l_orderkey
-        JOIN nation n ON s.s_nationkey = n.n_nationkey
-        WHERE o.o_orderstatus = 'F'
-          AND l1.l_returnflag = 'R'
-          AND EXISTS (SELECT 1 FROM lineitem l2
-                      WHERE l2.l_orderkey = l1.l_orderkey
-                        AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                          WHERE l3.l_orderkey = l1.l_orderkey
-                            AND l3.l_suppkey <> l1.l_suppkey
-                            AND l3.l_returnflag = 'R')
-          AND n.n_nationkey < 15
-        GROUP BY s.s_name
-        ORDER BY numwait DESC, s_name"""
-    ),
-    "q123_global_avg_antijoin" -> pipe("customer", "orders")(
-      // TPC-H Q22 shape: segment buckets + uncorrelated scalar AVG threshold
-      // + NOT EXISTS anti-join. Balances compare as exact integer cents (a
-      // double AVG of raw balances would be partition-order-dependent).
-      """WITH cents AS (
-          SELECT c_custkey, c_custkey % 7 AS segment,
-                 CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS bal_cents
-          FROM customer)
-        SELECT segment, CAST(COUNT(*) AS BIGINT) AS numcust,
-               CAST(SUM(bal_cents) AS BIGINT) AS totbal_cents
-        FROM cents c
-        WHERE segment IN (1, 3, 5)
-          AND bal_cents > (SELECT AVG(bal_cents) FROM cents WHERE bal_cents > 0)
-          AND NOT EXISTS (SELECT 1 FROM orders o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderstatus = 'P' AND o.o_totalprice > 200000)
-        GROUP BY segment
-        ORDER BY segment"""
-    ),
-    "q124_quantized_topk" -> withViewsPar("embeddings") { (spark, ctx) =>
-      // Retrieval over QUANTIZED vectors: int8 codes, INTEGER dot-product
-      // scoring (exact, order-independent — quantization makes ANN scoring
-      // oracle-checkable, the float path q35 needs IEEE-parity care for).
-      // Same broadcast shape as bruteForceTopK: queries broadcast, corpus
-      // never shuffles.
-      import org.apache.spark.sql.expressions.Window
-      val emb = ctx.view("embeddings")
-      val codes = emb.select(
-        col("vec_id"),
-        graft.llm.Quantize.int8Codes(col("embedding")).as("codes"))
-      val q = codes.filter(col("vec_id") <= 2)
-        .select(col("vec_id").as("query_id"), col("codes").as("q_codes"))
-      val scored = codes
-        .crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(
-          col("query_id"), col("vec_id"),
-          aggregate(
-            zip_with(col("codes"), col("q_codes"), (a, b) => a.cast("long") * b.cast("long")),
-            lit(0L), (acc, x) => acc + x).as("dot_q"))
-      val w = Window.partitionBy(col("query_id")).orderBy(col("dot_q").desc, col("vec_id"))
-      scored
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .orderBy("query_id", "rank")
-    },
-    "q132_unicode_normalize" -> withViews("documents") { (spark, ctx) =>
-      // Native unicode_normalize (UnicodeNormalizeExpr — Spark has no
-      // built-in): every doc gets a DECOMPOSED suffix (e + combining acute,
-      // 2 code points) that NFC composes to é (1 code point) — n_nfc is
-      // exactly n_raw − 1 and the composed tail must read 'café' on both
-      // engines. Oracle: DuckDB nfc_normalize.
-      import graft.functions.UnicodeNormalizeExpr.unicode_normalize
-      val suffixed = concat(col("text"), lit(" café"))
-      ctx.view("documents")
-        .select(
-          col("doc_id"),
-          length(suffixed).cast("long").as("n_raw"),
-          length(unicode_normalize(suffixed)).cast("long").as("n_nfc"),
-          substring(unicode_normalize(suffixed), -4, 4).as("tail"))
-        .orderBy("doc_id")
-    },
-    "q131_asof_forward" -> withViews("events") { (spark, ctx) =>
-      // FORWARD as-of (AsOfJoin.keyedEarliestAfter): for each view event,
-      // the same user's next purchase at-or-after it — one shuffle keyed on
-      // user_id, mirrored union+window, no single-partition operator.
-      // Oracle: DuckDB keyed ASOF with the reversed inequality (ts <= ts).
-      val ev = ctx.view("events")
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("pts"))
-      graft.operators.AsOfJoin
-        .keyedEarliestAfter(views, "ts", Seq("user_id"), purchases, "pts", "next_purchase_ts")
-        .select(col("event_id"), col("next_purchase_ts"))
-        .orderBy("event_id")
-    },
-    "q125_bm25" -> withViewsPar("documents") { (spark, ctx) =>
-      // BM25 scoring against a fixed query-term set (Relevance.bm25,
-      // rational idf n/df — every step an exact-rounded IEEE double op).
-      // Contributions fold in term-lexicographic order, so the doc score is
-      // bit-identical across engines AND across Spark reruns; corpus
-      // constants (n, avgdl) are counted once up front like q91's.
-      val docs = ctx.view("documents")
-      val n = docs.count()
-      val tc = graft.llm.Relevance.termCounts(docs, "doc_id", "text")
-      val totalTokens = tc.agg(sum(col("tf"))).head().getLong(0)
-      graft.llm.Relevance
-        .bm25(docs, "doc_id", "text",
-          Seq("query", "scan", "spark", "window"),
-          nDocs = n, avgdl = totalTokens.toDouble / n.toDouble)
-        .orderBy("doc_id")
-    }
-  )
-
-  // ---------------------------------------------------------------------------
-  // DuckDB oracle SQL (ANSI; dialect-adjusted where needed).
-  // Omitted: q36/q37 (LSH — not SQL-expressible), covered rows-only + ScalaTest.
-  // ---------------------------------------------------------------------------
-
-  def oracleSql: Map[String, String] = Map(
-    "q168_hard_negatives" ->
-      // the q35 cosine-parity pattern + the label exclusion; rank ties on
-      // the STRING form of the neighbor id (the op ranks by _ck string)
-      """SELECT q_vec_id, q_label, neg_vec_id, neg_label, score, neg_rank FROM (
-          SELECT q.vec_id AS q_vec_id, q.label AS q_label,
-                 c.vec_id AS neg_vec_id, c.label AS neg_label,
-                 ROUND(LIST_COSINE_SIMILARITY(CAST(q.embedding AS DOUBLE[]),
-                   CAST(c.embedding AS DOUBLE[])), 6) AS score,
-                 CAST(ROW_NUMBER() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY LIST_COSINE_SIMILARITY(CAST(q.embedding AS DOUBLE[]),
-                     CAST(c.embedding AS DOUBLE[])) DESC,
-                     CAST(c.vec_id AS VARCHAR)) AS BIGINT) AS neg_rank
-          FROM embeddings c, embeddings q
-          WHERE q.vec_id < 8 AND c.label <> q.label) t
-        WHERE neg_rank <= 5
-        ORDER BY q_vec_id, neg_rank""",
-    "q167_negative_sampling" ->
-      // pool threshold = %08x of round(60/500 · 0xffffffff) = 1eb851eb;
-      // the hash, exclusion, and (h, cand-id-string) tiebreak mirror the
-      // Spark op exactly
-      """WITH pool AS (
-          SELECT doc_id AS cand_id, source AS cand_source FROM documents
-          WHERE substring(md5(CAST(doc_id AS VARCHAR) || 'ns-pool'), 1, 8) < '1eb851eb'),
-        q AS (SELECT doc_id AS q_doc_id, source AS q_source FROM documents WHERE doc_id < 25),
-        j AS (
-          SELECT q_doc_id, q_source, cand_id, cand_source,
-                 md5(CAST(q_doc_id AS VARCHAR) || ':' || CAST(cand_id AS VARCHAR) || 'ns') AS h
-          FROM q CROSS JOIN pool
-          WHERE NOT (q_doc_id = cand_id OR q_source = cand_source)),
-        r AS (
-          SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY q_doc_id ORDER BY h, CAST(cand_id AS VARCHAR)) AS neg_rank
-          FROM j)
-        SELECT q_doc_id, q_source, cand_id AS neg_doc_id, cand_source AS neg_source,
-               CAST(neg_rank AS BIGINT) AS neg_rank
-        FROM r WHERE neg_rank <= 4 ORDER BY q_doc_id, neg_rank""",
-    "q166_line_dedup" ->
-      // explicit first-occurrence formulation: zip-unnested (line, ord),
-      // keep min-ordinality per (doc, line), re-join in ordinal order —
-      // must equal Spark's array_distinct order byte-for-byte
-      """WITH m AS (
-          SELECT doc_id,
-                 regexp_replace(text, '(\S+ \S+ \S+ \S+) ', '\1' || chr(10), 'g') AS ml
-          FROM documents),
-        m2 AS (SELECT doc_id,
-                 ml || chr(10) || regexp_extract(ml, '^[^' || chr(10) || ']*') AS t
-               FROM m),
-        m3 AS (SELECT doc_id, string_split(t, chr(10)) AS ls FROM m2),
-        ex AS (SELECT doc_id, len(ls) AS n_lines, unnest(ls) AS line,
-                      unnest(range(1, len(ls) + 1)) AS ord
-               FROM m3),
-        firsts AS (
-          SELECT doc_id, n_lines, line, ord FROM ex
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY doc_id, line ORDER BY ord) = 1)
-        SELECT doc_id, MIN(n_lines) AS n_lines,
-               CAST(COUNT(*) AS BIGINT) AS n_unique_lines,
-               string_agg(line, chr(10) ORDER BY ord) AS clean_text
-        FROM firsts GROUP BY doc_id ORDER BY doc_id""",
-    "q164_canary_hits" ->
-      // per-canary contains() join — exact verbatim-substring semantics
-      """WITH canaries(canary_id, canary) AS (
-          VALUES (CAST(0 AS BIGINT), 'key agg row'),
-                 (CAST(1 AS BIGINT), 'table value'),
-                 (CAST(2 AS BIGINT), 'fast merge'),
-                 (CAST(3 AS BIGINT), 'row scan'),
-                 (CAST(4 AS BIGINT), 'hash value'),
-                 (CAST(5 AS BIGINT), 'zebra quantum flux'))
-        SELECT d.doc_id, c.canary_id, c.canary
-        FROM documents d JOIN canaries c ON contains(d.text, c.canary)
-        ORDER BY d.doc_id, c.canary_id""",
-    "q162_grouped_quantiles" ->
-      // one aggregate per quantile (quantile_cont needs a constant p),
-      // stacked to the (source, p) shape groupedQuantiles emits
-      """WITH q AS (
-          SELECT source, 0.25 AS p, quantile_cont(CAST(n_chars AS DOUBLE), 0.25) AS q
-          FROM documents GROUP BY source
-          UNION ALL
-          SELECT source, 0.5, quantile_cont(CAST(n_chars AS DOUBLE), 0.5)
-          FROM documents GROUP BY source
-          UNION ALL
-          SELECT source, 0.75, quantile_cont(CAST(n_chars AS DOUBLE), 0.75)
-          FROM documents GROUP BY source
-          UNION ALL
-          SELECT source, 0.9, quantile_cont(CAST(n_chars AS DOUBLE), 0.9)
-          FROM documents GROUP BY source)
-        SELECT source, CAST(p AS DOUBLE) AS p, q FROM q ORDER BY source, p""",
-    "q160_mad_outliers" ->
-      // quantile_cont shares PERCENTILE_CONT interpolation with
-      // RobustStats.groupedQuantiles; z and flag arithmetic mirror the
-      // Spark expressions operation-for-operation (IEEE-identical)
-      """WITH med AS (
-          SELECT source, quantile_cont(CAST(n_chars AS DOUBLE), 0.5) AS median
-          FROM documents GROUP BY source),
-        mad AS (
-          SELECT d.source,
-                 quantile_cont(abs(CAST(d.n_chars AS DOUBLE) - m.median), 0.5) AS mad
-          FROM documents d JOIN med m USING (source) GROUP BY d.source)
-        SELECT d.doc_id, d.source, d.n_chars, m.median, a.mad,
-               CASE WHEN a.mad > 0
-                 THEN (CAST(d.n_chars AS DOUBLE) - m.median) / (1.4826 * a.mad) END AS robust_z,
-               CASE WHEN a.mad > 0
-                 THEN abs((CAST(d.n_chars AS DOUBLE) - m.median) / (1.4826 * a.mad)) > 3.0
-                 ELSE FALSE END AS is_outlier
-        FROM documents d JOIN med m USING (source) JOIN mad a ON d.source = a.source
-        ORDER BY d.doc_id""",
-    "q159_url_dedup" ->
-      // byte-for-byte mirror of UrlNorm.canonicalizeUrl: scheme strip,
-      // host lowering + www strip, fragment drop, tracking-param filter +
-      // param sort, index.html + trailing-slash strip. Every regexp is
-      // anchored/single-match so DuckDB's first-match regexp_replace and
-      // Spark's replace-all agree.
-      """WITH u AS (
-          SELECT doc_id,
-                 (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END)
-                 || (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END)
-                 || (CASE WHEN doc_id % 5 = 0 THEN UPPER(source) ELSE source END)
-                 || '.Example.COM/articles/' || CAST(doc_id % 100 AS VARCHAR)
-                 || (CASE WHEN doc_id % 4 = 0 THEN '/index.html'
-                          WHEN doc_id % 4 = 1 THEN '/' ELSE '' END)
-                 || (CASE WHEN doc_id % 7 = 0 THEN '?utm_source=feed&utm_campaign=x'
-                          WHEN doc_id % 7 = 1 THEN '?ref=rss&page=2'
-                          WHEN doc_id % 7 = 2 THEN '?page=2&gclid=abc123' ELSE '' END)
-                 || (CASE WHEN doc_id % 11 = 0 THEN '#section-2' ELSE '' END) AS url
-          FROM documents),
-        s AS (SELECT doc_id, regexp_replace(url, '^https?://', '') AS ns FROM u),
-        parts AS (
-          SELECT doc_id,
-                 regexp_replace(lower(regexp_extract(ns, '^[^/?#]*')), '^www\.', '') AS host,
-                 regexp_replace(ns, '^[^/?#]*', '') AS rest
-          FROM s),
-        pq AS (
-          SELECT doc_id, host,
-                 regexp_replace(regexp_replace(regexp_extract(rest, '^[^?#]*'),
-                   '/index\.html$', ''), '/$', '') AS path,
-                 list_sort(list_filter(string_split(regexp_extract(rest, '\?([^#]*)', 1), '&'),
-                   p -> p <> '' AND NOT regexp_matches(p, '^(utm_[a-z]+|gclid|fbclid|ref)='))) AS params
-          FROM parts),
-        c AS (
-          SELECT doc_id,
-                 host || path || (CASE WHEN len(params) > 0
-                   THEN '?' || array_to_string(params, '&') ELSE '' END) AS canonical_url
-          FROM pq)
-        SELECT MIN(doc_id) AS doc_id, canonical_url, COUNT(*) AS n_dups
-        FROM c GROUP BY canonical_url ORDER BY doc_id""",
-    "q154_dedup_best_copy" ->
-      // same normalization as q92; survivor = argmax(length, min doc_id)
-      """WITH all_docs AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT doc_id + 10000, upper(text) || '!!' FROM documents WHERE doc_id % 7 = 0),
-        n AS (
-          SELECT doc_id, text,
-                 trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm
-          FROM all_docs),
-        r AS (
-          SELECT doc_id, CAST(LENGTH(text) AS BIGINT) AS quality,
-                 ROW_NUMBER() OVER (PARTITION BY norm
-                   ORDER BY LENGTH(text) DESC, doc_id) AS rn
-          FROM n)
-        SELECT doc_id, quality FROM r WHERE rn = 1 ORDER BY doc_id""",
-    "q153_token_budget" ->
-      // the window formulation of the slicedPrefix shape: integer cumulative
-      // n_chars in salted-md5 order per language, kept while <= the budget
-      """WITH c AS (
-          SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars,
-                 SUM(COALESCE(CAST(n_chars AS BIGINT), 0)) OVER (
-                   PARTITION BY lang
-                   ORDER BY md5(CAST(doc_id AS VARCHAR) || 'b1')
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          FROM documents)
-        SELECT doc_id, lang, n_chars FROM c
-        WHERE cum <= CASE lang WHEN 'en' THEN 60000 WHEN 'fr' THEN 25000 ELSE 15000 END
-        ORDER BY doc_id""",
-    "q152_hist_drift" ->
-      // same 3-IEEE-op binning as q142/q144; drift numerators in HUGEINT
-      // (exact, mirroring Spark's DECIMAL(38,0)), one double division last
-      """WITH ha AS (
-          SELECT LEAST(31, GREATEST(0, CAST(FLOOR((CAST(n_chars AS DOUBLE) - 0.0) / 600.0 * 32) AS BIGINT))) AS bin,
-                 CAST(COUNT(*) AS BIGINT) AS ca
-          FROM documents WHERE n_chars IS NOT NULL AND COALESCE(lang, '') = 'en'
-          GROUP BY 1),
-        hb AS (
-          SELECT LEAST(31, GREATEST(0, CAST(FLOOR((CAST(n_chars AS DOUBLE) - 0.0) / 600.0 * 32) AS BIGINT))) AS bin,
-                 CAST(COUNT(*) AS BIGINT) AS cb
-          FROM documents WHERE n_chars IS NOT NULL AND COALESCE(lang, '') <> 'en'
-          GROUP BY 1),
-        j AS (
-          SELECT COALESCE(ha.bin, hb.bin) AS bin,
-                 COALESCE(ca, 0) AS ca, COALESCE(cb, 0) AS cb
-          FROM ha FULL OUTER JOIN hb ON ha.bin = hb.bin),
-        jc AS (
-          SELECT bin, ca, cb,
-                 SUM(ca) OVER (ORDER BY bin) AS cuma,
-                 SUM(cb) OVER (ORDER BY bin) AS cumb
-          FROM j),
-        t AS (SELECT SUM(ca) AS ta, SUM(cb) AS tb FROM j)
-        SELECT CAST(t.ta AS BIGINT) AS total_a, CAST(t.tb AS BIGINT) AS total_b,
-               CAST(SUM(ABS(CAST(jc.ca AS HUGEINT) * t.tb - CAST(jc.cb AS HUGEINT) * t.ta)) AS DOUBLE)
-                 / (CAST(t.ta AS DOUBLE) * CAST(t.tb AS DOUBLE)) / 2.0 AS tv,
-               CAST(MAX(ABS(CAST(jc.ca AS HUGEINT) * t.tb - CAST(jc.cb AS HUGEINT) * t.ta)) AS DOUBLE)
-                 / (CAST(t.ta AS DOUBLE) * CAST(t.tb AS DOUBLE)) AS linf,
-               CAST(MAX(ABS(CAST(jc.cuma AS HUGEINT) * t.tb - CAST(jc.cumb AS HUGEINT) * t.ta)) AS DOUBLE)
-                 / (CAST(t.ta AS DOUBLE) * CAST(t.tb AS DOUBLE)) AS ks
-        FROM jc, t GROUP BY t.ta, t.tb""",
-    "q151_lm_novelty" ->
-      // same tokenization as the Spark side (lower + split on
-      // non-alphanumerics, empties dropped); bigrams via zipped shifted
-      // list slices; counts and ratios are integer/exact-IEEE — engine-safe
-      """WITH train AS (SELECT text FROM documents WHERE lang = 'en'),
-        tb AS (
-          SELECT unnest(list_zip(l[1:len(l)-1], l[2:len(l)])) AS bg
-          FROM (SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS l
-                FROM train)),
-        bgc AS (
-          SELECT bg[1] AS w1, bg[2] AS w2, CAST(COUNT(*) AS BIGINT) AS cnt
-          FROM tb GROUP BY 1, 2),
-        probe AS (
-          SELECT doc_id, unnest(list_zip(l[1:len(l)-1], l[2:len(l)])) AS bg
-          FROM (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS l
-                FROM documents)),
-        j AS (
-          SELECT p.doc_id, c.cnt
-          FROM probe p LEFT JOIN bgc c ON c.w1 = p.bg[1] AND c.w2 = p.bg[2]),
-        agg AS (
-          SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-                 CAST(SUM(CASE WHEN cnt IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_unseen,
-                 CAST(SUM(CASE WHEN COALESCE(cnt, 0) <= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_rare
-          FROM j GROUP BY doc_id)
-        SELECT d.doc_id,
-               COALESCE(a.n_bigrams, 0) AS n_bigrams,
-               COALESCE(a.n_unseen, 0) AS n_unseen,
-               COALESCE(a.n_rare, 0) AS n_rare,
-               CAST(a.n_unseen AS DOUBLE) / a.n_bigrams AS novelty
-        FROM documents d LEFT JOIN agg a USING (doc_id)
-        ORDER BY d.doc_id""",
-    "q149_bloom_membership" ->
-      // same Kirsch–Mitzenmacher positions as BloomSketch: (h1 + i·h2) mod
-      // bits with h1/h2 the two 32-bit halves of one md5 (the CmsSketch
-      // '0x'||hex8 trick, twice); the bitmap forgets which hash set a bit,
-      // so membership ≡ every probe position ∈ the DISTINCT set of
-      // positions touched at build time
-      """WITH hs AS (SELECT unnest([0, 1, 2]) AS i),
-        setbits AS (
-          SELECT DISTINCT
-                 (CAST('0x' || substr(md5(CAST(m.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-                  + hs.i * CAST('0x' || substr(md5(CAST(m.doc_id AS VARCHAR)), 9, 8) AS BIGINT)) % 65536 AS p
-          FROM (SELECT doc_id FROM documents WHERE doc_id % 3 = 0) m, hs),
-        probes AS (
-          SELECT d.doc_id,
-                 (CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-                  + hs.i * CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 9, 8) AS BIGINT)) % 65536 AS p
-          FROM documents d, hs)
-        SELECT pr.doc_id,
-               pr.doc_id % 3 = 0 AS is_member,
-               BOOL_AND(s.p IS NOT NULL) AS might_contain,
-               BOOL_AND(s.p IS NOT NULL) OR NOT (pr.doc_id % 3 = 0) AS ok
-        FROM probes pr LEFT JOIN setbits s ON s.p = pr.p
-        GROUP BY pr.doc_id
-        ORDER BY pr.doc_id""",
-    "q150_bloom_antijoin" ->
-      // the Bloom pre-filter only prunes — the result is exactly the
-      // anti-join, so the oracle needs no hashing at all
-      """SELECT l_returnflag,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        FROM lineitem
-        WHERE l_orderkey NOT IN
-          (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag""",
-    "q132_unicode_normalize" ->
-      """SELECT doc_id,
-               CAST(length(text || ' café') AS BIGINT) AS n_raw,
-               CAST(length(nfc_normalize(text || ' café')) AS BIGINT) AS n_nfc,
-               right(nfc_normalize(text || ' café'), 4) AS tail
-        FROM documents ORDER BY doc_id""",
-    "q131_asof_forward" ->
-      """SELECT e.event_id, p.next_purchase_ts
-        FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view') e
-        ASOF LEFT JOIN (SELECT user_id, ts AS next_purchase_ts FROM events
-                        WHERE event_type = 'purchase') p
-          ON e.user_id = p.user_id AND e.ts <= p.next_purchase_ts
-        ORDER BY e.event_id""",
-    "q126_tpch_q15_top_supplier" -> q126,
-    "q127_tpch_q16_supplier_cnt" -> q127,
-    "q128_dominant_share" -> q128,
-    "q129_window_distribution" -> q129,
-    "q130_editdist_neardup" -> q130,
-    "q169_tpch_q3_shipping_priority" -> q169,
-    "q209_tpch_q6_forecast_revenue" -> q209,
-    "q170_tpch_q5_local_supplier" -> q170,
-    "q171_tpch_q10_returned_items" -> q171,
-    "q172_tpch_q18_large_volume" -> q172,
-    "q173_tpch_q22_idle_balances" -> q173,
-    "q133_tpch_q7_volume_shipping" -> q133,
-    "q134_tpch_q8_market_share" -> q134,
-    "q135_tpch_q11_value_concentration" -> q135,
-    "q136_tpch_q12_priority_split" -> q136,
-    "q137_tpch_q14_promo_share" -> q137,
-    "q138_tpch_q19_disjunctive" -> q138,
-    "q81_hash_sample" ->
-      // 0x1999999a = round(0.1 * 0xffffffff): same threshold hashSample derives
-      """SELECT doc_id FROM documents
-        WHERE SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 's1'), 1, 8) < '1999999a'
-        ORDER BY doc_id""",
-    "q82_sequence_packing" ->
-      """WITH RECURSIVE base AS (
-          SELECT doc_id, doc_id % 8 AS shard,
-                 CAST(LEN(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\s+')) AS BIGINT) AS toks,
-                 ROW_NUMBER() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS rn
-          FROM documents WHERE doc_id < 1000
-        ), packed AS (
-          SELECT shard, doc_id, toks, rn, CAST(0 AS BIGINT) AS pack_id, toks AS fill
-          FROM base WHERE rn = 1
-          UNION ALL
-          SELECT b.shard, b.doc_id, b.toks, b.rn,
-                 CASE WHEN p.fill + b.toks <= 512 THEN p.pack_id ELSE p.pack_id + 1 END,
-                 CASE WHEN p.fill + b.toks <= 512 THEN p.fill + b.toks ELSE b.toks END
-          FROM base b JOIN packed p ON b.shard = p.shard AND b.rn = p.rn + 1
-        )
-        SELECT shard, doc_id, toks, pack_id
-        FROM packed ORDER BY shard, doc_id""",
-    "q187_token_packing" ->
-      """WITH docs AS (
-          SELECT doc_id, doc_id % 4 AS shard,
-                 CAST(LEN(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\s+')) AS BIGINT) + 2 AS len
-          FROM documents WHERE doc_id < 300
-        ), offs AS (
-          SELECT doc_id, shard, len,
-                 CAST(COALESCE(SUM(len) OVER (PARTITION BY shard ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-          FROM docs
-        ), spans AS (
-          SELECT shard, seq_id, doc_id, len,
-                 GREATEST(off, seq_id*64) - seq_id*64 AS span_start,
-                 LEAST(off + len, (seq_id+1)*64) - seq_id*64 AS span_end,
-                 GREATEST(off, seq_id*64) - off AS doc_start,
-                 LEAST(off + len, (seq_id+1)*64) - off AS doc_end
-          FROM offs, LATERAL (SELECT UNNEST(generate_series(off // 64,
-                 (off + len - 1) // 64)) AS seq_id) t
-        )
-        SELECT shard, seq_id,
-               CAST(SUM(span_end - span_start)
-                 OVER (PARTITION BY shard, seq_id) AS BIGINT) AS n_tokens,
-               doc_id, span_start, span_end, doc_start,
-               ARRAY_TO_STRING([CASE WHEN p = 0 THEN CAST(1 AS BIGINT)
-                     WHEN p = len - 1 THEN CAST(2 AS BIGINT)
-                     ELSE doc_id*10000 + p - 1 END
-                FOR p IN range(doc_start, doc_end)], ',') AS frag_ids
-        FROM spans
-        ORDER BY shard, seq_id, span_start""",
-    "q83_group_cap" ->
-      """SELECT o_orderkey, o_orderpriority FROM (
-          SELECT o_orderkey, o_orderpriority,
-                 ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_orderkey) AS rn
-          FROM orders) t
-        WHERE rn <= 50
-        ORDER BY o_orderkey""",
-    "q84_stratified_sample" ->
-      """WITH t AS (
-          SELECT c_custkey, c_mktsegment,
-                 ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-                   ORDER BY MD5(CAST(c_custkey AS VARCHAR) || 'z')) AS rn,
-                 COUNT(*) OVER (PARTITION BY c_mktsegment) AS n
-          FROM customer)
-        SELECT c_custkey, c_mktsegment FROM t
-        WHERE rn <= CEIL(n * 0.1)
-        ORDER BY c_custkey""",
-    "q85_ngram_jaccard" ->
-      """WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t
-          FROM documents WHERE doc_id < 128
-        ), grams AS (
-          SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] for i in range(1, len(t))]) AS g
-          FROM toks WHERE len(t) >= 2
-        ), ex AS (
-          SELECT doc_id, unnest(g) AS gram FROM grams
-        ), inter AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS BIGINT) AS inter_cnt
-          FROM ex a JOIN ex b ON a.gram = b.gram AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        ), sizes AS (SELECT doc_id, CAST(len(g) AS BIGINT) AS n FROM grams)
-        SELECT inter.id_a, inter.id_b, inter.inter_cnt,
-               sa.n + sb.n - inter.inter_cnt AS union_cnt,
-               CAST(inter.inter_cnt AS DOUBLE) / CAST(sa.n + sb.n - inter.inter_cnt AS DOUBLE) AS jaccard
-        FROM inter JOIN sizes sa ON sa.doc_id = inter.id_a JOIN sizes sb ON sb.doc_id = inter.id_b
-        WHERE CAST(inter.inter_cnt AS DOUBLE) / CAST(sa.n + sb.n - inter.inter_cnt AS DOUBLE) >= 0.08
-        ORDER BY id_a, id_b""",
-    "q89_corpus_report" ->
-      """SELECT source, lang,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-               QUANTILE_CONT(n_chars, 0.5) AS p50_chars,
-               QUANTILE_CONT(n_chars, 0.9) AS p90_chars,
-               CAST(SUM(LEN(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\s+'))) AS BIGINT) AS total_tokens
-        FROM documents
-        GROUP BY source, lang
-        ORDER BY source, lang""",
-    "q86_repetition_stats" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-        c AS (SELECT doc_id, word, COUNT(*) AS cnt FROM w GROUP BY 1, 2),
-        a AS (SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS nd,
-                     CAST(MAX(cnt) AS BIGINT) AS top
-              FROM c GROUP BY 1)
-        SELECT doc_id, n AS n_words, CAST(nd AS DOUBLE) / n AS distinct_frac,
-               CAST(top AS DOUBLE) / n AS top_word_frac
-        FROM a ORDER BY doc_id""",
-    "q87_pii_scrub" ->
-      """SELECT c_custkey,
-               regexp_replace(c_name || ' ref=' || CAST(c_custkey * 7919 AS VARCHAR), '[0-9]{2,}', '[NUM]', 'g') AS scrubbed,
-               CAST(len(regexp_extract_all(c_name || ' ref=' || CAST(c_custkey * 7919 AS VARCHAR), '[0-9]{2,}')) AS BIGINT) AS n_masked
-        FROM customer
-        ORDER BY c_custkey""",
-    "q88_last_nonnull_window" ->
-      """SELECT event_id, user_id,
-               last_value(CASE WHEN event_type = 'click' THEN value END IGNORE NULLS)
-                 OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_click_value
-        FROM events
-        ORDER BY event_id""",
-    "q72_exists_correlated" ->
-      """SELECT c_custkey, c_name
-        FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)
-        ORDER BY c_custkey""",
-    "q73_map_struct_ops" ->
-      // DuckDB computes the flattened values directly; the Spark side must
-      // round-trip them through map/struct construction unchanged.
-      """SELECT o_orderkey,
-               o_orderstatus AS status_v,
-               o_totalprice AS price_v,
-               'a' AS first_key
-        FROM orders
-        WHERE o_orderkey <= 300
-        ORDER BY o_orderkey""",
-    // Oracle side is PURE BIGINT arithmetic — provably equal to the Spark
-    // side's decimal pipeline (cents * 0.01 * 100 == cents; cents * dc *
-    // 0.0001 * 10000 == cents*dc; (cents/4) * 100 == cents*25 exactly, the
-    // quotient terminates in 2 digits), with no decimal type crossing the
-    // engine-version-sensitive comparison.
-    "q74_decimal_exact" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
-               CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS price_cents,
-               CAST(FLOOR(l_extendedprice * 100) AS BIGINT) * CAST(FLOOR(l_discount * 100) AS BIGINT) AS disc_amt_du,
-               CAST(FLOOR(l_extendedprice * 100) AS BIGINT) * 25 AS quarter_centi,
-               CAST(l_extendedprice AS DOUBLE) / CAST(NULLIF(l_quantity, 0) AS DOUBLE) AS unit_price
-        FROM lineitem
-        WHERE l_orderkey <= 100
-        ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice""",
-    "q75_unpivot" ->
-      """WITH base AS (
-          SELECT o_orderpriority,
-                 CAST(COUNT(*) AS BIGINT) AS n_orders,
-                 CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-                 CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o
-          FROM orders GROUP BY o_orderpriority)
-        SELECT o_orderpriority, metric, val
-        FROM base UNPIVOT (val FOR metric IN (n_orders, n_f, n_o))
-        ORDER BY o_orderpriority, metric""",
-    "q76_nullsafe_join" ->
-      """SELECT a.o_orderkey AS k1, b.o_orderkey AS k2
-        FROM (SELECT o_orderkey, NULLIF(o_orderstatus, 'P') AS s
-              FROM orders WHERE o_orderkey <= 100) a
-        JOIN (SELECT o_orderkey, NULLIF(o_orderstatus, 'P') AS s
-              FROM orders WHERE o_orderkey BETWEEN 101 AND 200) b
-          ON a.s IS NOT DISTINCT FROM b.s
-        ORDER BY k1, k2""",
-    "q77_gap_fill" ->
-      """WITH days AS (
-          SELECT CAST(UNNEST(GENERATE_SERIES(DATE '1995-01-01', DATE '1995-03-01', INTERVAL 1 DAY)) AS DATE) AS d
-        ), daily AS (
-          SELECT CAST(o_orderdate AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS n
-          FROM orders GROUP BY CAST(o_orderdate AS DATE))
-        SELECT days.d, COALESCE(daily.n, 0) AS n_orders
-        FROM days LEFT JOIN daily ON days.d = daily.d
-        ORDER BY days.d""",
-    "q78_regexp_extract_all" ->
-      """SELECT doc_id,
-               CAST(LEN(regexp_extract_all(text, '[A-Za-z]+')) AS BIGINT) AS n_words,
-               COALESCE(ARRAY_TO_STRING(LIST_SLICE(regexp_extract_all(text, '[0-9]+'), 1, 3), ','), '') AS first_nums
-        FROM documents
-        WHERE doc_id < 200
-        ORDER BY doc_id""",
-    "q79_median" ->
-      """SELECT o_orderpriority,
-               CAST(MEDIAN(o_totalprice) AS DOUBLE) AS med_price,
-               CAST(MEDIAN(o_orderkey) AS DOUBLE) AS med_key
-        FROM orders
-        GROUP BY o_orderpriority
-        ORDER BY o_orderpriority""",
-    "q80_bitwise" ->
-      """SELECT o_orderkey,
-               CAST(o_orderkey & 255 AS BIGINT) AS band,
-               CAST(o_orderkey | 4096 AS BIGINT) AS bor,
-               CAST(XOR(o_orderkey, 21) AS BIGINT) AS bxor,
-               CAST(o_orderkey << 3 AS BIGINT) AS shl
-        FROM orders
-        WHERE o_orderkey <= 300
-        ORDER BY o_orderkey""",
-    "q71_range_join" ->
-      """SELECT o.o_orderkey, CAST(COUNT(l.l_orderkey) AS BIGINT) AS n_in_window
-        FROM orders o LEFT JOIN lineitem l
-          ON l.l_shipdate >= o.o_orderdate
-         AND l.l_shipdate < o.o_orderdate + INTERVAL 7 DAY
-        WHERE o.o_orderkey <= 2000
-        GROUP BY o.o_orderkey
-        ORDER BY o.o_orderkey""",
-    "q70_join_5way_reorder" -> q70,
-    "q01_agg_pricing_summary" -> q01,
-    "q02_filter_project" -> q02,
-    "q03_join_inner_3way" -> q03,
-    "q04_join_left_outer" -> q04,
-    "q05_join_semi_in" -> q05,
-    "q06_join_anti_notexists" -> q06,
-    "q07_join_theta" -> q07,
-    "q08_join_full_outer" -> q08,
-    "q09_window_topk_per_group" -> q09,
-    "q10_window_running_sum" -> q10,
-    "q11_window_lag_lead" -> q11,
-    "q12_cube" -> q12,
-    "q13_rollup" -> q13,
-    "q14_grouping_sets" -> q14,
-    "q15_intersect" -> q15,
-    "q16_except" -> q16,
-    "q17_count_distinct" -> q17,
-    "q18_topk_limit" -> q18,
-    "q19_scalar_strings" -> q19,
-    "q20_scalar_dates" ->
-      """SELECT l_orderkey, l_linenumber,
-               CAST(YEAR(l_shipdate) AS BIGINT)  AS y,
-               CAST(MONTH(l_shipdate) AS BIGINT) AS m,
-               CAST(DAY(l_shipdate) AS BIGINT)   AS d,
-               CAST(DATE_TRUNC('MONTH', l_shipdate) AS TIMESTAMP) AS month_start,
-               CAST(l_shipdate AS DATE)          AS ship_day
-        FROM lineitem WHERE l_orderkey <= 200
-        ORDER BY l_orderkey, l_linenumber, ship_day""",
-    "q21_scalar_math" -> q21,
-    "q22_case_coalesce" -> q22,
-    "q23_json_extract" ->
-      """SELECT event_id, CAST(props->>'$.k' AS BIGINT) AS k
-        FROM events WHERE event_id <= 500
-        ORDER BY event_id""",
-    "q24_array_ops" ->
-      """SELECT doc_id,
-               CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens,
-               ARRAY_TO_STRING(LIST_SORT(LIST_DISTINCT(STRING_SPLIT(text, ' ')))[1:3], ',') AS first3
-        FROM documents
-        ORDER BY doc_id""",
-    "q25_union_all" ->
-      """SELECT * FROM (
-          SELECT CAST(c_custkey AS BIGINT) AS id, c_name AS name, 'customer' AS kind FROM customer
-          UNION ALL
-          SELECT CAST(s_suppkey AS BIGINT), s_name, 'supplier' FROM supplier) t
-        ORDER BY kind, id""",
-    "q26_scalar_subquery" -> q26,
-    "q27_having" -> q27,
-    "q28_in_between" -> q28,
-    "q29_like" -> q29,
-    "q30_join_broadcast_star" ->
-      """SELECT n.n_name AS nation,
-               CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-               CAST(COUNT(*) AS BIGINT) AS n_lines
-        FROM lineitem l
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation n   ON s.s_nationkey = n.n_nationkey
-        GROUP BY n.n_name
-        ORDER BY n.n_name""",
-    "q31_dedup_exact" ->
-      """SELECT doc_id, lang, source FROM (
-          SELECT doc_id, lang, source,
-                 ROW_NUMBER() OVER (PARTITION BY lang, source ORDER BY doc_id) AS rn
-          FROM documents) t
-        WHERE rn = 1
-        ORDER BY doc_id""",
-    "q32_dedup_fingerprint" ->
-      """SELECT fp, keep_id, n_copies FROM (
-          SELECT MD5(REGEXP_REPLACE(LOWER(TRIM(text)), '\s+', ' ', 'g')) AS fp,
-                 CAST(MIN(doc_id) AS BIGINT) AS keep_id,
-                 CAST(COUNT(*) AS BIGINT) AS n_copies
-          FROM documents GROUP BY 1) t
-        ORDER BY keep_id""",
-    "q33_text_token_stats" ->
-      """SELECT doc_id,
-               CAST(LENGTH(text) AS BIGINT) AS n_chars,
-               CAST(LEN(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\s+')) AS BIGINT) AS n_tokens,
-               CAST(LEN(LIST_DISTINCT(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\s+'))) AS BIGINT) AS n_unique
-        FROM documents
-        ORDER BY doc_id""",
-    "q34_text_quality" ->
-      // Mirrors TextStats.qualityScore feature-by-feature: same tokenizer
-      // regexes, same EN stopword list, same penalty arithmetic in DOUBLE
-      // (left-associated, literals cast to DOUBLE so DuckDB's decimal
-      // literals can't change the accumulation).
-      """WITH t AS (
-          SELECT doc_id,
-                 len(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> len(x) > 0)) AS n_tokens_ws,
-                 list_filter(regexp_split_to_array(lower(trim(text)), '[^\p{L}\p{N}]+'), x -> len(x) > 0) AS toks,
-                 CAST(length(text) AS DOUBLE) AS chars,
-                 CAST(length(regexp_replace(text, '[^\p{L}]', '', 'g')) AS DOUBLE) AS alpha,
-                 CAST(length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE) AS punct
-          FROM documents),
-        f AS (
-          SELECT doc_id, n_tokens_ws,
-                 CAST(len(toks) AS DOUBLE) AS n_tok,
-                 CASE WHEN chars > 0 THEN alpha / chars ELSE 0.0 END AS alpha_ratio,
-                 CASE WHEN chars > 0 THEN punct / chars ELSE 0.0 END AS punct_ratio,
-                 CAST(len(list_intersect(list_distinct(toks),
-                   ['the','and','of','to','in','is','that','it','for','with','was','are'])) AS DOUBLE) AS stop_hits
-          FROM t)
-        SELECT doc_id,
-               CAST(n_tokens_ws AS BIGINT) AS n_tokens,
-               round(
-                 (CASE WHEN n_tok BETWEEN 10 AND 100000 THEN 1.0 WHEN n_tok > 0 THEN 0.5 ELSE 0.0 END) * CAST(0.25 AS DOUBLE)
-                 + least(alpha_ratio / CAST(0.7 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.25 AS DOUBLE)
-                 + (CASE WHEN punct_ratio <= CAST(0.2 AS DOUBLE) THEN CAST(1.0 AS DOUBLE)
-                         ELSE greatest(CAST(0.0 AS DOUBLE), CAST(1.0 AS DOUBLE) - (punct_ratio - CAST(0.2 AS DOUBLE)) * 2) END) * CAST(0.25 AS DOUBLE)
-                 + (CASE WHEN stop_hits >= 2 THEN 1.0 WHEN stop_hits >= 1 THEN 0.7 ELSE 0.3 END) * CAST(0.25 AS DOUBLE), 4) AS quality
-        FROM f
-        ORDER BY doc_id""",
-    "q35_similarity_bruteforce" ->
-      """SELECT query_id, rank, neighbor_id, score FROM (
-          SELECT q.vec_id AS query_id,
-                 c.vec_id AS neighbor_id,
-                 ROUND(LIST_COSINE_SIMILARITY(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), 6) AS score,
-                 CAST(ROW_NUMBER() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY LIST_COSINE_SIMILARITY(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id) AS BIGINT) AS rank
-          FROM embeddings c, embeddings q
-          WHERE q.vec_id < 5) t
-        WHERE rank <= 5
-        ORDER BY query_id, rank""",
-    "q38_text_langid" ->
-      // argmax over per-language stopword hits; ties break to the
-      // lexicographically largest language (Spark's array_max over
-      // (hits, lang) structs), hence the it→fr→es→en→de CASE order.
-      """WITH t AS (
-          SELECT doc_id,
-                 list_distinct(list_filter(regexp_split_to_array(lower(trim(text)), '[^\p{L}\p{N}]+'), x -> len(x) > 0)) AS toks
-          FROM documents),
-        h AS (
-          SELECT doc_id,
-                 len(list_intersect(toks, ['der','die','das','und','ist','von','nicht','mit','ein','eine','zu','den'])) AS h_de,
-                 len(list_intersect(toks, ['the','and','of','to','in','is','that','it','for','with','was','are'])) AS h_en,
-                 len(list_intersect(toks, ['el','la','los','las','es','en','que','una','por','con','para','del'])) AS h_es,
-                 len(list_intersect(toks, ['le','la','les','et','est','dans','pour','que','une','des','pas','sur'])) AS h_fr,
-                 len(list_intersect(toks, ['il','la','che','di','è','per','con','una','sono','non','più','come'])) AS h_it
-          FROM t)
-        SELECT lang_guess, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (
-          SELECT CASE WHEN greatest(h_de,h_en,h_es,h_fr,h_it) = 0 THEN 'und'
-                      WHEN h_it = greatest(h_de,h_en,h_es,h_fr,h_it) THEN 'it'
-                      WHEN h_fr = greatest(h_de,h_en,h_es,h_fr,h_it) THEN 'fr'
-                      WHEN h_es = greatest(h_de,h_en,h_es,h_fr,h_it) THEN 'es'
-                      WHEN h_en = greatest(h_de,h_en,h_es,h_fr,h_it) THEN 'en'
-                      ELSE 'de' END AS lang_guess
-          FROM h)
-        GROUP BY lang_guess
-        ORDER BY lang_guess""",
-    "q39_stats_extract" ->
-      """SELECT "column", "count", nulls, "distinct", "min", "max" FROM (
-          SELECT 'l_orderkey' AS "column", CAST(COUNT(l_orderkey) AS BIGINT) AS "count",
-                 CAST(SUM(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls,
-                 CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS "distinct",
-                 CAST(MIN(l_orderkey) AS VARCHAR) AS "min", CAST(MAX(l_orderkey) AS VARCHAR) AS "max"
-          FROM lineitem
-          UNION ALL
-          SELECT 'l_partkey', CAST(COUNT(l_partkey) AS BIGINT),
-                 CAST(SUM(CASE WHEN l_partkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                 CAST(COUNT(DISTINCT l_partkey) AS BIGINT),
-                 CAST(MIN(l_partkey) AS VARCHAR), CAST(MAX(l_partkey) AS VARCHAR)
-          FROM lineitem
-          UNION ALL
-          SELECT 'l_suppkey', CAST(COUNT(l_suppkey) AS BIGINT),
-                 CAST(SUM(CASE WHEN l_suppkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                 CAST(COUNT(DISTINCT l_suppkey) AS BIGINT),
-                 CAST(MIN(l_suppkey) AS VARCHAR), CAST(MAX(l_suppkey) AS VARCHAR)
-          FROM lineitem
-          UNION ALL
-          SELECT 'l_returnflag', CAST(COUNT(l_returnflag) AS BIGINT),
-                 CAST(SUM(CASE WHEN l_returnflag IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                 CAST(COUNT(DISTINCT l_returnflag) AS BIGINT),
-                 CAST(MIN(l_returnflag) AS VARCHAR), CAST(MAX(l_returnflag) AS VARCHAR)
-          FROM lineitem
-          UNION ALL
-          SELECT 'l_linestatus', CAST(COUNT(l_linestatus) AS BIGINT),
-                 CAST(SUM(CASE WHEN l_linestatus IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-                 CAST(COUNT(DISTINCT l_linestatus) AS BIGINT),
-                 CAST(MIN(l_linestatus) AS VARCHAR), CAST(MAX(l_linestatus) AS VARCHAR)
-          FROM lineitem) t
-        ORDER BY "column"""",
-    "q40_typing_transform" ->
-      """SELECT orderkey, qty, shipdate, n_errors, first_error_field FROM (
-          SELECT TRY_CAST(orderkey_s AS BIGINT) AS orderkey,
-                 TRY_CAST(qty_s AS DOUBLE) AS qty,
-                 TRY_CAST(shipdate_s AS TIMESTAMP) AS shipdate,
-                 CAST((CASE WHEN TRY_CAST(orderkey_s AS BIGINT) IS NULL THEN 1 ELSE 0 END) +
-                 (CASE WHEN TRY_CAST(qty_s AS DOUBLE) IS NULL THEN 1 ELSE 0 END) +
-                 (CASE WHEN TRY_CAST(shipdate_s AS TIMESTAMP) IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
-                 CASE WHEN TRY_CAST(orderkey_s AS BIGINT) IS NULL THEN 'orderkey'
-                      WHEN TRY_CAST(qty_s AS DOUBLE) IS NULL THEN 'qty'
-                      WHEN TRY_CAST(shipdate_s AS TIMESTAMP) IS NULL THEN 'shipdate'
-                      ELSE '' END AS first_error_field
-          FROM (
-            SELECT CAST(l_orderkey AS VARCHAR) AS orderkey_s, CAST(l_quantity AS VARCHAR) AS qty_s,
-                   CAST(l_shipdate AS VARCHAR) AS shipdate_s
-            FROM lineitem WHERE l_orderkey <= 100
-            UNION ALL SELECT 'xx', '12.5', '1996-01-01 00:00:00'
-            UNION ALL SELECT '999999', 'notanumber', 'baddate') raw) t
-        ORDER BY orderkey ASC NULLS FIRST, qty ASC NULLS FIRST, shipdate ASC NULLS FIRST, n_errors""",
-    "q41_diff_transform" ->
-      """WITH set_a AS (SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal > 1000),
-             set_b AS (SELECT c_custkey, c_mktsegment FROM customer WHERE c_acctbal < 6000)
-        SELECT * FROM (
-          SELECT c_custkey, c_mktsegment, 'both' AS side FROM (SELECT * FROM set_a INTERSECT ALL SELECT * FROM set_b)
-          UNION ALL
-          SELECT c_custkey, c_mktsegment, 'left' FROM (SELECT * FROM set_a EXCEPT ALL SELECT * FROM set_b)
-          UNION ALL
-          SELECT c_custkey, c_mktsegment, 'right' FROM (SELECT * FROM set_b EXCEPT ALL SELECT * FROM set_a)) t
-        ORDER BY side, c_custkey""",
-    "q42_metadata_extract" ->
-      """SELECT * FROM (VALUES
-          ('l_orderkey', TRUE, 'bigint'), ('l_partkey', TRUE, 'bigint'),
-          ('l_suppkey', TRUE, 'bigint'), ('l_linenumber', TRUE, 'int'),
-          ('l_quantity', TRUE, 'double'), ('l_extendedprice', TRUE, 'double'),
-          ('l_discount', TRUE, 'double'), ('l_tax', TRUE, 'double'),
-          ('l_returnflag', TRUE, 'string'), ('l_linestatus', TRUE, 'string'),
-          ('l_shipdate', TRUE, 'timestamp')) AS t(name, nullable, type)
-        ORDER BY name""",
-    "q43_pivot" ->
-      """SELECT o_orderpriority,
-               CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS "F",
-               CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS "O",
-               CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS "P"
-        FROM orders
-        GROUP BY o_orderpriority
-        ORDER BY o_orderpriority""",
-    "q44_explode_lateral" ->
-      """SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT doc_id, UNNEST(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\s+')) AS tok FROM documents) t
-        WHERE doc_id < 20
-        GROUP BY doc_id, tok
-        ORDER BY doc_id, tok""",
-    "q45_asof_join" ->
-      """SELECT e.event_id, o.last_order_date
-        FROM (SELECT event_id, ts FROM events WHERE event_id < 100) e
-        ASOF LEFT JOIN (SELECT o_orderdate AS last_order_date FROM orders) o
-          ON e.ts >= o.last_order_date
-        ORDER BY e.event_id""",
-    "q47_percentile_exact" ->
-      """SELECT o_orderpriority,
-               QUANTILE_CONT(o_totalprice, 0.5) AS p50,
-               QUANTILE_CONT(o_totalprice, 0.9) AS p90,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM orders
-        GROUP BY o_orderpriority
-        ORDER BY o_orderpriority""",
-    "q48_window_range_frame" ->
-      """SELECT o_orderkey, o_orderpriority, o_totalprice,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-                 PARTITION BY o_orderpriority ORDER BY o_totalprice
-                 RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW) AS DOUBLE) AS nearby_sum
-        FROM orders
-        WHERE o_orderkey < 300
-        ORDER BY o_orderpriority, o_totalprice, o_orderkey""",
-    "q49_window_ntile_firstlast" ->
-      """SELECT o_orderkey,
-               NTILE(4) OVER w AS quartile,
-               FIRST_VALUE(o_orderkey) OVER w AS cheapest,
-               LAST_VALUE(o_orderkey) OVER (
-                 PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS priciest
-        FROM orders
-        WHERE o_orderkey < 300
-        WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-        ORDER BY o_orderkey""",
-    "q50_regexp" ->
-      """SELECT c_custkey,
-               COALESCE(REGEXP_EXTRACT(c_name, '([0-9]+)', 1), '') AS digits,
-               REGEXP_REPLACE(c_name, '[aeiou]', '_', 'g') AS devoweled
-        FROM customer
-        ORDER BY c_custkey""",
-    "q51_filtered_agg" ->
-      """SELECT l_returnflag,
-               CAST(COUNT(*) FILTER (WHERE l_quantity > 25) AS BIGINT) AS n_big,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) FILTER (WHERE l_discount > 0.05) AS DOUBLE) AS disc_qty,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM lineitem
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag""",
-    "q53_string_agg" ->
-      """SELECT CAST(n_regionkey AS BIGINT) AS regionkey,
-               STRING_AGG(n_name, '|' ORDER BY n_name) AS nations
-        FROM nation
-        GROUP BY n_regionkey
-        ORDER BY regionkey""",
-    "q55_interval_arith" ->
-      """SELECT o_orderkey,
-               o_orderdate + INTERVAL 30 DAY  AS due_date,
-               o_orderdate - INTERVAL 1 DAY   AS day_before
-        FROM orders
-        WHERE o_orderkey < 200
-        ORDER BY o_orderkey""",
-    "q57_null_semantics" ->
-      """SELECT o_orderkey,
-               NULLIF(o_orderstatus, 'O') IS NULL AS is_open,
-               COALESCE(NULLIF(o_orderstatus, 'O'), 'none') AS closed_status,
-               o_orderstatus IS DISTINCT FROM 'F' AS not_f
-        FROM orders
-        WHERE o_orderkey < 200
-        ORDER BY o_orderkey""",
-    "q52_cte_chain" ->
-      """WITH big AS (
-          SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_totalprice > 150000
-        ), items AS (
-          SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS n_items,
-                 CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-          FROM lineitem GROUP BY l_orderkey
-        )
-        SELECT b.o_orderkey, b.o_custkey, i.n_items, i.qty
-        FROM big b JOIN items i ON b.o_orderkey = i.l_orderkey
-        ORDER BY b.o_orderkey""",
-    "q54_union_distinct" ->
-      """SELECT custkey FROM (
-          SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 9000
-          UNION
-          SELECT o_custkey FROM orders WHERE o_totalprice > 300000) t
-        ORDER BY custkey""",
-    "q56_conditional_window" ->
-      """SELECT o_orderkey, o_orderpriority,
-               CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) OVER w AS BIGINT) AS f_so_far,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-                 PARTITION BY o_orderpriority ORDER BY o_orderkey
-                 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE)
-               / COUNT(*) OVER (
-                 PARTITION BY o_orderpriority ORDER BY o_orderkey
-                 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS mov_avg
-        FROM orders
-        WHERE o_orderkey < 400
-        WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_orderkey
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        ORDER BY o_orderkey""",
-    "q58_correlated_agg" ->
-      """SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-        FROM orders o
-        WHERE o.o_totalprice > (
-          SELECT AVG(o2.o_totalprice) * 1.5 FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        ORDER BY o.o_orderkey""",
-    "q66_date_arithmetic" ->
-      """SELECT o.o_orderkey, l.l_linenumber,
-               CAST(DATE_DIFF('day', CAST(o.o_orderdate AS DATE), CAST(l.l_shipdate AS DATE)) AS BIGINT) AS days_to_ship,
-               CAST(MONTH(o.o_orderdate) AS BIGINT) AS order_month,
-               CAST(QUARTER(o.o_orderdate) AS BIGINT) AS order_quarter,
-               CAST(DAYOFWEEK(o.o_orderdate) + 1 AS BIGINT) AS order_dow
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        WHERE o.o_orderkey < 120
-        ORDER BY o.o_orderkey, l.l_linenumber, l.l_shipdate, l.l_quantity""",
-    "q67_string_parts" ->
-      """SELECT p_partkey,
-               SPLIT_PART(p_type, ' ', 1) AS type_head,
-               SPLIT_PART(p_type, ' ', 3) AS type_tail,
-               CAST(LEN(STRING_SPLIT(p_type, ' ')) AS BIGINT) AS n_words,
-               TRANSLATE(p_name, ' ', '_') AS name_tag
-        FROM part
-        WHERE p_partkey < 300
-        ORDER BY p_partkey""",
-    "q68_rank_fractions" ->
-      """SELECT o_orderkey,
-               CAST(DENSE_RANK() OVER w AS BIGINT) AS drk,
-               PERCENT_RANK() OVER w AS prk,
-               CUME_DIST() OVER w AS cd
-        FROM orders
-        WHERE o_orderkey < 300
-        WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice)
-        ORDER BY o_orderkey""",
-    "q69_limit_offset" ->
-      """SELECT c_custkey, c_name
-        FROM customer
-        ORDER BY c_acctbal DESC, c_custkey
-        LIMIT 20 OFFSET 40""",
-    "q65_dedup_cc" ->
-      """SELECT doc_id,
-               MIN(doc_id) OVER (
-                 PARTITION BY MD5(REGEXP_REPLACE(LOWER(TRIM(text)), '\s+', ' ', 'g'))) AS component
-        FROM documents
-        ORDER BY doc_id""",
-    "q63_sessionization" ->
-      """WITH marked AS (
-          SELECT user_id, ts, event_id,
-                 CASE WHEN LAG(ts) OVER w IS NULL
-                        OR ts > LAG(ts) OVER w + INTERVAL 30 MINUTE
-                      THEN 1 ELSE 0 END AS new_session
-          FROM events
-          WHERE user_id <= 20
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), numbered AS (
-          SELECT user_id, ts,
-                 SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-          FROM marked
-        )
-        SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               MIN(ts) AS session_start, MAX(ts) AS session_end
-        FROM numbered
-        GROUP BY user_id, session_id
-        ORDER BY user_id, session_id""",
-    "q90_decontaminate" ->
-      """WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t
-          FROM documents
-        ), grams AS (
-          SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 4 + 2),
-                   i -> array_to_string(list_slice(t, i, i + 4 - 1), ' ')))) AS g
-          FROM toks WHERE len(t) >= 4
-        ), ev AS (
-          SELECT DISTINCT g FROM grams WHERE doc_id % 17 = 0
-        )
-        SELECT tg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_matched
-        FROM grams tg JOIN ev USING (g)
-        WHERE tg.doc_id % 17 <> 0
-        GROUP BY tg.doc_id
-        ORDER BY tg.doc_id""",
-    "q91_tfidf_topk" ->
-      """WITH tc AS (
-          SELECT doc_id, g AS term, CAST(COUNT(*) AS BIGINT) AS tf
-          FROM (SELECT doc_id,
-                       unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS g
-                FROM documents)
-          GROUP BY doc_id, g
-        ), dfreq AS (
-          SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tc GROUP BY term
-        ), nn AS (
-          SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents
-        ), ranked AS (
-          SELECT tc.doc_id, tc.term, tc.tf, dfreq.df,
-                 CAST(tc.tf AS DOUBLE) * (SELECT n FROM nn) / CAST(dfreq.df AS DOUBLE) AS score,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY tc.doc_id
-                        ORDER BY CAST(tc.tf AS DOUBLE) * (SELECT n FROM nn) / CAST(dfreq.df AS DOUBLE) DESC,
-                                 tc.term) AS BIGINT) AS rank
-          FROM tc JOIN dfreq USING (term)
-        )
-        SELECT doc_id, term, tf, df, score, rank
-        FROM ranked WHERE rank <= 5
-        ORDER BY doc_id, rank""",
-    "q92_normalized_dedup" ->
-      """WITH all_docs AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT doc_id + 10000, upper(text) || '!!' FROM documents WHERE doc_id % 7 = 0
-        ), n AS (
-          SELECT doc_id, trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm
-          FROM all_docs
-        )
-        SELECT MIN(doc_id) AS keeper_id, CAST(COUNT(*) AS BIGINT) AS n_copies,
-               CAST(LENGTH(norm) AS BIGINT) AS norm_len
-        FROM n GROUP BY norm
-        ORDER BY keeper_id""",
-    "q93_salted_join" ->
-      """SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n_rows,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY p_brand
-        ORDER BY p_brand""",
-    "q94_weighted_sample" ->
-      // per-row threshold = lpad(hex(floor(clamp(w)·(2^32−1))), 8): every
-      // step exact in IEEE doubles → identical keep set on both engines
-      """SELECT doc_id, n_chars FROM documents
-        WHERE SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'w1'), 1, 8) <
-              LPAD(LOWER(TO_HEX(CAST(FLOOR(
-                LEAST(1.0, GREATEST(0.0, CAST(n_chars AS DOUBLE) / 1000.0)) * 4294967295.0
-              ) AS BIGINT))), 8, '0')
-        ORDER BY doc_id""",
-    "q95_mixture_sample" ->
-      // rates CAST AS DOUBLE so ceil(n·rate) runs in the same IEEE
-      // arithmetic as the engine (a DECIMAL rate would ceil exactly and
-      // disagree at representation boundaries)
-      """WITH t AS (
-          SELECT doc_id, source,
-                 ROW_NUMBER() OVER (PARTITION BY source
-                   ORDER BY MD5(CAST(doc_id AS VARCHAR) || 'm1')) AS rn,
-                 COUNT(*) OVER (PARTITION BY source) AS n,
-                 CASE source WHEN 'src0' THEN CAST(0.5 AS DOUBLE)
-                             WHEN 'src1' THEN CAST(0.25 AS DOUBLE)
-                             ELSE CAST(0.05 AS DOUBLE) END AS rate
-          FROM documents)
-        SELECT doc_id, source FROM t
-        WHERE rn <= CEIL(n * rate)
-        ORDER BY doc_id""",
-    "q142_hist_quantiles" ->
-      // same binning arithmetic as HistSketch.binOf, same edge formula
-      """WITH hist AS (
-          SELECT LEAST(63, GREATEST(0,
-                   CAST(FLOOR((CAST(n_chars AS DOUBLE) - 0.0) / 640.0 * 64) AS BIGINT))) AS bin,
-                 CAST(COUNT(*) AS BIGINT) AS cnt
-          FROM documents GROUP BY 1),
-        cum AS (SELECT bin, SUM(cnt) OVER (ORDER BY bin) AS cum FROM hist),
-        tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM hist),
-        ps AS (SELECT CAST(unnest([0.5, 0.9, 0.99]) AS DOUBLE) AS p)
-        SELECT p, 0.0 + CAST(MIN(bin) + 1 AS DOUBLE) * 640.0 / 64 AS est
-        FROM ps, cum, tot
-        WHERE cum >= CEIL(p * CAST(n AS DOUBLE))
-        GROUP BY p ORDER BY p""",
-    "q184_crawl_curation" -> {
-      val cum = Seq(0.8, 0.1, 0.1).scanLeft(0.0)(_ + _).tail
-      val t1 = f"${math.round(cum(0) * 0xffffffffL)}%08x"
-      val t2 = f"${math.round(cum(1) * 0xffffffffL)}%08x"
-      s"""WITH h AS (
-          SELECT doc_id, source,
-                 '<html><head><title>Page</title><style>nav{color:red}</style><script>track(1 < 2);</script></head><body>'
-                 || '<nav>home products pricing docs blog careers about contact login signup</nav><p>'
-                 || text
-                 || '</p><footer>copyright acme corp all rights reserved privacy terms cookies</footer></body></html>'
-                 AS html
-          FROM documents),
-        x1 AS (SELECT doc_id, source, regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS t FROM h),
-        x2 AS (SELECT doc_id, source, regexp_replace(t, '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS t FROM x1),
-        x3 AS (SELECT doc_id, source, regexp_replace(t, '(?s)<!--.*?-->', ' ', 'g') AS t FROM x2),
-        x4 AS (SELECT doc_id, source, regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM x3),
-        xe AS (SELECT doc_id, source,
-                replace(replace(replace(replace(replace(replace(replace(t,
-                  '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                  '&#39;', ''''), '&apos;', ''''), '&amp;', '&') AS t
-              FROM x4),
-        d AS (
-          SELECT doc_id, source,
-                 list_filter(string_split_regex(trim(t), '\\s+'), w -> len(w) > 0) AS arr
-          FROM xe),
-        g AS (
-          SELECT doc_id, pos, md5(array_to_string(arr[pos+1:pos+8], ' ')) AS h
-          FROM (SELECT doc_id, arr, unnest(range(0, len(arr) - 7)) AS pos
-                FROM d WHERE len(arr) >= 8)),
-        dup AS (
-          SELECT h, min(doc_id) AS keeper FROM g
-          GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-        rem AS (
-          SELECT DISTINCT g.doc_id, g.pos + u.off AS p
-          FROM g JOIN dup USING (h)
-          CROSS JOIN (SELECT unnest(range(0, 8)) AS off) u
-          WHERE g.doc_id <> dup.keeper),
-        remagg AS (SELECT doc_id, count(*) AS n_removed FROM rem GROUP BY doc_id),
-        kept AS (
-          SELECT d.doc_id, d.source,
-                 CAST(len(d.arr) AS BIGINT) AS n_tokens,
-                 CAST(coalesce(ra.n_removed, 0) AS BIGINT) AS n_tokens_removed,
-                 CAST(len(d.arr) - coalesce(ra.n_removed, 0) AS BIGINT) AS n_kept_tokens
-          FROM d LEFT JOIN remagg ra USING (doc_id)),
-        med AS (
-          SELECT source, quantile_cont(CAST(n_kept_tokens AS DOUBLE), 0.5) AS median
-          FROM kept GROUP BY source),
-        mad AS (
-          SELECT k.source,
-                 quantile_cont(abs(CAST(k.n_kept_tokens AS DOUBLE) - m.median), 0.5) AS mad
-          FROM kept k JOIN med m USING (source) GROUP BY k.source),
-        screened AS (
-          SELECT k.*
-          FROM kept k JOIN med m USING (source) JOIN mad a ON k.source = a.source
-          WHERE NOT (CASE WHEN a.mad > 0
-            THEN abs((CAST(k.n_kept_tokens AS DOUBLE) - m.median) / (1.4826 * a.mad)) > 3.0
-            ELSE FALSE END))
-        SELECT doc_id, source, n_tokens, n_tokens_removed, n_kept_tokens,
-               CASE WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'wc'), 1, 8) < '$t1' THEN 'train'
-                    WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'wc'), 1, 8) < '$t2' THEN 'val'
-                    ELSE 'test' END AS split
-        FROM screened ORDER BY doc_id"""
-    },
-    "q188_curation_chain" -> {
-      val cum = Seq(0.8, 0.1, 0.1).scanLeft(0.0)(_ + _).tail
-      val t1 = f"${math.round(cum(0) * 0xffffffffL)}%08x"
-      val t2 = f"${math.round(cum(1) * 0xffffffffL)}%08x"
-      s"""WITH h AS (
-          SELECT doc_id, source,
-                 '<html><head><title>Page</title><style>nav{color:red}</style><script>track(1 < 2);</script></head><body>'
-                 || '<nav>home products pricing docs blog careers about contact login signup</nav><p>'
-                 || text
-                 || '</p><footer>copyright acme corp all rights reserved privacy terms cookies</footer></body></html>'
-                 AS html
-          FROM documents),
-        x1 AS (SELECT doc_id, source, regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS t FROM h),
-        x2 AS (SELECT doc_id, source, regexp_replace(t, '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS t FROM x1),
-        x3 AS (SELECT doc_id, source, regexp_replace(t, '(?s)<!--.*?-->', ' ', 'g') AS t FROM x2),
-        x4 AS (SELECT doc_id, source, regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM x3),
-        xe AS (SELECT doc_id, source,
-                replace(replace(replace(replace(replace(replace(replace(t,
-                  '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                  '&#39;', ''''), '&apos;', ''''), '&amp;', '&') AS t
-              FROM x4),
-        lt AS (SELECT doc_id, source, t,
-                 list_distinct(list_filter(regexp_split_to_array(lower(trim(t)), '[^\\p{L}\\p{N}]+'), x -> len(x) > 0)) AS toks
-               FROM xe),
-        lh AS (SELECT doc_id, source, t,
-                 len(list_intersect(toks, ['der','die','das','und','ist','von','nicht','mit','ein','eine','zu','den'])) AS h_de,
-                 len(list_intersect(toks, ['the','and','of','to','in','is','that','it','for','with','was','are'])) AS h_en,
-                 len(list_intersect(toks, ['el','la','los','las','es','en','que','una','por','con','para','del'])) AS h_es,
-                 len(list_intersect(toks, ['le','la','les','et','est','dans','pour','que','une','des','pas','sur'])) AS h_fr,
-                 len(list_intersect(toks, ['il','la','che','di','è','per','con','una','sono','non','più','come'])) AS h_it
-               FROM lt),
-        eng AS (
-          SELECT doc_id, source, 'en' AS lang, t FROM lh
-          WHERE greatest(h_de,h_en,h_es,h_fr,h_it) > 0
-            AND h_it <> greatest(h_de,h_en,h_es,h_fr,h_it)
-            AND h_fr <> greatest(h_de,h_en,h_es,h_fr,h_it)
-            AND h_es <> greatest(h_de,h_en,h_es,h_fr,h_it)
-            AND h_en = greatest(h_de,h_en,h_es,h_fr,h_it)),
-        ml AS (SELECT doc_id, source, lang,
-                 regexp_replace(trim(regexp_replace(t, '\\s+', ' ', 'g')),
-                   '(\\S+ \\S+ \\S+ \\S+) ', '\\1' || chr(10), 'g') AS m
-               FROM eng),
-        mx AS (SELECT doc_id, source, lang, string_split(m, chr(10)) AS ls FROM ml),
-        ex AS (SELECT doc_id, source, lang, unnest(ls) AS line,
-                      unnest(range(1, len(ls) + 1)) AS ord
-               FROM mx),
-        firsts AS (
-          SELECT doc_id, source, lang, line, ord FROM ex
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY doc_id, line ORDER BY ord) = 1),
-        cln AS (
-          SELECT doc_id, source, lang,
-                 string_agg(line, chr(10) ORDER BY ord) AS clean
-          FROM firsts GROUP BY doc_id, source, lang),
-        dec AS (
-          SELECT * FROM cln
-          WHERE md5(clean) NOT IN (SELECT md5(clean) FROM cln WHERE doc_id % 13 = 0)),
-        d AS (
-          SELECT doc_id, source, lang,
-                 list_filter(string_split_regex(trim(clean), '\\s+'), w -> len(w) > 0) AS arr
-          FROM dec),
-        g AS (
-          SELECT doc_id, pos, md5(array_to_string(arr[pos+1:pos+8], ' ')) AS gh
-          FROM (SELECT doc_id, arr, unnest(range(0, len(arr) - 7)) AS pos
-                FROM d WHERE len(arr) >= 8)),
-        dup AS (
-          SELECT gh, min(doc_id) AS keeper FROM g
-          GROUP BY gh HAVING count(DISTINCT doc_id) >= 2),
-        rem AS (
-          SELECT DISTINCT g.doc_id, g.pos + u.off AS p
-          FROM g JOIN dup USING (gh)
-          CROSS JOIN (SELECT unnest(range(0, 8)) AS off) u
-          WHERE g.doc_id <> dup.keeper),
-        remagg AS (SELECT doc_id, count(*) AS n_removed FROM rem GROUP BY doc_id),
-        kept AS (
-          SELECT d.doc_id, d.source, d.lang,
-                 CAST(len(d.arr) AS BIGINT) AS n_tokens,
-                 CAST(coalesce(ra.n_removed, 0) AS BIGINT) AS n_tokens_removed,
-                 CAST(len(d.arr) - coalesce(ra.n_removed, 0) AS BIGINT) AS n_kept_tokens
-          FROM d LEFT JOIN remagg ra USING (doc_id)),
-        med AS (
-          SELECT source, quantile_cont(CAST(n_kept_tokens AS DOUBLE), 0.5) AS median
-          FROM kept GROUP BY source),
-        mad AS (
-          SELECT k.source,
-                 quantile_cont(abs(CAST(k.n_kept_tokens AS DOUBLE) - m.median), 0.5) AS mad
-          FROM kept k JOIN med m USING (source) GROUP BY k.source),
-        screened AS (
-          SELECT k.*
-          FROM kept k JOIN med m USING (source) JOIN mad a ON k.source = a.source
-          WHERE NOT (CASE WHEN a.mad > 0
-            THEN abs((CAST(k.n_kept_tokens AS DOUBLE) - m.median) / (1.4826 * a.mad)) > 3.0
-            ELSE FALSE END))
-        SELECT doc_id, source, lang, n_tokens, n_tokens_removed, n_kept_tokens,
-               CASE WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'cc'), 1, 8) < '$t1' THEN 'train'
-                    WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'cc'), 1, 8) < '$t2' THEN 'val'
-                    ELSE 'test' END AS split
-        FROM screened ORDER BY doc_id"""
-    },
-    "q195_classifier_gated_curation" -> {
-      // q188's oracle with the salted page bodies and the exact-count NB
-      // gate (q194's CTEs) composed between line dedup and
-      // decontamination; floats never surface (argmax only, macroscopic
-      // salt margins)
-      val cum = Seq(0.8, 0.1, 0.1).scanLeft(0.0)(_ + _).tail
-      val t1 = f"${math.round(cum(0) * 0xffffffffL)}%08x"
-      val t2 = f"${math.round(cum(1) * 0xffffffffL)}%08x"
-      s"""WITH h AS (
-          SELECT doc_id, source,
-                 '<html><head><title>Page</title><style>nav{color:red}</style><script>track(1 < 2);</script></head><body>'
-                 || '<nav>home products pricing docs blog careers about contact login signup</nav><p>'
-                 || text
-                 || CASE WHEN doc_id % 3 = 0
-                      THEN ' subscribe now limited offer click here'
-                      ELSE ' method results analysis discussion further' END
-                 || '</p><footer>copyright acme corp all rights reserved privacy terms cookies</footer></body></html>'
-                 AS html
-          FROM documents),
-        x1 AS (SELECT doc_id, source, regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS t FROM h),
-        x2 AS (SELECT doc_id, source, regexp_replace(t, '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS t FROM x1),
-        x3 AS (SELECT doc_id, source, regexp_replace(t, '(?s)<!--.*?-->', ' ', 'g') AS t FROM x2),
-        x4 AS (SELECT doc_id, source, regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM x3),
-        xe AS (SELECT doc_id, source,
-                replace(replace(replace(replace(replace(replace(replace(t,
-                  '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                  '&#39;', ''''), '&apos;', ''''), '&amp;', '&') AS t
-              FROM x4),
-        lt AS (SELECT doc_id, source, t,
-                 list_distinct(list_filter(regexp_split_to_array(lower(trim(t)), '[^\\p{L}\\p{N}]+'), x -> len(x) > 0)) AS toks
-               FROM xe),
-        lh AS (SELECT doc_id, source, t,
-                 len(list_intersect(toks, ['der','die','das','und','ist','von','nicht','mit','ein','eine','zu','den'])) AS h_de,
-                 len(list_intersect(toks, ['the','and','of','to','in','is','that','it','for','with','was','are'])) AS h_en,
-                 len(list_intersect(toks, ['el','la','los','las','es','en','que','una','por','con','para','del'])) AS h_es,
-                 len(list_intersect(toks, ['le','la','les','et','est','dans','pour','que','une','des','pas','sur'])) AS h_fr,
-                 len(list_intersect(toks, ['il','la','che','di','è','per','con','una','sono','non','più','come'])) AS h_it
-               FROM lt),
-        eng AS (
-          SELECT doc_id, source, 'en' AS lang, t FROM lh
-          WHERE greatest(h_de,h_en,h_es,h_fr,h_it) > 0
-            AND h_it <> greatest(h_de,h_en,h_es,h_fr,h_it)
-            AND h_fr <> greatest(h_de,h_en,h_es,h_fr,h_it)
-            AND h_es <> greatest(h_de,h_en,h_es,h_fr,h_it)
-            AND h_en = greatest(h_de,h_en,h_es,h_fr,h_it)),
-        ml AS (SELECT doc_id, source, lang,
-                 regexp_replace(trim(regexp_replace(t, '\\s+', ' ', 'g')),
-                   '(\\S+ \\S+ \\S+ \\S+) ', '\\1' || chr(10), 'g') AS m
-               FROM eng),
-        mx AS (SELECT doc_id, source, lang, string_split(m, chr(10)) AS ls FROM ml),
-        ex AS (SELECT doc_id, source, lang, unnest(ls) AS line,
-                      unnest(range(1, len(ls) + 1)) AS ord
-               FROM mx),
-        firsts AS (
-          SELECT doc_id, source, lang, line, ord FROM ex
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY doc_id, line ORDER BY ord) = 1),
-        cln AS (
-          SELECT doc_id, source, lang,
-                 string_agg(line, chr(10) ORDER BY ord) AS clean
-          FROM firsts GROUP BY doc_id, source, lang),
-        tr AS (
-          SELECT doc_id, clean,
-                 CASE WHEN doc_id % 3 = 0 THEN 'promo' ELSE 'clean' END AS label_true
-          FROM cln WHERE doc_id % 5 <> 0),
-        ttok AS (
-          SELECT label_true AS label,
-                 unnest(list_filter(string_split_regex(trim(clean), '\\s+'), w -> len(w) > 0)) AS token
-          FROM tr),
-        token_table AS (SELECT label, token, count(*) AS cnt FROM ttok GROUP BY 1, 2),
-        class_table AS (
-          SELECT t.label, dd.n_docs, count(*) AS n_tokens
-          FROM ttok t
-          JOIN (SELECT label_true AS label, count(*) AS n_docs FROM tr GROUP BY 1) dd
-            USING (label)
-          GROUP BY 1, 2),
-        v AS (SELECT count(DISTINCT token) AS vocab FROM token_table),
-        tot AS (SELECT sum(n_docs) AS total_docs FROM class_table),
-        dtok AS (
-          SELECT doc_id,
-                 unnest(list_filter(string_split_regex(trim(clean), '\\s+'), w -> len(w) > 0)) AS token
-          FROM cln),
-        contrib AS (
-          SELECT d2.doc_id, c.label,
-                 sum(ln(coalesce(tt.cnt, 0) + 1) - ln(c.n_tokens + v.vocab)) AS token_score
-          FROM dtok d2
-          CROSS JOIN class_table c
-          CROSS JOIN v
-          LEFT JOIN token_table tt ON tt.label = c.label AND tt.token = d2.token
-          GROUP BY 1, 2),
-        nbscored AS (
-          SELECT b.doc_id, c.label,
-                 ln(c.n_docs) - ln(t.total_docs) + coalesce(co.token_score, 0) AS score
-          FROM (SELECT DISTINCT doc_id FROM cln) b
-          CROSS JOIN class_table c
-          CROSS JOIN tot t
-          LEFT JOIN contrib co ON co.doc_id = b.doc_id AND co.label = c.label),
-        gate AS (
-          SELECT doc_id FROM (
-            SELECT doc_id, label,
-                   row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, label) AS rn
-            FROM nbscored)
-          WHERE rn = 1 AND label = 'clean'),
-        gated AS (SELECT cln.* FROM cln JOIN gate USING (doc_id)),
-        dec AS (
-          SELECT * FROM gated
-          WHERE md5(clean) NOT IN (SELECT md5(clean) FROM gated WHERE doc_id % 13 = 0)),
-        d AS (
-          SELECT doc_id, source, lang,
-                 list_filter(string_split_regex(trim(clean), '\\s+'), w -> len(w) > 0) AS arr
-          FROM dec),
-        g AS (
-          SELECT doc_id, pos, md5(array_to_string(arr[pos+1:pos+8], ' ')) AS gh
-          FROM (SELECT doc_id, arr, unnest(range(0, len(arr) - 7)) AS pos
-                FROM d WHERE len(arr) >= 8)),
-        dup AS (
-          SELECT gh, min(doc_id) AS keeper FROM g
-          GROUP BY gh HAVING count(DISTINCT doc_id) >= 2),
-        rem AS (
-          SELECT DISTINCT g.doc_id, g.pos + u.off AS p
-          FROM g JOIN dup USING (gh)
-          CROSS JOIN (SELECT unnest(range(0, 8)) AS off) u
-          WHERE g.doc_id <> dup.keeper),
-        remagg AS (SELECT doc_id, count(*) AS n_removed FROM rem GROUP BY doc_id),
-        kept AS (
-          SELECT d.doc_id, d.source, d.lang,
-                 CAST(len(d.arr) AS BIGINT) AS n_tokens,
-                 CAST(coalesce(ra.n_removed, 0) AS BIGINT) AS n_tokens_removed,
-                 CAST(len(d.arr) - coalesce(ra.n_removed, 0) AS BIGINT) AS n_kept_tokens
-          FROM d LEFT JOIN remagg ra USING (doc_id)),
-        med AS (
-          SELECT source, quantile_cont(CAST(n_kept_tokens AS DOUBLE), 0.5) AS median
-          FROM kept GROUP BY source),
-        mad AS (
-          SELECT k.source,
-                 quantile_cont(abs(CAST(k.n_kept_tokens AS DOUBLE) - m.median), 0.5) AS mad
-          FROM kept k JOIN med m USING (source) GROUP BY k.source),
-        screened AS (
-          SELECT k.*
-          FROM kept k JOIN med m USING (source) JOIN mad a ON k.source = a.source
-          WHERE NOT (CASE WHEN a.mad > 0
-            THEN abs((CAST(k.n_kept_tokens AS DOUBLE) - m.median) / (1.4826 * a.mad)) > 3.0
-            ELSE FALSE END))
-        SELECT doc_id, source, lang, n_tokens, n_tokens_removed, n_kept_tokens,
-               CASE WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'cc'), 1, 8) < '$t1' THEN 'train'
-                    WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'cc'), 1, 8) < '$t2' THEN 'val'
-                    ELSE 'test' END AS split
-        FROM screened ORDER BY doc_id"""
-    },
-    "q183_html_extract" ->
-      // the identical regex chain in RE2 ('g' = global, matching Spark's
-      // always-global regexp_replace); entity decode order preserved so
-      // &amp;lt; decodes one level only
-      """WITH h AS (
-          SELECT doc_id,
-                 '<html><head><title>Title</title><style type="text/css">p { color: red; }</style>'
-                 || '<script>if (a < b && c > d) { run("x"); }</script></head><body><h1>Doc '
-                 || CAST(doc_id AS VARCHAR)
-                 || '</h1><p>' || text
-                 || '</p><ul><li>A&amp;B</li><li>x &lt; y</li></ul><!-- hidden --></body></html>'
-                 AS html
-          FROM documents),
-        s1 AS (SELECT doc_id, regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS t FROM h),
-        s2 AS (SELECT doc_id, regexp_replace(t, '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS t FROM s1),
-        s3 AS (SELECT doc_id, regexp_replace(t, '(?s)<!--.*?-->', ' ', 'g') AS t FROM s2),
-        s4 AS (SELECT doc_id, regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM s3),
-        e AS (SELECT doc_id,
-                replace(replace(replace(replace(replace(replace(replace(t,
-                  '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                  '&#39;', ''''), '&apos;', ''''), '&amp;', '&') AS t
-              FROM s4)
-        SELECT doc_id,
-               trim(regexp_replace(t, '\s+', ' ', 'g')) AS text_extracted,
-               CAST(len(trim(regexp_replace(t, '\s+', ' ', 'g'))) AS BIGINT) AS n_chars_extracted
-        FROM e ORDER BY doc_id""",
-    "q182_span_dedup_withindoc" ->
-      // same window-hash scaffolding as q180, but duplicated = >=2
-      // occurrences within ONE doc; first occurrence (min pos) kept. The
-      // salted tail is built in token space (list_concat of the first 10
-      // tokens) — identical to Spark's concat-then-renormalize
-      """WITH d0 AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(trim(text), '\s+'), t -> len(t) > 0) AS arr0
-          FROM documents),
-        d AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 4 = 0 THEN list_concat(arr0, arr0[1:10])
-                      ELSE arr0 END AS arr
-          FROM d0),
-        g AS (
-          SELECT doc_id, pos, md5(array_to_string(arr[pos+1:pos+8], ' ')) AS h
-          FROM (SELECT doc_id, arr, unnest(range(0, len(arr) - 7)) AS pos
-                FROM d WHERE len(arr) >= 8)),
-        firsts AS (
-          SELECT doc_id, h, min(pos) AS fst, count(*) AS c
-          FROM g GROUP BY doc_id, h),
-        mk AS (
-          SELECT g.doc_id, g.pos FROM g JOIN firsts USING (doc_id, h)
-          WHERE c >= 2 AND g.pos <> fst),
-        rem AS (
-          SELECT DISTINCT doc_id, pos + u.off AS p
-          FROM mk CROSS JOIN (SELECT unnest(range(0, 8)) AS off) u),
-        remflag AS (
-          SELECT doc_id, p,
-                 CASE WHEN lag(p) OVER (PARTITION BY doc_id ORDER BY p) = p - 1
-                      THEN 0 ELSE 1 END AS s
-          FROM rem),
-        remagg AS (
-          SELECT doc_id, count(*) AS n_removed, sum(s) AS n_spans
-          FROM remflag GROUP BY doc_id),
-        toks AS (
-          SELECT doc_id, unnest(arr) AS tok, unnest(range(0, len(arr))) AS pos FROM d),
-        keptagg AS (
-          SELECT t.doc_id, string_agg(t.tok, ' ' ORDER BY t.pos) AS clean_text
-          FROM toks t LEFT JOIN rem r ON t.doc_id = r.doc_id AND t.pos = r.p
-          WHERE r.doc_id IS NULL GROUP BY t.doc_id)
-        SELECT d.doc_id,
-               CAST(len(d.arr) AS BIGINT) AS n_tokens,
-               CAST(coalesce(ra.n_removed, 0) AS BIGINT) AS n_tokens_removed,
-               CAST(coalesce(ra.n_spans, 0) AS BIGINT) AS n_spans,
-               coalesce(ka.clean_text, '') AS clean_text
-        FROM d
-        LEFT JOIN remagg ra USING (doc_id)
-        LEFT JOIN keptagg ka USING (doc_id)
-        ORDER BY doc_id""",
-    "q180_span_dedup" ->
-      // the identical window-hash formulation: md5 over 8-token windows of
-      // the whitespace-normalized token array, >=2 distinct docs -> dup,
-      // min-doc keeper, covered positions union, gaps-and-islands span
-      // count, kept tokens re-joined in order
-      """WITH base AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 3 = 0
-                      THEN 'subscribe to our newsletter for updates terms of service apply' || ' ' || text
-                      ELSE text END AS text
-          FROM documents),
-        d AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(trim(text), '\s+'), t -> len(t) > 0) AS arr
-          FROM base),
-        g AS (
-          SELECT doc_id, pos, md5(array_to_string(arr[pos+1:pos+8], ' ')) AS h
-          FROM (SELECT doc_id, arr, unnest(range(0, len(arr) - 7)) AS pos
-                FROM d WHERE len(arr) >= 8)),
-        dup AS (
-          SELECT h, min(doc_id) AS keeper FROM g
-          GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-        rem AS (
-          SELECT DISTINCT g.doc_id, g.pos + u.off AS p
-          FROM g JOIN dup USING (h)
-          CROSS JOIN (SELECT unnest(range(0, 8)) AS off) u
-          WHERE g.doc_id <> dup.keeper),
-        remflag AS (
-          SELECT doc_id, p,
-                 CASE WHEN lag(p) OVER (PARTITION BY doc_id ORDER BY p) = p - 1
-                      THEN 0 ELSE 1 END AS s
-          FROM rem),
-        remagg AS (
-          SELECT doc_id, count(*) AS n_removed, sum(s) AS n_spans
-          FROM remflag GROUP BY doc_id),
-        toks AS (
-          SELECT doc_id, unnest(arr) AS tok, unnest(range(0, len(arr))) AS pos FROM d),
-        keptagg AS (
-          SELECT t.doc_id, string_agg(t.tok, ' ' ORDER BY t.pos) AS clean_text
-          FROM toks t LEFT JOIN rem r ON t.doc_id = r.doc_id AND t.pos = r.p
-          WHERE r.doc_id IS NULL GROUP BY t.doc_id)
-        SELECT d.doc_id,
-               CAST(len(d.arr) AS BIGINT) AS n_tokens,
-               CAST(coalesce(ra.n_removed, 0) AS BIGINT) AS n_tokens_removed,
-               CAST(coalesce(ra.n_spans, 0) AS BIGINT) AS n_spans,
-               coalesce(ka.clean_text, '') AS clean_text
-        FROM d
-        LEFT JOIN remagg ra USING (doc_id)
-        LEFT JOIN keptagg ka USING (doc_id)
-        ORDER BY doc_id""",
-    "q190_span_index_ingest" ->
-      // the one-shot-equivalence contract IS the oracle: a plain one-shot
-      // span dedup over the union corpus (identical SQL to q180) must
-      // reproduce the incremental write+ingest rows byte-for-byte
-      """WITH base AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 3 = 0
-                      THEN 'subscribe to our newsletter for updates terms of service apply' || ' ' || text
-                      ELSE text END AS text
-          FROM documents),
-        d AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(trim(text), '\s+'), t -> len(t) > 0) AS arr
-          FROM base),
-        g AS (
-          SELECT doc_id, pos, md5(array_to_string(arr[pos+1:pos+8], ' ')) AS h
-          FROM (SELECT doc_id, arr, unnest(range(0, len(arr) - 7)) AS pos
-                FROM d WHERE len(arr) >= 8)),
-        dup AS (
-          SELECT h, min(doc_id) AS keeper FROM g
-          GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-        rem AS (
-          SELECT DISTINCT g.doc_id, g.pos + u.off AS p
-          FROM g JOIN dup USING (h)
-          CROSS JOIN (SELECT unnest(range(0, 8)) AS off) u
-          WHERE g.doc_id <> dup.keeper),
-        remflag AS (
-          SELECT doc_id, p,
-                 CASE WHEN lag(p) OVER (PARTITION BY doc_id ORDER BY p) = p - 1
-                      THEN 0 ELSE 1 END AS s
-          FROM rem),
-        remagg AS (
-          SELECT doc_id, count(*) AS n_removed, sum(s) AS n_spans
-          FROM remflag GROUP BY doc_id),
-        toks AS (
-          SELECT doc_id, unnest(arr) AS tok, unnest(range(0, len(arr))) AS pos FROM d),
-        keptagg AS (
-          SELECT t.doc_id, string_agg(t.tok, ' ' ORDER BY t.pos) AS clean_text
-          FROM toks t LEFT JOIN rem r ON t.doc_id = r.doc_id AND t.pos = r.p
-          WHERE r.doc_id IS NULL GROUP BY t.doc_id)
-        SELECT d.doc_id,
-               CAST(len(d.arr) AS BIGINT) AS n_tokens,
-               CAST(coalesce(ra.n_removed, 0) AS BIGINT) AS n_tokens_removed,
-               CAST(coalesce(ra.n_spans, 0) AS BIGINT) AS n_spans,
-               coalesce(ka.clean_text, '') AS clean_text
-        FROM d
-        LEFT JOIN remagg ra USING (doc_id)
-        LEFT JOIN keptagg ka USING (doc_id)
-        ORDER BY doc_id""",
-    "q197_mojibake_repair" ->
-      // DuckDB never sees the mangling: it asserts the repair's round trip
-      // by computing the pristine salted text directly and the pass count
-      // arithmetically — the Spark side must invert its own 2×/1×/0×
-      // encode/decode mangling byte-for-byte to match
-      """SELECT doc_id,
-           text || ' café déjà vu — naïve “quotes”' AS fixed,
-           CAST(CASE WHEN doc_id % 3 = 0 THEN 2
-                     WHEN doc_id % 3 = 1 THEN 1
-                     ELSE 0 END AS BIGINT) AS n_passes
-         FROM documents ORDER BY doc_id""",
-    "q201_wordcounts_ingest" ->
-      // ONE count over the whole corpus — the engine built the same table
-      // incrementally (write evens + ingest odds, A's text never re-read)
-      """SELECT token AS word, count(*) AS cnt
-        FROM (SELECT unnest(list_filter(string_split_regex(trim(text), '\s+'),
-                t -> len(t) > 0)) AS token
-              FROM documents)
-        GROUP BY 1 HAVING count(*) >= 5
-        ORDER BY word""",
-    "q207_char_entropy" ->
-      // the same unnest-and-aggregate entropy, abs() only to normalize
-      // the -0.0 a single-distinct-char document's -sum produces
-      """SELECT d.doc_id, round(coalesce(abs(e.ent), 0), 6) AS char_entropy
-        FROM documents d
-        LEFT JOIN (
-          SELECT doc_id, -sum(p * ln(p)) AS ent FROM (
-            SELECT doc_id,
-                   count(*)::DOUBLE / sum(count(*)) OVER (PARTITION BY doc_id) AS p
-            FROM (SELECT doc_id, unnest(string_split(text, '')) AS ch
-                  FROM documents)
-            GROUP BY doc_id, ch)
-          GROUP BY doc_id) e USING (doc_id)
-        ORDER BY d.doc_id""",
-    "q212_entropy_gated_split" -> {
-      // q207's unnest-aggregate entropy over the STAGED text (padding
-      // injected by the same CASE), the 2.2-nat gate, the `\s+` token
-      // count and q184's md5 split arithmetic — the composed chain
-      // reproduced end to end
-      val cum = Seq(0.8, 0.1, 0.1).scanLeft(0.0)(_ + _).tail
-      val t1 = f"${math.round(cum(0) * 0xffffffffL)}%08x"
-      val t2 = f"${math.round(cum(1) * 0xffffffffL)}%08x"
-      s"""WITH staged AS (
-          SELECT doc_id, source,
-                 CASE WHEN doc_id % 9 = 3 THEN repeat('a', 240) ELSE text END AS t
-          FROM documents),
-        ent AS (
-          SELECT doc_id, -sum(p * ln(p)) AS ent FROM (
-            SELECT doc_id,
-                   count(*)::DOUBLE / sum(count(*)) OVER (PARTITION BY doc_id) AS p
-            FROM (SELECT doc_id, unnest(string_split(t, '')) AS ch FROM staged)
-            GROUP BY doc_id, ch)
-          GROUP BY doc_id),
-        gated AS (
-          SELECT s.doc_id, s.source, abs(e.ent) AS ent,
-                 CAST(len(list_filter(string_split_regex(trim(s.t), '\\s+'),
-                   x -> len(x) > 0)) AS BIGINT) AS n_tokens
-          FROM staged s JOIN ent e USING (doc_id)
-          WHERE abs(e.ent) >= 2.2)
-        SELECT doc_id, source, round(ent, 6) AS char_entropy, n_tokens,
-               CASE WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'qe'), 1, 8) < '$t1' THEN 'train'
-                    WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'qe'), 1, 8) < '$t2' THEN 'val'
-                    ELSE 'test' END AS split
-        FROM gated ORDER BY doc_id"""
-    },
-    "q203_wordcounts_delete" ->
-      // ONE count over batch A alone — the engine wrote A, ingested B,
-      // then deleted B by exact count subtraction; DuckDB never sees B
-      """SELECT token AS word, count(*) AS cnt
-        FROM (SELECT unnest(list_filter(string_split_regex(trim(text), '\s+'),
-                t -> len(t) > 0)) AS token
-              FROM documents WHERE doc_id % 2 = 0)
-        GROUP BY 1 HAVING count(*) >= 3
-        ORDER BY word""",
-    "q204_nb_unlearn" ->
-      // q198's NB SQL with the train set restricted to batch A — the
-      // engine trained on A ∪ B and UNLEARNED B from the persisted model;
-      // matching predictions pin unlearn(train(A ∪ B), B) ≡ train(A)
-      """WITH base AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 3 = 0 THEN 'promo' ELSE 'clean' END AS label_true,
-                 text || CASE WHEN doc_id % 3 = 0
-                     THEN ' subscribe now limited offer click here'
-                     ELSE ' method results analysis discussion further' END AS text2
-          FROM documents),
-        train AS (SELECT * FROM base WHERE doc_id % 5 IN (1, 2)),
-        ttok AS (
-          SELECT label_true AS label,
-                 unnest(list_filter(string_split_regex(trim(text2), '\s+'), t -> len(t) > 0)) AS token
-          FROM train),
-        token_table AS (SELECT label, token, count(*) AS cnt FROM ttok GROUP BY 1, 2),
-        class_table AS (
-          SELECT t.label, d.n_docs, count(*) AS n_tokens
-          FROM ttok t
-          JOIN (SELECT label_true AS label, count(*) AS n_docs FROM train GROUP BY 1) d
-            USING (label)
-          GROUP BY 1, 2),
-        v AS (SELECT count(DISTINCT token) AS vocab FROM token_table),
-        tot AS (SELECT sum(n_docs) AS total_docs FROM class_table),
-        dtok AS (
-          SELECT doc_id,
-                 unnest(list_filter(string_split_regex(trim(text2), '\s+'), t -> len(t) > 0)) AS token
-          FROM base),
-        contrib AS (
-          SELECT d.doc_id, c.label,
-                 sum(ln(coalesce(tt.cnt, 0) + 1) - ln(c.n_tokens + v.vocab)) AS token_score
-          FROM dtok d
-          CROSS JOIN class_table c
-          CROSS JOIN v
-          LEFT JOIN token_table tt ON tt.label = c.label AND tt.token = d.token
-          GROUP BY 1, 2),
-        ntok AS (SELECT doc_id, count(*) AS n_tokens FROM dtok GROUP BY 1),
-        scored AS (
-          SELECT b.doc_id, c.label,
-                 ln(c.n_docs) - ln(t.total_docs) + coalesce(co.token_score, 0) AS score
-          FROM (SELECT DISTINCT doc_id FROM base) b
-          CROSS JOIN class_table c
-          CROSS JOIN tot t
-          LEFT JOIN contrib co ON co.doc_id = b.doc_id AND co.label = c.label)
-        SELECT b.doc_id, b.label_true, s.label AS label_pred,
-               CAST(coalesce(n.n_tokens, 0) AS BIGINT) AS n_tokens
-        FROM base b
-        JOIN (SELECT doc_id, label,
-                     row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, label) AS rn
-              FROM scored) s
-          ON s.doc_id = b.doc_id AND s.rn = 1
-        LEFT JOIN ntok n ON n.doc_id = b.doc_id
-        ORDER BY b.doc_id""",
-    "q198_nb_incremental" ->
-      // IDENTICAL SQL to q194 — deliberately: the oracle trains once over
-      // A ∪ B (= doc_id % 5 IN (1,2,3,4), q194's train set), while the
-      // engine trains the two batches separately and count-merges. Passing
-      // means merge(train(A), train(B)) == train(A ∪ B) cross-engine.
-      """WITH base AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 3 = 0 THEN 'promo' ELSE 'clean' END AS label_true,
-                 text || CASE WHEN doc_id % 3 = 0
-                     THEN ' subscribe now limited offer click here'
-                     ELSE ' method results analysis discussion further' END AS text2
-          FROM documents),
-        train AS (SELECT * FROM base WHERE doc_id % 5 <> 0),
-        ttok AS (
-          SELECT label_true AS label,
-                 unnest(list_filter(string_split_regex(trim(text2), '\s+'), t -> len(t) > 0)) AS token
-          FROM train),
-        token_table AS (SELECT label, token, count(*) AS cnt FROM ttok GROUP BY 1, 2),
-        class_table AS (
-          SELECT t.label, d.n_docs, count(*) AS n_tokens
-          FROM ttok t
-          JOIN (SELECT label_true AS label, count(*) AS n_docs FROM train GROUP BY 1) d
-            USING (label)
-          GROUP BY 1, 2),
-        v AS (SELECT count(DISTINCT token) AS vocab FROM token_table),
-        tot AS (SELECT sum(n_docs) AS total_docs FROM class_table),
-        dtok AS (
-          SELECT doc_id,
-                 unnest(list_filter(string_split_regex(trim(text2), '\s+'), t -> len(t) > 0)) AS token
-          FROM base),
-        contrib AS (
-          SELECT d.doc_id, c.label,
-                 sum(ln(coalesce(tt.cnt, 0) + 1) - ln(c.n_tokens + v.vocab)) AS token_score
-          FROM dtok d
-          CROSS JOIN class_table c
-          CROSS JOIN v
-          LEFT JOIN token_table tt ON tt.label = c.label AND tt.token = d.token
-          GROUP BY 1, 2),
-        ntok AS (SELECT doc_id, count(*) AS n_tokens FROM dtok GROUP BY 1),
-        scored AS (
-          SELECT b.doc_id, c.label,
-                 ln(c.n_docs) - ln(t.total_docs) + coalesce(co.token_score, 0) AS score
-          FROM (SELECT DISTINCT doc_id FROM base) b
-          CROSS JOIN class_table c
-          CROSS JOIN tot t
-          LEFT JOIN contrib co ON co.doc_id = b.doc_id AND co.label = c.label)
-        SELECT b.doc_id, b.label_true, s.label AS label_pred,
-               CAST(coalesce(n.n_tokens, 0) AS BIGINT) AS n_tokens
-        FROM base b
-        JOIN (SELECT doc_id, label,
-                     row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, label) AS rn
-              FROM scored) s
-          ON s.doc_id = b.doc_id AND s.rn = 1
-        LEFT JOIN ntok n ON n.doc_id = b.doc_id
-        ORDER BY b.doc_id""",
-    "q194_nb_classifier" ->
-      // the SAME Laplace-smoothed multinomial NB in DuckDB SQL: identical
-      // integer count tables, identical score formula; output carries only
-      // the argmax prediction and integer counts (raw float scores differ
-      // in the last ulp across engines; the salted class margins are
-      // macroscopic, so the argmax cannot flip)
-      """WITH base AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 3 = 0 THEN 'promo' ELSE 'clean' END AS label_true,
-                 text || CASE WHEN doc_id % 3 = 0
-                     THEN ' subscribe now limited offer click here'
-                     ELSE ' method results analysis discussion further' END AS text2
-          FROM documents),
-        train AS (SELECT * FROM base WHERE doc_id % 5 <> 0),
-        ttok AS (
-          SELECT label_true AS label,
-                 unnest(list_filter(string_split_regex(trim(text2), '\s+'), t -> len(t) > 0)) AS token
-          FROM train),
-        token_table AS (SELECT label, token, count(*) AS cnt FROM ttok GROUP BY 1, 2),
-        class_table AS (
-          SELECT t.label, d.n_docs, count(*) AS n_tokens
-          FROM ttok t
-          JOIN (SELECT label_true AS label, count(*) AS n_docs FROM train GROUP BY 1) d
-            USING (label)
-          GROUP BY 1, 2),
-        v AS (SELECT count(DISTINCT token) AS vocab FROM token_table),
-        tot AS (SELECT sum(n_docs) AS total_docs FROM class_table),
-        dtok AS (
-          SELECT doc_id,
-                 unnest(list_filter(string_split_regex(trim(text2), '\s+'), t -> len(t) > 0)) AS token
-          FROM base),
-        contrib AS (
-          SELECT d.doc_id, c.label,
-                 sum(ln(coalesce(tt.cnt, 0) + 1) - ln(c.n_tokens + v.vocab)) AS token_score
-          FROM dtok d
-          CROSS JOIN class_table c
-          CROSS JOIN v
-          LEFT JOIN token_table tt ON tt.label = c.label AND tt.token = d.token
-          GROUP BY 1, 2),
-        ntok AS (SELECT doc_id, count(*) AS n_tokens FROM dtok GROUP BY 1),
-        scored AS (
-          SELECT b.doc_id, c.label,
-                 ln(c.n_docs) - ln(t.total_docs) + coalesce(co.token_score, 0) AS score
-          FROM (SELECT DISTINCT doc_id FROM base) b
-          CROSS JOIN class_table c
-          CROSS JOIN tot t
-          LEFT JOIN contrib co ON co.doc_id = b.doc_id AND co.label = c.label)
-        SELECT b.doc_id, b.label_true, s.label AS label_pred,
-               CAST(coalesce(n.n_tokens, 0) AS BIGINT) AS n_tokens
-        FROM base b
-        JOIN (SELECT doc_id, label,
-                     row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, label) AS rn
-              FROM scored) s
-          ON s.doc_id = b.doc_id AND s.rn = 1
-        LEFT JOIN ntok n ON n.doc_id = b.doc_id
-        ORDER BY b.doc_id""",
-    "q177_domain_stats" ->
-      // same host/apex regex chain in DuckDB; www. strips, cdn./news. stay
-      // as subdomains of the same apex
-      """WITH u AS (
-          SELECT doc_id, n_chars,
-                 (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END)
-                 || (CASE WHEN doc_id % 5 = 0 THEN 'cdn.'
-                          WHEN doc_id % 5 = 1 THEN 'WWW.'
-                          WHEN doc_id % 5 = 2 THEN 'news.' ELSE '' END)
-                 || source || '.Example.COM/p/' || CAST(doc_id AS VARCHAR) AS url
-          FROM documents),
-        h AS (
-          SELECT doc_id, n_chars,
-                 regexp_replace(lower(regexp_extract(
-                   regexp_replace(url, '^https?://', ''), '^[^/?#]*')), '^www\.', '') AS host
-          FROM u),
-        a AS (
-          SELECT doc_id, n_chars, host,
-                 regexp_extract(host, '[^.]+\.[^.]+$') AS apex
-          FROM h)
-        SELECT apex, CAST(COUNT(*) AS BIGINT) AS n_pages,
-               CAST(COUNT(DISTINCT host) AS BIGINT) AS n_hosts,
-               CAST(SUM(n_chars) AS BIGINT) AS total_chars
-        FROM a GROUP BY apex ORDER BY apex""",
-    "q176_curation_pipeline" -> {
-      val cum = Seq(0.8, 0.1, 0.1).scanLeft(0.0)(_ + _).tail
-      val t1 = f"${math.round(cum(0) * 0xffffffffL)}%08x"
-      val t2 = f"${math.round(cum(1) * 0xffffffffL)}%08x"
-      s"""WITH u AS (
-          SELECT doc_id, source, n_chars,
-                 (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END)
-                 || (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END)
-                 || source || '.Example.COM/a/' || CAST(doc_id % 100 AS VARCHAR)
-                 || (CASE WHEN doc_id % 4 = 0 THEN '/index.html' ELSE '/' END)
-                 || (CASE WHEN doc_id % 7 = 0 THEN '?utm_source=f&page=1' ELSE '' END) AS url
-          FROM documents),
-        ns AS (SELECT *, regexp_replace(url, '^https?://', '') AS s1 FROM u),
-        parts AS (
-          SELECT doc_id, source, n_chars,
-                 regexp_replace(lower(regexp_extract(s1, '^[^/?#]*')), '^www\\.', '') AS host,
-                 regexp_replace(s1, '^[^/?#]*', '') AS rest
-          FROM ns),
-        pq AS (
-          SELECT doc_id, source, n_chars, host,
-                 regexp_replace(regexp_replace(regexp_extract(rest, '^[^?#]*'),
-                   '/index\\.html$$', ''), '/$$', '') AS path,
-                 list_sort(list_filter(string_split(regexp_extract(rest, '\\?([^#]*)', 1), '&'),
-                   p -> p <> '' AND NOT regexp_matches(p, '^(utm_[a-z]+|gclid|fbclid|ref)='))) AS params
-          FROM parts),
-        canon AS (
-          SELECT doc_id, source, n_chars,
-                 host || path || (CASE WHEN len(params) > 0
-                   THEN '?' || array_to_string(params, '&') ELSE '' END) AS canonical_url
-          FROM pq),
-        dedup AS (
-          SELECT doc_id, source, n_chars, canonical_url FROM canon
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY canonical_url ORDER BY doc_id) = 1),
-        med AS (
-          SELECT source, quantile_cont(CAST(n_chars AS DOUBLE), 0.5) AS median
-          FROM dedup GROUP BY source),
-        mad AS (
-          SELECT d.source,
-                 quantile_cont(abs(CAST(d.n_chars AS DOUBLE) - m.median), 0.5) AS mad
-          FROM dedup d JOIN med m USING (source) GROUP BY d.source),
-        screened AS (
-          SELECT d.doc_id, d.source, d.canonical_url
-          FROM dedup d JOIN med m USING (source) JOIN mad a ON d.source = a.source
-          WHERE NOT (CASE WHEN a.mad > 0
-            THEN abs((CAST(d.n_chars AS DOUBLE) - m.median) / (1.4826 * a.mad)) > 3.0
-            ELSE FALSE END))
-        SELECT doc_id, source, canonical_url,
-               CASE WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'cp'), 1, 8) < '$t1' THEN 'train'
-                    WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'cp'), 1, 8) < '$t2' THEN 'val'
-                    ELSE 'test' END AS split
-        FROM screened ORDER BY doc_id"""
-    },
-    "q146_hash_split" -> {
-      // thresholds computed with the SAME cumulative-sum arithmetic as
-      // hashSplit (0.8+0.1 in IEEE, not the literal 0.9), then embedded as
-      // the identical hex literals both engines compare against
-      val cum = Seq(0.8, 0.1, 0.1).scanLeft(0.0)(_ + _).tail
-      val t1 = f"${math.round(cum(0) * 0xffffffffL)}%08x"
-      val t2 = f"${math.round(cum(1) * 0xffffffffL)}%08x"
-      s"""SELECT doc_id,
-            CASE WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'sp'), 1, 8) < '$t1' THEN 'train'
-                 WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || 'sp'), 1, 8) < '$t2' THEN 'val'
-                 ELSE 'test' END AS split
-        FROM documents ORDER BY doc_id"""
-    },
-    "q145_weighted_interleave" ->
-      // same stride schedule: per-source md5 rank, vtime = rn/w, global
-      // enumeration by (vtime, source, rn) — a total order both engines
-      // compute bit-identically
-      """WITH t AS (
-          SELECT doc_id, source,
-                 ROW_NUMBER() OVER (PARTITION BY source
-                   ORDER BY MD5(CAST(doc_id AS VARCHAR) || 'i1')) AS rn,
-                 CASE source WHEN 'src0' THEN CAST(4.0 AS DOUBLE)
-                             WHEN 'src1' THEN CAST(2.0 AS DOUBLE)
-                             ELSE CAST(1.0 AS DOUBLE) END AS w
-          FROM documents)
-        SELECT doc_id, source,
-               CAST(ROW_NUMBER() OVER (ORDER BY CAST(rn AS DOUBLE) / w, source, rn) - 1 AS BIGINT) AS pos
-        FROM t ORDER BY doc_id""",
-    "q144_grouped_hist" ->
-      // q142's binning arithmetic with PARTITION BY source — same bins,
-      // same edge formula, per-group cumulative reach
-      """WITH hist AS (
-          SELECT source, LEAST(63, GREATEST(0,
-                   CAST(FLOOR((CAST(n_chars AS DOUBLE) - 0.0) / 640.0 * 64) AS BIGINT))) AS bin,
-                 CAST(COUNT(*) AS BIGINT) AS cnt
-          FROM documents GROUP BY 1, 2),
-        cum AS (SELECT source, bin, SUM(cnt) OVER (PARTITION BY source ORDER BY bin) AS cum FROM hist),
-        tot AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n FROM hist GROUP BY 1),
-        ps AS (SELECT CAST(unnest([0.5, 0.9]) AS DOUBLE) AS p)
-        SELECT c.source, p, 0.0 + CAST(MIN(c.bin) + 1 AS DOUBLE) * 640.0 / 64 AS est
-        FROM cum c JOIN tot t ON c.source = t.source CROSS JOIN ps
-        WHERE c.cum >= CEIL(p * CAST(t.n AS DOUBLE))
-        GROUP BY c.source, p ORDER BY c.source, p""",
-    "q143_json_roundtrip" ->
-      // DuckDB builds the same JSON with struct_pack (compact, struct field
-      // order — byte-identical to Spark's TO_JSON) and re-derives the
-      // round-tripped fields from the source columns: if Spark's FROM_JSON
-      // loses or reshapes anything, the value compare catches it
-      """SELECT doc_id,
-               CAST(to_json(struct_pack(id := doc_id, lang := COALESCE(lang, ''),
-                 xs := [COALESCE(CAST(n_chars AS BIGINT), 0),
-                        COALESCE(CAST(n_chars AS BIGINT), 0) + 1],
-                 meta := struct_pack(src := COALESCE(source, ''), bucket := doc_id % 7))) AS VARCHAR) AS js,
-               doc_id AS rt_id,
-               COALESCE(CAST(n_chars AS BIGINT), 0) + 1 AS rt_x2,
-               COALESCE(source, '') AS rt_src,
-               doc_id % 7 AS rt_bucket
-        FROM documents ORDER BY doc_id""",
-    "q141_cms_frequency" ->
-      // same md5-mod layout as CmsSketch.bucket: '0x'||hex8 cast ≡ Spark's
-      // conv(hex8,16,10) — both the unsigned 32-bit prefix
-      """WITH ds AS (SELECT unnest([0, 1, 2, 3]) AS d),
-        sk AS (
-          SELECT ds.d AS d,
-                 CAST('0x' || substr(md5(CAST(l_suppkey AS VARCHAR) || ':' || CAST(ds.d AS VARCHAR)), 1, 8) AS BIGINT) % 256 AS b,
-                 CAST(COUNT(*) AS BIGINT) AS cnt
-          FROM lineitem, ds GROUP BY 1, 2),
-        exact AS (
-          SELECT l_suppkey, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-          FROM lineitem GROUP BY 1),
-        probe AS (
-          SELECT e.l_suppkey, e.exact_cnt, ds.d AS d,
-                 CAST('0x' || substr(md5(CAST(e.l_suppkey AS VARCHAR) || ':' || CAST(ds.d AS VARCHAR)), 1, 8) AS BIGINT) % 256 AS b
-          FROM exact e, ds)
-        SELECT p.l_suppkey, p.exact_cnt,
-               MIN(COALESCE(s.cnt, 0)) AS est,
-               MIN(COALESCE(s.cnt, 0)) >= p.exact_cnt AS ok
-        FROM probe p LEFT JOIN sk s ON s.d = p.d AND s.b = p.b
-        GROUP BY 1, 2
-        ORDER BY 1""",
-    "q140_pii_redaction" ->
-      // same pattern strings as Redact.scala; RE2 'g' flag = Java replaceAll
-      """WITH t AS (
-          SELECT doc_id,
-                 text || ' contact u' || CAST(doc_id AS VARCHAR)
-                      || '@example.com or +1 (415) 555-0199 at 10.0.'
-                      || CAST(doc_id % 256 AS VARCHAR)
-                      || '.5 via https://ex.com/p/' || CAST(doc_id AS VARCHAR) AS s
-          FROM documents)
-        SELECT doc_id,
-               right(
-                 regexp_replace(
-                   regexp_replace(
-                     regexp_replace(
-                       regexp_replace(s, 'https?://[^ \t\n]+', '<URL>', 'g'),
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                     '\+[0-9][0-9 ()-]{6,}[0-9]', '<PHONE>', 'g'),
-                   '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g'),
-                 70) AS tail,
-               CAST(len(regexp_extract_all(s, 'https?://[^ \t\n]+')) AS BIGINT) AS n_urls,
-               CAST(len(regexp_extract_all(s, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-               CAST(len(regexp_extract_all(s, '\+[0-9][0-9 ()-]{6,}[0-9]')) AS BIGINT) AS n_phones,
-               CAST(len(regexp_extract_all(s, '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS BIGINT) AS n_ips
-        FROM t ORDER BY doc_id""",
-    "q139_temperature_sample" ->
-      // ceil(sqrt(n)·scale): sqrt and multiply are single correctly-rounded
-      // IEEE ops on an exact integer count — both engines produce the
-      // identical target, hence the identical md5-ranked kept set
-      """WITH t AS (
-          SELECT doc_id, lang,
-                 ROW_NUMBER() OVER (PARTITION BY lang
-                   ORDER BY MD5(CAST(doc_id AS VARCHAR) || 't1')) AS rn,
-                 COUNT(*) OVER (PARTITION BY lang) AS n
-          FROM documents)
-        SELECT doc_id, lang FROM t
-        WHERE rn <= LEAST(n, CAST(CEIL(SQRT(CAST(n AS DOUBLE)) * CAST(3 AS DOUBLE)) AS BIGINT))
-        ORDER BY doc_id""",
-    "q96_filtered_ann" ->
-      """SELECT query_id, rank, neighbor_id, score FROM (
-          SELECT q.vec_id AS query_id,
-                 c.vec_id AS neighbor_id,
-                 ROUND(LIST_COSINE_SIMILARITY(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), 6) AS score,
-                 CAST(ROW_NUMBER() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY LIST_COSINE_SIMILARITY(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id) AS BIGINT) AS rank
-          FROM embeddings c, embeddings q
-          WHERE q.vec_id < 5 AND c.label IN (0, 1, 2)) t
-        WHERE rank <= 3
-        ORDER BY query_id, rank""",
-    "q97_chunking" ->
-      """WITH toks AS (
-          SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
-          FROM documents
-        ), numbered AS (
-          SELECT doc_id, t,
-                 CAST(CEIL(GREATEST(0, len(t) - 32) / CAST(24 AS DOUBLE)) AS BIGINT) AS last_i
-          FROM toks
-        ), exploded AS (
-          SELECT doc_id, t, last_i, unnest(range(0, last_i + 1)) AS i
-          FROM numbered
-        )
-        SELECT doc_id,
-               CAST(i AS BIGINT) AS chunk_id,
-               last_i + 1 AS n_chunks,
-               CAST(LEAST(len(t) - i * 24, 32) AS BIGINT) AS chunk_tokens,
-               array_to_string(list_slice(t, i * 24 + 1, i * 24 + 32), ' ') AS chunk_text
-        FROM exploded
-        ORDER BY doc_id, chunk_id""",
-    "q98_deterministic_shuffle" ->
-      """SELECT CAST(ROW_NUMBER() OVER (
-               ORDER BY MD5(CAST(doc_id AS VARCHAR) || 'sh1'), doc_id) - 1 AS BIGINT) AS pos,
-               doc_id
-        FROM documents
-        ORDER BY pos"""
-  ,
-    "q99_segment_dedup" ->
-      """WITH words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         segs AS (
-           SELECT doc_id, md5(array_to_string(w[((i-1)*8+1):(i*8)], ' ')) AS h
-           FROM words, LATERAL (SELECT UNNEST(generate_series(1, CAST(CEIL(len(w)/8.0) AS BIGINT))) AS i) t
-         ),
-         freq AS (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM segs GROUP BY h)
-         SELECT s.doc_id,
-                CAST(COUNT(*) AS BIGINT) AS n_segments,
-                CAST(SUM(CASE WHEN f.nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared_segments
-         FROM segs s JOIN freq f ON s.h = f.h
-         GROUP BY s.doc_id
-         HAVING SUM(CASE WHEN f.nd > 1 THEN 1 ELSE 0 END) > 0
-         ORDER BY doc_id""",
-    "q100_vocab_topk" ->
-      """WITH tok AS (SELECT UNNEST(string_split(text, ' ')) AS token FROM documents),
-         counts AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS n FROM tok WHERE token <> '' GROUP BY token),
-         ranked AS (SELECT token, n, CAST(ROW_NUMBER() OVER (ORDER BY n DESC, token) AS BIGINT) AS rank FROM counts)
-         SELECT token, n, rank FROM ranked WHERE rank <= 50 ORDER BY rank""",
-    "q101_resample_interpolate" ->
-      """WITH obs AS (
-           SELECT user_id, ts, value FROM events WHERE event_type = 'click'
-         ),
-         bounds AS (
-           SELECT user_id,
-                  date_trunc('day', MIN(ts)) + INTERVAL 1 DAY AS t0,
-                  date_trunc('day', MAX(ts)) AS t1
-           FROM obs GROUP BY user_id
-           HAVING date_trunc('day', MIN(ts)) + INTERVAL 1 DAY <= date_trunc('day', MAX(ts))
-         ),
-         grid AS (
-           SELECT user_id, UNNEST(generate_series(t0, t1, INTERVAL 6 HOUR)) AS gts FROM bounds
-         ),
-         merged AS (
-           SELECT user_id, gts AS ts, NULL AS value, TRUE AS is_grid FROM grid
-           UNION ALL
-           SELECT user_id, ts, value, FALSE AS is_grid FROM obs
-         ),
-         w AS (
-           SELECT user_id, ts, is_grid,
-             LAST_VALUE(CASE WHEN NOT is_grid THEN value END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, is_grid ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-             LAST_VALUE(CASE WHEN NOT is_grid THEN epoch_us(ts) END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, is_grid ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt,
-             FIRST_VALUE(CASE WHEN NOT is_grid THEN value END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, is_grid ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-             FIRST_VALUE(CASE WHEN NOT is_grid THEN epoch_us(ts) END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, is_grid ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nt
-           FROM merged
-         )
-         SELECT user_id, ts,
-           CASE WHEN pt IS NULL THEN nv
-                WHEN nt IS NULL THEN pv
-                WHEN nt = pt THEN pv
-                ELSE pv + (nv - pv) * (CAST(epoch_us(ts) - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE))
-           END AS interp_value
-         FROM w WHERE is_grid
-         ORDER BY user_id, ts""",
-    "q102_stats_profile" ->
-      """WITH c AS (
-           SELECT l_returnflag,
-                  CAST(FLOOR(l_quantity * 100) AS BIGINT) AS qc,
-                  CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS pc
-           FROM lineitem),
-         s AS (
-           SELECT l_returnflag,
-                  CAST(COUNT(*) AS DOUBLE) AS n,
-                  CAST(SUM(qc) AS DOUBLE) AS sx,
-                  CAST(SUM(pc) AS DOUBLE) AS sy,
-                  CAST(SUM(CAST(qc AS DECIMAL(19,0)) * CAST(qc AS DECIMAL(19,0))) AS DOUBLE) AS sxx,
-                  CAST(SUM(CAST(pc AS DECIMAL(19,0)) * CAST(pc AS DECIMAL(19,0))) AS DOUBLE) AS syy,
-                  CAST(SUM(CAST(qc AS DECIMAL(19,0)) * CAST(pc AS DECIMAL(19,0))) AS DOUBLE) AS sxy
-           FROM c GROUP BY l_returnflag)
-         SELECT l_returnflag,
-                (n * sxy - sx * sy) / SQRT((n * sxx - sx * sx) * (n * syy - sy * sy)) AS corr_qty_price,
-                ((n * sxy - sx * sy) / (n * n)) / 10000.0 AS covar_pop,
-                (n * sxy - sx * sy) / (n * sxx - sx * sx) AS regr_slope
-         FROM s ORDER BY l_returnflag""",
-    "q103_late_supplier_chain" ->
-      """SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-         FROM supplier s
-         JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-         JOIN orders o ON o.o_orderkey = l1.l_orderkey
-         WHERE o.o_orderstatus = 'F'
-           AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-           AND EXISTS (SELECT 1 FROM lineitem l2
-                       WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-           AND NOT EXISTS (SELECT 1 FROM lineitem l3 JOIN orders o3 ON o3.o_orderkey = l3.l_orderkey
-                           WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-                             AND l3.l_shipdate > o3.o_orderdate + INTERVAL 60 DAY)
-         GROUP BY s.s_name
-         ORDER BY numwait DESC, s_name
-         LIMIT 20""",
-    "q104_min_cost_supplier" ->
-      """SELECT p.p_partkey, p.p_name, s.s_name, l.l_extendedprice / l.l_quantity AS unit_price
-         FROM part p
-         JOIN lineitem l ON l.l_partkey = p.p_partkey
-         JOIN supplier s ON s.s_suppkey = l.l_suppkey
-         WHERE p.p_size <= 5
-           AND l.l_quantity > 0
-           AND l.l_extendedprice / l.l_quantity = (
-             SELECT MIN(l2.l_extendedprice / l2.l_quantity) FROM lineitem l2
-             WHERE l2.l_partkey = p.p_partkey AND l2.l_quantity > 0)
-         ORDER BY p_partkey, s_name, unit_price""",
-    "q105_profit_by_nation" ->
-      """SELECT n.n_name AS nation, CAST(YEAR(o.o_orderdate) AS BIGINT) AS o_year,
-                CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS DECIMAL(30,6))
-                         - CAST(CAST(CAST(l.l_quantity AS DECIMAL(18,2)) * CAST(p.p_retailprice AS DECIMAL(18,2)) AS DECIMAL(30,4)) * CAST(0.1 AS DECIMAL(2,1)) AS DECIMAL(30,6))) AS DOUBLE) AS profit
-         FROM lineitem l
-         JOIN part p ON p.p_partkey = l.l_partkey
-         JOIN supplier s ON s.s_suppkey = l.l_suppkey
-         JOIN nation n ON n.n_nationkey = s.s_nationkey
-         JOIN orders o ON o.o_orderkey = l.l_orderkey
-         WHERE p.p_name LIKE '%a%'
-         GROUP BY n.n_name, YEAR(o.o_orderdate)
-         ORDER BY nation, o_year""",
-    "q106_argmax_by" ->
-      """WITH g AS (
-           SELECT n.n_name,
-                  MAX({'bal': c.c_acctbal, 'key': c.c_custkey, 'nm': c.c_name}) AS mx,
-                  MIN({'bal': c.c_acctbal, 'key': c.c_custkey, 'nm': c.c_name}) AS mn
-           FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey
-           GROUP BY n.n_name)
-         SELECT n_name, mx.nm AS top_customer, mx.bal AS top_balance, mn.nm AS bottom_customer
-         FROM g ORDER BY n_name""",
-    "q107_recursive_calendar" ->
-      """WITH RECURSIVE bounds AS (
-           SELECT CAST(date_trunc('month', MIN(o_orderdate)) AS DATE) AS m0,
-                  CAST(date_trunc('month', MAX(o_orderdate)) AS DATE) AS m1
-           FROM orders),
-         months(m, mend) AS (
-           SELECT m0, m1 FROM bounds
-           UNION ALL
-           SELECT CAST(m + INTERVAL 1 MONTH AS DATE), mend FROM months WHERE m < mend
-         )
-         SELECT months.m, CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders,
-                CAST(COALESCE(SUM(CAST(FLOOR(o.o_totalprice * 100) AS BIGINT)), 0) AS BIGINT) AS cents
-         FROM months
-         LEFT JOIN orders o ON CAST(date_trunc('month', o.o_orderdate) AS DATE) = months.m
-         GROUP BY months.m
-         ORDER BY months.m""",
-    "q108_time_range_window" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-                CAST(COUNT(*) OVER (
-                  PARTITION BY o_custkey ORDER BY o_orderdate
-                  RANGE BETWEEN INTERVAL 28 DAY PRECEDING AND CURRENT ROW) AS BIGINT) AS n_28d,
-                CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) OVER (
-                  PARTITION BY o_custkey ORDER BY o_orderdate
-                  RANGE BETWEEN INTERVAL 28 DAY PRECEDING AND CURRENT ROW) AS BIGINT) AS cents_28d
-         FROM orders
-         WHERE o_custkey < 200
-         ORDER BY o_custkey, o_orderdate, o_orderkey""",
-    "q109_histogram_bins" ->
-      """WITH bounds AS (
-           SELECT MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi FROM orders),
-         binned AS (
-           SELECT o_orderpriority AS pri,
-                  CAST(LEAST(FLOOR((o_totalprice - lo) / ((hi - lo) / 10.0)), 9) AS BIGINT) AS b
-           FROM orders CROSS JOIN bounds),
-         spine AS (
-           SELECT pri, sb
-           FROM (SELECT DISTINCT o_orderpriority AS pri FROM orders) p
-           CROSS JOIN (SELECT UNNEST(generate_series(0, 9)) AS sb) bs)
-         SELECT spine.pri AS o_orderpriority, CAST(spine.sb AS BIGINT) AS bin,
-                CAST(COUNT(binned.b) AS BIGINT) AS n
-         FROM spine LEFT JOIN binned
-           ON binned.pri = spine.pri AND binned.b = spine.sb
-         GROUP BY spine.pri, spine.sb
-         ORDER BY 1, 2""",
-    "q110_try_arithmetic" ->
-      """SELECT l_orderkey, l_linenumber,
-                CAST(l_extendedprice AS DOUBLE) / NULLIF(CAST(FLOOR(l_quantity) AS BIGINT) - 25, 0) AS safe_div,
-                TRY_CAST(l_returnflag AS INTEGER) AS flag_num,
-                TRY_CAST(CONCAT(CAST(l_orderkey AS VARCHAR), CAST(l_linenumber AS VARCHAR)) AS INTEGER) AS digits,
-                CASE WHEN l_orderkey > 100 THEN NULL ELSE 9223372036854775707 + l_orderkey END AS near_max
-         FROM lineitem
-         WHERE l_orderkey <= 200
-         ORDER BY l_orderkey, l_linenumber""",
-    "q111_count_distribution" ->
-      """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist FROM (
-           SELECT c.c_custkey, CAST(COUNT(o.o_orderkey) AS BIGINT) AS c_count
-           FROM customer c LEFT JOIN orders o
-             ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-           GROUP BY c.c_custkey) t
-         GROUP BY c_count
-         ORDER BY custdist DESC, c_count DESC""",
-    "q112_distinct_listagg" ->
-      """SELECT o_orderpriority,
-                string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus) AS statuses,
-                CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS n_statuses
-         FROM orders
-         GROUP BY o_orderpriority
-         ORDER BY o_orderpriority""",
-    "q113_token_gini" ->
-      """WITH tc AS (
-           SELECT source, token, CAST(COUNT(*) AS BIGINT) AS c
-           FROM (SELECT source, UNNEST(string_split(text, ' ')) AS token FROM documents)
-           WHERE token <> '' GROUP BY source, token),
-         tot AS (
-           SELECT source, SUM(c) AS n, SUM(c * c) AS sum_c2,
-                  CAST(COUNT(*) AS BIGINT) AS n_distinct
-           FROM tc GROUP BY source)
-         SELECT source,
-                CAST(n AS BIGINT) AS n_tokens,
-                n_distinct,
-                1.0 - CAST(sum_c2 AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS gini_diversity
-         FROM tot
-         ORDER BY source""",
-    "q114_source_overlap" ->
-      """WITH words AS (SELECT source, string_split(text, ' ') AS w FROM documents),
-         segs AS (
-           SELECT DISTINCT source, md5(array_to_string(w[((i-1)*8+1):(i*8)], ' ')) AS h
-           FROM words, LATERAL (SELECT UNNEST(generate_series(1, CAST(CEIL(len(w)/8.0) AS BIGINT))) AS i) t),
-         pairs AS (
-           SELECT a.source AS source_a, b.source AS source_b
-           FROM segs a JOIN segs b ON a.h = b.h AND a.source < b.source)
-         SELECT source_a, source_b, CAST(COUNT(*) AS BIGINT) AS shared_segments
-         FROM pairs GROUP BY source_a, source_b
-         ORDER BY source_a, source_b""",
-    "q115_lateral_topk" ->
-      """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-         FROM customer c,
-         LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-         ORDER BY c_custkey, o_totalprice DESC, o_orderkey""",
-    "q116_line_filter" ->
-      """WITH k AS (
-          SELECT doc_id, text,
-                 string_split(text, chr(10)) AS lines,
-                 list_filter(string_split(text, chr(10)),
-                   l -> len(list_filter(regexp_split_to_array(trim(l), '\s+'), w -> len(w) > 0)) >= 3
-                        AND right(trim(l), 1) IN ('.', '!', '?', '"', '''')
-                        AND NOT contains(lower(trim(l)), 'javascript')) AS kept
-          FROM documents)
-        SELECT doc_id,
-               CAST(len(lines) AS INT) AS n_lines,
-               CAST(len(kept) AS INT) AS n_kept_lines,
-               COALESCE(array_to_string(kept, chr(10)), '') AS clean_text,
-               (contains(text, '{') OR contains(lower(text), 'lorem ipsum') OR len(kept) < 1) AS drop_doc
-        FROM k
-        ORDER BY doc_id""",
-    "q117_quantize_int8" ->
-      """WITH s AS (
-          SELECT vec_id, embedding,
-                 list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
-          FROM embeddings),
-        c AS (
-          -- the CASE mirrors int8Codes' nanvl guard: NaN/Inf elements code
-          -- to 0 on both engines instead of relying on cast semantics
-          SELECT vec_id, embedding, scale,
-                 list_transform(embedding,
-                   x -> CAST(COALESCE(CASE WHEN isnan(floor(CAST(x AS DOUBLE) * 127 / nullif(scale, 0) + 0.5)) THEN 0
-                                           ELSE floor(CAST(x AS DOUBLE) * 127 / nullif(scale, 0) + 0.5) END, 0) AS INT)) AS codes
-          FROM s)
-        SELECT vec_id,
-               CAST(len(embedding) AS INT) AS n_dim,
-               scale,
-               CAST(list_sum(codes) AS BIGINT) AS code_sum,
-               CAST(list_sum(list_transform(codes, x -> abs(x))) AS BIGINT) AS code_l1,
-               list_max(list_transform(generate_series(1, len(embedding)),
-                 i -> abs(CAST(embedding[i] AS DOUBLE) - CAST(codes[i] AS DOUBLE) * scale / 127))) AS max_abs_err
-        FROM c
-        ORDER BY vec_id""",
-    "q118_token_rarity" ->
-      """WITH tc AS (
-          SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-          FROM (SELECT doc_id,
-                       unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS term
-                FROM documents)
-          GROUP BY doc_id, term),
-        cf AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS c FROM tc GROUP BY term)
-        SELECT doc_id,
-               CAST(SUM(tf) AS BIGINT) AS n_tokens,
-               CAST(SUM(tf * c) AS BIGINT) AS freq_sum,
-               CAST(SUM(CASE WHEN c <= 2 THEN tf ELSE 0 END) AS BIGINT) AS n_rare,
-               CAST(SUM(CASE WHEN c <= 2 THEN tf ELSE 0 END) AS DOUBLE) / CAST(SUM(tf) AS DOUBLE) AS rare_frac
-        FROM tc JOIN cf USING (term)
-        GROUP BY doc_id
-        ORDER BY doc_id""",
-    "q119_segment_clean" ->
-      """WITH words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        segs AS (
-          SELECT doc_id, i, array_to_string(w[((i-1)*8+1):(i*8)], ' ') AS seg
-          FROM words, LATERAL (SELECT UNNEST(generate_series(1, CAST(CEIL(len(w)/8.0) AS BIGINT))) AS i) t
-        ),
-        freq AS (SELECT seg, COUNT(DISTINCT doc_id) AS nd FROM segs GROUP BY seg)
-        SELECT s.doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_segments,
-               CAST(SUM(CASE WHEN f.nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-               COALESCE(string_agg(CASE WHEN f.nd <= 1 THEN s.seg END, ' ' ORDER BY s.i), '') AS clean_text
-        FROM segs s JOIN freq f ON s.seg = f.seg
-        GROUP BY s.doc_id
-        ORDER BY doc_id""",
-    "q120_correlated_avg_filter" ->
-      """SELECT CAST(SUM(CAST(FLOOR(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-               CAST(COUNT(*) AS BIGINT) AS n_small
-        FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-        WHERE p.p_brand = 'Brand#1'
-          AND l.l_quantity < (SELECT 0.2 * AVG(l2.l_quantity)
-                              FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)""",
-    "q121_grouped_having_in" ->
-      """SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_totalprice,
-               CAST(SUM(l.l_quantity) AS BIGINT) AS sum_qty
-        FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-                        JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
-                               GROUP BY l_orderkey
-                               HAVING SUM(l_quantity) > 150)
-        GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_totalprice
-        ORDER BY sum_qty DESC, o_orderkey""",
-    "q122_exists_notexists_chain" ->
-      """SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-        FROM supplier s
-        JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-        JOIN orders o ON o.o_orderkey = l1.l_orderkey
-        JOIN nation n ON s.s_nationkey = n.n_nationkey
-        WHERE o.o_orderstatus = 'F'
-          AND l1.l_returnflag = 'R'
-          AND EXISTS (SELECT 1 FROM lineitem l2
-                      WHERE l2.l_orderkey = l1.l_orderkey
-                        AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                          WHERE l3.l_orderkey = l1.l_orderkey
-                            AND l3.l_suppkey <> l1.l_suppkey
-                            AND l3.l_returnflag = 'R')
-          AND n.n_nationkey < 15
-        GROUP BY s.s_name
-        ORDER BY numwait DESC, s_name""",
-    "q123_global_avg_antijoin" ->
-      """WITH cents AS (
-          SELECT c_custkey, c_custkey % 7 AS segment,
-                 CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS bal_cents
-          FROM customer)
-        SELECT segment, CAST(COUNT(*) AS BIGINT) AS numcust,
-               CAST(SUM(bal_cents) AS BIGINT) AS totbal_cents
-        FROM cents c
-        WHERE segment IN (1, 3, 5)
-          AND bal_cents > (SELECT AVG(bal_cents) FROM cents WHERE bal_cents > 0)
-          AND NOT EXISTS (SELECT 1 FROM orders o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderstatus = 'P' AND o.o_totalprice > 200000)
-        GROUP BY segment
-        ORDER BY segment""",
-    "q124_quantized_topk" ->
-      """WITH s AS (
-          SELECT vec_id, embedding,
-                 list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
-          FROM embeddings),
-        c AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(COALESCE(CASE WHEN isnan(floor(CAST(x AS DOUBLE) * 127 / nullif(scale, 0) + 0.5)) THEN 0
-                                           ELSE floor(CAST(x AS DOUBLE) * 127 / nullif(scale, 0) + 0.5) END, 0) AS INT)) AS codes
-          FROM s),
-        scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id,
-                 CAST(list_sum(list_transform(generate_series(1, len(c.codes)),
-                   i -> CAST(c.codes[i] AS BIGINT) * CAST(q.codes[i] AS BIGINT))) AS BIGINT) AS dot_q
-          FROM c, c q
-          WHERE q.vec_id <= 2 AND c.vec_id <> q.vec_id),
-        ranked AS (
-          SELECT query_id, vec_id, dot_q,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dot_q DESC, vec_id) AS BIGINT) AS rank
-          FROM scored)
-        SELECT query_id, vec_id, dot_q, rank
-        FROM ranked WHERE rank <= 5
-        ORDER BY query_id, rank""",
-    "q125_bm25" ->
-      // expression structure mirrors Relevance.bm25 exactly — same IEEE op
-      // sequence ((n/df) * (tf*(k1+1))) / (tf + k1*((1-b) + (b*dl)/avgdl)),
-      // contributions folded in term order (list ORDER BY term, left fold;
-      // the Spark side seeds at 0.0 — adding 0.0 to a positive double is
-      // exact, so the folds agree bitwise)
-      """WITH tc AS (
-          SELECT doc_id, g AS term, CAST(COUNT(*) AS BIGINT) AS tf
-          FROM (SELECT doc_id,
-                       unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS g
-                FROM documents)
-          GROUP BY doc_id, g
-        ), dl AS (
-          SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tc GROUP BY doc_id
-        ), dfreq AS (
-          SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tc GROUP BY term
-        ), consts AS (
-          SELECT CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS n,
-                 CAST((SELECT SUM(tf) FROM tc) AS DOUBLE)
-                   / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl
-        ), contrib AS (
-          SELECT tc.doc_id, tc.term,
-                 ((SELECT n FROM consts) / CAST(dfreq.df AS DOUBLE))
-                   * (CAST(tc.tf AS DOUBLE) * (1.2 + 1.0))
-                   / (CAST(tc.tf AS DOUBLE)
-                      + 1.2 * ((1.0 - 0.75)
-                               + (0.75 * CAST(dl.dl AS DOUBLE)) / (SELECT avgdl FROM consts))) AS c
-          FROM tc JOIN dfreq USING (term) JOIN dl USING (doc_id)
-          WHERE tc.term IN ('query', 'scan', 'spark', 'window')
-        )
-        SELECT doc_id, list_reduce(list(c ORDER BY term), (a, b) -> a + b) AS bm25
-        FROM contrib GROUP BY doc_id ORDER BY doc_id"""
-  )
+  /** name → DuckDB SQL, for every oracle-checked query. */
+  def oracleSql: Map[String, String] =
+    Registry.all.collect { case QueryDef(name, _, _, _, Check.Oracle(sql)) => name -> sql }.toMap
 }

@@ -1,8 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import graft.core.Json
+import graft.core.{Json, Sessions}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -17,15 +16,7 @@ object Verify {
     // (ad-hoc single-query verification; the driver passes none)
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus("4"), "WARN", "spark.scheduler.mode" -> "FAIR")
     new java.io.File(outDir).mkdirs()
     val selected =
       if (only.isEmpty) SparkEntry.queries

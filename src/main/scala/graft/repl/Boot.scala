@@ -2,6 +2,7 @@ package graft.repl
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
+import graft.core.Sessions
 
 /** Session bootstrap — the reference's startup guards
   * (ArcInterpreter.scala:149, :229-232, :339-350):
@@ -46,21 +47,14 @@ object Boot {
 
   /** Build (or rebuild after `%conf master=`) the REPL session. */
   def buildSession(master: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-repl")
-      .config("spark.driver.maxResultSize", s"${(runtimeMemory * 0.8).toLong}B")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
+    Sessions.build(master, Sessions.cpus(Runtime.getRuntime.availableProcessors.toString),
+      "WARN",
+      "spark.app.name" -> "graft-repl",
+      "spark.driver.maxResultSize" -> s"${(runtimeMemory * 0.8).toLong}B",
+      "spark.scheduler.mode" -> "FAIR",
       // Every query execution renders a plan description for the SQL UI,
       // which is off here. The default "formatted" rendering takes about as
       // long on the driver as planning a small cell; "simple" takes < 1 ms.
-      .config("spark.sql.ui.explainMode", "simple")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+      "spark.sql.ui.explainMode" -> "simple")
   }
 }

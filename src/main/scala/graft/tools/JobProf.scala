@@ -1,8 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
+import graft.core.Sessions
 
 /** Per-job wall-clock profile of a named query — the guide-§1 "find where
   * the time goes" step for the multi-job lifecycle batteries, where the
@@ -18,14 +18,7 @@ object JobProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus("32"), "ERROR")
     val jobs = mutable.ArrayBuffer[(Int, Long, Long, String)]()
     val starts = mutable.Map[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.Sessions
 
 /** One-off scale probe: synthetic corpus with heavy template duplication
   * (the boilerplate-rich shape that breaks uncapped LSH), far above the
@@ -13,13 +13,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 400000
     val labelFilter = if (args.length > 1) args(1) else ""
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("32", "ERROR", "spark.sql.adaptive.enabled" -> "true")
     // 100 templates × small per-doc mutation; ~25% of docs share one hot
     // template (the hot-bucket case), plus a long tail.
     val docs = spark.range(0, n).select(

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.{Check, Registry}
+
 /** Smoke coverage: every SparkEntry query must run and return rows at
   * sf0.001, and every oracle key must exist in queries. The value-level
   * DuckDB comparison is the driver's job (and tools/selfcheck.py locally).
@@ -8,6 +10,11 @@ class QueriesSpec extends SparkSpec {
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("registry names are unique: no query is dropped by a repeated name") {
+    val repeated = Registry.all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(repeated.isEmpty, s"names declared more than once: $repeated")
   }
 
   test("oracleSql keys are a subset of queries") {
@@ -33,20 +40,9 @@ class QueriesSpec extends SparkSpec {
   // its own internal invariant (exact Jaccard/Hamming/cosine vs threshold,
   // HLL/percentile error bounds, brute-force score parity, codec contract).
   // This is the enforcement: no row may fail its own invariant.
-  private val selfVerifying = Seq(
-    "q36_dedup_minhash", "q37_dedup_simhash", "q46_similarity_join_lsh",
-    "q59_fingerprints", "q60_embedding_neardup", "q61_multimodal_decode",
-    "q62_similarity_ivf", "q64_approx_sketches", "q147_ivf_index",
-    "q148_ivf_quantized", "q155_pq_topk", "q156_semdedup",
-    "q157_heavy_hitters", "q158_ivf_pq", "q161_cdc_chunks", "q163_cdc_dedup",
-    "q165_bpe_tokenize", "q174_bpe_ids", "q175_media_resize",
-    "q178_bpe_byte_fallback", "q179_langid_ngram", "q181_audio_decode",
-    "q185_tokenizer_fertility", "q186_langid_floor", "q189_audio_resample",
-    "q191_minhash_index_ingest", "q192_unigram_encode", "q193_ann_recall_report",
-    "q196_wordpiece_encode", "q199_video_frames", "q200_video_transcode",
-    "q202_index_takedown", "q205_vector_takedown", "q206_video_audio_track",
-    "q208_deflate_quality", "q210_takedown_orchestrated",
-    "q211_quality_signal_gate")
+  private val selfVerifying = Registry.all.collect {
+    case q if q.check == Check.SelfChecked => q.name
+  }
 
   for (name <- selfVerifying) {
     test(s"$name: every row passes its own invariant (ok column)") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.Sessions
 
 /** Shared local session for all suites (one JVM-wide session; suites run
   * sequentially under sbt's single forked test JVM).
@@ -10,18 +11,7 @@ object TestSpark {
   // def (not lazy val): getOrCreate returns the active session, or builds a
   // fresh one after a test stopped it (e.g. the `%conf master=` restart) —
   // each suite's own lazy val then re-resolves to a live session.
-  def spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  def spark: SparkSession = Sessions.local("4", "WARN", "spark.app.name" -> "graft-test")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
