@@ -2,8 +2,9 @@ package graft.llm
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
+import org.apache.spark.sql.functions.{broadcast, col, count, hash, lit, max, min, sum}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Staged rewrites — small-file compaction, takedown deletes, crash
   * recovery and their audit trail — of the Hive-partitioned tables behind
@@ -204,12 +205,14 @@ object IndexCompact {
   def takedownLogDir(dir: String): String =
     new Path(new Path(dir), "_takedown_log").toString
 
-  /** A delete's id set, normalized once ([[normalizeIds]]) and handed to
-    * every table it touches: distinct non-null longs (`frame`, one
-    * column), their count and [min, max], and — for a set of ≤ 1000 ids —
-    * the values themselves. */
+  /** One request's id set, checked once ([[normalizeIds]]) and handed to
+    * every store and table it touches: distinct non-null longs (`frame`,
+    * one column), their count, [min, max], the order-independent id-set
+    * fingerprint a takedown trail records (`idsHash`: Spark SQL's
+    * `sum(hash(id))` as long over the distinct ids), and — for a set of
+    * ≤ 1000 ids — the values themselves. */
   final case class DeleteIds(frame: DataFrame, n: Long, lo: Long, hi: Long,
-      local: Option[Seq[Long]]) {
+      idsHash: Long, local: Option[Seq[Long]]) {
     /** The ids under a table's id column name. */
     def as(idCol: String): DataFrame = frame.toDF(idCol)
   }
@@ -237,35 +240,39 @@ object IndexCompact {
     spark.createDataset(ids)(Encoders.scalaLong).toDF("_id")
   }
 
-  /** Normalize a delete's ids ONCE: the frame's first column cast to
-    * long, distinct; an empty set and NULLs (null rows, or values that do
-    * not cast to long) are refused. A takedown-sized set (≤ 1000, the
-    * common legal-request shape) collects in ONE job — null checks, count
-    * and [min, max] come from the local rows, and the frame that feeds
-    * discovery and the rewrite's anti join is REBUILT from the collected
-    * values (a local relation is trivially deterministic, so no pin job
-    * is needed). Larger sets keep the pinned-frame path: one
-    * materialization, one stats pass, broadcast semi joins. An
-    * [[IndexStore]] delete runs this once for all its tables, and
-    * [[Takedown.run]] once for all its stores. */
+  /** The one place an id view becomes a checked id set — every takedown
+    * and delete path ([[Takedown.run]], [[Takedown.preview]], the
+    * id-addressed count-store stages, [[IndexStore]] deletes and
+    * [[deleteMatching]]) normalizes here, once per request: the frame's
+    * first column cast to long, distinct; an empty set and NULLs (null
+    * rows, or values that do not cast to long) are refused. A
+    * takedown-sized set (≤ 1000, the common legal-request shape) collects
+    * in ONE job — null checks, count, [min, max] and the id-set hash
+    * (Murmur3 with Spark's seed, exactly what `hash(id)` computes) come
+    * from the local rows, and the frame that feeds discovery, the
+    * rewrite's anti join and the corpus join is REBUILT from the collected
+    * values (a local relation is trivially deterministic, so no pin job is
+    * needed). Larger sets keep the pinned-frame path: one
+    * materialization, one stats pass, broadcast semi joins. */
   def normalizeIds(idsDf: DataFrame): DeleteIds = {
-    require(idsDf.columns.nonEmpty, "deleteMatching: ids frame has no columns")
-    val nullIds = "deleteMatching: ids contain NULL (null rows, or values that " +
+    require(idsDf.columns.nonEmpty, "takedown ids: the id view has no columns")
+    val nullIds = "takedown ids: ids contain NULL (null rows, or values that " +
       "do not cast to long) — clean the id view before the takedown"
     val normalized = idsDf.select(col(idsDf.columns.head).cast("long").as("_id")).distinct()
     val headRows = normalized.limit(1001).collect()
     if (headRows.length <= 1000) {
-      require(headRows.nonEmpty, "deleteMatching needs at least one id")
+      require(headRows.nonEmpty,
+        "takedown ids: the id view is empty — a takedown needs at least one id")
       require(!headRows.exists(_.isNullAt(0)), nullIds)
       val vals = headRows.map(_.getLong(0)).toSeq
       DeleteIds(idFrame(idsDf.sparkSession, vals), vals.length, vals.min, vals.max,
-        Some(vals))
+        vals.map(v => Murmur3_x86_32.hashLong(v, 42).toLong).sum, Some(vals))
     } else {
       val pinned = graft.core.Lineage.pin(normalized)
       val st = pinned.agg(count(lit(1)), count(col("_id")), min(col("_id")),
-        max(col("_id"))).head()
+        max(col("_id")), sum(hash(col("_id")).cast("long"))).head()
       require(st.getLong(1) == st.getLong(0), nullIds)
-      DeleteIds(pinned, st.getLong(0), st.getLong(2), st.getLong(3), None)
+      DeleteIds(pinned, st.getLong(0), st.getLong(2), st.getLong(3), st.getLong(4), None)
     }
   }
 

@@ -28,11 +28,19 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * loudly before anything mutates: a missing id would silently
   * under-delete, a duplicated one double-subtract.
   *
+  * One request, one id set: the id view is checked ONCE per call by
+  * [[IndexCompact.normalizeIds]] — the same function every index delete
+  * and the id-addressed count-store stages use — and that one record
+  * (distinct ids, count, [min, max], id-set hash) feeds the resume
+  * check, the corpus join and every store's delete or dry-run count.
+  *
   * Failure discipline: every store's removal is individually atomic and
-  * individually audited (the per-store `_takedown_log` contract), and the
-  * orchestrator PREFLIGHTS what it can before mutating anything — id
-  * hygiene, corpus coverage, store existence, interrupted-rewrite staging
-  * leftovers ([[IndexCompact.hasInterruptedRun]]). A failure between
+  * individually audited (the per-store `_takedown_log` contract), and
+  * [[run]] and [[preview]] share one PREFLIGHT that runs before anything
+  * mutates — store URIs named and distinct, id hygiene, the resume
+  * ledger's checks ([[run]] only), store existence, interrupted-rewrite
+  * staging leftovers ([[IndexCompact.hasInterruptedRun]]) and corpus
+  * coverage for the count stores ([[recoverRows]]). A failure between
   * stores still leaves every other store either cleanly committed or
   * untouched (the count stores run first and sequentially; the four index
   * deletes run concurrently — each an independent single-writer tree); the
@@ -58,47 +66,22 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   */
 object Takedown {
 
-  /** Normalize an id view once: first column cast to long, distinct,
-    * NULLs rejected (null rows, or values that do not cast). Returned
-    * pinned under column `_takedown_id`. */
-  def normalizeIds(ids: DataFrame): (DataFrame, Long) = {
-    require(ids.columns.nonEmpty, "Takedown: ids frame has no columns")
-    val idsNorm = graft.core.Lineage.pin(
-      ids.select(col(ids.columns.head).cast("long").as("_takedown_id")).distinct())
-    val st = idsNorm.agg(count(lit(1)).as("n"), count(col("_takedown_id")).as("nn")).head()
-    require(st.getLong(0) > 0, "Takedown: the id view is empty")
-    require(st.getLong(1) == st.getLong(0),
-      "Takedown: ids contain NULL (null rows, or values that do not cast " +
-        "to long) — clean the id view before the takedown")
-    (idsNorm, st.getLong(0))
-  }
-
-  /** Recover the corpus rows for an id view — the ids→text bridge the
-    * count stores need. `idsNorm` carries `_takedown_id` (long, distinct, non-null
-    * — [[normalizeIds]]); `corpus` must hold EXACTLY ONE row per requested
-    * id under `idCol`. Returns the matched rows pinned (every requested
-    * id, original corpus columns). The corpus scan is bounded by the ids'
-    * [min, max] (pushed to a parquet-backed view's row-group stats) and
-    * the ids broadcast into the join — one bounded pass, takedown-sized
-    * output. */
-  def recoverRows(idsNorm: DataFrame, nIds: Long,
-      corpus: DataFrame, idCol: String): DataFrame = {
-    val range = idsNorm.agg(min(col("_takedown_id")).as("lo"), max(col("_takedown_id")).as("hi")).head()
-    recoverRows(idsNorm, nIds, corpus, idCol, range.getLong(0), range.getLong(1))
-  }
-
-  /** [[recoverRows]] with the ids' [min, max] already known — [[run]]
-    * computes it in the same aggregate as the id hygiene checks, so the
-    * bound is not re-derived with an extra job per call. */
-  private def recoverRows(idsNorm: DataFrame, nIds: Long,
-      corpus: DataFrame, idCol: String, idLo: Long, idHi: Long): DataFrame = {
+  /** Recover the corpus rows for a checked id set — the ids→text bridge
+    * the count stores need. `corpus` must hold EXACTLY ONE row per
+    * requested id under `idCol`. Returns the matched rows pinned (every
+    * requested id, original corpus columns). The corpus scan is bounded
+    * by the ids' [min, max] (pushed to a parquet-backed view's row-group
+    * stats) and the ids broadcast into the join — one bounded pass,
+    * takedown-sized output. */
+  def recoverRows(ids: IndexCompact.DeleteIds, corpus: DataFrame, idCol: String): DataFrame = {
     require(corpus.columns.contains(idCol),
       s"Takedown: corpus view has no column '$idCol' " +
         s"(columns: ${corpus.columns.mkString(", ")})")
+    val idFrame = ids.as("_takedown_id")
     val matched = graft.core.Lineage.pin(
       corpus.withColumn("_takedown_id", col(idCol).cast("long"))
-        .filter(col("_takedown_id").between(idLo, idHi))
-        .join(broadcast(idsNorm), Seq("_takedown_id"), "left_semi"))
+        .filter(col("_takedown_id").between(ids.lo, ids.hi))
+        .join(broadcast(idFrame), Seq("_takedown_id"), "left_semi"))
     val per = matched.groupBy("_takedown_id").agg(count(lit(1)).as("_n"))
     val st = per.agg(count(lit(1)).as("matched"),
       coalesce(max(col("_n")), lit(0L)).as("maxPer")).head()
@@ -111,11 +94,11 @@ object Takedown {
           "row would subtract its counts twice and de-sync the count " +
           "stores. Deduplicate the corpus view per id first.")
     }
-    if (st.getLong(0) < nIds) {
-      val missing = idsNorm.join(per, Seq("_takedown_id"), "left_anti")
+    if (st.getLong(0) < ids.n) {
+      val missing = idFrame.join(per, Seq("_takedown_id"), "left_anti")
         .orderBy("_takedown_id").limit(5).collect().map(_.getLong(0))
       throw new IllegalArgumentException(
-        s"Takedown: ${nIds - st.getLong(0)} requested id(s) are MISSING from " +
+        s"Takedown: ${ids.n - st.getLong(0)} requested id(s) are MISSING from " +
           s"the corpus view (first: ${missing.mkString(", ")}) — their text " +
           "cannot be recovered, so the count stores would silently " +
           "under-delete. Feed the same post-cleaning corpus that was " +
@@ -133,11 +116,81 @@ object Takedown {
     StructField("request_id", StringType),
     StructField("completed_at_ms", LongType)))
 
+  /** Every field a consolidated-trail record carries, the one read schema
+    * of the trail: [[consolidatedLog]] and [[run]]'s resume ledger each
+    * select their own columns. `idsHash` is absent (null) only in records
+    * written before the hash was recorded. */
+  private val trailSchema: StructType = StructType(
+    Seq("requestId", "store", "storeType", "runId").map(StructField(_, StringType)) ++
+      Seq("nIds", "rowsRemoved", "idsHash", "completedAtMs").map(StructField(_, LongType)))
+
   /** One committed (request, store) record replayed from the trail —
-    * resume's ledger entry. `idsHash` is absent only for records written
-    * before the hash was recorded. */
+    * resume's ledger entry. */
   private final case class Committed(store: String, nIds: Long,
       rowsRemoved: Long, completedAtMs: Long, idsHash: Option[Long])
+
+  /** A request's store URIs by store type, in the consolidated view's
+    * order; an empty URI means the store is not part of the request. */
+  private def storesOf(countsURI: String, modelURI: String, minhashURI: String,
+      spanURI: String, semURI: String, ivfURI: String): Seq[(String, String)] =
+    Seq("wordcounts" -> countsURI, "classifier" -> modelURI, "minhash" -> minhashURI,
+      "span" -> spanURI, "sem" -> semURI, "ivf" -> ivfURI)
+
+  /** The classifier store's trained-document total — what an unlearn
+    * removes, in [[run]] and [[preview]] alike. */
+  private def docs(m: NaiveBayes.Model): Long =
+    m.classTable.agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
+
+  /** What [[preflight]] hands on: the checked ids, the named index stores
+    * in fan-out order, and the corpus rows recovered for the count stores
+    * still to run (None when there are none). */
+  private final case class Checked(ids: IndexCompact.DeleteIds,
+      indexStores: Seq[(IndexStore, String)], recovered: Option[DataFrame])
+
+  /** The preflight [[run]] and [[preview]] share, all before any store
+    * mutates, so the likely failures surface while every store is intact:
+    * URIs named and distinct; the ids checked once
+    * ([[IndexCompact.normalizeIds]]) and handed to `checkIds` (run's resume
+    * ledger); the corpus present when a count store not in `skip` needs
+    * it; every named store present; no interrupted-rewrite leftovers
+    * (parked rows under `_compact_old` are invisible to table reads — a
+    * delete would refuse mid-request, and preview's sizing would silently
+    * undercount); the count stores' rows recovered from the corpus. */
+  private def preflight(spark: SparkSession, op: String, idView: DataFrame,
+      stores: Seq[(String, String)], skip: Set[String], corpus: Option[DataFrame],
+      corpusIdCol: String)(checkIds: IndexCompact.DeleteIds => Unit): Checked = {
+    val uris = stores.map(_._2).filter(_.nonEmpty)
+    require(uris.nonEmpty,
+      s"$op: no store URI set — name at least one of minhashURI/" +
+        "spanURI/semURI/ivfURI/countsURI/modelURI")
+    require(uris.distinct.size == uris.size,
+      s"$op: two store parameters point at the SAME URI — each " +
+        "store is a distinct directory")
+    val ids = IndexCompact.normalizeIds(idView)
+    checkIds(ids)
+    val countStores = stores.collect {
+      case (t @ ("wordcounts" | "classifier"), u) if u.nonEmpty && !skip(t) => t
+    }
+    require(countStores.isEmpty || corpus.isDefined,
+      s"$op: countsURI/modelURI subtract counts, which carry no " +
+        "provenance — pass the corpus view so the deleted documents' " +
+        "exact trained text can be recovered from the ids")
+    uris.foreach { u =>
+      val path = new org.apache.hadoop.fs.Path(u)
+      require(path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path),
+        s"$op: no store at $u — check the URI (a typo here, caught late, " +
+          "would leave the request half-applied)")
+    }
+    val uriOf = stores.toMap
+    val indexStores = IndexStore.named(uriOf("minhash"), uriOf("span"), uriOf("sem"),
+      uriOf("ivf"))
+    val interrupted = indexStores.flatMap { case (st, u) => st.interruptedTables(spark, u) }
+    require(interrupted.isEmpty,
+      s"$op: interrupted rewrite leftovers at ${interrupted.mkString(", ")} — " +
+        "run IndexCompact.recover on each, then re-run the request")
+    Checked(ids, indexStores,
+      if (countStores.isEmpty) None else Some(recoverRows(ids, corpus.get, corpusIdCol)))
+  }
 
   /** Execute one takedown request against every named store. Empty-string
     * URIs mean "not part of this request"; at least one must be set.
@@ -173,108 +226,53 @@ object Takedown {
       labelCol: String = "label", auditURI: String = "",
       requestId: String = java.util.UUID.randomUUID().toString,
       resume: Boolean = false): DataFrame = {
-    val uris = Seq(minhashURI, spanURI, semURI, ivfURI, countsURI, modelURI)
-    require(uris.exists(_.nonEmpty),
-      "Takedown.run: no store URI set — name at least one of minhashURI/" +
-        "spanURI/semURI/ivfURI/countsURI/modelURI")
-    require(uris.filter(_.nonEmpty).distinct.size == uris.count(_.nonEmpty),
-      "Takedown.run: two store parameters point at the SAME URI — each " +
-        "store is a distinct directory")
     require(!resume || auditURI.nonEmpty,
       "Takedown.run: resume replays the consolidated audit trail to learn " +
         "which stores already committed — set auditURI (and pass the " +
         "interrupted request's requestId)")
-    // [[normalizeIds]] inlined so ONE aggregate carries the hygiene
-    // checks, the order-independent id-set fingerprint (recorded with
-    // every store's audit record and re-verified on resume — same count,
-    // different ids is exactly the drift nIds alone cannot catch) AND the
-    // [min, max] bound recoverRows needs: three battery-shaped jobs fold
-    // into one.
-    require(ids.columns.nonEmpty, "Takedown: ids frame has no columns")
-    val idsNorm = graft.core.Lineage.pin(
-      ids.select(col(ids.columns.head).cast("long").as("_takedown_id")).distinct())
-    val idSt = idsNorm.agg(count(lit(1)).as("n"), count(col("_takedown_id")).as("nn"),
-      coalesce(sum(hash(col("_takedown_id")).cast("long")), lit(0L)).as("h"),
-      min(col("_takedown_id")).as("lo"), max(col("_takedown_id")).as("hi")).head()
-    require(idSt.getLong(0) > 0, "Takedown: the id view is empty")
-    require(idSt.getLong(1) == idSt.getLong(0),
-      "Takedown: ids contain NULL (null rows, or values that do not cast " +
-        "to long) — clean the id view before the takedown")
-    val nIds = idSt.getLong(0)
-    val idsHash = idSt.getLong(2)
-
-    // the resume ledger: stores already committed under this request id.
-    // Read under an extended schema — idsHash is resume's concern, not
-    // the public consolidated view's ([[consolidatedLog]]).
+    val stores = storesOf(countsURI, modelURI, minhashURI, spanURI, semURI, ivfURI)
+    // the resume ledger: stores already committed under this request id
+    // (request-sized: at most one record per store type)
     val committed: Map[String, Committed] =
       if (auditURI.isEmpty) Map.empty
-      else graft.core.AuditLog.read(spark, auditURI, StructType(Seq(
-          StructField("requestId", StringType),
-          StructField("store", StringType),
-          StructField("storeType", StringType),
-          StructField("nIds", LongType),
-          StructField("rowsRemoved", LongType),
-          StructField("idsHash", LongType),
-          StructField("completedAtMs", LongType))))
+      else graft.core.AuditLog.read(spark, auditURI, trailSchema)
         .filter(col("requestId") === requestId)
-        .collect() // request-sized: at most one record per store type
-        .map(r => r.getString(2) -> Committed(r.getString(1), r.getLong(3),
-          r.getLong(4), r.getLong(6),
-          if (r.isNullAt(5)) None else Some(r.getLong(5))))
+        .select("storeType", "store", "nIds", "rowsRemoved", "completedAtMs", "idsHash")
+        .collect()
+        .map(r => r.getString(0) -> Committed(r.getString(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), if (r.isNullAt(5)) None else Some(r.getLong(5))))
         .toMap
-    if (!resume && committed.nonEmpty)
-      throw new IllegalArgumentException(
-        s"Takedown.run: the audit trail already holds ${committed.size} " +
-          s"record(s) for request '$requestId' (committed stores: " +
-          s"${committed.keys.toSeq.sorted.mkString(", ")}) — re-running a " +
-          "partially-applied request from the top would subtract the " +
-          "count stores TWICE (counts carry no provenance; the de-sync is " +
-          "silent). Pass resume = true to skip the committed stores and " +
-          "complete only the missing ones.")
-    val namedOf = Map("wordcounts" -> countsURI, "classifier" -> modelURI,
-      "minhash" -> minhashURI, "span" -> spanURI, "sem" -> semURI,
-      "ivf" -> ivfURI)
-    committed.foreach { case (tpe, c) =>
-      require(c.nIds == nIds && c.idsHash.forall(_ == idsHash),
-        s"Takedown.run: resume of request '$requestId' — the supplied id " +
-          s"view is NOT the one the committed $tpe record saw (recorded " +
-          s"${c.nIds} id(s)${c.idsHash.map(h => s", id-set hash $h").getOrElse("")}; " +
-          s"supplied $nIds, id-set hash $idsHash). One request = one id " +
-          "set — a drifted view would leave the stores describing two " +
-          "different requests. Submit the changed ids as a NEW request.")
-      val named = namedOf.getOrElse(tpe, "")
-      require(named.isEmpty || named == c.store,
-        s"Takedown.run: resume of request '$requestId' — the trail " +
-          s"records its $tpe store at ${c.store} but this call names " +
-          s"$named; one request cannot move between stores")
+    // the id-set fingerprint is recorded with every store's audit record
+    // and re-verified here: same count, different ids is exactly the
+    // drift nIds alone cannot catch
+    def checkResume(ids: IndexCompact.DeleteIds): Unit = {
+      if (!resume && committed.nonEmpty)
+        throw new IllegalArgumentException(
+          s"Takedown.run: the audit trail already holds ${committed.size} " +
+            s"record(s) for request '$requestId' (committed stores: " +
+            s"${committed.keys.toSeq.sorted.mkString(", ")}) — re-running a " +
+            "partially-applied request from the top would subtract the " +
+            "count stores TWICE (counts carry no provenance; the de-sync is " +
+            "silent). Pass resume = true to skip the committed stores and " +
+            "complete only the missing ones.")
+      committed.foreach { case (tpe, c) =>
+        require(c.nIds == ids.n && c.idsHash.forall(_ == ids.idsHash),
+          s"Takedown.run: resume of request '$requestId' — the supplied id " +
+            s"view is NOT the one the committed $tpe record saw (recorded " +
+            s"${c.nIds} id(s)${c.idsHash.map(h => s", id-set hash $h").getOrElse("")}; " +
+            s"supplied ${ids.n}, id-set hash ${ids.idsHash}). One request = one id " +
+            "set — a drifted view would leave the stores describing two " +
+            "different requests. Submit the changed ids as a NEW request.")
+        val named = stores.toMap.getOrElse(tpe, "")
+        require(named.isEmpty || named == c.store,
+          s"Takedown.run: resume of request '$requestId' — the trail " +
+            s"records its $tpe store at ${c.store} but this call names " +
+            s"$named; one request cannot move between stores")
+      }
     }
-    val needWc = countsURI.nonEmpty && !committed.contains("wordcounts")
-    val needNb = modelURI.nonEmpty && !committed.contains("classifier")
-    require((!needWc && !needNb) || corpus.isDefined,
-      "Takedown.run: countsURI/modelURI subtract counts, which carry no " +
-        "provenance — pass the corpus view so the deleted documents' " +
-        "exact trained text can be recovered from the ids")
-
-    // PREFLIGHT before mutating anything: stores exist, no staged-rewrite
-    // leftovers, and (for count stores) the ids fully resolve to corpus
-    // rows — the likely failures all surface while every store is intact
-    val fsOf = (d: String) => new org.apache.hadoop.fs.Path(d)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    uris.filter(_.nonEmpty).foreach { u =>
-      require(fsOf(u).exists(new org.apache.hadoop.fs.Path(u)),
-        s"Takedown.run: no store at $u — check the URI (a typo here, " +
-          "caught late, would leave the request half-applied)")
-    }
-    val indexStores = IndexStore.named(minhashURI, spanURI, semURI, ivfURI)
-    val interrupted = indexStores.flatMap { case (st, u) => st.interruptedTables(spark, u) }
-    require(interrupted.isEmpty,
-      s"Takedown.run: interrupted rewrite leftovers at " +
-        s"${interrupted.mkString(", ")} — run IndexCompact.recover on " +
-        "each, then re-run the request")
-    val recovered: Option[DataFrame] =
-      if (!needWc && !needNb) None
-      else Some(recoverRows(idsNorm, nIds, corpus.get, corpusIdCol,
-        idSt.getLong(3), idSt.getLong(4)))
+    val Checked(idSet, indexStores, recovered) = preflight(spark, "Takedown.run", ids,
+      stores, committed.keySet, corpus, corpusIdCol)(checkResume)
+    val nIds = idSet.n
 
     // store, type, nIds, removed, completedAtMs (Some = replayed record).
     // Appends are synchronized (the index deletes run concurrently) and
@@ -287,7 +285,7 @@ object Takedown {
         graft.core.AuditLog.append(spark, auditURI,
           Seq("requestId" -> requestId, "store" -> store,
             "storeType" -> storeType, "nIds" -> nIds,
-            "rowsRemoved" -> removed, "idsHash" -> idsHash),
+            "rowsRemoved" -> removed, "idsHash" -> idSet.idsHash),
           runId = s"$requestId-$storeType")
       graft.core.LogBuffer.append(
         s"Takedown[$requestId]: $storeType complete at $store, $removed rows removed")
@@ -319,11 +317,9 @@ object Takedown {
       before - total()
     }
     runStore(modelURI, "classifier") {
-      def docs(): Long = NaiveBayes.read(spark, modelURI).classTable
-        .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
-      val before = docs()
+      val before = docs(NaiveBayes.read(spark, modelURI))
       NaiveBayes.unlearn(recovered.get, textCol, labelCol, modelURI)
-      before - docs()
+      before - docs(NaiveBayes.read(spark, modelURI))
     }
     // The four index deletes are independent single-writer directory
     // trees — run them CONCURRENTLY (guide §2.6: overlap independent
@@ -334,18 +330,15 @@ object Takedown {
     // committing cleanly, and either way the consolidated trail records
     // exactly the committed set — the contract resume replays. Par.all
     // rethrows the first failure after every store settles, with the
-    // other stores' failures suppressed on it. The ids are normalized
-    // once for every store (lazily: a resume that skips them all runs
-    // no job for it).
-    lazy val deleteIds = IndexCompact.normalizeIds(idsNorm)
+    // other stores' failures suppressed on it. Every store deletes the
+    // one id set preflight checked.
     graft.core.Par.all(indexStores.map { case (st, uri) => () =>
-      runStore(uri, st.storeType)(st.delete(spark, uri, deleteIds).total)
+      runStore(uri, st.storeType)(st.delete(spark, uri, idSet).total)
     })
 
     // canonical store order regardless of completion order — the view is
     // byte-identical to the sequential formulation's
-    val storeOrder = Seq("wordcounts", "classifier", "minhash", "span",
-      "sem", "ivf").zipWithIndex.toMap
+    val storeOrder = stores.map(_._1).zipWithIndex.toMap
     val now = System.currentTimeMillis()
     val rows = results.toList.sortBy(r => storeOrder(r._2))
       .map { case (store, tpe, n, removed, at) =>
@@ -358,9 +351,9 @@ object Takedown {
 
   /** DRY RUN: what [[run]] WOULD remove, with zero mutation — the sizing
     * step a legal queue wants before executing a request. Same preflight
-    * (id hygiene, store existence, corpus coverage when a count store is
-    * named), same discovery shapes (range-bounded pruned scans, broadcast
-    * ids), no staged rewrite, no audit record. Returns one row per store:
+    * as [[run]] (minus the resume ledger), same discovery shapes
+    * (range-bounded pruned scans, broadcast ids), no staged rewrite, no
+    * audit record. Returns one row per store:
     * (store, store_type, n_ids, rows_matched). For the count stores
     * `rows_matched` is the occurrences/docs the subtraction would remove;
     * a subset violation (text that was never ingested) surfaces here as
@@ -370,36 +363,9 @@ object Takedown {
       ivfURI: String = "", countsURI: String = "", modelURI: String = "",
       corpus: Option[DataFrame] = None, corpusIdCol: String = "doc_id",
       textCol: String = "text", labelCol: String = "label"): DataFrame = {
-    val uris = Seq(minhashURI, spanURI, semURI, ivfURI, countsURI, modelURI)
-    require(uris.exists(_.nonEmpty),
-      "Takedown.preview: no store URI set — name at least one of minhashURI/" +
-        "spanURI/semURI/ivfURI/countsURI/modelURI")
-    require(uris.filter(_.nonEmpty).distinct.size == uris.count(_.nonEmpty),
-      "Takedown.preview: two store parameters point at the SAME URI — each " +
-        "store is a distinct directory")
-    require((countsURI.isEmpty && modelURI.isEmpty) || corpus.isDefined,
-      "Takedown.preview: countsURI/modelURI need the corpus view (counts " +
-        "carry no provenance — the ids' text sizes the subtraction)")
-    val (idsNorm, nIds) = normalizeIds(ids)
-    val fsOf = (d: String) => new org.apache.hadoop.fs.Path(d)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    uris.filter(_.nonEmpty).foreach { u =>
-      require(fsOf(u).exists(new org.apache.hadoop.fs.Path(u)),
-        s"Takedown.preview: no store at $u — check the URI")
-    }
-    // the same interrupted-rewrite preflight run() enforces: parked rows
-    // under _compact_old are INVISIBLE to table reads, so sizing against
-    // a half-recovered store would silently UNDERCOUNT — the one error a
-    // dry run must never make
-    val indexStores = IndexStore.named(minhashURI, spanURI, semURI, ivfURI)
-    val interrupted = indexStores.flatMap { case (st, u) => st.interruptedTables(spark, u) }
-    require(interrupted.isEmpty,
-      s"Takedown.preview: interrupted rewrite leftovers at " +
-        s"${interrupted.mkString(", ")} — sizing would undercount; run " +
-        "IndexCompact.recover on each first")
-    val recovered: Option[DataFrame] =
-      if (countsURI.isEmpty && modelURI.isEmpty) None
-      else Some(recoverRows(idsNorm, nIds, corpus.get, corpusIdCol))
+    val Checked(idSet, indexStores, recovered) = preflight(spark, "Takedown.preview", ids,
+      storesOf(countsURI, modelURI, minhashURI, spanURI, semURI, ivfURI), Set.empty,
+      corpus, corpusIdCol)(_ => ())
     val results = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
     if (countsURI.nonEmpty)
       // runs delete's exact subset check without the swap — a violation
@@ -410,29 +376,20 @@ object Takedown {
       // the model-level unlearn validates (subset checks) and returns the
       // would-be model without persisting anything — exactly a dry run
       val before = NaiveBayes.read(spark, modelURI)
-      val after = NaiveBayes.unlearn(before, recovered.get, textCol, labelCol)
-      def docs(m: NaiveBayes.Model): Long = m.classTable
-        .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
-      results += ((modelURI, "classifier", docs(before) - docs(after)))
+      results += ((modelURI, "classifier",
+        docs(before) - docs(NaiveBayes.unlearn(before, recovered.get, textCol, labelCol))))
     }
-    // discovery-shaped match count over ids normalized ONCE for the
-    // whole request: the same pushed range bound and id filter a delete's
-    // discovery runs
-    if (indexStores.nonEmpty) {
-      val deleteIds = IndexCompact.normalizeIds(idsNorm)
-      indexStores.foreach { case (st, uri) =>
-        results += ((uri, st.storeType, st.previewMatches(spark, uri, deleteIds)))
-      }
+    // discovery-shaped match count: the same pushed range bound and id
+    // filter a delete's discovery runs
+    indexStores.foreach { case (st, uri) =>
+      results += ((uri, st.storeType, st.previewMatches(spark, uri, idSet)))
     }
     val rows = results.toList.map { case (store, tpe, matched) =>
-      org.apache.spark.sql.Row(store, tpe, nIds, matched)
+      org.apache.spark.sql.Row(store, tpe, idSet.n, matched)
     }
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("store", StringType),
-      StructField("store_type", StringType),
-      StructField("n_ids", LongType),
-      StructField("rows_matched", LongType))))
+    spark.createDataFrame(rows.asJava,
+      StructType(viewSchema.take(3) :+ StructField("rows_matched", LongType)))
   }
 
   /** The consolidated request-level audit trail at `auditURI` — one row
@@ -441,14 +398,7 @@ object Takedown {
     * that store's removal never completed (crash before commit — re-run
     * the request naming ONLY the missing stores). */
   def consolidatedLog(spark: SparkSession, auditURI: String): DataFrame =
-    graft.core.AuditLog.read(spark, auditURI, StructType(Seq(
-      StructField("requestId", StringType),
-      StructField("store", StringType),
-      StructField("storeType", StringType),
-      StructField("nIds", LongType),
-      StructField("rowsRemoved", LongType),
-      StructField("runId", StringType),
-      StructField("completedAtMs", LongType))))
+    graft.core.AuditLog.read(spark, auditURI, trailSchema)
       .select(col("store"), col("storeType").as("store_type"),
         col("nIds").as("n_ids"), col("rowsRemoved").as("rows_removed"),
         col("requestId").as("request_id"),

@@ -366,7 +366,7 @@ private[queries] object TextQueries {
               .otherwise(col("fallback_rate") === 0.0)).as("ok"))
         .orderBy("source")
     }.selfChecked,
-    adaptive("q186_langid_floor", "documents") { (spark, ctx, _) =>
+    fixed("q186_langid_floor") { (spark, ctx, _) =>
       // The calibrated `und` confidence floor, exercised THROUGH the
       // config surface: LangIdTransform(method = "ngramFloored") — the
       // same TextCat profiles as q179, plus the out-of-place cutoff pair

@@ -1461,11 +1461,9 @@ final case class WordCountsTransform(
         require(corpusView.nonEmpty, s"$name: action=deleteIds needs corpusView " +
           "(counts carry no provenance — the deleted ids' exact trained text " +
           "is recovered by joining the corpus in-engine)")
-        val (idsNorm, nIds) = graft.llm.Takedown.normalizeIds(
-          ctx.view(inputView).select(col(idField)))
-        val rows = graft.llm.Takedown.recoverRows(idsNorm, nIds,
-          ctx.view(corpusView), idField)
-        WordCounts.delete(rows, textField, countsURI)
+        WordCounts.delete(graft.llm.Takedown.recoverRows(
+          graft.llm.IndexCompact.normalizeIds(ctx.view(inputView).select(col(idField))),
+          ctx.view(corpusView), idField), textField, countsURI)
       case "read"   => WordCounts.read(ctx.spark, countsURI)
       case "log"    => WordCounts.takedownLog(ctx.spark, countsURI)
       case other =>
@@ -1551,9 +1549,9 @@ final case class ClassifierTransform(
       require(corpusView.nonEmpty, s"$name: unlearnIds mode needs corpusView " +
         "(counts carry no provenance — the deleted ids' exact trained " +
         "text+label rows are recovered by joining the corpus in-engine)")
-      val (idsNorm, nIds) = graft.llm.Takedown.normalizeIds(
-        ctx.view(inputView).select(col(idField)))
-      graft.llm.Takedown.recoverRows(idsNorm, nIds, ctx.view(corpusView), idField)
+      graft.llm.Takedown.recoverRows(
+        graft.llm.IndexCompact.normalizeIds(ctx.view(inputView).select(col(idField))),
+        ctx.view(corpusView), idField)
     }
     lazy val in = ctx.view(inputView)
     val out = mode match {

@@ -3305,6 +3305,94 @@ class IndexCompactSpec extends SparkSpec {
   }
 }
 
+/** One takedown request path: the id set [[graft.llm.IndexCompact.normalizeIds]]
+  * checks once, its trail fingerprint, and the Spark jobs one request costs. */
+class TakedownRequestSpec extends SparkSpec {
+  import spark.implicits._
+  import org.apache.spark.sql.functions.{coalesce, col, hash, lit, sum}
+  import graft.llm.{IndexCompact, IvfIndex, MinhashIndex, SemIndex, SpanIndex, Takedown}
+
+  private def vec(p: Int): Seq[Float] = Seq.tabulate(8)(i => if (i == p % 8) 1f else 0f)
+
+  private val corpus = Seq(
+    (0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa", vec(0)),
+    (1L, "one two three four five six seven eight nine ten eleven", vec(1)),
+    (2L, "red orange yellow green blue indigo violet cyan magenta white", vec(2)),
+    (3L, "north south east west up down left right forward backward", vec(3)))
+    .toDF("doc_id", "text", "embedding")
+
+  private val threeIds = Seq(11L, -7L, 1L << 40)
+  private val manyIds = (0L until 1001L).map(i => i * 7919L - 3000000L)
+
+  test("normalizeIds: the id-set hash is Spark SQL's sum(hash(cast(id AS long))) over the distinct ids, on the local and the pinned path") {
+    Seq(threeIds, manyIds).foreach { want =>
+      // repeated ids and string values that cast: the hash covers the distinct longs
+      val view = (want ++ want.take(2)).map(_.toString).toDF("id")
+      val got = IndexCompact.normalizeIds(view)
+      view.createOrReplaceTempView("hash_ids")
+      val sparkHash = spark.sql("SELECT sum(hash(id)) FROM " +
+        "(SELECT DISTINCT cast(id AS long) AS id FROM hash_ids)").head().getLong(0)
+      assert(got.idsHash == sparkHash, s"${want.size} ids")
+      assert(got.n == want.size && got.lo == want.min && got.hi == want.max)
+      assert(got.local.isDefined == (want.size <= 1000))
+    }
+  }
+
+  test("resume accepts a trail record carrying the Spark-computed id-set hash and refuses a drifted id set") {
+    Seq(threeIds, manyIds).zipWithIndex.foreach { case (idSeq, i) =>
+      val base = java.nio.file.Files.createTempDirectory("tdhash").toString
+      val (mh, se, audit) = (s"$base/mh", s"$base/sem", s"$base/audit")
+      MinhashIndex.write(corpus, "doc_id", "text", mh)
+      SemIndex.write(corpus, "doc_id", "embedding", se, nclusters = 2)
+      val ids = (idSeq :+ 1L).toDF("doc_id")
+      // the minhash record as a trail written before the hash was computed locally:
+      // the fingerprint is the aggregate Spark computes over the distinct ids
+      val recorded = ids.select(col("doc_id").cast("long").as("_takedown_id")).distinct()
+        .agg(coalesce(sum(hash(col("_takedown_id")).cast("long")), lit(0L))).head().getLong(0)
+      val requestId = s"hand-written-$i"
+      graft.core.AuditLog.append(spark, audit,
+        Seq("requestId" -> requestId, "store" -> mh, "storeType" -> "minhash",
+          "nIds" -> (idSeq.size + 1).toLong, "rowsRemoved" -> 5L, "idsHash" -> recorded),
+        runId = s"$requestId-minhash")
+      val drifted = intercept[IllegalArgumentException](Takedown.run(spark,
+        (idSeq :+ 2L).toDF("doc_id"), minhashURI = mh, semURI = se, auditURI = audit,
+        requestId = requestId, resume = true))
+      assert(drifted.getMessage.contains("id-set hash"), drifted.getMessage)
+      val view = Takedown.run(spark, ids, minhashURI = mh, semURI = se, auditURI = audit,
+        requestId = requestId, resume = true)
+        .collect().map(r => r.getAs[String]("store_type") -> r.getAs[Long]("rows_removed")).toMap
+      // minhash replays its recorded row untouched; sem deletes doc 1
+      assert(view == Map("minhash" -> 5L, "sem" -> 1L), view.toString)
+      assert(spark.read.parquet(s"$mh/exact").count() == 4L)
+    }
+  }
+
+  test("a one-id four-index-store Takedown.preview and Takedown.run each check their ids once (at most 18 and 36 Spark jobs)") {
+    val base = java.nio.file.Files.createTempDirectory("tdjobs").toString
+    val (mh, sp, se, iv) = (s"$base/mh", s"$base/sp", s"$base/se", s"$base/iv")
+    MinhashIndex.write(corpus, "doc_id", "text", mh)
+    SpanIndex.write(corpus, "doc_id", "text", sp, k = 4, nbuckets = 4).count()
+    SemIndex.write(corpus, "doc_id", "embedding", se, nclusters = 2)
+    IvfIndex.write(corpus, "doc_id", "embedding", iv, nlist = 2)
+    val one = Seq(1L).toDF("doc_id")
+    var matched, removed = Map.empty[String, Long]
+    val preview = ParamsRecordCheck.jobsDuring(spark) {
+      matched = Takedown.preview(spark, one, minhashURI = mh, spanURI = sp, semURI = se,
+        ivfURI = iv).collect().map(r => r.getString(1) -> r.getLong(3)).toMap
+    }
+    val run = ParamsRecordCheck.jobsDuring(spark) {
+      removed = Takedown.run(spark, one, minhashURI = mh, spanURI = sp, semURI = se,
+        ivfURI = iv, auditURI = s"$base/audit").collect()
+        .map(r => r.getString(1) -> r.getLong(3)).toMap
+    }
+    assert(matched == removed && removed.size == 4 && removed.values.forall(_ > 0L),
+      s"preview $matched, run $removed")
+    // 23 and 41 jobs while the request normalized its ids two ways
+    assert(preview <= 18, s"$preview Spark jobs for a one-id preview")
+    assert(run <= 36, s"$run Spark jobs for a one-id takedown")
+  }
+}
+
 class HeavyHittersSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
   import graft.llm.HeavyHitters

@@ -523,9 +523,9 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
       s"ids must broadcast into a semi join:\n$plan")
     // and the real recoverRows returns exactly the matched rows
-    val (ids, n) = graft.llm.Takedown.normalizeIds(
+    val ids = graft.llm.IndexCompact.normalizeIds(
       Seq(100L, 150L, 199L).toDF("doc_id"))
-    val got = graft.llm.Takedown.recoverRows(ids, n, corpus, "doc_id")
+    val got = graft.llm.Takedown.recoverRows(ids, corpus, "doc_id")
       .select("doc_id").collect().map(_.getInt(0)).sorted.toSeq
     assert(got == Seq(100, 150, 199), got.toString)
   }
