@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   * Interpolation follows the SQL-standard PERCENTILE_CONT definition
   * (zero-based position p·(n−1), linear between the two bracketing values)
   * — identical to Spark's `percentile` and DuckDB's `quantile_cont`, which
-  * is what the q160 oracle pins.
+  * is what the q160 oracle pins. A tied bracket is the tied value, as in
+  * Spark; DuckDB can differ there in the last ulp.
   *
   * MAD outliers (median absolute deviation, the robust z-score): classic
   * robust location/scale screen for quality metrics whose distribution has
@@ -75,9 +76,13 @@ object RobustStats {
       // (1−f)·vl + f·vu, NOT vl + f·(vu−vl): the convex form is what both
       // Spark's percentile and DuckDB's quantile_cont compute — the
       // algebraically-equal delta form differs in the last ulp (measured:
-      // 894.1999999999999 vs 894.2) and would break bit-parity
-      .withColumn("q",
-        (lit(1.0) - col("_f")) * col("_vl") + col("_f") * col("_vu"))
+      // 894.1999999999999 vs 894.2) and would break bit-parity.
+      // A tied bracket (vl = vu) is the value itself, as in Spark's
+      // percentile: the convex form can miss it by an ulp when f is not a
+      // dyadic fraction ((1−f)·v + f·v = -999.9999999999999 for v = -1000,
+      // p = 0.01, n = 8; DuckDB 1.0's quantile_cont returns that ulp-off value)
+      .withColumn("q", when(col("_vl") === col("_vu"), col("_vl"))
+        .otherwise((lit(1.0) - col("_f")) * col("_vl") + col("_f") * col("_vu")))
       .select(groupCols.map(col) :+ col("p") :+ col("q"): _*)
   }
 

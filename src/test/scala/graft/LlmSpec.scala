@@ -3582,6 +3582,14 @@ class RobustStatsSpec extends SparkSpec {
       ("b", 0.5) -> 3.0, ("b", 1.0) -> 3.0))
   }
 
+  test("groupedQuantiles: a tied bracket at a non-dyadic fraction is the tied value, as in Spark's percentile") {
+    // p·(n−1) = 0.07 brackets the two -1000s; (1−f)·v + f·v = -999.9999999999999
+    val df = Seq(-1000.0, -1000.0, 5.0, 6.0, 7.0, 8.0, 9.0, 10.0).map(("a", _)).toDF("g", "v")
+    val got = RobustStats.groupedQuantiles(df, Seq("g"), col("v"), Seq(0.01)).head().getDouble(2)
+    val want = df.groupBy("g").agg(expr("percentile(v, 0.01)")).head().getDouble(1)
+    assert(got == -1000.0 && got == want, s"groupedQuantiles $got, percentile $want")
+  }
+
   test("madOutliers flags the junk tail; zero-MAD group stays unflagged with NULL z") {
     // group a: median 10, MAD 1 -> 100 is a huge outlier; group z: all equal
     val df = Seq(

@@ -389,7 +389,7 @@ class PropertySpec extends AnyFunSuite {
       v <- Gen.option(Gen.chooseNum(-1000, 1000).map(_.toDouble))
     } yield (g, v)
     val pGen = Gen.chooseNum(0.0, 1.0)
-    val prop = Prop.forAll(
+    val prop = Prop.forAllNoShrink(
       Gen.chooseNum(1, 120).flatMap(n => Gen.listOfN(n, rowGen)), pGen) { (rows, p0) =>
       val p = math.rint(p0 * 100) / 100 // 2dp: keeps the literal printable
       val df = rows.map { case (g, v) => (g.orNull, v) }.toDF("g", "v")
@@ -400,7 +400,7 @@ class PropertySpec extends AnyFunSuite {
       val want = df.groupBy("g").agg(expr(s"percentile(v, $p)"))
         .collect().filter(!_.isNullAt(1))
         .map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
-      got == want
+      Prop(got == want) :| s"p=$p got=$got want=$want rows=$rows"
     }
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(result.passed, result.status.toString)
