@@ -25,6 +25,16 @@ import org.apache.spark.sql.DataFrame
   * session has a reliable checkpoint directory configured
   * (`sc.setCheckpointDir(...)`, typically HDFS/S3), `pin` automatically
   * uses a reliable `checkpoint` instead.
+  *
+  * When to pin and when to collect: a pin costs a job that stores the
+  * frame's blocks, and every later read is another job. A request-sized
+  * input (a probe batch, a takedown's ids, a small duplicate graph) is
+  * better collected once with [[Local.collectUpTo]]: its rows are then as
+  * deterministic as a pin's, the summaries a pin would feed (min, max,
+  * distinct values) come from the rows with no job, and queries over
+  * [[Local.relation]] fold projections on the driver and broadcast joins.
+  * Pin what may be too large for the driver — the other branch of every
+  * `collectUpTo` site — and what an iterative algorithm re-reads.
   */
 object Lineage {
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -500,10 +499,9 @@ object Dedup {
         // pinned: the edge sample below and the distributed rounds read
         // the pairs' upstream plan once
         val pinned = graft.core.Lineage.pin(projected)
-        val sample = pinned.coalesce(1).limit(driverEdgeLimit + 1).collect()
-        if (sample.length <= driverEdgeLimit)
-          componentsOnDriver(pinned.sparkSession, sample, idType)
-        else componentsDistributed(pinned, maxIterations)
+        graft.core.Local.collectUpTo(pinned.coalesce(1), driverEdgeLimit, graft.core.Local.MaxBytes)
+          .map(componentsOnDriver(pinned.sparkSession, _, idType))
+          .getOrElse(componentsDistributed(pinned, maxIterations))
       case _ => componentsDistributed(projected, maxIterations)
     }
   }
@@ -537,8 +535,8 @@ object Dedup {
     }
     val rows = parent.keys.toVector.map(v => Row(v, find(v))) ++
       (if (sawNull) Seq(Row(null, null)) else Nil)
-    spark.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("id", idType), StructField("component", idType))))
+    graft.core.Local.relation(spark, StructType(Seq(
+      StructField("id", idType), StructField("component", idType))), rows)
   }
 
   /** Min-label propagation with pointer jumping over (src, dst) pairs —
@@ -773,8 +771,8 @@ object Dedup {
     * retrained one, or batch and index rows would land in different
     * clusters and near-dups would never meet). */
   private[llm] def assignToCentroids(df: DataFrame, idCol: String, vecCol: String,
-      cents: Seq[(Double, Int, Seq[Float])]): DataFrame = {
-    Similarity.attachCentroidData(df, cents)
+      cents: Seq[(Double, Int, Seq[Float])], inline: Boolean = false): DataFrame = {
+    Similarity.attachCentroidData(df, cents, inline)
       .select(col(idCol).as("_id"), col(vecCol).as("_v"),
         element_at(Similarity.rankedCentroidLists(col(vecCol), col("_cents")), 1)
           .getField("list").as("_cluster"))
@@ -800,6 +798,46 @@ object Dedup {
   ): DataFrame =
     pairsFromAssigned(
       semAssigned(df, idCol, vecCol, nclusters, seed, samplePerCluster), tau, maxClusterSize)
+
+  /** [[pairsFromAssigned]]'s (idA, idB) over assigned rows already on the
+    * driver — (`_id`, `_v`, `_cluster`) of `schema`, a request-sized
+    * batch. The candidates are [[bucketCandidates]]' (all pairs of a
+    * cluster of ≤ `cap` rows, else star links from its minimum id), each
+    * joined with every row of its two ids, and scored by the same cosine
+    * expression, evaluated pair by pair (no candidate row is built) with
+    * Spark's `>=` (NaN compares above every value). */
+  private[llm] def pairsOnDriver(spark: SparkSession, assigned: Seq[Row], schema: StructType,
+      tau: Double, cap: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+    val (idType, vecType) = (schema("_id").dataType, schema("_v").dataType)
+    val cosine = graft.functions.CosineSimilarity(
+      BoundReference(0, vecType, nullable = true), BoundReference(1, vecType, nullable = true))
+    val toArray = CatalystTypeConverters.createToCatalystConverter(vecType)
+    def less(a: Any, b: Any): Boolean = a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
+    val vecsOf = assigned.filter(_.get(0) != null).groupBy(_.get(0))
+      .map { case (id, rows) => id -> rows.map(r => toArray(r.get(1))) }
+    val candidates = assigned.filter(_.get(2) != null).groupBy(_.get(2)).values.flatMap { rows =>
+      val ids = rows.map(_.get(0)).filter(_ != null)
+      if (rows.size <= cap) for (a <- ids; b <- ids if less(a, b)) yield (a, b)
+      else if (ids.isEmpty) Nil
+      else {
+        val lo = ids.reduce((a, b) => if (less(b, a)) b else a)
+        ids.filter(_ != lo).map(lo -> _)
+      }
+    }.toSeq.distinct
+    val pair = new GenericInternalRow(2)
+    def score(a: Any, b: Any): Any = { pair.update(0, a); pair.update(1, b); cosine.eval(pair) }
+    val kept = candidates.flatMap { case (a, b) =>
+      for (va <- vecsOf(a); vb <- vecsOf(b)
+           if (score(va, vb) match {
+             case c: java.lang.Double => c.isNaN || c >= tau
+             case _ => false
+           })) yield Row(a, b)
+    }
+    graft.core.Local.relation(spark,
+      StructType(Seq(StructField("idA", idType), StructField("idB", idType))), kept)
+  }
 
   private[llm] def pairsFromAssigned(assigned: DataFrame, tau: Double,
       maxClusterSize: Int): DataFrame = {

@@ -77,12 +77,17 @@ object HeavyHitters {
     * every counter and keep the positive ones — the standard MG merge,
     * which adds the subtracted threshold to the error budget (still ≤
     * n/(cap+1) total for two capacity-cap summaries). The threshold probe
-    * collects cap+1 rows — bounded by the cap, not the data.
+    * collects cap+1 rows — bounded by the cap, not the data, and refused
+    * past [[graft.core.Local.MaxBytes]].
     */
   def merge(summaries: DataFrame, cap: Int): DataFrame = {
     require(cap > 0, s"cap must be positive, got $cap")
     val summed = estimates(summaries)
-    val top = summed.orderBy(col("est").desc, col("key")).limit(cap + 1).collect()
+    val top = graft.core.Local.collectUpTo(
+        summed.orderBy(col("est").desc, col("key")).limit(cap + 1), cap + 1,
+        graft.core.Local.MaxBytes)
+      .getOrElse(throw new IllegalArgumentException(
+        s"HeavyHitters.merge: the top ${cap + 1} summary rows pass the driver byte bound — lower the cap"))
     if (top.length <= cap) summed
     else {
       val threshold = top.last.getLong(1)

@@ -131,7 +131,7 @@ object IndexCompact {
         val tmp = new Path(tmpRoot, p.getPath.getName)
         // (1) rewrite this partition's rows alone (partition-pruned read;
         // the partition value lives in the directory name, not the rows)
-        spark.read.parquet(p.getPath.toString)
+        graft.core.StoreTable.read(spark, p.getPath.toString)
           .coalesce(nOut)
           .write.mode("overwrite").parquet(tmp.toString)
         ensureStaging()
@@ -259,20 +259,20 @@ object IndexCompact {
     val nullIds = "takedown ids: ids contain NULL (null rows, or values that " +
       "do not cast to long) — clean the id view before the takedown"
     val normalized = idsDf.select(col(idsDf.columns.head).cast("long").as("_id")).distinct()
-    val headRows = normalized.limit(1001).collect()
-    if (headRows.length <= 1000) {
-      require(headRows.nonEmpty,
-        "takedown ids: the id view is empty — a takedown needs at least one id")
-      require(!headRows.exists(_.isNullAt(0)), nullIds)
-      val vals = headRows.map(_.getLong(0)).toSeq
-      DeleteIds(idFrame(idsDf.sparkSession, vals), vals.length, vals.min, vals.max,
-        vals.map(v => Murmur3_x86_32.hashLong(v, 42).toLong).sum, Some(vals))
-    } else {
-      val pinned = graft.core.Lineage.pin(normalized)
-      val st = pinned.agg(count(lit(1)), count(col("_id")), min(col("_id")),
-        max(col("_id")), sum(hash(col("_id")).cast("long"))).head()
-      require(st.getLong(1) == st.getLong(0), nullIds)
-      DeleteIds(pinned, st.getLong(0), st.getLong(2), st.getLong(3), st.getLong(4), None)
+    graft.core.Local.collectUpTo(normalized, 1000, graft.core.Local.MaxBytes) match {
+      case Some(headRows) =>
+        require(headRows.nonEmpty,
+          "takedown ids: the id view is empty — a takedown needs at least one id")
+        require(!headRows.exists(_.isNullAt(0)), nullIds)
+        val vals = headRows.map(_.getLong(0)).toSeq
+        DeleteIds(idFrame(idsDf.sparkSession, vals), vals.length, vals.min, vals.max,
+          vals.map(v => Murmur3_x86_32.hashLong(v, 42).toLong).sum, Some(vals))
+      case None =>
+        val pinned = graft.core.Lineage.pin(normalized)
+        val st = pinned.agg(count(lit(1)), count(col("_id")), min(col("_id")),
+          max(col("_id")), sum(hash(col("_id")).cast("long"))).head()
+        require(st.getLong(1) == st.getLong(0), nullIds)
+        DeleteIds(pinned, st.getLong(0), st.getLong(2), st.getLong(3), st.getLong(4), None)
     }
   }
 
@@ -298,7 +298,7 @@ object IndexCompact {
     * dry-run count ([[Takedown.preview]]), through discovery's filter. */
   def matchCount(spark: SparkSession, dir: String, idCol: String,
       ids: DeleteIds): Long =
-    matching(spark.read.parquet(dir).select(col(idCol)), idCol, ids).count()
+    matching(graft.core.StoreTable.read(spark, dir).select(col(idCol)), idCol, ids).count()
 
   /** Seq sugar over the DataFrame-native [[deleteMatching]] below. */
   def deleteMatching(spark: SparkSession, dir: String, idCol: String,
@@ -403,8 +403,8 @@ object IndexCompact {
         val dirs = vals.map(v => partitionDir(dir, partitionCol, v))
           .filter(d => fs.exists(new Path(d))).toIndexedSeq
         if (dirs.isEmpty) None
-        else Some(spark.read.option("basePath", dir).parquet(dirs: _*))
-      case None => Some(spark.read.parquet(dir))
+        else Some(graft.core.StoreTable.read(spark, dir, dirs))
+      case None => Some(graft.core.StoreTable.read(spark, dir))
     }
     val touched: Map[String, Long] = scanBase match {
       case None => Map.empty
@@ -430,7 +430,7 @@ object IndexCompact {
     val touchedDirs = touched.keys.map(v => partitionDir(dir, partitionCol, v)).toSeq
     touchedDirs.foreach(d => require(fs.exists(new Path(d)),
       s"IndexCompact: expected partition dir $d"))
-    val keptRows = spark.read.option("basePath", dir).parquet(touchedDirs: _*)
+    val keptRows = graft.core.StoreTable.read(spark, dir, touchedDirs)
       .join(broadcast(idsLong), Seq(idCol), "left_anti")
     val touchedBytes = touchedDirs.map(d => liveFiles(fs, new Path(d)).map(_.getLen).sum).sum
     val nOut = math.max(touched.size.toLong,
@@ -646,6 +646,14 @@ trait IndexStore {
 }
 
 object IndexStore {
+  /** The [[graft.core.Local]] bound of a probe or ingest batch: up to this
+    * many rows and bytes, [[IvfIndex]] and [[SemIndex]] collect the batch
+    * once and assign it on the driver, and the minhash probe computes its
+    * signatures there; above it the distributed path runs (the
+    * measurement behind the pair: `plans/r24/local_bounds.txt`). */
+  val BatchRows = 1024
+  val BatchBytes: Long = 8L << 20
+
   /** The index stores a request names (empty URI = not named), in
     * fan-out and view order. */
   def named(minhashURI: String, spanURI: String, semURI: String,

@@ -110,13 +110,15 @@ object IvfIndex extends IndexStore {
   // savings, not just a smaller cache footprint. When the index was built
   // with PQ codebooks, each row additionally carries its m-entry `pq` codes
   // ([[topKPq]] shortlists over those — a further 4× under the SQ8 column).
+  // `inline` attaches the centroids as a literal, for a local batch only
+  // ([[Similarity.attachCentroidData]]).
   private def assignAndWrite(df: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Double, Int, Seq[Float])],
       cbs: Option[(Seq[Pq.CodebookEntry], Int, Int, Boolean)],
-      path: String, mode: String): Unit = {
+      path: String, mode: String, inline: Boolean = false): Unit = {
     val base = cbs match {
       case Some((entries, m, dsub, residual)) =>
-        val withList = Similarity.attachCentroidData(df, cents)
+        val withList = Similarity.attachCentroidData(df, cents, inline)
           .withColumn("_list",
             element_at(Similarity.rankedCentroidLists(col(vecCol), col("_cents")), 1)
               .getField("list"))
@@ -130,7 +132,7 @@ object IvfIndex extends IndexStore {
             Similarity.norm(col(vecCol)).as("vnorm"),
             col("_list"))
       case None =>
-        Similarity.attachCentroidData(df, cents)
+        Similarity.attachCentroidData(df, cents, inline)
           .select(col(idCol).as("id"), col(vecCol).as("vec"),
             Quantize.int8Codes(col(vecCol)).as("codes"),
             Similarity.norm(col(vecCol)).as("vnorm"),
@@ -149,7 +151,7 @@ object IvfIndex extends IndexStore {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) None
     else {
-      val raw = spark.read.parquet(s"$path/pq_codebooks")
+      val raw = graft.core.StoreTable.read(spark, s"$path/pq_codebooks")
       val hasResidual = raw.columns.contains("residual")
       val rows = raw.collect()
       val entries = rows
@@ -198,7 +200,7 @@ object IvfIndex extends IndexStore {
     // vanish from shortlists. Fail fast with a rebuild hint instead; the
     // pre-r12 "unnormalized fallback" contract only holds when NO file has
     // the new columns.
-    val vectors = spark.read.parquet(s"$path/vectors")
+    val vectors = graft.core.StoreTable.read(spark, s"$path/vectors")
     val existingSchema = vectors.schema
     val existing = existingSchema.fieldNames.toSet
     val expected = cbs match {
@@ -221,25 +223,40 @@ object IvfIndex extends IndexStore {
         s"(${newVectors.schema(idCol).dataType.sql}, ${newVectors.schema(vecCol).dataType.sql}) " +
         "— cast the batch or rebuild")
     // duplicate tripwire: ONE column-pruned scan, bounded by the batch's
-    // pushed [min, max] id range so parquet row-group stats prune it; the
-    // semi join broadcasts whichever side AQE finds small
+    // pushed [min, max] id range so parquet row-group stats prune it
     import org.apache.spark.sql.functions.{count => cnt, lit, max => fmax, min => fmin}
-    val batchIds = graft.core.Lineage.pin(
-      newVectors.select(col(idCol).as("id")).distinct())
-    val bs = batchIds.agg(cnt(lit(1)).as("n"), cnt(col("id")).as("nn"),
-      fmin(col("id")).as("lo"), fmax(col("id")).as("hi")).head()
-    if (bs.getLong(0) == 0L) {
+    val batch = newVectors.select(col(idCol), col(vecCol))
+    val local = graft.core.Local.collectUpTo(batch, IndexStore.BatchRows, IndexStore.BatchBytes)
+    // (distinct ids, distinct non-NULL ids, the duplicate probe)
+    val (n, nonNull, probeDups) = local match {
+      case Some(rows) =>
+        // a request-sized batch, collected once: the id checks read the
+        // rows, the probe carries the ids as an isin literal (pushed to
+        // parquet as their [min, max] range past the In-pushdown
+        // threshold), and the few duplicates come back as a local relation
+        val ids = rows.map(_.get(0)).distinct.toSeq
+        (ids.size.toLong, ids.count(_ != null).toLong, () => {
+          val probe = vectors.select("id").filter(col("id").isin(ids: _*))
+          graft.core.Local.relation(spark, probe.schema, probe.collect().toSeq)
+        })
+      case None =>
+        // the semi join broadcasts whichever side AQE finds small
+        val batchIds = graft.core.Lineage.pin(batch.select(col(idCol).as("id")).distinct())
+        val bs = batchIds.agg(cnt(lit(1)).as("n"), cnt(col("id")).as("nn"),
+          fmin(col("id")).as("lo"), fmax(col("id")).as("hi")).head()
+        (bs.getLong(0), bs.getLong(1), () => graft.core.Lineage.pin(
+          vectors.select("id")
+            .filter(col("id").between(lit(bs.get(2)), lit(bs.get(3))))
+            .join(batchIds, Seq("id"), "left_semi")))
+    }
+    if (n == 0L) {
       // a no-new-vectors day is a NO-OP, not an error — a daily pipeline
       // cell or a streaming foreachBatch must survive an empty trigger
       graft.core.LogBuffer.append(s"IvfIndex.ingest: empty batch for $path — no-op")
       return
     }
-    require(bs.getLong(1) == bs.getLong(0),
-      s"IvfIndex.ingest: batch contains NULL $idCol values")
-    val dups = graft.core.Lineage.pin(
-      vectors.select("id")
-        .filter(col("id").between(lit(bs.get(2)), lit(bs.get(3))))
-        .join(batchIds, Seq("id"), "left_semi"))
+    require(nonNull == n, s"IvfIndex.ingest: batch contains NULL $idCol values")
+    val dups = probeDups()
     val dupSample = dups.limit(6).collect().map(r => String.valueOf(r.get(0)))
     if (dupSample.nonEmpty && !replace)
       throw new IllegalArgumentException(
@@ -254,38 +271,61 @@ object IvfIndex extends IndexStore {
       // log like any other — replace IS a removal plus an append
       delete(spark, path, dups)
     // encode against the PERSISTED codebooks (when present) so appended rows
-    // carry pq codes consistent with the build — the layouts cannot drift
-    assignAndWrite(newVectors, idCol, vecCol, cents, cbs, path, "append")
+    // carry pq codes consistent with the build — the layouts cannot drift;
+    // a local batch appends the rows it checked, assigned on the driver
+    local match {
+      case Some(rows) => assignAndWrite(graft.core.Local.relation(spark, batch.schema, rows.toSeq),
+        idCol, vecCol, cents, cbs, path, "append", inline = true)
+      case None => assignAndWrite(newVectors, idCol, vecCol, cents, cbs, path, "append")
+    }
   }
 
   /** Top-k cosine neighbors for a query batch against the persisted index.
-    * Reads only the probed inverted-list partitions.
+    * Reads only the probed inverted-list partitions. A request-sized batch
+    * ([[IndexStore.BatchRows]]) is ranked against the centroids on the
+    * driver; a larger one in a pinned distributed pass.
     */
   def topK(queries: DataFrame, queryId: String, queryVec: String, path: String,
       k: Int, nprobe: Int = 2): DataFrame = {
     require(k > 0 && nprobe > 0, s"k/nprobe must be positive, got $k/$nprobe")
     val spark = queries.sparkSession
     val cents = Similarity.readCentroids(spark, path)
-    // pinned BEFORE the explode (each query vector stored once, not nprobe
-    // times): TWO jobs read this frame (the probed-lists collect below and
-    // the final join) — an unpinned nondeterministic query input could
-    // probe one set of lists but join with another (the Lineage.pin
-    // two-jobs-one-frame hazard); exploding a pinned input is deterministic
-    val qLists = graft.core.Lineage.pin(
-      Similarity.attachCentroidData(queries, cents)
-        .select(
-          col(queryId).as("query_id"),
-          col(queryVec).as("_qv"),
-          transform(
-            slice(Similarity.rankedCentroidLists(col(queryVec), col("_cents")),
-              1, math.min(nprobe, cents.size)),
-            s => s.getField("list")).as("_lists")))
-    val q = qLists.select(col("query_id"), col("_qv"), explode(col("_lists")).as("_list"))
-    // the probed lists of THIS batch: ≤ nlist values, collected from the
-    // (tiny) per-query ranking — the isin filter is a partition filter on
-    // the vectors layout, so unprobed list directories are never read
-    val probed = q.select("_list").distinct().collect().map(_.getInt(0))
-    val candidates = spark.read.parquet(s"$path/vectors")
+    def probes(vec: Column): Column = transform(
+      slice(Similarity.rankedCentroidLists(vec, col("_cents")), 1, math.min(nprobe, cents.size)),
+      s => s.getField("list"))
+    val batch = queries.select(col(queryId).as("query_id"), col(queryVec).as("_qv"))
+    // (query, probed list) rows and the batch's probed lists (≤ nlist
+    // values): the isin filter below is a partition filter on the vectors
+    // layout, so unprobed list directories are never read
+    val (q, probed) = graft.core.Local.collectUpTo(batch, IndexStore.BatchRows,
+        IndexStore.BatchBytes) match {
+      case Some(rows) =>
+        // a request-sized batch, collected once: the ranking folds into
+        // the local relation on the driver (no job), and the rows ARE the
+        // probe — one read of the input, nothing to pin
+        val ranked = Similarity.attachCentroidData(
+            graft.core.Local.relation(spark, batch.schema, rows.toSeq), cents, inline = true)
+          .select(col("query_id"), col("_qv"), probes(col("_qv")).as("_lists"))
+          .collect()
+        val exploded = ranked.toSeq.flatMap(r =>
+          r.getSeq[Int](2).map(l => org.apache.spark.sql.Row(r.get(0), r.get(1), l)))
+        (graft.core.Local.relation(spark,
+            batch.schema.add("_list", org.apache.spark.sql.types.IntegerType, nullable = false),
+            exploded),
+          exploded.map(_.getInt(2)).distinct)
+      case None =>
+        // pinned BEFORE the explode (each query vector stored once, not
+        // nprobe times): TWO jobs read this frame (the probed-lists
+        // collect and the final join) — an unpinned nondeterministic
+        // query input could probe one set of lists but join with another
+        // (the Lineage.pin two-jobs-one-frame hazard)
+        val qLists = graft.core.Lineage.pin(
+          Similarity.attachCentroidData(batch, cents)
+            .select(col("query_id"), col("_qv"), probes(col("_qv")).as("_lists")))
+        val q = qLists.select(col("query_id"), col("_qv"), explode(col("_lists")).as("_list"))
+        (q, q.select("_list").distinct().collect().map(_.getInt(0)).toSeq)
+    }
+    val candidates = graft.core.StoreTable.read(spark, s"$path/vectors")
       .filter(col("_list").isin(probed.map(Integer.valueOf).toSeq: _*))
       .select(col("id").as("neighbor_id"), col("vec").as("_cv"), col("_list"))
     val scored = candidates
@@ -346,7 +386,7 @@ object IvfIndex extends IndexStore {
     val probed = q.select("_list").distinct().collect().map(_.getInt(0))
     val listFilter = col("_list").isin(probed.map(Integer.valueOf).toSeq: _*)
     // shortlist pass: codes column only — the narrow integer scan
-    val codes = spark.read.parquet(s"$path/vectors")
+    val codes = graft.core.StoreTable.read(spark, s"$path/vectors")
       .filter(listFilter)
       .select(col("id").as("neighbor_id"), col("codes").as("_cc"), col("_list"))
     val scoredInt = codes
@@ -363,7 +403,7 @@ object IvfIndex extends IndexStore {
     // ≤ queries × k × shortlistFactor rows — broadcast it against the
     // probed partitions, so the wide float column is read once and never
     // shuffled.
-    val vecs = spark.read.parquet(s"$path/vectors")
+    val vecs = graft.core.StoreTable.read(spark, s"$path/vectors")
       .filter(listFilter)
       .select(col("id").as("neighbor_id"), col("vec").as("_cv"))
     val rescored = vecs
@@ -436,9 +476,9 @@ object IvfIndex extends IndexStore {
     // tight shortlists (measured: 0.16 → 0.99 recall at factor 2 on a
     // clustered fixture with per-cluster norm spread). Pre-r12 indexes
     // lack vnorm → unnormalized fallback, still rescored exactly.
-    val vectorsSchema = spark.read.parquet(s"$path/vectors").schema
+    val vectorsSchema = graft.core.StoreTable.read(spark, s"$path/vectors").schema
     val hasVnorm = vectorsSchema.fieldNames.contains("vnorm")
-    val codes = spark.read.parquet(s"$path/vectors")
+    val codes = graft.core.StoreTable.read(spark, s"$path/vectors")
       .filter(listFilter)
       .select(col("id").as("neighbor_id"), col("pq").as("_pq"),
         (if (hasVnorm) col("vnorm") else lit(1.0)).as("_vn"), col("_list"))
@@ -453,7 +493,7 @@ object IvfIndex extends IndexStore {
       .perKeySalted(scoredAdc, Seq("query_id"), "_adc", k * shortlistFactor,
         descending = true, tiebreak = Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"))
-    val vecs = spark.read.parquet(s"$path/vectors")
+    val vecs = graft.core.StoreTable.read(spark, s"$path/vectors")
       .filter(listFilter)
       .select(col("id").as("neighbor_id"), col("vec").as("_cv"))
     val rescored = vecs
@@ -527,7 +567,7 @@ object IvfIndex extends IndexStore {
       nprobe: Int = 2, sampleSize: Int = 64,
       shortlistFactor: Int = 4): DataFrame = {
     require(sampleSize > 0, s"sampleSize must be positive, got $sampleSize")
-    val vectors = spark.read.parquet(s"$path/vectors")
+    val vectors = graft.core.StoreTable.read(spark, s"$path/vectors")
     val sample = graft.core.Lineage.pin(
       vectors.select(col("id"), col("vec"))
         .orderBy(xxhash64(col("id"), lit("ivf-recall-probe")), col("id"))
@@ -552,7 +592,7 @@ object IvfIndex extends IndexStore {
       path: String, k: Int, settings: Seq[RecallSetting]): DataFrame = {
     require(settings.nonEmpty, "recallReport needs at least one setting")
     val spark = sampleQueries.sparkSession
-    val corpus = spark.read.parquet(s"$path/vectors").select(col("id"), col("vec"))
+    val corpus = graft.core.StoreTable.read(spark, s"$path/vectors").select(col("id"), col("vec"))
     val exact = graft.core.Lineage.pin(Similarity
       .bruteForceTopK(corpus, "id", "vec", sampleQueries, queryId, queryVec, k)
       .select(col("query_id"), col("neighbor_id")))

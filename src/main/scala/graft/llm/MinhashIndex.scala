@@ -61,11 +61,14 @@ object MinhashIndex extends IndexStore {
     * ingest/delete reads it from there, so index and layout can never
     * drift. Sizing: ~128k docs per directory keeps production partitions
     * in the hundreds-of-MB range, while a battery-sized corpus gets the
-    * 4-directory floor — small enough that every table read stays under
-    * Spark's parallel-partition-discovery threshold (a 64-dir layout made
-    * EVERY `read.parquet` of these tables launch a distributed listing
-    * job; the lifecycle batteries read them dozens of times per run).
-    * Changing a store's layout: rebuild with [[write]]. */
+    * 4-directory floor — small enough that every table open stays under
+    * Spark's parallel-partition-discovery threshold (32 directories; a
+    * 64-dir layout made every open of these tables launch a distributed
+    * listing job, and the lifecycle batteries open them dozens of times
+    * per run). Under that threshold an open runs no job at all: the
+    * tables open through [[graft.core.StoreTable]], which also skips the
+    * schema-inference job. Changing a store's layout: rebuild with
+    * [[write]]. */
   private val autoDocsPerPartition = 1L << 17
   private def autoIdPartitions(rows: Long): Long =
     math.min(1L << 16,
@@ -159,7 +162,7 @@ object MinhashIndex extends IndexStore {
     * duplicates are found with probability 1 at any cap setting.
     */
   def exactMatches(newDf: DataFrame, idCol: String, textCol: String, path: String): DataFrame = {
-    val corpusFp = newDf.sparkSession.read.parquet(s"$path/exact")
+    val corpusFp = graft.core.StoreTable.read(newDf.sparkSession, s"$path/exact")
     newDf
       .select(col(idCol).cast("long").as("new_id"), xxhash64(col(textCol)).as("_fp"))
       .join(corpusFp, Seq("_fp"))
@@ -208,8 +211,13 @@ object MinhashIndex extends IndexStore {
         Dedup.hashedShingles(col(textCol), p.shingleLen).as("_nsh"))
       .filter(size(col("_nsh")) > 0)
       .withColumn("_sig", Dedup.minhashSignature(col("_nsh"), numHashes))
-      .repartition(col("_nid"))
-    lshMatchesSigned(spark, signed, path, threshold, maxCandidatesPerDoc, p)
+    // the signatures are computed once: a request-sized batch on the
+    // driver (the projection folds into a local batch with no job),
+    // anything larger in one shuffle
+    val once = graft.core.Local.collectUpTo(signed, IndexStore.BatchRows, IndexStore.BatchBytes)
+      .map(rows => graft.core.Local.relation(spark, signed.schema, rows.toSeq))
+      .getOrElse(signed.repartition(col("_nid")))
+    lshMatchesSigned(spark, once, path, threshold, maxCandidatesPerDoc, p)
   }
 
   /** [[lshMatches]] over a PRE-SIGNED batch — (_nid, _nsh, _sig) already
@@ -224,8 +232,8 @@ object MinhashIndex extends IndexStore {
       maxCandidatesPerDoc: Int,
       p: Params
   ): DataFrame = {
-    val corpusBands = spark.read.parquet(s"$path/bands")
-    val corpusSh = spark.read.parquet(s"$path/shingles")
+    val corpusBands = graft.core.StoreTable.read(spark, s"$path/bands")
+    val corpusSh = graft.core.StoreTable.read(spark, s"$path/shingles")
     val newSig = signed.filter(size(col("_nsh")) > 0)
     val newBands = newSig.select(
       col("_nid"),
@@ -353,7 +361,7 @@ object MinhashIndex extends IndexStore {
     // silently exact-match every doc against its own half-landed rows and
     // report ~zero survivors. Cheap: _id is parquet-stats-prunable, so
     // row groups below the watermark skip without reading.
-    val stale = spark.read.parquet(s"$path/exact")
+    val stale = graft.core.StoreTable.read(spark, s"$path/exact")
       .filter(col("_id") > p.maxId).limit(1).count()
     require(stale == 0L,
       s"MinhashIndex.ingest: index at $path holds rows above the persisted " +
@@ -380,7 +388,7 @@ object MinhashIndex extends IndexStore {
     // probe rows the final anti-join discards, and the per-doc candidate
     // caps are per-doc windows — the loser UNION is identical either way.
     val exactLosersIdx = batchAll
-      .join(spark.read.parquet(s"$path/exact").select("_fp"), Seq("_fp"), "left_semi")
+      .join(graft.core.StoreTable.read(spark, s"$path/exact").select("_fp"), Seq("_fp"), "left_semi")
       .select(col("_nid").as(idCol))
     val nearLosersIdx = lshMatchesSigned(spark,
         batchAll.select(col("_nid"), col("_nsh"), col("_sig")),

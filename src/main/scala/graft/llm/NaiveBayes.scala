@@ -244,8 +244,8 @@ object NaiveBayes {
 
   def read(spark: SparkSession, path: String): Model = {
     graft.core.AtomicDir.recoverLive(spark, path)
-    Model(spark.read.parquet(s"$path/classes"),
-      spark.read.parquet(s"$path/tokens"))
+    Model(graft.core.StoreTable.read(spark, s"$path/classes"),
+      graft.core.StoreTable.read(spark, s"$path/tokens"))
   }
 
   /** Incremental retrain: fold a new labeled batch into the persisted

@@ -122,28 +122,67 @@ object SemIndex extends IndexStore {
     val Params(tau, maxClusterSize, _) = Params(
       graft.core.AtomicDir.readRecord(spark, s"$path/params"))
     dedupAgainst(batch, idCol, vecCol, Similarity.readCentroids(spark, path),
-      tau, maxClusterSize, spark.read.parquet(s"$path/vectors"))
+      tau, maxClusterSize, graft.core.StoreTable.read(spark, s"$path/vectors"))
   }
 
   /** [[dedupAgainst]] over a store already opened by the caller: its
-    * centroids, params and `vectors/` frame ([[ingest]] reads each once). */
+    * centroids, params and `vectors/` frame ([[ingest]] reads each once).
+    * A request-sized batch ([[IndexStore.BatchRows]]) is collected once
+    * and everything but the index-side pairs runs on the driver: the
+    * assignment folds into the local relation, the batch-internal pairs
+    * and the survivors are computed from its rows. The result is a local
+    * relation then; above the bound the distributed path runs. */
   private def dedupAgainst(batch: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Double, Int, Seq[Float])], tau: Double, maxClusterSize: Int,
       vectors: DataFrame): DataFrame = {
-    val assigned = graft.core.Lineage.pin(
-      Dedup.assignToCentroids(batch, idCol, vecCol, cents))
-    // ≤ nclusters values, collected from the pinned batch assignment —
-    // the isin filter prunes unread cluster directories. The same cheap
-    // pass (pinned blocks, no recompute) enforces the non-negative-id
-    // contract: a negative batch id would conflate with the sentinel
-    // encoding of index rows below and silently mis-attribute components.
-    val summary = assigned
-      .agg(collect_set(col("_cluster")).as("_cs"),
-        min(col("_id").cast("long")).as("_minId")).head()
-    val touched = summary.getSeq[Int](0)
-    require(summary.isNullAt(1) || summary.getLong(1) >= 0L,
-      s"SemIndex.dedupAgainst: batch ids must be non-negative, found ${summary.get(1)}")
-    val kept = vectors.filter(col("_cluster").isin(touched.map(Integer.valueOf).toSeq: _*))
+    val spark = batch.sparkSession
+    // the minimum batch id enforces the non-negative-id contract: a
+    // negative batch id would conflate with the sentinel encoding of index
+    // rows below and silently mis-attribute components
+    def checkIds(minId: Option[Long]): Unit = require(minId.forall(_ >= 0L),
+      s"SemIndex.dedupAgainst: batch ids must be non-negative, found ${minId.get}")
+    def losers(pairs: DataFrame): DataFrame = Dedup.connectedComponents(pairs)
+      .filter(col("id") >= 0 && col("id") =!= col("component"))
+      .select(col("id").as(idCol))
+    graft.core.Local.collectUpTo(batch, IndexStore.BatchRows, IndexStore.BatchBytes) match {
+      case Some(rows) =>
+        val local = graft.core.Local.relation(spark, batch.schema, rows.toSeq)
+        val assignedDf = Dedup.assignToCentroids(local, idCol, vecCol, cents, inline = true)
+        val out = assignedDf.withColumn("_lid", col("_id").cast("long")).collect()
+        checkIds(out.filterNot(_.isNullAt(3)).map(_.getLong(3)).minOption)
+        val assigned = out.toSeq.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2)))
+        val pairs = crossPairs(graft.core.Local.relation(spark, assignedDf.schema, assigned),
+            out.map(_.getInt(2)).distinct.toSeq, vectors, tau, maxClusterSize)
+          .unionByName(Dedup.pairsOnDriver(spark, assigned, assignedDf.schema, tau, maxClusterSize))
+        // a driver-labelled graph comes back as a local relation: the
+        // losers collect without a job, and so does the result
+        val lost = losers(pairs).collect().map(_.get(0)).toSeq
+        local.filter(col(idCol).isNull || !col(idCol).isin(lost: _*))
+          .select((idCol +: batch.columns.filter(_ != idCol)).map(col).toSeq: _*)
+      case None =>
+        // pinned: the summary below and the pair joins read it; the same
+        // cheap pass (pinned blocks, no recompute) takes the minimum id
+        val assigned = graft.core.Lineage.pin(
+          Dedup.assignToCentroids(batch, idCol, vecCol, cents))
+        val summary = assigned
+          .agg(collect_set(col("_cluster")).as("_cs"),
+            min(col("_id").cast("long")).as("_minId")).head()
+        checkIds(if (summary.isNullAt(1)) None else Some(summary.getLong(1)))
+        val pairs = crossPairs(assigned, summary.getSeq[Int](0), vectors, tau, maxClusterSize)
+          .unionByName(Dedup.pairsFromAssigned(assigned, tau, maxClusterSize)
+            .select(col("idA"), col("idB")))
+        batch.join(losers(pairs), Seq(idCol), "left_anti")
+    }
+  }
+
+  /** Batch × kept same-cluster dup edges (batchId, keptId) over the kept
+    * rows of the `touched` clusters (the isin filter prunes unread cluster
+    * directories). Kept ids enter the component pass as negative sentinels
+    * so a mixed component's minimum is ALWAYS an index row (corpus-first
+    * semantics). */
+  private def crossPairs(assigned: DataFrame, touched: Seq[Int], vectors: DataFrame,
+      tau: Double, maxClusterSize: Int): DataFrame = {
+    val kept = vectors.filter(col("_cluster").isin(touched.map(Integer.valueOf): _*))
     // deterministic per-cluster cap on the INDEX side (the MinhashIndex
     // bucket-cap discipline): one dense cluster contributes a bounded
     // candidate set, never cluster × batch rows unbounded
@@ -151,20 +190,11 @@ object SemIndex extends IndexStore {
       kept.withColumn("_h", xxhash64(col("id"))), Seq("_cluster"), "_h",
       maxClusterSize, descending = false, tiebreak = Seq("id"))
       .drop("_h")
-    // batch × kept same-cluster candidates → (batchId, keptId) dup edges;
-    // kept ids enter the component pass as negative sentinels so a mixed
-    // component's minimum is ALWAYS an index row (corpus-first semantics)
-    val crossPairs = assigned
+    assigned
       .join(keptCapped.select(col("_cluster"), col("id").as("_kid"), col("vec").as("_kv")),
         Seq("_cluster"))
       .filter(Similarity.cosine(col("_v"), col("_kv")) >= tau)
       .select((-col("_kid") - 1).as("idA"), col("_id").as("idB"))
-    val batchPairs = Dedup.pairsFromAssigned(assigned, tau, maxClusterSize)
-      .select(col("idA"), col("idB"))
-    val losers = Dedup.connectedComponents(crossPairs.unionByName(batchPairs))
-      .filter(col("id") >= 0 && col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    batch.join(losers, Seq(idCol), "left_anti")
   }
 
   /** [[dedupAgainst]] + append the survivors to the kept layout, so the
@@ -174,7 +204,7 @@ object SemIndex extends IndexStore {
     */
   def ingest(batch: DataFrame, idCol: String, vecCol: String, path: String): DataFrame = {
     val spark = batch.sparkSession
-    val vectors = spark.read.parquet(s"$path/vectors")
+    val vectors = graft.core.StoreTable.read(spark, s"$path/vectors")
     val existing = vectors.schema
     require(existing.fieldNames.toSet == Set("id", "vec", "_cluster"),
       s"SemIndex.ingest: layout at $path has columns " +
@@ -195,32 +225,51 @@ object SemIndex extends IndexStore {
     val cents = Similarity.readCentroids(spark, path)
     val Params(tau, maxClusterSize, indexedMax) = Params(
       graft.core.AtomicDir.readRecord(spark, s"$path/params"))
+    // a request-sized batch is collected once and every step below reads
+    // the local relation: the id range and the survivors come back to the
+    // driver, and the append's assignment folds into the relation
+    val local = graft.core.Local.collectUpTo(batch, IndexStore.BatchRows, IndexStore.BatchBytes)
+      .map(rows => graft.core.Local.relation(spark, batch.schema, rows.toSeq))
+    val input = local.getOrElse(batch)
     // disjoint-id contract: a batch reusing an indexed id would append a
     // duplicate-id row to vectors/, silently breaking min-id attribution
-    // and the one-shot-equivalence pin. Cheap: one agg on the batch vs the
-    // persisted max — no index scan.
-    val batchRange = batch.agg(
-      min(col(idCol).cast("long")), max(col(idCol).cast("long"))).head()
-    require(batchRange.isNullAt(0) || batchRange.getLong(0) > indexedMax,
+    // and the one-shot-equivalence pin. Cheap: the batch's id range vs the
+    // persisted max — no index scan (no job at all for a local batch).
+    val batchIds = local match {
+      case Some(rel) => rel.select(col(idCol).cast("long")).collect()
+        .filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq
+      case None =>
+        val r = batch.agg(min(col(idCol).cast("long")), max(col(idCol).cast("long"))).head()
+        if (r.isNullAt(0)) Nil else Seq(r.getLong(0), r.getLong(1))
+    }
+    require(batchIds.isEmpty || batchIds.min > indexedMax,
       s"SemIndex.ingest: batch ids must be strictly above every indexed id " +
-        s"(max indexed = $indexedMax, batch min = ${batchRange.get(0)}) — " +
+        s"(max indexed = $indexedMax, batch min = ${batchIds.min}) — " +
         "renumber the batch or rebuild with SemIndex.write")
-    val survivors = graft.core.Lineage.pin(
-      dedupAgainst(batch, idCol, vecCol, cents, tau, maxClusterSize, vectors))
+    val found = dedupAgainst(input, idCol, vecCol, cents, tau, maxClusterSize, vectors)
+    val (survivors, nSurvivors) = local match {
+      case Some(_) =>
+        val rows = found.collect()
+        (graft.core.Local.relation(spark, found.schema, rows.toSeq), rows.length.toLong)
+      case None =>
+        val pinned = graft.core.Lineage.pin(found)
+        (pinned, pinned.count())
+    }
     // batch-sized append (IndexCompact.coalesceForAppend): survivors is
-    // pinned, so the count is a cached-block scan; a small batch writes
-    // ONE file per touched cluster dir instead of one per (task, dir)
+    // local or pinned, so its count is free or a cached-block scan; a
+    // small batch writes ONE file per touched cluster dir instead of one
+    // per (task, dir)
     IndexCompact.coalesceForAppend(
-      Dedup.assignToCentroids(survivors, idCol, vecCol, cents)
+      Dedup.assignToCentroids(survivors, idCol, vecCol, cents, inline = local.isDefined)
         .select(col("_id").as("id"), col("_v").as("vec"), col("_cluster")),
-      survivors.count())
+      nSurvivors)
       .write.mode("append").partitionBy("_cluster").parquet(s"$path/vectors")
     // advance the persisted max so the NEXT batch is checked against this
     // one's ids too (dropped batch ids are consumed — max over the whole
     // batch, not just survivors)
-    if (!batchRange.isNullAt(1))
+    if (batchIds.nonEmpty)
       graft.core.AtomicDir.writeRecord(spark, s"$path/params",
-        Params(tau, maxClusterSize, math.max(indexedMax, batchRange.getLong(1))).fields)
+        Params(tau, maxClusterSize, math.max(indexedMax, batchIds.max)).fields)
     survivors
   }
 }

@@ -220,17 +220,28 @@ object Similarity {
     * (halfNorm, list, vec). Shared by [[ivfTopK]]'s large-nlist path and
     * the persistent [[IvfIndex]] so the assignment machinery has ONE
     * definition.
+    *
+    * `inline = true` attaches the same array as a literal instead — for a
+    * request-sized [[graft.core.Local]] relation only: a join never folds
+    * into a local relation, a projection does (`ConvertToLocalRelation`
+    * evaluates it on the driver), and a folded plan never reaches codegen,
+    * so the constant pool is not at stake there.
     */
   private[llm] def attachCentroidData(df: DataFrame,
-      cents: Seq[(Double, Int, Seq[Float])]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val centDf = Seq(Tuple1(cents)).toDF("_raw")
-      .select(transform(col("_raw"), c =>
-        struct(c.getField("_1").as("halfNorm"), c.getField("_2").as("list"),
-          c.getField("_3").as("vec"))).as("_cents"))
-    df.crossJoin(broadcast(centDf))
-  }
+      cents: Seq[(Double, Int, Seq[Float])], inline: Boolean = false): DataFrame =
+    if (inline)
+      df.withColumn("_cents", array(cents.map { case (hn, i, v) =>
+        struct(lit(hn).as("halfNorm"), lit(i).as("list"), typedLit(v).as("vec"))
+      }: _*))
+    else {
+      val spark = df.sparkSession
+      import spark.implicits._
+      val centDf = Seq(Tuple1(cents)).toDF("_raw")
+        .select(transform(col("_raw"), c =>
+          struct(c.getField("_1").as("halfNorm"), c.getField("_2").as("list"),
+            c.getField("_3").as("vec"))).as("_cents"))
+      df.crossJoin(broadcast(centDf))
+    }
 
   /** Per-row centroid ranking by L2 distance (argmin_c ‖x−c‖² via
     * 0.5‖c‖² − x·c), ties broken by list id through the struct sort — the

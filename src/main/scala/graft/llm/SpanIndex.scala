@@ -80,7 +80,7 @@ object SpanIndex extends IndexStore {
 
   private def readBloom(spark: SparkSession, path: String): DataFrame = {
     graft.core.AtomicDir.recoverLive(spark, s"$path/bloom")
-    spark.read.parquet(s"$path/bloom")
+    graft.core.StoreTable.read(spark, s"$path/bloom")
   }
 
   /** One-shot dedup of the initial corpus AND index creation: runs
@@ -164,8 +164,8 @@ object SpanIndex extends IndexStore {
     val inIndex =
       if (touched.isEmpty) grams.select("h").limit(0)
       else {
-        val idx = spark.read.parquet(
-          touched.map(b => s"$path/grams/bucket=$b"): _*)
+        val idx = graft.core.StoreTable.read(spark,
+          touched.map(b => s"$path/grams/bucket=$b").toSeq, None)
         // half-landed-ingest tripwire: a keeper above the persisted
         // watermark means a previous ingest appended grams but crashed
         // before advancing params — deduping against them would wrongly

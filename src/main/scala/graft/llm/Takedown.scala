@@ -345,8 +345,7 @@ object Takedown {
         org.apache.spark.sql.Row(store, tpe, n, removed, requestId,
           at.getOrElse(now))
       }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, viewSchema)
+    graft.core.Local.relation(spark, viewSchema, rows)
   }
 
   /** DRY RUN: what [[run]] WOULD remove, with zero mutation — the sizing
@@ -387,9 +386,8 @@ object Takedown {
     val rows = results.toList.map { case (store, tpe, matched) =>
       org.apache.spark.sql.Row(store, tpe, idSet.n, matched)
     }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava,
-      StructType(viewSchema.take(3) :+ StructField("rows_matched", LongType)))
+    graft.core.Local.relation(spark,
+      StructType(viewSchema.take(3) :+ StructField("rows_matched", LongType)), rows)
   }
 
   /** The consolidated request-level audit trail at `auditURI` — one row

@@ -56,7 +56,7 @@ object WordCounts {
 
   def read(spark: SparkSession, path: String): DataFrame = {
     graft.core.AtomicDir.recoverLive(spark, path)
-    spark.read.parquet(s"$path/counts")
+    graft.core.StoreTable.read(spark, s"$path/counts")
   }
 
   /** Fold a batch in by exact count addition: afterwards the table equals

@@ -164,14 +164,15 @@ final case class DecontaminateTransform(
         // NULL / empty eval strings are not canaries: a null pattern would
         // NPE inside MultiContainsExpr's automaton build and an empty one
         // would match everything — drop both before the bounded collect.
-        val canaries = eval.select(col(evalText))
-          .filter(col(evalText).isNotNull && length(col(evalText)) > 0)
-          .distinct()
-          .limit(100001).collect().map(_.getString(0)).toSeq
-        require(canaries.length <= 100000,
-          s"$name: canary list exceeds 100k entries — use the n-gram or bloom path")
-        require(canaries.nonEmpty, s"$name: eval view has no canary strings")
-        Decontaminate.canaryHits(train, idField, textField, canaries)
+        val canaries = graft.core.Local.collectUpTo(
+          eval.select(col(evalText))
+            .filter(col(evalText).isNotNull && length(col(evalText)) > 0)
+            .distinct(),
+          100000, graft.core.Local.MaxBytes)
+        require(canaries.isDefined, s"$name: canary list exceeds 100k entries " +
+          "(or the driver byte bound) — use the n-gram or bloom path")
+        require(canaries.get.nonEmpty, s"$name: eval view has no canary strings")
+        Decontaminate.canaryHits(train, idField, textField, canaries.get.map(_.getString(0)).toSeq)
       case other =>
         throw new IllegalArgumentException(s"$name: unknown action '$other' (filter|flag|canary)")
     }

@@ -375,7 +375,7 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("idA", "idB")
     val driver = stagesDuring(Dedup.connectedComponents(pairs))
     assert(driver.length == 2 && driver.head.startsWith("localCheckpoint at Lineage") &&
-      driver(1).startsWith("collect at Dedup"), driver.mkString("; "))
+      driver(1).startsWith("collect at Local"), driver.mkString("; "))
     // the forced path runs its propagation rounds (pins, joins and the
     // convergence counts), which the listener sees as many more jobs
     val forced = stagesDuring(Dedup.connectedComponents(pairs, "idA", "idB", 25, 0))
@@ -1520,8 +1520,9 @@ class MinhashIndexSpec extends SparkSpec {
       removed = graft.llm.MinhashIndex.delete(spark, path, Seq(70L)).rowsRemoved
     }
     assert(removed.size == 3 && removed.forall(_ > 0L), removed.toString)
-    // 25 jobs while each table normalized the ids on its own
-    assert(jobs <= 23, s"$jobs Spark jobs for a one-id delete")
+    // 25 jobs while each table normalized the ids on its own; 18 while
+    // every table open inferred its schema in a job
+    assert(jobs <= 12, s"$jobs Spark jobs for a one-id delete")
   }
 
   test("delete: shingles/exact discovery is id-derived — untouched pmod partitions are never read") {
@@ -3387,9 +3388,39 @@ class TakedownRequestSpec extends SparkSpec {
     }
     assert(matched == removed && removed.size == 4 && removed.values.forall(_ > 0L),
       s"preview $matched, run $removed")
-    // 23 and 41 jobs while the request normalized its ids two ways
-    assert(preview <= 18, s"$preview Spark jobs for a one-id preview")
-    assert(run <= 36, s"$run Spark jobs for a one-id takedown")
+    // 23 and 41 jobs while the request normalized its ids two ways; 18 and
+    // 36 while every store table open inferred its schema in a job
+    assert(preview <= 12, s"$preview Spark jobs for a one-id preview")
+    assert(run <= 24, s"$run Spark jobs for a one-id takedown")
+  }
+
+  test("a one-document id-addressed count-store takedown: deleteIds and unlearnIds run fewer than 19 and 30 Spark jobs") {
+    val base = java.nio.file.Files.createTempDirectory("tdcounts").toString
+    val (wc, nb) = (s"$base/wc", s"$base/nb")
+    val labelled = corpus.withColumn("label",
+      org.apache.spark.sql.functions.when(col("doc_id") % 2 === 0, "spam").otherwise("ham"))
+    graft.llm.WordCounts.write(labelled, "text", wc)
+    graft.llm.NaiveBayes.write(graft.llm.NaiveBayes.train(labelled, "text", "label"), nb)
+    labelled.createOrReplaceTempView("td_counts_corpus")
+    Seq(2L).toDF("doc_id").createOrReplaceTempView("td_counts_ids")
+    val ctx = new graft.core.PipelineContext(spark)
+    val deleteIds = ParamsRecordCheck.jobsDuring(spark) {
+      graft.transform.WordCountsTransform("w", "td_counts_ids", "td_counts_wc", wc,
+        action = "deleteIds", corpusView = "td_counts_corpus", idField = "doc_id")
+        .execute(ctx).get.collect()
+    }
+    val unlearnIds = ParamsRecordCheck.jobsDuring(spark) {
+      graft.transform.ClassifierTransform("c", "td_counts_ids", "td_counts_nb", "text",
+        mode = "unlearnIds", idField = "doc_id", corpusView = "td_counts_corpus",
+        modelURI = nb).execute(ctx).get.collect()
+    }
+    // the word counts equal a fresh count over the corpus without the doc
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSet
+    assert(rows(graft.llm.WordCounts.read(spark, wc)) ==
+      rows(graft.llm.Bpe.wordCounts(labelled.filter(col("doc_id") =!= 2L), "text")))
+    // 19 and 30 while every store table open inferred its schema in a job
+    assert(deleteIds <= 17, s"$deleteIds Spark jobs for deleteIds of one document")
+    assert(unlearnIds <= 26, s"$unlearnIds Spark jobs for unlearnIds of one document")
   }
 }
 
