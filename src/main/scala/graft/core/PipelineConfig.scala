@@ -1,10 +1,17 @@
 package graft.core
 
+import java.lang.reflect.{Constructor, InvocationTargetException}
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.runtime.universe.{appliedType, runtimeMirror, typeOf, Type}
+import scala.util.Try
+import scala.util.control.NonFatal
+import org.apache.commons.text.similarity.LevenshteinDistance
+import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
-import scala.util.control.NonFatal
 import graft.extract._
 import graft.load._
+import graft.schema.{FieldSpec, MetadataSchema}
 import graft.transform._
 import graft.validate._
 import graft.execute._
@@ -26,6 +33,19 @@ import graft.execute._
   *
   * `environments` filters stages like Arc: a stage with a non-empty list runs
   * only when the active environment is in it.
+  *
+  * A stage's keys are declared once, by its case class: every parameter of
+  * the primary constructor is a key of the same name and type, and an absent
+  * key takes the constructor's default (a list or map key without one reads
+  * as empty; any other is required). Function-typed parameters are not keys.
+  * Besides those, every stage takes `type` and `environments`, and nothing
+  * else: an unknown key is refused with the known key nearest to it.
+  * Values convert like HOCON's typed getters: `"50"` is an integer key's 50,
+  * `"true"` a boolean's true, and numbers and booleans in a string key, list
+  * or map read as their text. A value that does not convert is refused. A
+  * null, or an empty list where the constructor has a default, reads as
+  * absent. Every error of a cell, nested `PipelineExecute` stages included,
+  * is reported together in one `IllegalArgumentException`.
   */
 object PipelineConfig {
 
@@ -59,7 +79,8 @@ object PipelineConfig {
       params: Map[String, String] = Map.empty
   ): (Seq[Stage], Seq[LifecycleHook]) = {
     val root = parseDoc(json, params)
-    (parseValue(root, environment, params), parsePlugins(root \ "plugins" \ "lifecycle", environment))
+    (parseValue(root, environment),
+      plugins(root \ "plugins" \ "lifecycle", environment, classOf[LifecycleHook], "lifecycle"))
   }
 
   /** A `%lifecycleplugin` cell: the body is the plugin list itself — either
@@ -70,13 +91,7 @@ object PipelineConfig {
       json: String,
       environment: String = "production",
       params: Map[String, String] = Map.empty
-  ): Seq[LifecycleHook] = {
-    val root = parseDoc(json, params)
-    root \ "plugins" \ "lifecycle" match {
-      case JNothing => parsePlugins(root, environment)
-      case nested   => parsePlugins(nested, environment)
-    }
-  }
+  ): Seq[LifecycleHook] = cellPlugins(json, environment, params, classOf[LifecycleHook], "lifecycle")
 
   /** A `%configplugin` cell: `plugins.config` entries (or a bare list /
     * single object) instantiating [[ConfigPlugin]] classes — reference
@@ -87,43 +102,28 @@ object PipelineConfig {
       json: String,
       environment: String = "production",
       params: Map[String, String] = Map.empty
-  ): Seq[ConfigPlugin] = {
+  ): Seq[ConfigPlugin] = cellPlugins(json, environment, params, classOf[ConfigPlugin], "config")
+
+  private def cellPlugins[T](json: String, environment: String, params: Map[String, String],
+      iface: Class[T], kind: String): Seq[T] = {
     val root = parseDoc(json, params)
-    val entries = root \ "plugins" \ "config" match {
+    plugins(root \ "plugins" \ kind match {
       case JNothing => root
       case nested   => nested
-    }
+    }, environment, iface, kind)
+  }
+
+  /** The active entries of a `plugins.<kind>` list (or single entry), instantiated. */
+  private def plugins[T](entries: JValue, environment: String, iface: Class[T], kind: String): Seq[T] =
     (entries match {
       case JArray(xs) => xs
       case o: JObject => List(o)
       case JNothing   => Nil
-      case other => throw new IllegalArgumentException(s"'plugins.config' is not a list: $other")
-    }).flatMap { jv =>
-      val o = StageFields(jv)
-      val envs = o.strList("environments")
-      if (envs.nonEmpty && !envs.contains(environment)) None
-      else Some(instantiate[ConfigPlugin](o, classOf[ConfigPlugin], "config plugin"))
-    }
-  }
+      case other => throw new IllegalArgumentException(s"'plugins.$kind' is not a list: $other")
+    }).map(fields).filter(active(_, environment)).map(instantiate(_, iface, s"$kind plugin"))
 
-  private def parsePlugins(entries: JValue, environment: String): Seq[LifecycleHook] =
-    (entries match {
-      case JArray(xs)   => xs
-      case o: JObject   => List(o)
-      case JNothing     => Nil
-      case other => throw new IllegalArgumentException(s"'plugins.lifecycle' is not a list: $other")
-    }).flatMap { jv =>
-      val o = StageFields(jv)
-      val envs = o.strList("environments")
-      if (envs.nonEmpty && !envs.contains(environment)) None
-      else Some(instantiateHook(o))
-    }
-
-  private def instantiateHook(o: StageFields): LifecycleHook =
-    instantiate[LifecycleHook](o, classOf[LifecycleHook], "lifecycle plugin")
-
-  private def instantiate[T](o: StageFields, iface: Class[T], what: String): T = {
-    val className = o.req("type")
+  private def instantiate[T](o: Map[String, JValue], iface: Class[T], what: String): T = {
+    val className = required(o, "type")
     val cls =
       try Class.forName(className)
       catch {
@@ -132,7 +132,7 @@ object PipelineConfig {
       }
     if (!iface.isAssignableFrom(cls))
       throw new IllegalArgumentException(s"$className does not implement ${iface.getName}")
-    val pluginParams = o.allStrings - "type"
+    val pluginParams = o.collect { case (k, JString(v)) if k != "type" => k -> v }
     val ctors = cls.getConstructors
     val inst = ctors.find(_.getParameterTypes.sameElements(Array(classOf[Map[_, _]])))
       .map(_.newInstance(pluginParams))
@@ -142,537 +142,235 @@ object PipelineConfig {
     inst.asInstanceOf[T]
   }
 
-  private def parseValue(
-      root: JValue,
-      environment: String,
-      params: Map[String, String]
-  ): Seq[Stage] = {
-    val stages = root \ "stages" match {
-      case JArray(xs) => xs
+  private def parseValue(root: JValue, environment: String): Seq[Stage] = {
+    val cell = new Cell(environment)
+    val stages = stageList(root match {
+      case o: JObject if o.obj.exists(_._1 == "stages") => root \ "stages" match {
+        case JArray(xs) => xs
+        case other      => throw new IllegalArgumentException(s"'stages' is not an array: $other")
+      }
       // plugins-only document: a zero-stage cell that registers lifecycle
       // plugins is valid (reference ArcInterpreter.scala:427-434)
-      case JNothing if (root \ "plugins") != JNothing => Nil
-      case JNothing   => root match {
-        case JArray(xs) => xs // bare array of stages
-        case obj: JObject => List(obj) // single stage object
-        case other => throw new IllegalArgumentException(s"config is not a stage list: $other")
-      }
-      case other => throw new IllegalArgumentException(s"'stages' is not an array: $other")
+      case o: JObject if o.obj.exists(_._1 == "plugins") => Nil
+      case obj: JObject => List(obj) // single stage object
+      case JArray(xs)   => xs // bare array of stages
+      case other => throw new IllegalArgumentException(s"config is not a stage list: $other")
+    }, cell)
+    if (cell.errors.nonEmpty) throw new IllegalArgumentException(cell.errors.mkString("\n"))
+    stages
+  }
+
+  /** The errors of one cell, gathered across its stages (nested pipelines
+    * included), and the environment its stages are filtered against.
+    */
+  private final class Cell(val environment: String) {
+    val errors = ArrayBuffer[String]()
+  }
+
+  /** The active stages of a list; a stage with errors adds them to the cell. */
+  private def stageList(values: List[JValue], cell: Cell): List[Stage] =
+    values.flatMap { jv =>
+      try {
+        val o = fields(jv)
+        if (!active(o, cell.environment)) None
+        else {
+          val tpe = required(o, "type")
+          declarations.getOrElse(tpe, throw new IllegalArgumentException(s"unknown stage type: $tpe"))
+            .build(o, cell)
+        }
+      } catch { case e: IllegalArgumentException => cell.errors += e.getMessage; None }
     }
-    stages.flatMap { jv =>
-      val obj = StageFields(jv)
-      val envs = obj.strList("environments")
-      if (envs.nonEmpty && !envs.contains(environment)) None
-      else Some(build(obj, environment, params))
+
+  /** The stage types a config may name. Each one's config keys are its
+    * primary constructor's parameters, read once per JVM (see
+    * [[declarations]]).
+    */
+  private[graft] val stageTypes: Seq[Class[_ <: Stage]] = Seq(
+    classOf[ParquetExtract], classOf[DelimitedExtract], classOf[JSONExtract], classOf[ORCExtract],
+    classOf[AvroExtract], classOf[TextExtract], classOf[BytesExtract], classOf[ImageExtract],
+    classOf[XMLExtract], classOf[RateExtract], classOf[MetadataExtract], classOf[StatisticsExtract],
+    classOf[SQLTransform], classOf[TypingTransform], classOf[DiffTransform],
+    classOf[SimilarityJoinTransform], classOf[DeduplicateTransform], classOf[DecontaminateTransform],
+    classOf[MinhashIndexLoad], classOf[SemIndexLoad], classOf[SemIndexDedupTransform],
+    classOf[SpanIndexTransform], classOf[IvfIndexLoad], classOf[IvfQueryTransform],
+    classOf[IvfRecallTransform], classOf[PqQueryTransform], classOf[HeavyHittersTransform],
+    classOf[IndexDedupTransform], classOf[SegmentDedupTransform], classOf[LineFilterTransform],
+    classOf[QuantizeTransform], classOf[RedactTransform], classOf[MediaTransform],
+    classOf[TokenizerTransform], classOf[WordCountsTransform], classOf[CompactExecute],
+    classOf[TakedownExecute], classOf[MojibakeTransform], classOf[HtmlTextTransform],
+    classOf[LangIdTransform], classOf[ClassifierTransform], classOf[OutlierTransform],
+    classOf[CmsTransform], classOf[LangModelTransform], classOf[BloomTransform],
+    classOf[HistogramTransform], classOf[ResampleTransform], classOf[SketchTransform],
+    classOf[ChunkTransform], classOf[PackingTransform], classOf[SampleTransform],
+    classOf[MetadataTransform], classOf[MetadataFilterTransform], classOf[MLTransform],
+    classOf[TensorFlowServingTransform], classOf[ParquetLoad], classOf[ORCLoad],
+    classOf[DelimitedLoad], classOf[JSONLoad], classOf[TextLoad], classOf[BucketedTableLoad],
+    classOf[ConsoleLoad], classOf[SQLValidate], classOf[MetadataValidate],
+    classOf[EqualityValidate], classOf[LogExecute], classOf[ConfigExecute], classOf[HTTPExecute],
+    classOf[PipelineExecute])
+
+  /** Keys every stage takes besides its constructor's parameters. */
+  private val sharedKeys = Set("type", "environments")
+
+  /** How a config value becomes a parameter's value. `empty` is what an
+    * absent key takes when the constructor gives it no default.
+    */
+  private final case class Reader(read: (JValue, Cell) => Any, empty: Option[Any] = None)
+
+  /** One constructor parameter. A function-typed one has no reader: it is
+    * not a config key and always takes its default.
+    */
+  private final case class Param(key: String, reader: Option[Reader], default: Option[Any])
+
+  private final class Decl(stageType: String, ctor: Constructor[_], params: Seq[Param]) {
+    private val keys = params.filter(_.reader.isDefined).map(_.key).toSet ++ sharedKeys
+
+    def build(o: Map[String, JValue], cell: Cell): Option[Stage] = {
+      val before = cell.errors.size
+      def error(msg: String): Null = { cell.errors += s"stage ${label(o)} $msg"; null }
+      (o.keySet -- keys).toSeq.sorted.foreach { k =>
+        val nearest = keys.minBy(LevenshteinDistance.getDefaultInstance.apply(k, _).intValue)
+        error(s"has unknown key '$k' for $stageType; did you mean '$nearest'?")
+      }
+      val args = params.map { p =>
+        // an empty list where the constructor has a default reads as absent
+        val given = o.get(p.key).filterNot(_ == JArray(Nil) && p.default.isDefined)
+        try p.reader.filter(_ => given.isDefined).flatMap(r => value(o, p.key)(r.read(_, cell)))
+          .orElse(p.default)
+          .orElse(p.reader.flatMap(_.empty))
+          .getOrElse(error(s"missing '${p.key}'"))
+        catch { case e: IllegalArgumentException => cell.errors += e.getMessage; null }
+      }
+      if (cell.errors.size > before) None
+      else
+        try Some(ctor.newInstance(args.map(_.asInstanceOf[AnyRef]): _*).asInstanceOf[Stage])
+        catch { case e: InvocationTargetException => throw e.getCause }
     }
   }
 
-  private def build(o: StageFields, environment: String, params: Map[String, String]): Stage = o.req("type") match {
-    case "ParquetExtract" =>
-      ParquetExtract(o.req("name"), o.req("inputURI"), o.req("outputView"),
-        schema = None, persist = o.bool("persist"), numPartitions = o.intOpt("numPartitions"),
-        partitionBy = o.strList("partitionBy"), basePath = o.strOpt("basePath"),
-        watermark = o.watermark, options = o.strMap("options"))
-    case "DelimitedExtract" =>
-      DelimitedExtract(o.req("name"), o.req("inputURI"), o.req("outputView"),
-        delimiter = o.str("delimiter", ","), header = o.bool("header", default = true),
-        quote = o.str("quote", "\""), multiLine = o.bool("multiLine"),
-        persist = o.bool("persist"), numPartitions = o.intOpt("numPartitions"),
-        options = o.strMap("options"))
-    case "JSONExtract" =>
-      JSONExtract(o.req("name"), o.req("inputURI"), o.req("outputView"),
-        multiLine = o.bool("multiLine", default = true), persist = o.bool("persist"),
-        numPartitions = o.intOpt("numPartitions"), options = o.strMap("options"))
-    case "ORCExtract" =>
-      ORCExtract(o.req("name"), o.req("inputURI"), o.req("outputView"),
-        persist = o.bool("persist"), numPartitions = o.intOpt("numPartitions"))
-    case "AvroExtract" =>
-      AvroExtract(o.req("name"), o.req("inputURI"), o.req("outputView"),
-        persist = o.bool("persist"))
-    case "TextExtract" =>
-      TextExtract(o.req("name"), o.req("inputURI"), o.req("outputView"),
-        multiLine = o.bool("multiLine"), persist = o.bool("persist"))
-    case "BytesExtract" =>
-      BytesExtract(o.req("name"), o.req("inputURI"), o.req("outputView"),
-        persist = o.bool("persist"))
-    case "ImageExtract" =>
-      ImageExtract(o.req("name"), o.req("inputURI"), o.req("outputView"),
-        persist = o.bool("persist"))
-    case "XMLExtract" =>
-      XMLExtract(o.req("name"), o.req("inputURI"), o.req("outputView"),
-        rowTag = o.str("rowTag", "row"), persist = o.bool("persist"),
-        numPartitions = o.intOpt("numPartitions"))
-    case "RateExtract" =>
-      RateExtract(o.req("name"), o.req("outputView"),
-        rowsPerSecond = o.intOpt("rowsPerSecond").getOrElse(1).toLong,
-        rampUpTime = o.str("rampUpTime", "0s"))
-    case "MetadataExtract" =>
-      MetadataExtract(o.req("name"), o.req("inputView"), o.req("outputView"),
-        persist = o.bool("persist"))
-    case "StatisticsExtract" =>
-      StatisticsExtract(o.req("name"), o.req("inputView"), o.req("outputView"),
-        approxDistinct = o.bool("approxDistinct"), persist = o.bool("persist"))
-    case "SQLTransform" =>
-      SQLTransform(o.req("name"), o.req("sql"), o.req("outputView"),
-        sqlParams = o.strMap("sqlParams"), persist = o.bool("persist"),
-        numPartitions = o.intOpt("numPartitions"), partitionBy = o.strList("partitionBy"))
-    case "TypingTransform" =>
-      TypingTransform(o.req("name"),
-        schema = graft.schema.MetadataSchema.fromJson(
-          JsonMethods.compact(JsonMethods.render(o.jv \ "schema"))),
-        inputView = o.req("inputView"), outputView = o.req("outputView"),
-        failMode = o.str("failMode", "permissive"), persist = o.bool("persist"))
-    case "DiffTransform" =>
-      DiffTransform(o.req("name"), o.req("inputLeftView"), o.req("inputRightView"),
-        outputIntersectionView = o.strOpt("outputIntersectionView"),
-        outputLeftView = o.strOpt("outputLeftView"),
-        outputRightView = o.strOpt("outputRightView"), persist = o.bool("persist"))
-    case "SimilarityJoinTransform" =>
-      SimilarityJoinTransform(o.req("name"), o.req("leftView"), o.req("rightView"),
-        leftFields = o.strList("leftFields"), rightFields = o.strList("rightFields"),
-        outputView = o.req("outputView"),
-        threshold = o.dbl("threshold", 0.75),
-        shingleLength = o.intOpt("shingleLength").getOrElse(3),
-        numHashTables = o.intOpt("numHashTables").getOrElse(5),
-        caseSensitive = o.bool("caseSensitive"))
-    case "DeduplicateTransform" =>
-      DeduplicateTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        idField = o.req("idField"), textField = o.str("textField", ""),
-        method = o.str("method", "exact"), keyFields = o.strList("keyFields"),
-        qualityField = o.str("qualityField", ""),
-        threshold = o.dbl("threshold", 0.8),
-        shingleLength = o.intOpt("shingleLength").getOrElse(3),
-        maxDistance = o.intOpt("maxDistance").getOrElse(3),
-        vectorField = o.str("vectorField", ""),
-        numClusters = o.intOpt("numClusters").getOrElse(16),
-        urlField = o.str("urlField", ""),
-        hashMode = o.str("hashMode", "xxhash64"),
-        persist = o.bool("persist"))
-    case "DecontaminateTransform" =>
-      DecontaminateTransform(o.req("name"), o.req("inputView"), o.req("evalView"),
-        o.req("outputView"), idField = o.req("idField"), textField = o.req("textField"),
-        evalTextField = o.str("evalTextField", ""),
-        ngram = o.intOpt("ngram").getOrElse(8),
-        action = o.str("action", "filter"),
-        bloomBits = o.intOpt("bloomBits").map(_.toLong).getOrElse(0L),
-        persist = o.bool("persist"))
-    case "MinhashIndexLoad" =>
-      MinhashIndexLoad(o.req("name"), o.req("inputView"), o.req("outputURI"),
-        idField = o.req("idField"), textField = o.req("textField"),
-        shingleLength = o.intOpt("shingleLength").getOrElse(3),
-        bands = o.intOpt("bands").getOrElse(8),
-        rowsPerBand = o.intOpt("rowsPerBand").getOrElse(4),
-        maxBucketSize = o.intOpt("maxBucketSize").getOrElse(256))
-    case "SemIndexLoad" =>
-      SemIndexLoad(o.req("name"), o.req("inputView"), o.req("outputURI"),
-        idField = o.req("idField"), vectorField = o.req("vectorField"),
-        numClusters = o.intOpt("numClusters").getOrElse(16),
-        threshold = o.dbl("threshold", 0.95))
-    case "SemIndexDedupTransform" =>
-      SemIndexDedupTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        indexURI = o.req("indexURI"), idField = o.req("idField"),
-        vectorField = o.req("vectorField"),
-        action = o.str("action", "filter"),
-        persist = o.bool("persist"))
-    case "SpanIndexTransform" =>
-      SpanIndexTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        indexURI = o.req("indexURI"), idField = o.req("idField"),
-        textField = o.req("textField"),
-        action = o.str("action", "write"),
-        shingleLength = o.intOpt("shingleLength").getOrElse(8),
-        hashMode = o.str("hashMode", "xxhash64"),
-        numBuckets = o.intOpt("numBuckets").getOrElse(64),
-        persist = o.bool("persist"))
-    case "IvfIndexLoad" =>
-      IvfIndexLoad(o.req("name"), o.req("inputView"), o.req("outputURI"),
-        idField = o.req("idField"), vectorField = o.req("vectorField"),
-        numLists = o.intOpt("numLists").getOrElse(16),
-        action = o.str("action", "write"),
-        seed = o.intOpt("seed").map(_.toLong).getOrElse(42L),
-        pqSubspaces = o.intOpt("pqSubspaces").getOrElse(0),
-        pqCodesPerSub = o.intOpt("pqCodesPerSub").getOrElse(16),
-        pqResidual = o.bool("pqResidual"),
-        replace = o.bool("replace"))
-    case "IvfQueryTransform" =>
-      IvfQueryTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        indexURI = o.req("indexURI"), idField = o.req("idField"),
-        vectorField = o.req("vectorField"),
-        k = o.intOpt("k").getOrElse(10),
-        numProbes = o.intOpt("numProbes").getOrElse(2),
-        quantized = o.bool("quantized"),
-        shortlistFactor = o.intOpt("shortlistFactor").getOrElse(4),
-        pq = o.bool("pq"),
-        persist = o.bool("persist"))
-    case "IvfRecallTransform" =>
-      IvfRecallTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        indexURI = o.req("indexURI"), idField = o.req("idField"),
-        vectorField = o.req("vectorField"),
-        k = o.intOpt("k").getOrElse(10),
-        numProbes = o.intOpt("numProbes").getOrElse(2),
-        quantized = o.bool("quantized"),
-        shortlistFactor = o.intOpt("shortlistFactor").getOrElse(4),
-        pq = o.bool("pq"),
-        persist = o.bool("persist"))
-    case "PqQueryTransform" =>
-      PqQueryTransform(o.req("name"), o.req("inputView"), o.req("corpusView"),
-        o.req("outputView"), idField = o.req("idField"),
-        vectorField = o.req("vectorField"),
-        dim = o.intOpt("dim").getOrElse(
-          throw new IllegalArgumentException("PqQueryTransform: dim is required")),
-        k = o.intOpt("k").getOrElse(10),
-        numSubspaces = o.intOpt("numSubspaces").getOrElse(8),
-        numCodes = o.intOpt("numCodes").getOrElse(16),
-        shortlistFactor = o.intOpt("shortlistFactor").getOrElse(4),
-        seed = o.intOpt("seed").map(_.toLong).getOrElse(42L),
-        persist = o.bool("persist"))
-    case "HeavyHittersTransform" =>
-      HeavyHittersTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        keyField = o.str("keyField", ""),
-        cap = o.intOpt("cap").getOrElse(64),
-        action = o.str("action", "estimate"),
-        persist = o.bool("persist"))
-    case "IndexDedupTransform" =>
-      IndexDedupTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        indexURI = o.req("indexURI"), idField = o.req("idField"),
-        textField = o.req("textField"), threshold = o.dbl("threshold", 0.8),
-        action = o.str("action", "filter"),
-        maxCandidatesPerDoc = o.intOpt("maxCandidatesPerDoc").getOrElse(64),
-        persist = o.bool("persist"))
-    case "SegmentDedupTransform" =>
-      SegmentDedupTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        idField = o.req("idField"), textField = o.req("textField"),
-        segmentWords = o.intOpt("segmentWords").getOrElse(8),
-        action = o.str("action", "stats"),
-        maxSharedFraction = o.dbl("maxSharedFraction", 0.5),
-        maxDocFreq = o.intOpt("maxDocFreq").getOrElse(1).toLong,
-        minLength = o.intOpt("minLength").getOrElse(32),
-        maskBits = o.intOpt("maskBits").getOrElse(6),
-        maxLength = o.intOpt("maxLength").getOrElse(512),
-        persist = o.bool("persist"))
-    case "LineFilterTransform" =>
-      LineFilterTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        idField = o.req("idField"), textField = o.req("textField"),
-        minWords = o.intOpt("minWords").getOrElse(3),
-        minLines = o.intOpt("minLines").getOrElse(1),
-        action = o.str("action", "report"), persist = o.bool("persist"))
-    case "QuantizeTransform" =>
-      QuantizeTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        idField = o.req("idField"), vectorField = o.req("vectorField"),
-        action = o.str("action", "codes"), persist = o.bool("persist"))
-    case "RedactTransform" =>
-      RedactTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        textField = o.req("textField"), counts = o.bool("counts"),
-        persist = o.bool("persist"))
-    case "MediaTransform" =>
-      MediaTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        binaryField = o.req("binaryField"), action = o.str("action", "decode"),
-        targetWidth = o.intOpt("targetWidth").getOrElse(224),
-        targetHeight = o.intOpt("targetHeight").getOrElse(224),
-        numFrames = o.intOpt("numFrames").getOrElse(8),
-        targetSampleRate = o.intOpt("targetSampleRate").getOrElse(16000),
-        persist = o.bool("persist"))
-    case "TokenizerTransform" =>
-      TokenizerTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        textField = o.req("textField"), mode = o.str("mode", "train"),
-        algo = o.str("algo", "bpe"),
-        numMerges = o.intOpt("numMerges").getOrElse(200),
-        maxWords = o.intOpt("maxWords").getOrElse(50000),
-        vocabSize = o.intOpt("vocabSize").getOrElse(8000),
-        maxPieceLen = o.intOpt("maxPieceLen").getOrElse(8),
-        emIters = o.intOpt("emIters").getOrElse(3),
-        mergesView = o.str("mergesView", ""),
-        vocabView = o.str("vocabView", ""),
-        byteFallback = o.bool("byteFallback"),
-        idsField = o.str("idsField", "ids"),
-        groupField = o.str("groupField", ""),
-        maxInputChars = o.intOpt("maxInputChars").getOrElse(100),
-        persist = o.bool("persist"))
-    case "WordCountsTransform" =>
-      WordCountsTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        countsURI = o.req("countsURI"),
-        textField = o.str("textField", "text"),
-        action = o.str("action", "write"),
-        corpusView = o.str("corpusView", ""),
-        idField = o.str("idField", "id"),
-        persist = o.bool("persist"))
-    case "CompactExecute" =>
-      CompactExecute(o.req("name"), o.req("outputView"),
-        minhashURI = o.str("minhashURI", ""),
-        spanURI = o.str("spanURI", ""),
-        semURI = o.str("semURI", ""),
-        ivfURI = o.str("ivfURI", ""),
-        countsURI = o.str("countsURI", ""),
-        modelURI = o.str("modelURI", ""),
-        auditURI = o.str("auditURI", ""),
-        action = o.str("action", "compact"),
-        maxFilesPerPartition = o.intOpt("maxFilesPerPartition").getOrElse(8),
-        recallK = o.intOpt("recallK").getOrElse(10),
-        recallNprobe = o.intOpt("recallNprobe").getOrElse(2),
-        recallSample = o.intOpt("recallSample").getOrElse(64),
-        recallFloor = o.dbl("recallFloor", 0.0),
-        persist = o.bool("persist"))
-    case "TakedownExecute" =>
-      TakedownExecute(o.req("name"), o.req("inputView"), o.req("outputView"),
-        idField = o.req("idField"),
-        minhashURI = o.str("minhashURI", ""),
-        spanURI = o.str("spanURI", ""),
-        semURI = o.str("semURI", ""),
-        ivfURI = o.str("ivfURI", ""),
-        countsURI = o.str("countsURI", ""),
-        modelURI = o.str("modelURI", ""),
-        corpusView = o.str("corpusView", ""),
-        textField = o.str("textField", "text"),
-        labelField = o.str("labelField", "label"),
-        auditURI = o.str("auditURI", ""),
-        requestId = o.str("requestId", ""),
-        resume = o.bool("resume"),
-        action = o.str("action", "delete"),
-        persist = o.bool("persist"))
-    case "MojibakeTransform" =>
-      MojibakeTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        textField = o.req("textField"),
-        outputField = o.str("outputField", "text_fixed"),
-        maxPasses = o.intOpt("maxPasses").getOrElse(3),
-        mode = o.str("mode", "document"),
-        persist = o.bool("persist"))
-    case "HtmlTextTransform" =>
-      HtmlTextTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        htmlField = o.req("htmlField"),
-        outputField = o.str("outputField", "text_extracted"),
-        persist = o.bool("persist"))
-    case "LangIdTransform" =>
-      LangIdTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        textField = o.req("textField"), method = o.str("method", "ngram"),
-        outputField = o.str("outputField", "lang_pred"),
-        persist = o.bool("persist"))
-    case "ClassifierTransform" =>
-      ClassifierTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        textField = o.req("textField"), mode = o.str("mode", "train"),
-        labelField = o.str("labelField", "label"),
-        idField = o.str("idField", "id"),
-        modelView = o.str("modelView", ""),
-        corpusView = o.str("corpusView", ""),
-        modelURI = o.str("modelURI", ""),
-        maxVocab = o.intOpt("maxVocab").getOrElse(0),
-        minCount = o.intOpt("minCount").map(_.toLong).getOrElse(1L),
-        persist = o.bool("persist"))
-    case "OutlierTransform" =>
-      OutlierTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        valueField = o.req("valueField"), groupFields = o.strList("groupFields"),
-        mode = o.str("mode", "flag"), k = o.dbl("k", 3.5),
-        quantiles = {
-          val qs = o.dblList("quantiles")
-          if (qs.nonEmpty) qs else Seq(0.5)
-        },
-        persist = o.bool("persist"))
-    case "CmsTransform" =>
-      CmsTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        keyField = o.str("keyField", ""), weightField = o.str("weightField", ""),
-        sketchView = o.str("sketchView", ""), mode = o.str("mode", "build"),
-        depth = o.intOpt("depth").getOrElse(4), width = o.intOpt("width").getOrElse(1024),
-        persist = o.bool("persist"))
-    case "LangModelTransform" =>
-      LangModelTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        textField = o.str("textField", "text"), idField = o.str("idField", ""),
-        bigramView = o.str("bigramView", ""), unigramView = o.str("unigramView", ""),
-        mode = o.str("mode", "score"),
-        vocabSize = o.intOpt("vocabSize").map(_.toLong).getOrElse(0L),
-        alpha = o.dbl("alpha", 1.0),
-        rareMax = o.intOpt("rareMax").map(_.toLong).getOrElse(2L),
-        persist = o.bool("persist"))
-    case "BloomTransform" =>
-      BloomTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        keyField = o.str("keyField", ""), sketchView = o.str("sketchView", ""),
-        filterView = o.str("filterView", ""),
-        filterKeyField = o.str("filterKeyField", ""),
-        mode = o.str("mode", "build"),
-        bits = o.intOpt("bits").map(_.toLong).getOrElse(1L << 22),
-        hashes = o.intOpt("hashes").getOrElse(5),
-        persist = o.bool("persist"))
-    case "HistogramTransform" =>
-      HistogramTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        valueField = o.str("valueField", ""), mode = o.str("mode", "segment"),
-        lo = o.dbl("lo", 0.0), hi = o.dbl("hi", 1.0),
-        bins = o.intOpt("bins").getOrElse(64),
-        quantiles = {
-          val qs = o.dblList("quantiles")
-          if (qs.isEmpty) Seq(0.5, 0.9, 0.99) else qs
-        },
-        groupFields = o.strList("groupFields"),
-        compareView = o.str("compareView", ""),
-        persist = o.bool("persist"))
-    case "ResampleTransform" =>
-      ResampleTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        keyField = o.req("keyField"), timeField = o.req("timeField"),
-        valueField = o.req("valueField"),
-        step = o.str("step", "1 hour"), persist = o.bool("persist"))
-    case "SketchTransform" =>
-      SketchTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        groupFields = o.strList("groupFields"), sketchFields = o.strList("sketchFields"),
-        mode = o.str("mode", "estimate"),
-        lgK = o.intOpt("lgK").getOrElse(12), persist = o.bool("persist"))
-    case "ChunkTransform" =>
-      ChunkTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        textField = o.req("textField"),
-        chunkSize = o.intOpt("chunkSize").getOrElse(2048),
-        overlap = o.intOpt("overlap").getOrElse(0),
-        method = o.str("method", "tokens"),
-        minLength = o.intOpt("minLength").getOrElse(64),
-        maskBits = o.intOpt("maskBits").getOrElse(8),
-        maxLength = o.intOpt("maxLength").getOrElse(1024),
-        persist = o.bool("persist"))
-    case "PackingTransform" =>
-      PackingTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        shardField = o.req("shardField"),
-        orderField = o.req("orderField"),
-        method = o.str("method", "greedy"),
-        tokensField = o.str("tokensField", "n_tokens"),
-        maxTokens = o.intOpt("maxTokens").map(_.toLong).getOrElse(2048L),
-        docIdField = o.str("docIdField", "doc_id"),
-        idsField = o.str("idsField", "ids"),
-        contextLength = o.intOpt("contextLength").getOrElse(2048),
-        bosId = o.intOpt("bosId").map(_.toLong).getOrElse(1L),
-        eosId = o.intOpt("eosId").map(_.toLong).getOrElse(2L),
-        persist = o.bool("persist"))
-    case "SampleTransform" =>
-      SampleTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        method = o.str("method", "hash"), keyField = o.req("keyField"),
-        rate = o.dbl("rate", 0.1), weightField = o.str("weightField", ""),
-        strataFields = o.strList("strataFields"), fractions = o.dblMap("fractions"),
-        cap = o.intOpt("cap").getOrElse(0), salt = o.str("salt", ""),
-        corpusView = o.str("corpusView", ""),
-        carryFields = o.strList("carryFields"),
-        vectorField = o.str("vectorField", ""),
-        persist = o.bool("persist"))
-    case "MetadataTransform" =>
-      MetadataTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        fieldMetadata = (o.jv \ "fieldMetadata") match {
-          case JObject(kvs) => kvs.map { case (k, v) =>
-            k -> StageFields(v).allStrings
-          }.toMap
-          case _ => Map.empty
-        }, persist = o.bool("persist"))
-    case "MetadataFilterTransform" =>
-      MetadataFilterTransform(o.req("name"), o.req("inputView"), o.req("outputView"),
-        sql = o.req("sql"), sqlParams = o.strMap("sqlParams"), persist = o.bool("persist"))
-    case "MLTransform" =>
-      MLTransform(o.req("name"), o.req("inputURI"), o.req("inputView"), o.req("outputView"))
-    case "TensorFlowServingTransform" =>
-      TensorFlowServingTransform(o.req("name"), o.req("inputURI"), o.req("inputView"),
-        o.req("outputView"), inputField = o.str("inputField", "value"),
-        signatureName = o.str("signatureName", "serving_default"),
-        batchSize = o.intOpt("batchSize").getOrElse(100),
-        responseType = o.str("responseType", "double"), persist = o.bool("persist"))
-    case "ParquetLoad" =>
-      ParquetLoad(o.req("name"), o.req("inputView"), o.req("outputURI"),
-        saveMode = o.str("saveMode", "Overwrite"), numPartitions = o.intOpt("numPartitions"),
-        partitionBy = o.strList("partitionBy"), clusterBy = o.strList("clusterBy"),
-        zOrderBy = o.strList("zOrderBy"),
-        zOrderSampleFraction = o.dbl("zOrderSampleFraction", 1.0),
-        dynamicPartitionOverwrite = o.bool("dynamicPartitionOverwrite"))
-    case "ORCLoad" =>
-      ORCLoad(o.req("name"), o.req("inputView"), o.req("outputURI"),
-        saveMode = o.str("saveMode", "Overwrite"), numPartitions = o.intOpt("numPartitions"),
-        partitionBy = o.strList("partitionBy"), clusterBy = o.strList("clusterBy"),
-        zOrderBy = o.strList("zOrderBy"),
-        zOrderSampleFraction = o.dbl("zOrderSampleFraction", 1.0))
-    case "DelimitedLoad" =>
-      DelimitedLoad(o.req("name"), o.req("inputView"), o.req("outputURI"),
-        delimiter = o.str("delimiter", ","), header = o.bool("header", default = true),
-        saveMode = o.str("saveMode", "Overwrite"), numPartitions = o.intOpt("numPartitions"),
-        partitionBy = o.strList("partitionBy"))
-    case "JSONLoad" =>
-      JSONLoad(o.req("name"), o.req("inputView"), o.req("outputURI"),
-        saveMode = o.str("saveMode", "Overwrite"), numPartitions = o.intOpt("numPartitions"),
-        partitionBy = o.strList("partitionBy"))
-    case "TextLoad" =>
-      TextLoad(o.req("name"), o.req("inputView"), o.req("outputURI"),
-        saveMode = o.str("saveMode", "Overwrite"), numPartitions = o.intOpt("numPartitions"))
-    case "BucketedTableLoad" =>
-      BucketedTableLoad(o.req("name"), o.req("inputView"), table = o.req("table"),
-        bucketByFields = o.strList("bucketByFields"),
-        numBuckets = o.intOpt("numBuckets").getOrElse(32),
-        sortByFields = o.strList("sortByFields"),
-        format = o.str("format", "parquet"))
-    case "ConsoleLoad" =>
-      ConsoleLoad(o.req("name"), o.req("inputView"), o.str("outputMode", "append"))
-    case "SQLValidate" =>
-      SQLValidate(o.req("name"), o.req("sql"), o.strMap("sqlParams"))
-    case "MetadataValidate" =>
-      MetadataValidate(o.req("name"), o.req("inputView"), o.req("sql"), o.strMap("sqlParams"))
-    case "EqualityValidate" =>
-      EqualityValidate(o.req("name"), o.req("leftView"), o.req("rightView"))
-    case "LogExecute" =>
-      LogExecute(o.req("name"), o.req("sql"), o.strMap("sqlParams"))
-    case "ConfigExecute" =>
-      ConfigExecute(o.req("name"), o.req("sql"), o.strMap("sqlParams"))
-    case "HTTPExecute" =>
-      HTTPExecute(o.req("name"), o.req("uri"), payload = o.str("payload", ""),
-        headers = o.strMap("headers"),
-        validStatusCodes = {
-          val vs = (o.jv \ "validStatusCodes") match {
-            case JArray(xs) => xs.collect { case JInt(i) => i.toInt }
-            case _          => Nil
-          }
-          if (vs.nonEmpty) vs else Seq(200, 201, 202)
-        })
-    case "PipelineExecute" =>
-      // The caller's environment/params thread through: a nested pipeline's
-      // `environments` lists must filter against the SAME active environment
-      // as the outer one (round-2 finding: nested stages silently filtered
-      // against the default).
-      PipelineExecute(o.req("name"), parseValue(o.jv \ "stages", environment, params))
-    case other =>
-      throw new IllegalArgumentException(s"unknown stage type: $other")
+  /** Each stage type's declaration, read from its case class: the primary
+    * constructor's parameter names and types (Scala reflection) and the
+    * values of the companion's `apply$default$N` methods. A lazy val, so
+    * the one build per JVM happens on the first parse and concurrent first
+    * parses wait for it.
+    */
+  private lazy val declarations: Map[String, Decl] = {
+    val mirror = runtimeMirror(getClass.getClassLoader)
+    stageTypes.map { cls =>
+      val ctorParams = mirror.classSymbol(cls).primaryConstructor.asMethod.paramLists.head
+      val companion = Class.forName(cls.getName + "$").getField("MODULE$").get(null)
+      val params = ctorParams.zipWithIndex.map { case (p, i) =>
+        val t = p.typeSignature
+        val reader =
+          if (t.typeSymbol.fullName.startsWith("scala.Function")) None
+          else Some(readers.collectFirst { case (rt, r) if t =:= rt => r }.getOrElse(
+            throw new IllegalStateException(s"${cls.getSimpleName}.${p.name}: no config reader for $t")))
+        val default = companion.getClass.getMethods.find(_.getName == s"apply$$default$$${i + 1}")
+          .map(_.invoke(companion))
+        Param(p.name.decodedName.toString, reader, default)
+      }
+      val ctor = cls.getConstructors.find(_.getParameterCount == params.size).get
+      cls.getSimpleName -> new Decl(cls.getSimpleName, ctor, params)
+    }.toMap
   }
 
-  /** Typed field access over one stage's JSON object. */
-  final case class StageFields(jv: JValue) {
-    private val obj: Map[String, JValue] = jv match {
-      case JObject(kvs) => kvs.toMap
-      case other        => throw new IllegalArgumentException(s"stage is not an object: $other")
-    }
-    def req(k: String): String =
-      strOpt(k).getOrElse(throw new IllegalArgumentException(
-        s"stage ${obj.get("name").collect { case JString(s) => s }.getOrElse("?")} missing '$k'"))
-    def strOpt(k: String): Option[String] = obj.get(k).collect {
-      case JString(s) => s
-      case JInt(i)    => i.toString
-      case JBool(b)   => b.toString
-      case JDouble(d) => d.toString
-    }
-    def str(k: String, default: String): String = strOpt(k).getOrElse(default)
-    def bool(k: String, default: Boolean = false): Boolean =
-      obj.get(k).collect { case JBool(b) => b }.getOrElse(default)
-    def dbl(k: String, default: Double): Double = obj.get(k).collect {
-      case JDouble(d) => d
-      case JInt(i)    => i.toDouble
-    }.getOrElse(default)
-    def intOpt(k: String): Option[Int] = obj.get(k).collect { case JInt(i) => i.toInt }
-    def strList(k: String): Seq[String] = obj.get(k).collect {
-      case JArray(xs) => xs.collect { case JString(s) => s }
-    }.getOrElse(Nil)
-    def dblList(k: String): Seq[Double] = obj.get(k).collect {
-      case JArray(xs) => xs.collect {
-        case JDouble(d) => d
-        case JInt(i)    => i.toDouble
+  /** The reader of each parameter type a stage constructor uses. */
+  private lazy val readers: Seq[(Type, Reader)] = {
+    def plain(f: JValue => Any) = Reader((v, _) => f(v))
+    def list(f: JValue => Any) = Reader((v, _) => listOf(f)(v), Some(Nil))
+    def map(f: JValue => Any) = Reader((v, _) => mapOf(f)(v), Some(Map.empty))
+    def schema(v: JValue) = MetadataSchema.fromJson(JsonMethods.compact(JsonMethods.render(v)))
+    val option = typeOf[Option[Any]].typeConstructor
+    Seq[(Type, JValue => Any)](typeOf[String] -> text, typeOf[Int] -> int, typeOf[Long] -> long,
+      typeOf[Double] -> double, typeOf[Boolean] -> bool).flatMap { case (t, f) =>
+      Seq(t -> plain(f), appliedType(option, t) -> plain(v => Some(f(v))))
+    } ++ Seq(
+      typeOf[Seq[String]] -> list(text),
+      typeOf[Seq[Double]] -> list(double),
+      typeOf[Map[String, String]] -> map(text),
+      typeOf[Map[String, Double]] -> map(double),
+      // keys whose values are not scalars
+      typeOf[Seq[Int]] -> list(int),
+      typeOf[Map[String, Map[String, String]]] -> map(mapOf(text)),
+      typeOf[Seq[FieldSpec]] -> plain(schema),
+      typeOf[Option[StructType]] -> plain(v => Some(StructType(schema(v).map(_.structField)))),
+      typeOf[Option[Watermark]] -> plain { v =>
+        val w = fields(v)
+        Some(Watermark(required(w, "eventTime"), required(w, "delayThreshold")))
+      },
+      // a nested pipeline's stages filter against the same active environment
+      typeOf[Seq[Stage]] -> Reader((v, cell) => stageList(listOf(identity)(v).toList, cell)))
+  }
+
+  private def bad(v: JValue, expected: String) = new IllegalArgumentException(
+    s"expected $expected, got ${JsonMethods.compact(JsonMethods.render(v))}")
+
+  private def text(v: JValue): String = v match {
+    case JString(s) => s
+    case JInt(i)    => i.toString
+    case JDouble(d) => d.toString
+    case JBool(b)   => b.toString
+    case other      => throw bad(other, "a string")
+  }
+
+  private def number(v: JValue): Option[BigDecimal] = v match {
+    case JInt(i)    => Some(BigDecimal(i))
+    case JDouble(d) => Some(BigDecimal(d))
+    case JString(s) => Try(BigDecimal(s.trim)).toOption
+    case _          => None
+  }
+
+  private def int(v: JValue): Int =
+    number(v).filter(_.isValidInt).getOrElse(throw bad(v, "an integer")).toInt
+
+  private def long(v: JValue): Long =
+    number(v).filter(_.isValidLong).getOrElse(throw bad(v, "an integer")).toLong
+
+  private def double(v: JValue): Double = number(v).getOrElse(throw bad(v, "a number")).toDouble
+
+  private def bool(v: JValue): Boolean = v match {
+    case JBool(b)                                       => b
+    case JString("true") | JString("yes") | JString("on")  => true
+    case JString("false") | JString("no") | JString("off") => false
+    case other => throw bad(other, "a boolean")
+  }
+
+  private def listOf[T](f: JValue => T)(v: JValue): Seq[T] = v match {
+    case JArray(xs) => xs.map(f)
+    case other      => throw bad(other, "a list")
+  }
+
+  private def mapOf[T](f: JValue => T)(v: JValue): Map[String, T] = v match {
+    case JObject(kvs) => kvs.map { case (k, x) => k -> f(x) }.toMap
+    case other        => throw bad(other, "an object")
+  }
+
+  private def fields(jv: JValue): Map[String, JValue] = jv match {
+    case JObject(kvs) => kvs.toMap
+    case other        => throw new IllegalArgumentException(s"stage is not an object: $other")
+  }
+
+  private def label(o: Map[String, JValue]): String =
+    o.get("name").collect { case JString(s) => s }.getOrElse("?")
+
+  /** Key `k`'s value read by `f`; None when absent or null. */
+  private def value[T](o: Map[String, JValue], k: String)(f: JValue => T): Option[T] =
+    o.get(k).filter(_ != JNull).map { v =>
+      try f(v)
+      catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"stage ${label(o)} key '$k': ${e.getMessage}")
       }
-    }.getOrElse(Nil)
-    def strMap(k: String): Map[String, String] = obj.get(k).collect {
-      case JObject(kvs) => kvs.collect { case (key, JString(v)) => key -> v }.toMap
-    }.getOrElse(Map.empty)
-    def dblMap(k: String): Map[String, Double] = obj.get(k).collect {
-      case JObject(kvs) => kvs.collect {
-        case (key, JDouble(v)) => key -> v
-        case (key, JInt(v))    => key -> v.toDouble
-        case (key, JString(v)) => key -> v.toDouble
-      }.toMap
-    }.getOrElse(Map.empty)
-    def allStrings: Map[String, String] = obj.collect { case (k, JString(v)) => k -> v }
-    def watermark: Option[graft.extract.Watermark] = obj.get("watermark").collect {
-      case w: JObject =>
-        val f = StageFields(w)
-        graft.extract.Watermark(f.req("eventTime"), f.req("delayThreshold"))
     }
+
+  private def required(o: Map[String, JValue], k: String): String =
+    value(o, k)(text).getOrElse(throw new IllegalArgumentException(s"stage ${label(o)} missing '$k'"))
+
+  /** Whether an entry's `environments` list (empty: every environment)
+    * names the active environment.
+    */
+  private def active(o: Map[String, JValue], environment: String): Boolean = {
+    val envs = value(o, "environments")(listOf(text)).getOrElse(Nil)
+    envs.isEmpty || envs.contains(environment)
   }
 }

@@ -402,7 +402,7 @@ final case class HTTPTransform(
   */
 final case class TensorFlowServingTransform(
     name: String,
-    uri: String,
+    inputURI: String,
     inputView: String,
     outputView: String,
     inputField: String = "value",
@@ -425,7 +425,7 @@ final case class TensorFlowServingTransform(
     val src = ctx.view(inputView)
     val fieldIdx = src.columns.indexOf(inputField)
     require(fieldIdx >= 0, s"TensorFlowServingTransform: input lacks column $inputField")
-    val endpoint = uri
+    val endpoint = inputURI
     val bs = batchSize
     val t = transport
     val rType = responseType

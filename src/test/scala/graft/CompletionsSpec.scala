@@ -47,6 +47,13 @@ class CompletionsSpec extends SparkSpec {
       assert(labels.contains(m), s"missing completion for $m")
   }
 
+  test("every stage snippet parses under the strict config parser") {
+    val snippets = Completions.static.map(_.snippet)
+      .filter(s => s.startsWith("{type") || s.startsWith("{stages"))
+    assert(snippets.size == 53)
+    snippets.foreach(s => assert(graft.core.PipelineConfig.parse(s).size == 1, s))
+  }
+
   test("interpreter magics added for metadatafilter/metadatavalidate/configexecute work") {
     val interp = new graft.repl.Interpreter(spark)
     interp.execute(s"%sql outputView=mf_src\nSELECT * FROM parquet.`${sf()}/customer.parquet`")

@@ -2052,4 +2052,72 @@ class ConfigSpec extends SparkSpec {
     assert(r.success, r.text)
     assert(r.df.get.count() == 5)
   }
+
+  test("an unknown key is refused with the stage, the key and the nearest known key") {
+    val e = intercept[IllegalArgumentException] {
+      PipelineConfig.parse("""{type = IvfQueryTransform, name = probe, inputView = q,
+        outputView = hits, indexURI = "/x", idField = id, vectorField = v, numProbs = 8}""")
+    }
+    assert(e.getMessage.contains("probe") && e.getMessage.contains("'numProbs'") &&
+      e.getMessage.contains("'numProbes'"), e.getMessage)
+  }
+
+  test("quoted numbers and booleans, and scalars in lists and maps, convert like HOCON's typed getters") {
+    val Seq(ivf: graft.transform.IvfQueryTransform, dedup: graft.transform.DeduplicateTransform,
+        sql: graft.transform.SQLTransform) = PipelineConfig.parse("""{stages: [
+      {type = IvfQueryTransform, name = probe, inputView = q, outputView = hits,
+       indexURI = "/x", idField = id, vectorField = v, k = "50"}
+      {type = DeduplicateTransform, name = d, inputView = a, outputView = b, idField = id,
+       textField = text, method = "minhash", threshold = "0.95"}
+      {type = SQLTransform, name = s, sql = "SELECT 1", outputView = o, persist = "true",
+       sqlParams = {x = 5, y = true, z = "w"}, partitionBy = [a, 5]}
+    ]}""")
+    assert(ivf.k == 50)
+    assert(dedup.threshold == 0.95)
+    assert(sql.persist)
+    assert(sql.sqlParams == Map("x" -> "5", "y" -> "true", "z" -> "w"))
+    assert(sql.partitionBy == Seq("a", "5"))
+  }
+
+  test("a value that does not convert is refused, naming the key") {
+    for (bad <- Seq("2.5", "\"abc\"", "[1]")) {
+      val e = intercept[IllegalArgumentException] {
+        PipelineConfig.parse(s"""{type = IvfQueryTransform, name = probe, inputView = q,
+          outputView = hits, indexURI = "/x", idField = id, vectorField = v, k = $bad}""")
+      }
+      assert(e.getMessage.contains("probe") && e.getMessage.contains("'k'"), e.getMessage)
+    }
+  }
+
+  test("every config error of a cell is reported together, nested pipeline stages included") {
+    val e = intercept[IllegalArgumentException] {
+      PipelineConfig.parse("""{stages: [
+        {type = SQLTransform, name = first, sql = "SELECT 1", outputView = o, persists = true}
+        {type = NopeTransform, name = second}
+        {type = PipelineExecute, name = outer, stages = [
+          {type = ChunkTransform, name = inner, inputView = a, outputView = b, textField = t,
+           chunkSize = x}
+        ]}
+        {type = SQLTransform, name = last, outputView = o}
+      ]}""")
+    }
+    val lines = e.getMessage.split("\n").toSeq
+    assert(lines.size == 4, e.getMessage)
+    assert(lines(0).contains("first") && lines(0).contains("'persists'") && lines(0).contains("'persist'"))
+    assert(lines(1).contains("unknown stage type: NopeTransform"))
+    assert(lines(2).contains("inner") && lines(2).contains("'chunkSize'"))
+    assert(lines(3) == "stage last missing 'sql'")
+  }
+
+  test("an explicit empty list takes the constructor's default") {
+    val Seq(out: graft.transform.OutlierTransform, hist: graft.transform.HistogramTransform,
+        http: graft.execute.HTTPExecute) = PipelineConfig.parse("""{stages: [
+      {type = OutlierTransform, name = o, inputView = a, outputView = b, valueField = v, quantiles = []}
+      {type = HistogramTransform, name = h, inputView = a, outputView = b, quantiles = []}
+      {type = HTTPExecute, name = x, uri = "http://localhost/", validStatusCodes = []}
+    ]}""")
+    assert(out.quantiles == Seq(0.5))
+    assert(hist.quantiles == Seq(0.5, 0.9, 0.99))
+    assert(http.validStatusCodes == Seq(200, 201, 202))
+  }
 }

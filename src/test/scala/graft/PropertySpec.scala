@@ -79,6 +79,83 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("every stage type parses generated JSON and HOCON configs to the generated values and the constructor's defaults") {
+    // The constructor is read here independently of the parser: each
+    // scalar key gets a generated value or is left out, and the parsed
+    // stage's fields must equal the values given and the case class's
+    // defaults for the rest.
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    import scala.reflect.runtime.universe._
+    val mirror = runtimeMirror(getClass.getClassLoader)
+    val str = Gen.alphaNumStr.map(_.take(10))
+    val dbl = Gen.chooseNum(-1000.0, 1000.0).map(d => math.rint(d * 1000) / 1000)
+    val mapKey = Gen.identifier.map(_.take(8))
+    // (field value, config value) for each scalar key type
+    def scalar(t: Type): Option[Gen[(Any, JValue)]] =
+      if (t =:= typeOf[String]) Some(str.map(s => (s, JString(s))))
+      else if (t =:= typeOf[Int]) Some(Gen.chooseNum(1, 100000).map(i => (i, JInt(i))))
+      else if (t =:= typeOf[Long]) Some(Gen.chooseNum(1L, Long.MaxValue).map(l => (l, JInt(l))))
+      else if (t =:= typeOf[Double]) Some(dbl.map(d => (d, JDouble(d))))
+      else if (t =:= typeOf[Boolean]) Some(Gen.oneOf(true, false).map(b => (b, JBool(b))))
+      else None
+    def key(t: Type): Option[Gen[(Any, JValue)]] =
+      if (t <:< typeOf[Option[Any]]) scalar(t.typeArgs.head).map(_.map { case (v, j) => (Some(v), j) })
+      else if (t =:= typeOf[Seq[String]] || t =:= typeOf[Seq[Double]])
+        scalar(t.typeArgs.head).map(g => Gen.choose(0, 3).flatMap(Gen.listOfN(_, g))
+          .map(xs => (xs.map(_._1), JArray(xs.map(_._2)))))
+      else if (t =:= typeOf[Map[String, String]] || t =:= typeOf[Map[String, Double]])
+        scalar(t.typeArgs(1)).map(g => Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.zip(mapKey, g)))
+          .map(_.distinctBy(_._1))
+          .map(kvs => (kvs.map { case (k, (v, _)) => k -> v }.toMap,
+            JObject(kvs.map { case (k, (_, j)) => k -> j }))))
+      else scalar(t)
+    for (cls <- graft.core.PipelineConfig.stageTypes) {
+      val tpe = cls.getSimpleName
+      val companion = Class.forName(cls.getName + "$").getField("MODULE$").get(null)
+      val params = mirror.classSymbol(cls).primaryConstructor.asMethod.paramLists.head.zipWithIndex
+        .map { case (p, i) =>
+          val default = companion.getClass.getMethods.find(_.getName == s"apply$$default$$${i + 1}")
+            .map(_.invoke(companion))
+          (p.name.decodedName.toString, p.typeSignature, default)
+        }
+      // per parameter: (field value, config value if given)
+      val gen = Gen.sequence[List[(String, Any, Option[JValue])], (String, Any, Option[JValue])](
+        params.map { case (k, t, default) =>
+          (key(t), default) match {
+            case (Some(g), Some(d)) => Gen.zip(g, Gen.oneOf(true, false)).map {
+              case ((v, j), given) =>
+                // an empty list reads as the default
+                if (!given) (k, d, None) else (k, if (j == JArray(Nil)) d else v, Some(j))
+            }
+            case (Some(g), None) => g.map { case (v, j) => (k, v, Some(j)) }
+            case (None, Some(d)) => Gen.const((k, d, None))
+            // a required non-scalar (schema, stages, fieldMetadata): empty
+            case (None, None) =>
+              Gen.const(if (t <:< typeOf[Map[_, _]]) (k, Map.empty, Some(JObject()))
+                else (k, Nil, Some(JArray(Nil))))
+          }
+        })
+      checkProp(Prop.forAllNoShrink(gen) { fields =>
+        val given = fields.collect { case (k, _, Some(j)) => k -> j }
+        // in a stage list: a lone PipelineExecute object would read as a document
+        val json = JsonMethods.compact(JsonMethods.render(
+          JObject("stages" -> JArray(List(JObject(("type" -> JString(tpe)) :: given))))))
+        val hocon = (s"type = $tpe" +: given.map { case (k, j) =>
+          s"$k = ${JsonMethods.compact(JsonMethods.render(j))}"
+        }).mkString("stages: [{\n  ", "\n  ", "\n}]")
+        val want = fields.map { case (k, v, _) => k -> v }
+        def got(text: String) = graft.core.PipelineConfig.parse(text) match {
+          case Seq(s: Product) => s.productElementNames.zip(s.productIterator).toList
+          case other => other
+        }
+        val (fromJson, fromHocon) = (got(json), got(hocon))
+        Prop(fromJson == want && fromHocon == want) :|
+          s"json=$json\nhocon=$hocon\nwant=$want\nfromJson=$fromJson\nfromHocon=$fromHocon"
+      })
+    }
+  }
+
   test("withGlobalPosition yields the exact rank permutation for arbitrary sizes/partitionings") {
     // Spark-backed property (few iterations — each runs real jobs): for any
     // corpus size and partition count, positions must be exactly the rank of
@@ -90,13 +167,14 @@ class PropertySpec extends AnyFunSuite {
       parts <- Gen.choose(1, 8)
       pin <- Gen.oneOf(true, false)
     } yield (n, parts, pin)
-    val prop = Prop.forAll(gen) { case (n, parts, pin) =>
+    val prop = Prop.forAllNoShrink(gen) { case (n, parts, pin) =>
       val df = spark.range(0, n.toLong).toDF("id")
         .repartition(pmod(col("id"), org.apache.spark.sql.functions.lit(3)).cast("int"))
       val ranked = graft.core.GlobalOrder.withGlobalPosition(
         df, Seq(col("id")), numPartitions = Some(parts), pin = pin)
       val rows = ranked.collect().map(r => (r.getLong(0), r.getLong(1)))
-      rows.length == n && rows.forall { case (id, pos) => id == pos }
+      Prop(rows.length == n && rows.forall { case (id, pos) => id == pos }) :|
+        s"n=$n parts=$parts pin=$pin"
     }
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
     assert(result.passed, result.status.toString)
@@ -118,7 +196,7 @@ class PropertySpec extends AnyFunSuite {
       h <- Gen.identifier.map(_.take(12))
     } yield (g, h)
     val gen = Gen.choose(1, 60).flatMap(n => Gen.listOfN(n, rowGen))
-    val prop = Prop.forAll(gen) { rows0 =>
+    val prop = Prop.forAllNoShrink(gen) { rows0 =>
       // distinct (group, hash) keeps the hash-order assertion well-defined;
       // ties in h rank arbitrarily by contract, so equal hashes are dropped
       val rows = rows0.distinct
@@ -128,11 +206,11 @@ class PropertySpec extends AnyFunSuite {
         .select("src", "h", "id", "_rn", "_n")
         .collect()
         .map(r => (Option(r.getString(0)), r.getString(1), r.getLong(3), r.getLong(4)))
-      got.length == rows.length && got.groupBy(_._1).forall { case (_, grp) =>
+      Prop(got.length == rows.length && got.groupBy(_._1).forall { case (_, grp) =>
         val n = grp.length.toLong
         grp.forall(_._4 == n) &&
         grp.sortBy(_._2).map(_._3).toSeq == (1L to n) // hash order ⇒ rank order
-      }
+      }) :| s"rows=$rows0"
     }
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(result.passed, result.status.toString)
@@ -152,7 +230,7 @@ class PropertySpec extends AnyFunSuite {
       probes <- Gen.listOf(keyGen).map(_.distinct.take(40))
       bits <- Gen.oneOf(64L, 512L, 4096L)
     } yield (members, probes, bits)
-    val prop = Prop.forAll(gen) { case (members, probes, bits) =>
+    val prop = Prop.forAllNoShrink(gen) { case (members, probes, bits) =>
       val m = members.toDF("k")
       val p = (probes ++ members.take(5)).distinct.toDF("k")
       val sk = graft.llm.BloomSketch.build(m, col("k"), bits, 3)
@@ -163,7 +241,7 @@ class PropertySpec extends AnyFunSuite {
       val got = graft.llm.BloomSketch.antiJoin(p, col("k"), m, col("k"), bits, 3)
         .collect().map(_.getString(0)).toSet
       val want = flagged.keySet -- members.toSet
-      sound && got == want
+      Prop(sound && got == want) :| s"members=$members probes=$probes bits=$bits"
     }
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
     assert(result.passed, result.status.toString)
@@ -184,18 +262,18 @@ class PropertySpec extends AnyFunSuite {
       w <- Gen.choose(0L, 9L)
     } yield (g, h, w)
     val gen = Gen.choose(1, 60).flatMap(n => Gen.listOfN(n, rowGen))
-    val prop = Prop.forAll(gen) { rows0 =>
+    val prop = Prop.forAllNoShrink(gen) { rows0 =>
       val rows = rows0.distinctBy(r => (r._1, r._2)) // unique h per group: total order
       val df = rows.toDF("src", "h", "w")
       val got = graft.llm.LlmTestAccess.slicedPrefix(df, Seq("src"), col("h"), col("w"))
         .select("src", "h", "w", "_cum", "_tot").collect()
         .map(r => (Option(r.getString(0)), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      got.length == rows.length && got.groupBy(_._1).forall { case (_, grp) =>
+      Prop(got.length == rows.length && got.groupBy(_._1).forall { case (_, grp) =>
         val total = grp.map(_._3).sum
         val sorted = grp.sortBy(_._2)
         val want = sorted.map(_._3).scanLeft(0L)(_ + _).tail
         grp.forall(_._5 == total) && sorted.map(_._4).toSeq == want.toSeq
-      }
+      }) :| s"rows=$rows0"
     }
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(result.passed, result.status.toString)
@@ -223,7 +301,7 @@ class PropertySpec extends AnyFunSuite {
       desc <- Gen.oneOf(true, false)
       buckets <- Gen.choose(1, 5)
     } yield (rows, k, desc, buckets)
-    val prop = Prop.forAll(gen) { case (rows, k, desc, buckets) =>
+    val prop = Prop.forAllNoShrink(gen) { case (rows, k, desc, buckets) =>
       val df = rows.zipWithIndex
         .map { case ((key, sc), i) => (key, sc.toDouble, i.toLong) }
         .toDF("key", "score", "id")
@@ -237,7 +315,7 @@ class PropertySpec extends AnyFunSuite {
         df, Seq("key"), "score", k, desc, Seq("id")))
       val salted = set(graft.operators.TopK.perKeySalted(
         df, Seq("key"), "score", k, desc, Seq("id"), buckets))
-      heap == want && salted == want
+      Prop(heap == want && salted == want) :| s"rows=$rows k=$k desc=$desc buckets=$buckets"
     }
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(result.passed, result.status.toString)
@@ -254,7 +332,7 @@ class PropertySpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val fracsGen = Gen.listOfN(3, Gen.choose(1, 10)).suchThat(_.sum > 0)
-    val prop = Prop.forAll(fracsGen, Gen.choose(50, 200)) { (ws, n) =>
+    val prop = Prop.forAllNoShrink(fracsGen, Gen.choose(50, 200)) { (ws, n) =>
       val total = ws.sum.toDouble
       val fracs = ws.map(_ / total)
       val labels = Seq("train", "val", "test")
@@ -276,7 +354,7 @@ class PropertySpec extends AnyFunSuite {
         .subsetOf(moved.filter(m => m._2 == "val" || m._2 == "test").keySet) &&
         moved.filter(_._2 == "val").keySet
           .subsetOf(split.filter(s => s._2 == "train" || s._2 == "val").keySet)
-      coversAll && firstBand == sampled && valStable
+      Prop(coversAll && firstBand == sampled && valStable) :| s"ws=$ws n=$n"
     }
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
     assert(result.passed, result.status.toString)
@@ -365,12 +443,12 @@ class PropertySpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    checkProp(Prop.forAll(Gen.listOfN(8, urlGen)) { urls =>
-      urls.isEmpty || {
+    checkProp(Prop.forAllNoShrink(Gen.listOfN(8, urlGen)) { urls =>
+      Prop(urls.isEmpty || {
         val got = urls.toDF("u")
           .select(graft.llm.UrlNorm.canonicalizeUrl(col("u"))).as[String].collect().toSeq
         got == urls.map(reference)
-      }
+      }) :| s"urls=$urls"
     })
   }
 
